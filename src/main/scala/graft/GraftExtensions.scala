@@ -8,43 +8,56 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * Catalyst functions into every session built with
   * `.withExtensions(new GraftExtensions)` or via
   * `spark.sql.extensions=graft.GraftExtensions` — the deployment path for
-  * spark-submit clusters where builder code isn't ours to edit. Must stay
-  * in lockstep with [[graft.core.Normalize.register]] (the builder-code
-  * path): every call_function name used by the library is injected here.
+  * spark-submit clusters where builder code isn't ours to edit. The
+  * builder-code path, [[graft.core.Normalize.register]], registers the same
+  * [[GraftExtensions.Functions]] table as temp functions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def inject(ext: SparkSessionExtensions, name: String,
-                     build: Seq[Expression] => Expression,
-                     exprClass: Class[_]): Unit =
-    ext.injectFunction((FunctionIdentifier(name),
-      new ExpressionInfo(exprClass.getName, name), build))
-
   override def apply(ext: SparkSessionExtensions): Unit = {
-    import graft.core.{Normalize, NtCodec}
-    inject(ext, "alias_key", es => Normalize.AliasKeyExpr(es.head),
-           classOf[Normalize.AliasKeyExpr])
-    inject(ext, "canonical_label",
-           es => Normalize.CanonicalLabelExpr(es.head),
-           classOf[Normalize.CanonicalLabelExpr])
-    inject(ext, "plural_lexhead",
-           es => Normalize.PluralLexheadExpr(es.head),
-           classOf[Normalize.PluralLexheadExpr])
-    inject(ext, "nt_encode_resource",
-           es => NtCodec.NtEncodeResourceExpr(es.head),
-           classOf[NtCodec.NtEncodeResourceExpr])
-    inject(ext, "nt_escape_literal",
-           es => NtCodec.NtEscapeLiteralExpr(es.head),
-           classOf[NtCodec.NtEscapeLiteralExpr])
-    inject(ext, "nt_decode_resource",
-           es => NtCodec.NtDecodeResourceExpr(es.head),
-           classOf[NtCodec.NtDecodeResourceExpr])
-    inject(ext, "nt_unescape_literal",
-           es => NtCodec.NtUnescapeLiteralExpr(es.head),
-           classOf[NtCodec.NtUnescapeLiteralExpr])
-    inject(ext, "html_to_text",
-           es => graft.ingest.TextExtract.HtmlToTextExpr(es.head),
-           classOf[graft.ingest.TextExtract.HtmlToTextExpr])
+    for (f <- GraftExtensions.Functions)
+      ext.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(f.exprClass.getName, f.name), f.build))
     ext.injectOptimizerRule(_ => graft.plans.IdempotentAliasKey)
+  }
+}
+
+object GraftExtensions {
+
+  /** A native function: its SQL name, its expression builder, and the
+    * expression class (named in the function's [[ExpressionInfo]]). */
+  final case class NativeFunction(name: String,
+                                  build: Seq[Expression] => Expression,
+                                  exprClass: Class[_])
+
+  /** Every native function the library calls by name (`call_function`). */
+  val Functions: Seq[NativeFunction] = {
+    import graft.core.{Normalize, NtCodec}
+    Seq(
+      NativeFunction("alias_key", es => Normalize.AliasKeyExpr(es.head),
+                     classOf[Normalize.AliasKeyExpr]),
+      NativeFunction("canonical_label",
+                     es => Normalize.CanonicalLabelExpr(es.head),
+                     classOf[Normalize.CanonicalLabelExpr]),
+      NativeFunction("plural_lexhead",
+                     es => Normalize.PluralLexheadExpr(es.head),
+                     classOf[Normalize.PluralLexheadExpr]),
+      NativeFunction("nt_encode_resource",
+                     es => NtCodec.NtEncodeResourceExpr(es.head),
+                     classOf[NtCodec.NtEncodeResourceExpr]),
+      NativeFunction("nt_escape_literal",
+                     es => NtCodec.NtEscapeLiteralExpr(es.head),
+                     classOf[NtCodec.NtEscapeLiteralExpr]),
+      NativeFunction("nt_decode_resource",
+                     es => NtCodec.NtDecodeResourceExpr(es.head),
+                     classOf[NtCodec.NtDecodeResourceExpr]),
+      NativeFunction("nt_unescape_literal",
+                     es => NtCodec.NtUnescapeLiteralExpr(es.head),
+                     classOf[NtCodec.NtUnescapeLiteralExpr]),
+      NativeFunction("html_to_text",
+                     es => graft.ingest.TextExtract.HtmlToTextExpr(es.head),
+                     classOf[graft.ingest.TextExtract.HtmlToTextExpr]),
+      NativeFunction("vec_dot",
+                     es => graft.functions.VectorOps.DotExpr(es.head, es(1)),
+                     classOf[graft.functions.VectorOps.DotExpr]))
   }
 }

@@ -122,91 +122,47 @@ object Pipeline {
   /** Run (or resume) the full pipeline; returns the triple table.
     * `canon` picks the canonicalization mode; resume is per-stage by name,
     * so use a FRESH outDir when changing modes (mode-specific stages are
-    * name-suffixed, but downstream stages are shared). */
+    * name-suffixed, but downstream stages are shared).
+    *
+    * A full run is a [[runDelta]] with no previous state. Both entry points
+    * drive one stage list ([[stages]]) in which every corpus-level stage is
+    * declared once: its name, its key, the expression that computes its
+    * rows over a slice of its inputs, and its maintenance rule — a carried
+    * key-keyed table or a count view ([[Stages]]). With no previous state
+    * every slice is the whole input and each stage is written under its
+    * own name. */
   def run(spark: SparkSession, pages: DataFrame, seedsIn: Seeds,
           outDir: String, runId: String = "run-1",
-          canon: Canonicalization = Canonicalization.Components): DataFrame = {
-    Normalize.register(spark)
-    val seeds = pinSeeds(seedsIn)
-    val runner = new StageRunner(spark, outDir, runId)
-
-    // 0. crawl manifest: the (url, warc_ts, content_fp) fingerprint of the
-    // consumed crawl slice. A later [[runDelta]] anti-joins its new crawl
-    // against this to find changed/added pages — the content fingerprint
-    // catches a capture rewritten under an unchanged timestamp. Plus the
-    // seeds fingerprint: carried links are only valid under identical seeds.
-    runner.run("crawl_manifest") { manifestOf(pages) }
-    runner.run("seeds_fp") { seedsFingerprint(spark, seeds) }
-
-    // 1. invariant text extraction (byte-identical per url)
-    val pagesText =
-      runner.runKeyed("pages_text", Seq("url")) { TextExtract.extract(pages) }
-
-    // 2. listings → items → subject mentions
-    val mentions = runner.run("mentions") { ListingExtract.mentions(pagesText) }
-
-    // 3. entity linking (broadcast alias dict incl. folded spelling
-    // redirects)
-    val dict = buildDict(seeds)
-    // ONE broadcast-join execution; linked/unlinked are filters over the
-    // checkpointed join output (ent nullable), not two separate stages.
-    // Stage name is "linked_all", NOT the pre-r3 "linked": the checkpoint
-    // shape changed (nullable ent, unlinked rows included) and StageRunner
-    // resumes by name — a stale "linked" checkpoint must never resume into
-    // the new shape (it would silently empty the NIL path).
-    val linkedAll =
-      runner.runKeyed("linked_all", Seq("url")) { AliasLink.linkAll(mentions, dict) }
-
-    // 1b. corpus hypernym mining over page prose (A5/N9 — Hearst patterns),
-    // checkpointed per url first: the url-keyed table is the materialized
-    // view [[runDelta]] maintains with a url-keyed row drop instead of
-    // re-parsing dropped prose; the global aggregate is its rollup.
-    val hypByUrl =
-      runner.runKeyed("hypernyms_by_url", Seq("url")) {
-        hearstCountsByUrl(pagesText)
-      }
-    runner.run("hypernyms") {
-      hypByUrl.groupBy("sub", "obj").agg(sum("cnt").as("cnt"))
-    }
-
-    corpusStages(spark, runner, linkedAll, dict, seeds, canon)
-  }
+          canon: Canonicalization = Canonicalization.Components): DataFrame =
+    stages(spark, pages, seedsIn, outDir, runId, canon, prev = None)
 
   /** Incremental run over a RE-CRAWL (the recurring-snapshot shape the
-    * reference handles by full re-extraction per dump): captures whose
-    * (url, warc_ts, content_fp) already appear in `prevDir`'s crawl
-    * manifest carry their extracted text and linked mentions over from the
-    * previous run's checkpoints; only changed/added captures pass through
-    * the per-page prefix (extract → parse → link). Pages absent from the
-    * new crawl drop out (deletions).
+    * reference handles by full re-extraction per dump): [[run]]'s stage
+    * list with `prevDir` — the outDir of a completed [[run]] or
+    * [[runDelta]] — as the previous state. A url is TOUCHED when its
+    * (url, warc_ts, content_fp) capture set changed in either direction;
+    * only touched urls pass through the per-page prefix (extract → parse →
+    * link), every other url carries its extracted text and linked mentions
+    * over. Pages absent from the new crawl drop out (deletions).
     *
-    * Downstream, every corpus-level aggregate is delta-MAINTAINED rather
-    * than recomputed ([[Canonicalization.Components]] mode): url-keyed
-    * tables (subjects, subject_listings, type/relation rules, provenance
-    * pairs, per-url hypernym counts) carry all untouched urls and recompute
-    * only the AFFECTED slice — touched urls plus urls whose F9
-    * frequent-label verdict flipped; count-keyed materialized views
-    * (unlinked label counts, label counts, type/relation candidate counts,
-    * hypernym counts) apply the classic maintenance identity
-    * new = prev − contributions(old affected slice) + contributions(new
-    * affected slice), with rows cancelling to 0 dropped. The final emit
-    * stages (types guard, relations anti-join, triple assembly) then run
-    * over CANDIDATE-sized inputs only — no corpus-wide shuffle remains in a
-    * delta run; the corpus is touched only by map-side carries. Output is
-    * IDENTICAL to a full [[run]] over the new crawl (DeltaSpec asserts
-    * exactness, including rules and candidate counts crossing their
-    * thresholds in both directions).
-    *
-    * [[Canonicalization.ScoredEd]] and [[Canonicalization.BottomUp]]
-    * deltas are COMPONENT-bounded rather than url-bounded: graph decisions
-    * propagate across urls through shared keys (so a url-sliced recompute
-    * would be unsound), but they are local to an alignment-graph / MM
-    * component — [[deltaGraphStages]] re-runs the mode only on the
-    * components the churn can reach and carries every other mention's
-    * assignment. A prevDir without the mode's recorded graph state (or
-    * with a different canonicalization-parameter fingerprint) bootstraps:
-    * one full corpus-stage recompute that records the state for the next
-    * delta in the chain.
+    * Downstream, every corpus-level table is maintained rather than
+    * recomputed. A carried table writes its rows over the affected slice as
+    * `<name>_fresh` and records `<name>` as a layer prev − drops ∪ fresh
+    * ([[StageRunner#runCarried]]); a count view applies
+    * new = prev − rows(old slice) + rows(new slice), with rows cancelling
+    * to 0 dropped ([[maintainCounts]]). In [[Canonicalization.Components]]
+    * mode the affected slice is url-bounded: touched urls plus every url
+    * whose F9 frequent-label or A9 tag-validity verdict flipped. In
+    * [[Canonicalization.ScoredEd]] and [[Canonicalization.BottomUp]] modes
+    * canonicalization is COMPONENT-bounded instead ([[graphClosure]]):
+    * graph decisions propagate across urls through shared keys, but stay
+    * local to an alignment-graph / MM component. A prevDir without the
+    * mode's recorded graph state (or with a different canonicalization-
+    * parameter fingerprint) bootstraps: the corpus stages run with no
+    * previous state once and record the state for the next delta in the
+    * chain. Output is IDENTICAL to a full [[run]] over the new crawl
+    * (DeltaSpec asserts exactness, including rules and candidate counts
+    * crossing their thresholds in both directions).
     *
     * Seeds must be IDENTICAL to the previous run's (checked against the
     * recorded seeds fingerprint — a dictionary change invalidates carried
@@ -216,22 +172,24 @@ object Pipeline {
   def runDelta(spark: SparkSession, newPages: DataFrame, seedsIn: Seeds,
                outDir: String, prevDir: String, runId: String = "delta-1",
                canon: Canonicalization = Canonicalization.Components): DataFrame = {
-    Normalize.register(spark)
-    val seeds = pinSeeds(seedsIn)
     require(new java.io.File(outDir).getCanonicalPath !=
               new java.io.File(prevDir).getCanonicalPath,
             "runDelta: outDir must differ from prevDir — running in place " +
             "would resume every stage from the previous checkpoints and " +
             "silently ignore the new crawl")
-    val runner = new StageRunner(spark, outDir, runId)
     val prefixStages = Seq("crawl_manifest", "seeds_fp", "pages_text",
                            "linked_all", "hypernyms_by_url", "hypernyms")
     val sharedMining = Seq("unlinked_label_counts", "subject_listings",
                            "type_rules", "relation_rules", "label_counts",
                            "tag_stats", "valid_tags", "type_cand_counts",
                            "rel_cand_counts", "prov_pairs", "triples_prov")
-    val edStateStages = Seq("subjects_ed", "ed_components", "ed_key_counts")
-    val buStateStages = Seq("subjects_bu", "bu_components", "bu_key_counts")
+    val graphState = canon match {
+      case Canonicalization.Components => Nil
+      case _: Canonicalization.ScoredEd =>
+        Seq("subjects_ed", "ed_components", "ed_key_counts")
+      case _: Canonicalization.BottomUp =>
+        Seq("subjects_bu", "bu_components", "bu_key_counts")
+    }
     // ED/BU deltas are component-bounded when prevDir recorded the mode's
     // graph state (a same-mode run() or runDelta()) AND the recorded
     // canonicalization parameters match this run's: carried subject rows
@@ -239,9 +197,9 @@ object Pipeline {
     // different parameters would mix two configurations' decisions. Any
     // mismatch — including a prevDir without the fingerprint, or an
     // opaque caller-supplied scoreFn (never provably equal) — BOOTSTRAPS:
-    // the corpus stages recompute once under the CURRENT parameters and
-    // record fresh state for the next delta in the chain. A
-    // Components-mode prevDir (the prefix is canon-free) bootstraps the
+    // the corpus stages run with no previous state under the CURRENT
+    // parameters and record fresh state for the next delta in the chain.
+    // A Components-mode prevDir (the prefix is canon-free) bootstraps the
     // same way.
     def canonFpReady: Boolean =
       StageRunner.completed(prevDir, "graph_canon_fp") && {
@@ -250,159 +208,152 @@ object Pipeline {
           .collect().map(r => r.getString(0) -> r.getString(1)).toMap
         !cur.exists(_._2 == "custom_fn") && prev == cur.toMap
       }
-    val graphStateReady = canon match {
-      case _: Canonicalization.ScoredEd =>
-        edStateStages.forall(StageRunner.completed(prevDir, _)) &&
-          canonFpReady
-      case _: Canonicalization.BottomUp =>
-        buStateStages.forall(StageRunner.completed(prevDir, _)) &&
-          canonFpReady
-      case _ => false
-    }
+    val carryCorpus = graphState.isEmpty ||
+      (graphState.forall(StageRunner.completed(prevDir, _)) && canonFpReady)
     val needed = prefixStages ++
-      (canon match {
-        case Canonicalization.Components => sharedMining :+ "subjects"
-        case _: Canonicalization.ScoredEd =>
-          if (graphStateReady) sharedMining ++ edStateStages else Nil
-        case _: Canonicalization.BottomUp =>
-          if (graphStateReady) sharedMining ++ buStateStages else Nil
-      })
+      (if (!carryCorpus) Nil
+       else if (graphState.isEmpty) sharedMining :+ "subjects"
+       else sharedMining ++ graphState)
     for (stage <- needed)
       require(StageRunner.completed(prevDir, stage),
               s"runDelta: $prevDir lacks the '$stage' checkpoint — prevDir " +
               "must be the outDir of a completed run() or runDelta() in a " +
               "compatible canonicalization mode (pre-manifest or other-mode " +
               "outDirs cannot seed a delta; run full once)")
-    // seeds contract: the recorded fingerprint must match (carried
-    // pages_text/linked_all rows silently mix stale semantics otherwise).
-    // localCheckpoint so the seed tables are scanned ONCE: the comparison
-    // collect and the seeds_fp stage write both read the 6-row checkpoint
-    // instead of re-aggregating every seed table (aliases is the largest
-    // seed input — at scale this halves the delta's seed-scan bill)
-    locally {
-      val curFpDf = seedsFingerprint(spark, seeds).localCheckpoint()
-      val prevFp = spark.read.parquet(s"$prevDir/seeds_fp")
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val curFp = curFpDf.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      // a FORMAT change is not a seed change: report it as such instead of
-      // claiming the (possibly byte-identical) seeds differ (ADVICE r4)
-      val prevVer = prevFp.getOrElse("__fp_version", 1L)
-      require(prevVer == SeedsFpVersion,
-              s"runDelta: seeds-fingerprint FORMAT changed (prevDir " +
-              s"recorded v$prevVer, this engine computes v$SeedsFpVersion) " +
-              "— the seed tables may be byte-identical, but the recorded " +
-              "fingerprint cannot be compared; run full once on a fresh " +
-              "outDir to re-record it")
-      require(prevFp == curFp,
-              s"runDelta: seed tables differ from prevDir's recorded " +
-              s"fingerprint (prev=$prevFp, current=$curFp) — carried links " +
-              "would be stale; run full on a fresh outDir instead")
-      runner.run("seeds_fp") { curFpDf }
-    }
-    val prevManifest = spark.read.parquet(s"$prevDir/crawl_manifest")
-    // carried url-keyed tables resolve through their layer chain (a prevDir
-    // that is itself a delta outDir holds LAYERS, not materialized tables)
-    val prevLinked = StageRunner.read(spark, s"$prevDir/linked_all")
+    stages(spark, newPages, seedsIn, outDir, runId, canon,
+           prev = Some(Prev(prevDir, carryCorpus)))
+  }
 
-    val manifest = runner.run("crawl_manifest") { manifestOf(newPages) }
-    // The join must be keyed by the SMALL side — the delta, not the corpus.
-    // A re-crawl changes ~1% of captures, so the changed/vanished key sets
-    // broadcast and every carry below is a broadcast (anti/semi) hash join
-    // with the corpus side unshuffled; joining on the 99% unchanged set
-    // instead would shuffle the whole corpus twice and cost more than the
-    // full run it replaces (measured — see BENCH/BASELINE.md). The
-    // broadcast hint is guarded: above [[MaxBroadcastKeys]] (a high-churn
-    // re-crawl) the hint is dropped and AQE plans the join. At 10^12 docs,
-    // where even 1% outgrows a broadcast, the same shape holds with
-    // url-bucketed checkpoint tables (SCALE.md).
-    //
-    // A url is TOUCHED when its capture set changed in either direction:
-    // new/changed captures (manifest ∖ prev) or vanished captures
-    // (prev ∖ manifest — which covers fully deleted urls too). Touched
-    // urls drop their carried state and re-extract whatever captures the
-    // new crawl still has — so a url that merely LOST one of several
-    // captures re-derives from the survivors instead of carrying the
-    // deleted capture forward.
+  /** A delta run's previous state: the parent outDir, and whether the
+    * corpus stages carry from it (false = graph-mode bootstrap). */
+  private case class Prev(dir: String, carryCorpus: Boolean)
+
+  /** The one stage list behind [[run]] (`prev` = None) and [[runDelta]]:
+    * the per-page prefix, then [[corpus]]. */
+  private def stages(spark: SparkSession, pages: DataFrame, seedsIn: Seeds,
+                     outDir: String, runId: String, canon: Canonicalization,
+                     prev: Option[Prev]): DataFrame = {
+    Normalize.register(spark)
+    val seeds = pinSeeds(seedsIn)
+    val runner = new StageRunner(spark, outDir, runId)
+    val st = new Stages(spark, runner, prev.map(_.dir))
+
+    // 0. crawl manifest: the (url, warc_ts, content_fp) fingerprint of the
+    // consumed crawl slice. A later [[runDelta]] anti-joins its new crawl
+    // against this to find changed/added pages — the content fingerprint
+    // catches a capture rewritten under an unchanged timestamp. Plus the
+    // seeds fingerprint: carried links are only valid under identical seeds.
+    val seedsFp = prev match {
+      case None => seedsFingerprint(spark, seeds)
+      case Some(p) => checkedSeedsFp(spark, seeds, p.dir)
+    }
+    val manifest = runner.run("crawl_manifest") { manifestOf(pages) }
+    runner.run("seeds_fp") { seedsFp }
+    lazy val touched = touchedUrls(manifest, st.prev("crawl_manifest"))
+
+    // 1. invariant text extraction (byte-identical per url)
+    val pagesText = st.carried("pages_text", "url", touched) {
+      TextExtract.extract(st.slice(pages, touched))
+    }
+
+    // 2. listings → items → subject mentions. Only the slice's mentions
+    // are checkpointed ("mentions_fresh" on a delta — run()'s corpus-wide
+    // "mentions" checkpoint must never resume into the delta-only shape or
+    // vice versa, the linked_all/linked lesson)
+    val mentions = st.sliceOnly("mentions") {
+      ListingExtract.mentions(pagesText.cur)
+    }
+
+    // 3. entity linking (broadcast alias dict incl. folded spelling
+    // redirects). ONE broadcast-join execution; linked/unlinked are filters
+    // over the checkpointed join output (ent nullable), not two separate
+    // stages. Stage name is "linked_all", NOT the pre-r3 "linked": the
+    // checkpoint shape changed (nullable ent, unlinked rows included) and
+    // StageRunner resumes by name — a stale "linked" checkpoint must never
+    // resume into the new shape (it would silently empty the NIL path).
+    val dict = buildDict(seeds)
+    val linkedAll = st.carried("linked_all", "url", touched,
+                               freshName = "linked_fresh") {
+      AliasLink.linkAll(mentions, dict)
+    }
+
+    // 1b. corpus hypernym mining over page prose (A5/N9 — Hearst patterns),
+    // checkpointed per url first; the global aggregate is its rollup, so a
+    // delta's minus side is a row drop from the url-keyed view, NOT a
+    // re-parse of dropped prose (maintenance cost is 1× the churn, not 2×)
+    val hypByUrl = st.carried("hypernyms_by_url", "url", touched) {
+      import spark.implicits._
+      graft.mine.Hearst.corpusCountsByUrl(
+        pagesText.cur.select("url", "text").as[(String, String)])
+    }
+    st.counts("hypernyms", "sub", "obj") { s =>
+      s(hypByUrl).groupBy("sub", "obj").agg(sum("cnt").as("cnt"))
+    }
+
+    if (prev.forall(_.carryCorpus))
+      corpus(st, linkedAll, touched, dict, seeds, canon)
+    else
+      corpus(new Stages(spark, runner, None),
+             new Rel(linkedAll.all, linkedAll.all), touched, dict, seeds, canon)
+  }
+
+  /** The seeds contract of a delta: the recorded fingerprint must match
+    * (carried pages_text/linked_all rows silently mix stale semantics
+    * otherwise). Returns the current fingerprint, localCheckpointed so the
+    * seed tables are scanned ONCE: the comparison collect and the seeds_fp
+    * stage write both read the 6-row checkpoint instead of re-aggregating
+    * every seed table (aliases is the largest seed input — at scale this
+    * halves the delta's seed-scan bill). */
+  private def checkedSeedsFp(spark: SparkSession, seeds: Seeds,
+                             prevDir: String): DataFrame = {
+    val curFpDf = seedsFingerprint(spark, seeds).localCheckpoint()
+    val prevFp = spark.read.parquet(s"$prevDir/seeds_fp")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val curFp = curFpDf.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    // a FORMAT change is not a seed change: report it as such instead of
+    // claiming the (possibly byte-identical) seeds differ (ADVICE r4)
+    val prevVer = prevFp.getOrElse("__fp_version", 1L)
+    require(prevVer == SeedsFpVersion,
+            s"runDelta: seeds-fingerprint FORMAT changed (prevDir " +
+            s"recorded v$prevVer, this engine computes v$SeedsFpVersion) " +
+            "— the seed tables may be byte-identical, but the recorded " +
+            "fingerprint cannot be compared; run full once on a fresh " +
+            "outDir to re-record it")
+    require(prevFp == curFp,
+            s"runDelta: seed tables differ from prevDir's recorded " +
+            s"fingerprint (prev=$prevFp, current=$curFp) — carried links " +
+            "would be stale; run full on a fresh outDir instead")
+    curFpDf
+  }
+
+  /** The urls a delta re-derives. The join must be keyed by the SMALL
+    * side — the delta, not the corpus. A re-crawl changes ~1% of captures,
+    * so the changed/vanished key sets broadcast and every carry is a
+    * broadcast (anti/semi) hash join with the corpus side unshuffled;
+    * joining on the 99% unchanged set instead would shuffle the whole
+    * corpus twice and cost more than the full run it replaces (measured —
+    * see BENCH/BASELINE.md). The broadcast hint is guarded: above
+    * [[MaxBroadcastKeys]] (a high-churn re-crawl) the hint is dropped and
+    * AQE plans the join. At 10^12 docs, where even 1% outgrows a
+    * broadcast, the same shape holds with url-bucketed checkpoint tables
+    * (SCALE.md).
+    *
+    * A url is TOUCHED when its capture set changed in either direction:
+    * new/changed captures (manifest ∖ prev) or vanished captures
+    * (prev ∖ manifest — which covers fully deleted urls too). Touched urls
+    * drop their carried state and re-extract whatever captures the new
+    * crawl still has — so a url that merely LOST one of several captures
+    * re-derives from the survivors instead of carrying the deleted capture
+    * forward. */
+  private def touchedUrls(manifest: DataFrame,
+                          prevManifest: DataFrame): DataFrame = {
     val capKeys = Seq("url", "warc_ts", "content_fp")
     val changedCaptures = manifest.join(prevManifest, capKeys, "left_anti")
     val vanishedCaptures = prevManifest.join(manifest, capKeys, "left_anti")
-    val dropUrls = hintSmall(
+    hintSmall(
       changedCaptures.select("url")
         .unionByName(vanishedCaptures.select("url"))
         .distinct().localCheckpoint())
-
-    // extract ONLY the touched slice (its own stage: the fresh mentions and
-    // the merged text both reuse it without re-extracting)
-    val freshText = runner.run("pages_text_fresh") {
-      TextExtract.extract(newPages.join(dropUrls, Seq("url"), "left_semi"))
-    }
-    // the merged corpus table is carried as a LAYER (parent − drops ∪
-    // fresh) instead of rewritten — a delta run writes only delta-sized
-    // data for every carried stage (StageRunner.runCarried; the measured
-    // rewrite bill was most of the remaining delta wall)
-    runner.runCarried("pages_text", prevDir, Seq("url"), dropUrls,
-                      s"$outDir/pages_text_fresh")
-
-    // parse + link ONLY the touched slice; carried links rejoin afterwards.
-    // Stage name is delta-scoped ("mentions_fresh", like "pages_text_fresh")
-    // — run()'s corpus-wide "mentions" checkpoint must never resume into
-    // this delta-only shape or vice versa (the linked_all/linked lesson).
-    val mentions = runner.run("mentions_fresh") {
-      ListingExtract.mentions(freshText)
-    }
-    val dict = buildDict(seeds)
-    val linkedFresh = runner.run("linked_fresh") {
-      AliasLink.linkAll(mentions, dict)
-    }
-    val linkedAll = runner.runCarried("linked_all", prevDir, Seq("url"),
-                                      dropUrls, s"$outDir/linked_fresh")
-
-    // 1b. hypernym counts: the url-keyed view carries untouched urls and
-    // re-parses ONLY fresh prose; the global aggregate applies the
-    // maintenance identity with the minus side read from the url-keyed
-    // checkpoint — a row drop, NOT a re-parse of dropped prose (so
-    // maintenance cost is 1× the churn, not 2×). Pairs whose count cancels
-    // to 0 drop out, so the result is EXACTLY the full-run aggregate
-    // (asserted by DeltaSpec).
-    val prevHypByUrl = StageRunner.read(spark, s"$prevDir/hypernyms_by_url")
-    val freshHypByUrl =
-      runner.run("hypernyms_by_url_fresh") { hearstCountsByUrl(freshText) }
-    runner.runCarried("hypernyms_by_url", prevDir, Seq("url"), dropUrls,
-                      s"$outDir/hypernyms_by_url_fresh")
-    runner.run("hypernyms") {
-      val prevHyp = spark.read.parquet(s"$prevDir/hypernyms")
-      val minus = prevHypByUrl.join(dropUrls, Seq("url"), "left_semi")
-        .groupBy("sub", "obj").agg(sum("cnt").as("cnt"))
-      val plus = freshHypByUrl
-        .groupBy("sub", "obj").agg(sum("cnt").as("cnt"))
-      maintainCounts(prevHyp, minus, plus, Seq("sub", "obj"))
-    }
-
-    canon match {
-      case Canonicalization.Components =>
-        deltaMiningStages(spark, runner, prevDir, dropUrls, linkedAll,
-                          linkedFresh, prevLinked, seeds)
-      case ed: Canonicalization.ScoredEd =>
-        // ED-mode delta: path scores cross urls through shared keys, so
-        // the recompute is bounded by alignment-graph COMPONENT, not url
-        // (see deltaEdStages) — the carried per-page prefix plus a
-        // component-sliced re-disambiguation. Bootstrap (no recorded ED
-        // state in prevDir): recompute the corpus stages once.
-        if (graphStateReady)
-          deltaEdStages(spark, runner, prevDir, dropUrls, linkedAll,
-                        linkedFresh, prevLinked, dict, seeds, ed)
-        else
-          corpusStages(spark, runner, linkedAll, dict, seeds, canon)
-      case bu: Canonicalization.BottomUp =>
-        // BU-mode delta: the fold is independent per MM component (see
-        // deltaBuStages), so the same component-bounded discipline
-        // applies over MM-only components. Bootstrap as above.
-        if (graphStateReady)
-          deltaBuStages(spark, runner, prevDir, dropUrls, linkedAll,
-                        linkedFresh, prevLinked, dict, seeds, bu)
-        else
-          corpusStages(spark, runner, linkedAll, dict, seeds, canon)
-    }
   }
 
   /** The change fingerprint of a crawl slice: (url, warc_ts, content_fp)
@@ -483,16 +434,6 @@ object Pipeline {
     }
   }
 
-  /** The Hearst per-url projection shared by [[run]] (full corpus) and
-    * [[runDelta]] (fresh slice) — one definition so the full and delta
-    * paths cannot desynchronize on the hypernyms_by_url view's input. */
-  private def hearstCountsByUrl(pages: DataFrame): DataFrame = {
-    val sp = pages.sparkSession
-    import sp.implicits._
-    graft.mine.Hearst.corpusCountsByUrl(
-      pages.select("url", "text").as[(String, String)])
-  }
-
   /** Broadcast-hint a delta key set only while it is actually small
     * (ADVICE r3: an unconditional hint OOMs on high-churn re-crawls);
     * beyond the threshold AQE plans the join unhinted. The session conf
@@ -522,84 +463,36 @@ object Pipeline {
   private def fresh(df: DataFrame): DataFrame =
     df.select(df.columns.map(c => col(c).as(c)): _*)
 
-  /** The classic materialized-view maintenance identity for an additive
-    * count aggregate: new = prev − minus + plus, groups cancelling to 0
-    * dropped. All three inputs carry (keys..., cnt).
-    *
-    * Shuffle shape: the net delta (minus ∪ plus) aggregates first — a
-    * DELTA-sized shuffle — and the previous view is then carried with
-    * broadcast anti/semi joins on the touched keys; only touched-key rows
-    * ever re-aggregate. A naive prev ∪ plus ∪ minus groupBy would shuffle
-    * the whole view every delta run. */
-  private def maintainCounts(prev: DataFrame, minus: DataFrame,
-                             plus: DataFrame, keys: Seq[String]): DataFrame = {
-    val delta = fresh(plus)
+  /** The net change of an additive count aggregate: plus − minus per key,
+    * over every key of either side (zero sums included — they are the
+    * touched keys too). Inputs carry (keys..., cnt); a DELTA-sized shuffle,
+    * checkpointed because [[maintainCounts]] and the touched-key sets read
+    * it. */
+  private def netCounts(minus: DataFrame, plus: DataFrame,
+                        keys: Seq[String]): DataFrame =
+    fresh(plus)
       .unionByName(fresh(minus).withColumn("cnt", -col("cnt")))
       .groupBy(keys.map(col): _*).agg(sum("cnt").as("cnt"))
       .localCheckpoint()
-    val touched = hintSmall(delta.select(keys.map(col): _*))
+
+  /** The classic materialized-view maintenance identity for an additive
+    * count aggregate: new = prev + net ([[netCounts]]), groups cancelling
+    * to 0 dropped.
+    *
+    * Shuffle shape: the previous view is carried with broadcast anti/semi
+    * joins on the touched keys; only touched-key rows ever re-aggregate. A
+    * naive prev ∪ plus ∪ minus groupBy would shuffle the whole view every
+    * delta run. */
+  private def maintainCounts(prev: DataFrame, net: DataFrame,
+                             keys: Seq[String]): DataFrame = {
+    val touched = hintSmall(net.select(keys.map(col): _*))
     fresh(prev).join(touched, keys, "left_anti")
       .unionByName(
         fresh(prev).join(touched, keys, "left_semi")
-          .unionByName(delta)
+          .unionByName(net)
           .groupBy(keys.map(col): _*).agg(sum("cnt").as("cnt"))
           .filter(col("cnt") > 0))
   }
-
-  // — the mining-aggregate shapes (shared by full run and delta
-  //   maintenance; every delta slice must use the SAME expressions or the
-  //   minus side desynchronizes from the recorded view) —
-
-  private def labelCountsOf(subjects: DataFrame): DataFrame =
-    subjects.groupBy("ent", "label").agg(count(lit(1)).as("cnt"))
-
-  /** Tag-occurrence stats over LINKED mentions × seed types — the
-    * reference's df_train slice (known entities only,
-    * `listing/extract.py:47-48`); additive over url contributions, so a
-    * delta maintains it by the usual identity. */
-  private def tagStatsOf(linked: DataFrame, seedTypes: DataFrame): DataFrame =
-    graft.taxonomy.ValidTags.tagStats(
-      linked.select(col("ent"),
-                    graft.taxonomy.ValidTags.shapeTag(col("label")).as("tag")),
-      seedTypes)
-
-  /** A9 tag gate at ASSERTION level (≙ `listing/extract.py:158-162`: an
-    * assertion survives only when the subject mention's NE tag is valid
-    * for the asserted type — a type with no validity entry drops all its
-    * assertions): candidate (ent, tpe) counts from mention-level subjects,
-    * gated by the broadcast (tpe, tag) validity table, deduped to one row
-    * per (listing, ent, tpe) before counting (any valid-tagged mention of
-    * the entity in the listing asserts). */
-  private def typeCandCountsOf(subjects: DataFrame, typeRules: DataFrame,
-                               valid: DataFrame): DataFrame =
-    subjects.select(col("url"), col("listing_key"), col("ent"),
-                    graft.taxonomy.ValidTags.shapeTag(col("label")).as("tag"))
-      .join(typeRules, Seq("url", "listing_key"))
-      .join(broadcast(valid), Seq("tpe", "tag"), "left_semi")
-      .select("url", "listing_key", "ent", "tpe").distinct()
-      .groupBy("ent", "tpe").agg(count(lit(1)).as("cnt"))
-
-  private def relCandCountsOf(subjListings: DataFrame,
-                              relRules: DataFrame): DataFrame =
-    subjListings.join(relRules, Seq("url", "listing_key"))
-      .groupBy("ent", "pred", "obj").agg(count(lit(1)).as("cnt"))
-
-  private def provPairsOf(subjListings: DataFrame,
-                          typeRules: DataFrame): DataFrame =
-    fresh(subjListings.select("ent", "url"))
-      .unionByName(fresh(typeRules.select(col("tpe").as("ent"), col("url"))))
-      .distinct()
-
-  /** Components-mode subject assembly: linked mentions keep their argmax
-    * entity; kept-NIL mentions take their content-derived cluster id. */
-  private def componentsSubjects(linked: DataFrame, keptUnlinked: DataFrame,
-                                 nilAssign: DataFrame): DataFrame =
-    linked.select("url", "listing_key", "mention_id", "label", "ent")
-      .withColumn("is_new", lit(false))
-      .unionByName(
-        keptUnlinked.join(nilAssign, "mention_id")
-          .select("url", "listing_key", "mention_id", "label", "ent")
-          .withColumn("is_new", lit(true)))
 
   /** The ME scorer of a ScoredEd config as the whole-DataFrame seam. */
   private def edScoreFn(ed: Canonicalization.ScoredEd)
@@ -701,256 +594,7 @@ object Pipeline {
               col("node"), col("mention_id"), col("url"), col("key"),
               col("label"))
 
-  /** The maintained mining aggregates every emit stage reads. */
-  private case class Mining(typeRules: DataFrame, relationRules: DataFrame,
-                            labelCounts: DataFrame, typeCandCounts: DataFrame,
-                            relCandCounts: DataFrame, provPairs: DataFrame)
-
-  /** The corpus-level stages downstream of the per-page prefix, FULL
-    * recompute: canonicalization (either mode) → mining aggregates → emit.
-    * Used by [[run]] and by ScoredEd-mode [[runDelta]]. */
-  private def corpusStages(spark: SparkSession, runner: StageRunner,
-                           linkedAll: DataFrame, dict: DataFrame,
-                           seeds: Seeds, canon: Canonicalization): DataFrame = {
-    val (linked, unlinked) = AliasLink.splitLinked(linkedAll)
-
-    // 3b. F9: frequent unknown labels (boilerplate) — counted as a
-    // maintained view, filtered before clustering
-    val unlCounts = runner.run("unlinked_label_counts") {
-      unlinked.groupBy("label").agg(count(lit(1)).as("cnt"))
-    }
-    val frequent = hintSmall(
-      unlCounts.filter(col("cnt") > MaxUnknownLabelFreq).select("label"))
-    val keptUnlinked = unlinked.join(frequent, Seq("label"), "left_anti")
-
-    // 4 + 5. canonicalization → subject-entity table (known + new)
-    val subjects = canon match {
-      case Canonicalization.Components =>
-        // 4a. NIL canonicalization via connected components
-        val nilRep = new LoopReport
-        val nilAssign = runner.run("nil_entities", report = nilRep) {
-          NilCluster.cluster(keptUnlinked, nilRep)
-        }
-        runner.runKeyed("subjects", Seq("url")) {
-          componentsSubjects(linked, keptUnlinked, nilAssign)
-        }
-      case ed: Canonicalization.ScoredEd =>
-        // 4b. scored ED over ALL kept mentions: alignment graph (full
-        // candidate dictionary, not the argmax-reduced one) → NastyLinker.
-        // ONE corpus-side pass builds the graph; the split decides linked
-        // vs NIL, overriding the prior-argmax join above. Besides the
-        // subject table, the run records the ED DELTA STATE a later
-        // [[runDelta]] maintains component-bounded (VERDICT r4 #3):
-        // `ed_components` (the alignment graph's connected components,
-        // mention + entity node rows), `ed_key_counts` (kept-mention key
-        // counts — the GLOBAL hot-key cap a slice recompute must use),
-        // and `graph_canon_fp` (the parameter fingerprint a delta
-        // compares before carrying). Construction is the SAME
-        // [[GraphDeltaMode]] recompute the delta's component slice runs —
-        // the two paths cannot drift.
-        graphSubjects(spark, runner,
-          fresh(linked)
-            .unionByName(fresh(keptUnlinked)
-              .withColumn("ent", lit(null).cast("string")))
-            .localCheckpoint(),
-          edMode(spark, dict, ed))
-      case bu: Canonicalization.BottomUp =>
-        // 4c. bottom-up union-find over the SAME scored alignment graph
-        // as ScoredEd, but clustered by the reference's ordered edge fold
-        // (per-MM-component, see BottomUpCluster) — argmax entity, no
-        // path-threshold demotion. Records the analogous BU delta state
-        // (`bu_components` is MM-edge components only — the fold's
-        // independence boundary; the global entity collapse only renames
-        // cluster ids, which the subject table never consumes).
-        graphSubjects(spark, runner,
-          fresh(linked)
-            .unionByName(fresh(keptUnlinked)
-              .withColumn("ent", lit(null).cast("string")))
-            .localCheckpoint(),
-          buMode(spark, dict, bu))
-    }
-
-    // 6a. mining aggregates (url-keyed tables + count views) — the
-    // checkpointed materialized views a later delta maintains.
-    // the distinct (url, listing_key, ent) projection feeds FIVE consumers
-    // (both rule miners, both candidate counts, provenance) — checkpoint it
-    // once instead of paying the corpus-wide distinct shuffle per consumer
-    val seedTypes = seeds.entityTypes.select(col("ent"), col("tpe"))
-    val subjectListings = runner.runKeyed("subject_listings", Seq("url")) {
-      subjects.select("url", "listing_key", "ent").distinct()
-    }
-    val typeRules = runner.runKeyed("type_rules", Seq("url")) {
-      RuleMining.listingTypeRules(subjectListings, seedTypes)
-    }
-    val relationRules = runner.runKeyed("relation_rules", Seq("url")) {
-      RuleMining.listingRelationRules(subjectListings, seeds.seedRelations)
-    }
-    val labelCounts = runner.run("label_counts") { labelCountsOf(subjects) }
-    // A9 tag gate inputs: P(tag|type) stats over linked mentions, validity
-    // ≥ threshold with parent-tag inheritance (driver fixpoint over the
-    // broadcast taxonomy)
-    val tagStats = runner.run("tag_stats") { tagStatsOf(linked, seedTypes) }
-    val validTags = runner.run("valid_tags") {
-      graft.taxonomy.ValidTags.validTagsFromStats(tagStats,
-                                                  seeds.taxonomyEdges)
-    }
-    val typeCandCounts = runner.run("type_cand_counts") {
-      typeCandCountsOf(subjects, typeRules, validTags)
-    }
-    val relCandCounts = runner.run("rel_cand_counts") {
-      relCandCountsOf(subjectListings, relationRules)
-    }
-    val provPairs = runner.runKeyed("prov_pairs", Seq("url")) {
-      provPairsOf(subjectListings, typeRules)
-    }
-    emitStages(spark, runner,
-               Mining(typeRules, relationRules, labelCounts, typeCandCounts,
-                      relCandCounts, provPairs), seeds)
-  }
-
-  /** Components-mode DELTA maintenance of the mining aggregates: carried
-    * url-keyed tables + incrementally maintained count views (see
-    * [[runDelta]] scaladoc for the identity). The affected-url set is the
-    * touched urls PLUS every url holding an unlinked mention whose F9
-    * frequent-label verdict flipped — a label crossing the boilerplate
-    * threshold changes subjects on urls the crawl never touched.
-    *
-    * Soundness of url-sliced recompute: NIL ids are content-derived and
-    * page-local ([[NilCluster.cluster]]), listing rules are per
-    * (url, listing_key) aggregates, and the count views are additive over
-    * url contributions — so slice ∪ carry ≡ full recompute exactly. */
-  /** The flip state every delta mode needs before slicing: maintained F9
-    * label counts + the labels whose frequent-verdict flipped, maintained
-    * A9 tag stats + validity and the flipped (tpe, tag) pairs, plus the
-    * url widenings both flips induce. `subjectsStage` names the mode's
-    * subject table ("subjects" / "subjects_ed") for the tag-flip closure. */
-  private case class Flips(frequentNew: DataFrame, flippedLabels: DataFrame,
-                           validNew: DataFrame, validPrev: DataFrame,
-                           prevSubjects: DataFrame,
-                           prevTypeRules: DataFrame,
-                           f9FlipUrls: Option[DataFrame],
-                           tagFlipUrls: Option[DataFrame])
-
-  private def deltaFlipStages(spark: SparkSession, runner: StageRunner,
-                              prevDir: String, dropUrls: DataFrame,
-                              linkedAll: DataFrame, linkedFresh: DataFrame,
-                              prevLinked: DataFrame, seeds: Seeds,
-                              subjectsStage: String): Flips = {
-    def prev(stage: String): DataFrame =
-      spark.read.parquet(s"$prevDir/$stage")
-    val prevUnlCounts = prev("unlinked_label_counts")
-
-    // F9 counts maintenance: minus = dropped urls' unlinked labels (from
-    // the carried linked_all view), plus = fresh slice's unlinked labels
-    val unlCounts = runner.run("unlinked_label_counts") {
-      val minus = prevLinked.filter(col("ent").isNull)
-        .join(dropUrls, Seq("url"), "left_semi")
-        .groupBy("label").agg(count(lit(1)).as("cnt"))
-      val plus = linkedFresh.filter(col("ent").isNull)
-        .groupBy("label").agg(count(lit(1)).as("cnt"))
-      maintainCounts(prevUnlCounts, minus, plus, Seq("label"))
-    }
-    val frequentNew = unlCounts.filter(col("cnt") > MaxUnknownLabelFreq)
-      .select("label")
-    val frequentPrev = prevUnlCounts.filter(col("cnt") > MaxUnknownLabelFreq)
-      .select("label")
-    // labels whose frequent-verdict flipped in either direction: symmetric
-    // difference (each side is a distinct set → union groups of size 1)
-    val flipped = fresh(frequentNew).unionByName(fresh(frequentPrev))
-      .groupBy("label").agg(count(lit(1)).as("c"))
-      .filter(col("c") === 1).select("label")
-      .localCheckpoint()
-
-    // A9 tag-validity maintenance: stats view by the usual identity, then
-    // the validity set recomputed (driver fixpoint, taxonomy-sized). Like
-    // F9, a VALIDITY FLIP changes gated assertions on urls the crawl never
-    // touched — the affected set widens to every url whose (prev subjects
-    // × prev rules) rows hit a flipped (tpe, tag) pair.
-    val seedTypes = seeds.entityTypes.select(col("ent"), col("tpe"))
-    val tagStats = runner.run("tag_stats") {
-      val minus = tagStatsOf(prevLinked.filter(col("ent").isNotNull)
-          .join(dropUrls, Seq("url"), "left_semi"), seedTypes)
-      val plus = tagStatsOf(linkedFresh.filter(col("ent").isNotNull),
-                            seedTypes)
-      maintainCounts(prev("tag_stats"), minus, plus, Seq("tpe", "tag"))
-    }
-    val validNew = runner.run("valid_tags") {
-      graft.taxonomy.ValidTags.validTagsFromStats(tagStats,
-                                                  seeds.taxonomyEdges)
-    }
-    val validPrev = prev("valid_tags")
-    val flippedTags = fresh(validNew).unionByName(fresh(validPrev))
-      .groupBy("tpe", "tag").agg(count(lit(1)).as("c"))
-      .filter(col("c") === 1).select("tpe", "tag")
-      .localCheckpoint()
-
-    val prevSubjects = StageRunner.read(spark, s"$prevDir/$subjectsStage")
-    val prevTypeRules = StageRunner.read(spark, s"$prevDir/type_rules")
-    val f9FlipUrls =
-      if (flipped.isEmpty) None
-      else Some(linkedAll.filter(col("ent").isNull)
-        .join(hintSmall(flipped), Seq("label"), "left_semi")
-        .select("url"))
-    val tagFlipUrls =
-      if (flippedTags.isEmpty) None
-      else {
-        // restrict rules to flipped types FIRST (tiny broadcast) so the
-        // listing-keyed join is map-side against a small side
-        val rulesFlipped = prevTypeRules.join(
-          hintSmall(flippedTags.select("tpe").distinct()),
-          Seq("tpe"), "left_semi")
-        Some(prevSubjects
-          .select(col("url"), col("listing_key"),
-                  graft.taxonomy.ValidTags.shapeTag(col("label")).as("tag"))
-          .join(rulesFlipped, Seq("url", "listing_key"))
-          .join(hintSmall(flippedTags), Seq("tpe", "tag"), "left_semi")
-          .select("url"))
-      }
-    Flips(frequentNew, flipped, validNew, validPrev, prevSubjects,
-          prevTypeRules, f9FlipUrls, tagFlipUrls)
-  }
-
-  private def deltaMiningStages(spark: SparkSession, runner: StageRunner,
-                                prevDir: String, dropUrls: DataFrame,
-                                linkedAll: DataFrame, linkedFresh: DataFrame,
-                                prevLinked: DataFrame,
-                                seeds: Seeds): DataFrame = {
-    val flips = deltaFlipStages(spark, runner, prevDir, dropUrls, linkedAll,
-                                linkedFresh, prevLinked, seeds, "subjects")
-    val widenings = flips.f9FlipUrls.toSeq ++ flips.tagFlipUrls
-    val affectedUrls = hintSmall(
-      (if (widenings.isEmpty) dropUrls
-       else widenings.foldLeft(dropUrls.select("url"))(_ unionByName _)
-         .distinct())
-        .localCheckpoint())
-
-    // subjects: carry untouched urls; recompute the affected slice with the
-    // SAME expressions as the full run (NIL ids are page-local — see
-    // NilCluster scaladoc — so the slice clusters identically)
-    val (linkedA, unlinkedA) =
-      AliasLink.splitLinked(linkedAll.join(affectedUrls, Seq("url"), "left_semi"))
-    val keptUnlinkedA = unlinkedA
-      .join(hintSmall(fresh(flips.frequentNew)), Seq("label"), "left_anti")
-    val nilRep = new LoopReport
-    val nilAssignA = runner.run("nil_entities_fresh", report = nilRep) {
-      NilCluster.cluster(keptUnlinkedA, nilRep)
-    }
-    // fresh slices are their own delta-sized stages; the merged tables are
-    // carried as LAYERS (runCarried — delta-sized writes only), and every
-    // downstream consumer of "the affected slice" reads the fresh
-    // checkpoint directly instead of re-slicing the merged view
-    val subjectsA = runner.run("subjects_fresh") {
-      componentsSubjects(linkedA, keptUnlinkedA, nilAssignA)
-    }
-    runner.runCarried("subjects", prevDir, Seq("url"), affectedUrls,
-                      runner.pathOf("subjects_fresh"))
-    val prevSubjectsA =
-      flips.prevSubjects.join(affectedUrls, Seq("url"), "left_semi")
-    deltaMiningCore(spark, runner, prevDir, affectedUrls, subjectsA,
-                    prevSubjectsA, seeds, flips)
-  }
-
-  /** What distinguishes one graph-state delta mode from another: the
+  /** What distinguishes one graph canonicalization mode from the other: the
     * recorded stage names, whether entity nodes join components (ED's CC
     * runs over ME+MM edges, so an entering mention can reach an old
     * component through a shared DICTIONARY CANDIDATE; BU components are
@@ -958,12 +602,9 @@ object Pipeline {
     * ([[canonFpOf]]), and the graph recompute itself (`recompute(all,
     * hotKeysIn, report)` — `hotKeysIn = None` on a full run, the
     * maintained GLOBAL hot set on a delta slice). Everything else —
-    * membership deltas, key-count maintenance, hotness flips, affected
-    * components, slice closure, carries, mining maintenance — is shared
-    * verbatim by the two modes, and the FULL-run scaffolding
-    * ([[graphSubjects]]) is shared the same way, so a full run and the
-    * delta that carries it can never drift in construction. */
-  private case class GraphDeltaMode(
+    * the stages, and on a delta the slice closure ([[graphClosure]]) — is
+    * shared verbatim by the two modes. */
+  private case class GraphMode(
       subjectsStage: String, compsStage: String, keyCountsStage: String,
       entityAdjacency: Boolean,
       canonFp: Seq[(String, String)],
@@ -999,8 +640,8 @@ object Pipeline {
     }
 
   private def edMode(spark: SparkSession, dict: DataFrame,
-                     ed: Canonicalization.ScoredEd): GraphDeltaMode =
-    GraphDeltaMode(
+                     ed: Canonicalization.ScoredEd): GraphMode =
+    GraphMode(
       "subjects_ed", "ed_components", "ed_key_counts",
       entityAdjacency = true,
       canonFp = canonFpOf(spark, ed),
@@ -1033,8 +674,8 @@ object Pipeline {
       })
 
   private def buMode(spark: SparkSession, dict: DataFrame,
-                     bu: Canonicalization.BottomUp): GraphDeltaMode =
-    GraphDeltaMode(
+                     bu: Canonicalization.BottomUp): GraphMode =
+    GraphMode(
       "subjects_bu", "bu_components", "bu_key_counts",
       entityAdjacency = false,
       canonFp = canonFpOf(spark, bu),
@@ -1063,69 +704,303 @@ object Pipeline {
     fp.toDF("param", "value")
   }
 
-  /** The FULL-run graph-canonicalization scaffolding, shared by the ED and
-    * BU corpus stages: one lazy recompute feeds the subject table and the
-    * recorded component table (a fully-resumed outDir never rebuilds the
-    * graph; a partial resume builds it once), plus the key-count view and
-    * the canon-parameter fingerprint the delta readiness check compares. */
-  private def graphSubjects(spark: SparkSession, runner: StageRunner,
-                            keptAllIn: => DataFrame,
-                            mode: GraphDeltaMode): DataFrame = {
-    val rep = new LoopReport
-    lazy val keptAll = keptAllIn
-    lazy val computed = mode.recompute(keptAll, None, rep)
-    val subjects = runner.run(mode.subjectsStage, report = rep) {
-      computed._1
-    }
-    runner.runKeyed(mode.compsStage, Seq("comp")) { computed._2 }
-    runner.run(mode.keyCountsStage) {
-      AlignmentGraph.graphMentions(subjects.select("mention_id", "label"))
-        .groupBy("key").agg(count(lit(1)).as("cnt"))
-    }
-    runner.run("graph_canon_fp") { canonFpDf(spark, mode.canonFp) }
-    subjects
+  /** A stage table as the stages downstream of it read it: every row
+    * (`all`), the rows this run computed (`cur` — every row on a full run;
+    * the net change per touched key for a delta's count view) and, on a
+    * delta, the previous run's rows for the same slice (`old`). `cur` and
+    * `old` are built on first use, so a stage that resumes, or a full run,
+    * never reads the previous state. */
+  private final class Rel(val all: DataFrame, curRows: => DataFrame,
+                          oldRows: => DataFrame = null) {
+    lazy val cur: DataFrame = curRows
+    lazy val old: DataFrame = oldRows
   }
 
-  private def deltaEdStages(spark: SparkSession, runner: StageRunner,
-                            prevDir: String, dropUrls: DataFrame,
-                            linkedAll: DataFrame, linkedFresh: DataFrame,
-                            prevLinked: DataFrame, dict: DataFrame,
-                            seeds: Seeds,
-                            ed: Canonicalization.ScoredEd): DataFrame =
-    deltaGraphStages(spark, runner, prevDir, dropUrls, linkedAll,
-                     linkedFresh, prevLinked, dict, seeds,
-                     edMode(spark, dict, ed))
+  /** The stage declarations of one run, against an optional previous state
+    * (`prevDir`, None on a full run). Each corpus-level stage names its
+    * maintenance rule by the method that runs it:
+    *  - [[carried]]: a key-keyed table. Full run: its rows over the whole
+    *    input, written under its own name. Delta: its rows over the affected
+    *    slice as `<name>_fresh`, then a carry layer over the previous table
+    *    minus `drops` — the "Joins over UNION ALL" shape (PAPERS), whose
+    *    carry branch is empty on a full run;
+    *  - [[counts]]: an additive count view. Full run: its rows over the
+    *    whole input. Delta: [[maintainCounts]] of the previous view with the
+    *    rows of the old and the new slice;
+    *  - [[derived]]: recomputed from maintained inputs in both runs;
+    *  - [[sliceOnly]]: an intermediate only its own run reads.
+    * `drops` arguments are only evaluated on a delta, before the stage body
+    * runs. */
+  private final class Stages(val spark: SparkSession, val runner: StageRunner,
+                             prevDir: Option[String]) {
+    def delta: Boolean = prevDir.isDefined
 
-  /** BottomUp-mode DELTA: the same component-bounded discipline as
-    * [[deltaEdStages]], over MM-only components — the fold for a
-    * component depends on nothing outside it (ME edges are per-mention,
-    * the entity collapse only renames cluster ids the subject table
-    * never reads), so re-folding the affected components ≡ the full
-    * fold restricted to them. */
-  private def deltaBuStages(spark: SparkSession, runner: StageRunner,
-                            prevDir: String, dropUrls: DataFrame,
-                            linkedAll: DataFrame, linkedFresh: DataFrame,
-                            prevLinked: DataFrame, dict: DataFrame,
-                            seeds: Seeds,
-                            bu: Canonicalization.BottomUp): DataFrame =
-    deltaGraphStages(spark, runner, prevDir, dropUrls, linkedAll,
-                     linkedFresh, prevLinked, dict, seeds,
-                     buMode(spark, dict, bu))
+    private val prevTables =
+      scala.collection.mutable.Map.empty[String, DataFrame]
 
-  /** Graph-canonicalization DELTA, component-bounded (VERDICT r4 #3 —
-    * this path used to recompute every corpus stage). Both graph modes'
-    * decisions are COMPONENT-LOCAL (NastyLinker: CC → per-component
-    * split; the BU fold: independent per MM component), so it suffices to
-    * re-run the mode on the components the churn can reach and carry
-    * every other mention's assignment:
+    /** The previous run's `stage` table (carry layers resolved), read once
+      * per run. */
+    def prev(stage: String): DataFrame =
+      prevTables.getOrElseUpdate(stage,
+        StageRunner.read(spark, s"${prevDir.get}/$stage"))
+
+    /** `df` restricted to the keys of `drops` on a delta; all of it on a
+      * full run. */
+    def slice(df: DataFrame, drops: => DataFrame): DataFrame =
+      if (delta) df.join(drops, drops.columns.toSeq, "left_semi") else df
+
+    def sliceOnly(name: String, report: LoopReport = null)
+                 (rows: => DataFrame): DataFrame =
+      runner.run(if (delta) s"${name}_fresh" else name, report = report)(rows)
+
+    /** `keyed` picks the full-run writer: [[StageRunner#runKeyed]] (bucket
+      * layout capable) or plain [[StageRunner#run]]. */
+    def carried(name: String, key: String, drops: => DataFrame,
+                keyed: Boolean = true, freshName: String = null,
+                report: LoopReport = null)(rows: => DataFrame): Rel =
+      prevDir match {
+        case None =>
+          val t =
+            if (keyed) runner.runKeyed(name, Seq(key), report = report)(rows)
+            else runner.run(name, report = report)(rows)
+          new Rel(t, t)
+        case Some(dir) =>
+          val d = drops
+          val fresh = Option(freshName).getOrElse(s"${name}_fresh")
+          val cur = runner.run(fresh, report = report)(rows)
+          new Rel(runner.runCarried(name, dir, Seq(key), d, runner.pathOf(fresh)),
+                  cur, prev(name).join(d, Seq(key), "left_semi"))
+      }
+
+    /** `rows(side)` computes the view from one side of each input: `_.cur`
+      * on a full run; `_.old` (minus) and `_.cur` (plus) on a delta. */
+    def counts(name: String, keys: String*)
+              (rows: (Rel => DataFrame) => DataFrame): Rel =
+      if (!delta) {
+        val t = runner.run(name)(rows(_.cur))
+        new Rel(t, t)
+      } else {
+        lazy val net = netCounts(rows(_.old), rows(_.cur), keys)
+        new Rel(runner.run(name)(maintainCounts(prev(name), net, keys)), net)
+      }
+
+    def derived(name: String)(rows: => DataFrame): Rel = {
+      val t = runner.run(name)(rows)
+      new Rel(t, t, prev(name))
+    }
+  }
+
+  /** Rows in exactly one of two distinct sets: the keys whose threshold
+    * verdict flipped, in either direction. */
+  private def flipped(a: DataFrame, b: DataFrame, keys: String*): DataFrame =
+    fresh(a).unionByName(fresh(b))
+      .groupBy(keys.map(col): _*).agg(count(lit(1)).as("c"))
+      .filter(col("c") === 1).select(keys.map(col): _*)
+      .localCheckpoint()
+
+  /** The corpus-level stages downstream of the per-page prefix:
+    * canonicalization (the mode's own stages) → [[mineAndEmit]].
+    * `touched` is the delta's touched-url set. */
+  private def corpus(st: Stages, linkedAll: Rel, touched: => DataFrame,
+                     dict: DataFrame, seeds: Seeds,
+                     canon: Canonicalization): DataFrame = {
+    val seedTypes = seeds.entityTypes.select(col("ent"), col("tpe"))
+
+    // 3b. F9: frequent unknown labels (boilerplate) — counted as a
+    // maintained view, filtered before clustering
+    def frequentOf(counts: DataFrame): DataFrame =
+      counts.filter(col("cnt") > MaxUnknownLabelFreq).select("label")
+    val unlCounts = st.counts("unlinked_label_counts", "label") { s =>
+      s(linkedAll).filter(col("ent").isNull)
+        .groupBy("label").agg(count(lit(1)).as("cnt"))
+    }
+    val frequent = hintSmall(fresh(frequentOf(unlCounts.all)))
+
+    // A9 tag gate inputs: P(tag|type) stats over linked mentions, validity
+    // ≥ threshold with parent-tag inheritance (driver fixpoint over the
+    // broadcast taxonomy). The stats count LINKED mentions × seed types —
+    // the reference's df_train slice (known entities only,
+    // `listing/extract.py:47-48`). Lazy: a full run writes them among the
+    // mining stages, a delta before it slices canonicalization (their flips
+    // widen the slice).
+    lazy val tagStats = st.counts("tag_stats", "tpe", "tag") { s =>
+      graft.taxonomy.ValidTags.tagStats(
+        s(linkedAll).filter(col("ent").isNotNull)
+          .select(col("ent"),
+                  graft.taxonomy.ValidTags.shapeTag(col("label")).as("tag")),
+        seedTypes)
+    }
+    lazy val validTags = st.derived("valid_tags") {
+      graft.taxonomy.ValidTags.validTagsFromStats(tagStats.all,
+                                                  seeds.taxonomyEdges)
+    }
+
+    // — delta only: the verdict flips that reach urls the crawl never
+    //   touched —
+    // a label crossing the F9 boilerplate threshold changes the kept
+    // mentions of every url holding it
+    lazy val flippedLabels = flipped(frequentOf(unlCounts.all),
+      frequentOf(st.prev("unlinked_label_counts")), "label")
+    // the urls the mining stages re-derive: the touched ones, every url
+    // holding an unlinked mention whose F9 verdict flipped, and every url
+    // whose (prev subjects × prev rules) rows hit a (tpe, tag) pair whose
+    // A9 validity flipped (it changes gated assertions there), plus the
+    // mode's own widenings
+    def affectedUrls(subjectsStage: String, extra: DataFrame*): DataFrame = {
+      val f9FlipUrls =
+        if (flippedLabels.isEmpty) None
+        else Some(linkedAll.all.filter(col("ent").isNull)
+          .join(hintSmall(flippedLabels), Seq("label"), "left_semi")
+          .select("url"))
+      val flippedTags = flipped(validTags.all, validTags.old, "tpe", "tag")
+      val tagFlipUrls =
+        if (flippedTags.isEmpty) None
+        else {
+          // restrict rules to flipped types FIRST (tiny broadcast) so the
+          // listing-keyed join is map-side against a small side
+          val rulesFlipped = st.prev("type_rules").join(
+            hintSmall(flippedTags.select("tpe").distinct()),
+            Seq("tpe"), "left_semi")
+          Some(st.prev(subjectsStage)
+            .select(col("url"), col("listing_key"),
+                    graft.taxonomy.ValidTags.shapeTag(col("label")).as("tag"))
+            .join(rulesFlipped, Seq("url", "listing_key"))
+            .join(hintSmall(flippedTags), Seq("tpe", "tag"), "left_semi")
+            .select("url"))
+        }
+      val widenings = f9FlipUrls.toSeq ++ tagFlipUrls ++ extra
+      hintSmall(
+        (if (widenings.isEmpty) touched
+         else widenings.foldLeft(touched.select("url"))(_ unionByName _)
+           .distinct())
+          .localCheckpoint())
+    }
+
+    /** Graph canonicalization. Besides the subject table, a run records the
+      * mode's delta state: the components stage (the alignment graph's
+      * connected components), the key-counts stage (kept-mention key counts
+      * — the GLOBAL hot-key cap a slice recompute must use) and
+      * `graph_canon_fp` (the parameter fingerprint a delta compares before
+      * carrying). A delta first bounds the recompute to the affected
+      * components ([[graphClosure]]); one lazy recompute feeds the subject
+      * and component stages (a fully-resumed outDir never builds the graph,
+      * a partial resume builds it once). */
+    def graphCanon(mode: GraphMode): DataFrame = {
+      def keptAllOf(la: DataFrame): DataFrame = {
+        val (l, u) = AliasLink.splitLinked(la)
+        fresh(l).unionByName(
+          fresh(u.join(frequent, Seq("label"), "left_anti"))
+            .withColumn("ent", lit(null).cast("string")))
+      }
+      def keyCounts(members: Rel): Rel =
+        st.counts(mode.keyCountsStage, "key") { s =>
+          AlignmentGraph.graphMentions(s(members))
+            .groupBy("key").agg(count(lit(1)).as("cnt"))
+        }
+      val closure =
+        if (!st.delta) None
+        else Some(graphClosure(st, mode, linkedAll, touched, frequent,
+                               flippedLabels, dict, keptAllOf, keyCounts))
+      val rep = new LoopReport
+      lazy val recomputed = closure match {
+        case None =>
+          mode.recompute(keptAllOf(linkedAll.all).localCheckpoint(), None, rep)
+        case Some(c) => mode.recompute(c.slice, Some(c.hotKeys), rep)
+      }
+      // carries: the subjects stage drops the affected components' mention
+      // ids (a MENTION-keyed layer — affected mentions live on untouched
+      // urls); the components stage drops whole components
+      val subjects = st.carried(mode.subjectsStage, "mention_id",
+                                closure.get.mentionDrops, keyed = false,
+                                report = rep) { recomputed._1 }
+      st.carried(mode.compsStage, "comp", closure.get.compDrops) {
+        recomputed._2
+      }
+      if (closure.isEmpty) keyCounts(new Rel(subjects.all, subjects.all))
+      st.runner.run("graph_canon_fp") {
+        canonFpDf(st.spark, mode.canonFp)
+      }
+      // mining re-derives every url holding an affected mention
+      lazy val urls = affectedUrls(mode.subjectsStage, closure.get.urls: _*)
+      val subjectsA =
+        if (!st.delta) subjects
+        else {
+          val u = urls
+          new Rel(subjects.all,
+            st.runner.run(s"${mode.subjectsStage}_affected") {
+              subjects.all.join(u, Seq("url"), "left_semi")
+            },
+            st.prev(mode.subjectsStage).join(u, Seq("url"), "left_semi"))
+        }
+      mineAndEmit(st, subjectsA, urls, validTags, seeds)
+    }
+
+    // 4 + 5. canonicalization → subject-entity table (known + new)
+    canon match {
+      case Canonicalization.Components =>
+        // 4a. NIL canonicalization via connected components. A delta
+        // re-derives the affected urls with the SAME expressions (NIL ids
+        // are content-derived and page-local — see NilCluster — listing
+        // rules are per (url, listing_key) and the count views are additive
+        // over url contributions, so slice ∪ carry ≡ full recompute)
+        lazy val urls = affectedUrls("subjects")
+        val (linked, unlinked) =
+          AliasLink.splitLinked(st.slice(linkedAll.all, urls))
+        val keptUnlinked = unlinked.join(frequent, Seq("label"), "left_anti")
+        val nilRep = new LoopReport
+        val nilAssign = st.sliceOnly("nil_entities", nilRep) {
+          NilCluster.cluster(keptUnlinked, nilRep)
+        }
+        // linked mentions keep their argmax entity; kept-NIL mentions take
+        // their content-derived cluster id
+        val subjects = st.carried("subjects", "url", urls) {
+          linked.select("url", "listing_key", "mention_id", "label", "ent")
+            .withColumn("is_new", lit(false))
+            .unionByName(
+              keptUnlinked.join(nilAssign, "mention_id")
+                .select("url", "listing_key", "mention_id", "label", "ent")
+                .withColumn("is_new", lit(true)))
+        }
+        mineAndEmit(st, subjects, urls, validTags, seeds)
+      case ed: Canonicalization.ScoredEd =>
+        // 4b. scored ED over ALL kept mentions: alignment graph (full
+        // candidate dictionary, not the argmax-reduced one) → NastyLinker.
+        // ONE corpus-side pass builds the graph; the split decides linked
+        // vs NIL, overriding the prior-argmax join above.
+        graphCanon(edMode(st.spark, dict, ed))
+      case bu: Canonicalization.BottomUp =>
+        // 4c. bottom-up union-find over the SAME scored alignment graph
+        // as ScoredEd, but clustered by the reference's ordered edge fold
+        // (per-MM-component, see BottomUpCluster) — argmax entity, no
+        // path-threshold demotion.
+        graphCanon(buMode(st.spark, dict, bu))
+    }
+  }
+
+  /** A graph-mode delta's recompute bound: the kept-mention `slice` to
+    * re-cluster under the GLOBAL hot-key set `hotKeys`, the carry drop sets
+    * of the subject (`mentionDrops`) and component (`compDrops`) stages, and
+    * the urls whose subjects that changes. */
+  private case class GraphClosure(slice: DataFrame, hotKeys: DataFrame,
+                                  mentionDrops: DataFrame,
+                                  compDrops: DataFrame, urls: Seq[DataFrame])
+
+  /** Graph-canonicalization DELTA bound, component-bounded (VERDICT r4 #3).
+    * Both graph modes' decisions are COMPONENT-LOCAL (NastyLinker: CC →
+    * per-component split; the BU fold: independent per MM component — ME
+    * edges are per-mention, and the entity collapse only renames cluster
+    * ids the subject table never reads), so it suffices to re-run the mode
+    * on the components the churn can reach and carry every other mention's
+    * assignment:
     *
     *  - graph-membership deltas: dropped-url mentions and F9 leavers exit;
     *    fresh kept mentions and F9 entrants (labels that stopped being
     *    frequent — on urls the crawl never touched) enter;
     *  - the kept-mention KEY COUNTS are a maintained view (the mode's
-    *    key-counts stage) because the MM hot-key cap is GLOBAL: a slice
-    *    recompute must cap by the new global counts, and a key whose
-    *    hotness FLIPS changes mm edges on every component holding it;
+    *    key-counts stage, written here by `keyCounts`) because the MM
+    *    hot-key cap is GLOBAL: a slice recompute must cap by the new global
+    *    counts, and a key whose hotness FLIPS changes mm edges on every
+    *    component holding it;
     *  - affected components = components of exiting mentions ∪ components
     *    holding a flipped key ∪ components ADJACENT to an entering
     *    mention — via its key (old same-key mentions; stably-hot keys
@@ -1141,35 +1016,22 @@ object Pipeline {
     *    fresh) is closed under the new graph's edges by the same argument,
     *    so it is a union of complete new-graph components: the mode's
     *    clusterer on the slice ≡ the full run restricted to it, and the
-    *    slice's CC ids (min node id) reproduce the full run's;
-    *  - carries: the subjects stage drops the affected components'
-    *    mention ids (a MENTION-keyed layer — affected mentions live on
-    *    untouched urls); the components stage drops whole components
-    *    (comp-keyed layer); the key-counts stage applies the count
-    *    identity. Downstream mining runs [[deltaMiningCore]] over the
-    *    urls holding any affected mention (∪ the flip widenings), exactly
-    *    like Components mode. */
-  private def deltaGraphStages(spark: SparkSession, runner: StageRunner,
-                               prevDir: String, dropUrls: DataFrame,
-                               linkedAll: DataFrame, linkedFresh: DataFrame,
-                               prevLinked: DataFrame, dict: DataFrame,
-                               seeds: Seeds,
-                               mode: GraphDeltaMode): DataFrame = {
-    val flips = deltaFlipStages(spark, runner, prevDir, dropUrls, linkedAll,
-                                linkedFresh, prevLinked, seeds,
-                                mode.subjectsStage)
-    def prev(stage: String): DataFrame =
-      spark.read.parquet(s"$prevDir/$stage")
-    val prevComps = StageRunner.read(spark, s"$prevDir/${mode.compsStage}")
-      .localCheckpoint()
+    *    slice's CC ids (min node id) reproduce the full run's. */
+  private def graphClosure(st: Stages, mode: GraphMode, linkedAll: Rel,
+                           dropUrls: DataFrame, frequent: DataFrame,
+                           flippedLabels: DataFrame, dict: DataFrame,
+                           keptAllOf: DataFrame => DataFrame,
+                           keyCounts: Rel => Rel): GraphClosure = {
+    val prevLinked = st.prev("linked_all")
+    val prevComps = st.prev(mode.compsStage).localCheckpoint()
     val prevCompMentions = prevComps.filter(col("mention_id").isNotNull)
-    val prevKeyCounts = prev(mode.keyCountsStage)
+    val prevKeyCounts = st.prev(mode.keyCountsStage)
 
     // — graph-membership deltas —
-    val leaverLabels = flips.flippedLabels
-      .join(fresh(flips.frequentNew), Seq("label"), "left_semi")
-    val entrantLabels = flips.flippedLabels
-      .join(fresh(flips.frequentNew), Seq("label"), "left_anti")
+    val leaverLabels =
+      flippedLabels.join(frequent, Seq("label"), "left_semi")
+    val entrantLabels =
+      flippedLabels.join(frequent, Seq("label"), "left_anti")
     val droppedRows = prevCompMentions.join(dropUrls, Seq("url"), "left_semi")
     val leaverRows = prevCompMentions
       .join(hintSmall(leaverLabels.localCheckpoint()), Seq("label"), "left_semi")
@@ -1179,39 +1041,23 @@ object Pipeline {
       .join(dropUrls, Seq("url"), "left_anti")
       .join(hintSmall(entrantLabels.localCheckpoint()), Seq("label"), "left_semi")
       .withColumn("ent", lit(null).cast("string"))
-    def keptAllOf(la: DataFrame): DataFrame = {
-      val (l, u) = AliasLink.splitLinked(la)
-      fresh(l).unionByName(
-        fresh(u.join(hintSmall(fresh(flips.frequentNew)),
-                     Seq("label"), "left_anti"))
-          .withColumn("ent", lit(null).cast("string")))
-    }
-    val freshKept = keptAllOf(linkedFresh).localCheckpoint()
+    val freshKept = keptAllOf(linkedAll.cur).localCheckpoint()
     val enteringMentions = fresh(freshKept.select("mention_id", "label"))
       .unionByName(entrantRows.select("mention_id", "label"))
       .localCheckpoint()
 
     // — key-count maintenance + hotness flips (the GLOBAL mm cap) —
-    val keyCounts = runner.run(mode.keyCountsStage) {
-      val minus = droppedRows.select("key")
-        .unionByName(leaverRows.select("key"))
-        .filter(length(col("key")) > 0)
-        .groupBy("key").agg(count(lit(1)).as("cnt"))
-      val plus = AlignmentGraph.graphMentions(enteringMentions)
-        .groupBy("key").agg(count(lit(1)).as("cnt"))
-      maintainCounts(prevKeyCounts, minus, plus, Seq("key"))
-    }
-    val maxBucket = AlignmentGraph.maxKeyBucket(spark)
-    val hotNew = keyCounts
+    val keys = keyCounts(new Rel(null, enteringMentions,
+      droppedRows.select("mention_id", "label")
+        .unionByName(leaverRows.select("mention_id", "label"))))
+    val maxBucket = AlignmentGraph.maxKeyBucket(st.spark)
+    val hotNew = keys.all
       .filter(col("cnt") > maxBucket).select("key")
       .localCheckpoint()
     val hotPrev = prevKeyCounts
       .filter(col("cnt") > maxBucket).select("key")
       .localCheckpoint()
-    val flippedKeys = fresh(hotNew).unionByName(fresh(hotPrev))
-      .groupBy("key").agg(count(lit(1)).as("c"))
-      .filter(col("c") === 1).select("key")
-      .localCheckpoint()
+    val flippedKeys = flipped(hotNew, hotPrev, "key")
 
     // — affected components: exits ∪ flipped keys ∪ adjacency of entrants —
     // STABLY-HOT keys (hot in prev AND new counts) cannot carry MM
@@ -1254,7 +1100,7 @@ object Pipeline {
         .distinct().localCheckpoint())
 
     // — the slice: surviving members of affected components + entrants +
-    //   fresh kept mentions (full rows via prevLinked / linkedFresh) —
+    //   fresh kept mentions (full rows via prevLinked / linkedAll.cur) —
     val affectedPrevMentions = prevCompMentions
       .join(affectedComps, Seq("comp"), "left_semi")
       .localCheckpoint()
@@ -1269,176 +1115,90 @@ object Pipeline {
         survivorRows.columns.map(col): _*))
       .unionByName(freshKept)
       .localCheckpoint()
-
-    // — component-slice recompute, with the GLOBAL hot-key cap. The two
-    //   stages share one lazy recompute: a fully-resumed outDir never
-    //   builds the slice graph, a partial resume builds it once. —
-    val rep = new LoopReport
-    lazy val recomputed = mode.recompute(sliceAll, Some(hotNew), rep)
-    runner.run(s"${mode.subjectsStage}_fresh", report = rep) {
-      recomputed._1
-    }
-    runner.run(s"${mode.compsStage}_fresh") { recomputed._2 }
-    // re-record the canon fingerprint so this outDir can seed the next
-    // delta in the chain (parameters are unchanged by construction — the
-    // readiness check already compared them against prevDir's record)
-    runner.run("graph_canon_fp") { canonFpDf(spark, mode.canonFp) }
-
-    // — carries —
-    val dropMentionIds = hintSmall(
-      affectedPrevMentions.select("mention_id").localCheckpoint())
-    val subjectsNew = runner.runCarried(mode.subjectsStage, prevDir,
-      Seq("mention_id"), dropMentionIds,
-      runner.pathOf(s"${mode.subjectsStage}_fresh"))
-    runner.runCarried(mode.compsStage, prevDir, Seq("comp"), affectedComps,
-                      runner.pathOf(s"${mode.compsStage}_fresh"))
-
-    // — mining maintenance over the urls holding any affected mention —
-    val graphUrls = affectedPrevMentions.select("url")
-    val widenings = flips.f9FlipUrls.toSeq ++ flips.tagFlipUrls :+
-      graphUrls :+ freshKept.select("url")
-    val affectedUrls = hintSmall(
-      widenings.foldLeft(dropUrls.select("url"))(_ unionByName _)
-        .distinct().localCheckpoint())
-    val subjectsA = runner.run(s"${mode.subjectsStage}_affected") {
-      subjectsNew.join(affectedUrls, Seq("url"), "left_semi")
-    }
-    val prevSubjectsA =
-      flips.prevSubjects.join(affectedUrls, Seq("url"), "left_semi")
-    deltaMiningCore(spark, runner, prevDir, affectedUrls, subjectsA,
-                    prevSubjectsA, seeds, flips)
+    GraphClosure(sliceAll, hotNew,
+      hintSmall(affectedPrevMentions.select("mention_id").localCheckpoint()),
+      affectedComps,
+      Seq(affectedPrevMentions.select("url"), freshKept.select("url")))
   }
 
-  /** The mode-independent mining maintenance: given the affected urls and
-    * the NEW subjects for exactly that slice (plus the prev slice), every
-    * url-keyed table carries and every count view applies the maintenance
-    * identity. Shared by Components and ScoredEd deltas. */
-  private def deltaMiningCore(spark: SparkSession, runner: StageRunner,
-                              prevDir: String, affectedUrls: DataFrame,
-                              subjectsA: DataFrame, prevSubjectsA: DataFrame,
-                              seeds: Seeds, flips: Flips): DataFrame = {
-    def prev(stage: String): DataFrame =
-      spark.read.parquet(s"$prevDir/$stage")
-    def prevCarried(stage: String): DataFrame =
-      StageRunner.read(spark, s"$prevDir/$stage")
+  /** The mining aggregates (url-keyed tables + count views — the
+    * checkpointed materialized views a delta maintains) and the emit
+    * stages, over the `subjects` of the affected `urls` (every url on a
+    * full run). */
+  private def mineAndEmit(st: Stages, subjects: Rel, urls: => DataFrame,
+                          validTags: => Rel, seeds: Seeds): DataFrame = {
     val seedTypes = seeds.entityTypes.select(col("ent"), col("tpe"))
-    // the layered type_rules parent was already resolved for the tag-flip
-    // probe — reuse it instead of re-executing the layer chain
-    val prevTypeRules = flips.prevTypeRules
-    val validNew = flips.validNew
-    val validPrev = flips.validPrev
-
-    val labelCounts = runner.run("label_counts") {
-      maintainCounts(prev("label_counts"), labelCountsOf(prevSubjectsA),
-                     labelCountsOf(subjectsA), Seq("ent", "label"))
+    // 6a. the distinct (url, listing_key, ent) projection feeds FIVE
+    // consumers (both rule miners, both candidate counts, provenance) —
+    // checkpoint it once instead of paying the corpus-wide distinct
+    // shuffle per consumer
+    val subjectListings = st.carried("subject_listings", "url", urls) {
+      subjects.cur.select("url", "listing_key", "ent").distinct()
+    }
+    val typeRules = st.carried("type_rules", "url", urls) {
+      RuleMining.listingTypeRules(subjectListings.cur, seedTypes)
+    }
+    val relationRules = st.carried("relation_rules", "url", urls) {
+      RuleMining.listingRelationRules(subjectListings.cur, seeds.seedRelations)
+    }
+    val labelCounts = st.counts("label_counts", "ent", "label") { s =>
+      s(subjects).groupBy("ent", "label").agg(count(lit(1)).as("cnt"))
+    }
+    // A9 tag gate at ASSERTION level (≙ `listing/extract.py:158-162`: an
+    // assertion survives only when the subject mention's NE tag is valid
+    // for the asserted type — a type with no validity entry drops all its
+    // assertions): candidate (ent, tpe) counts from mention-level subjects,
+    // gated by the broadcast (tpe, tag) validity table, deduped to one row
+    // per (listing, ent, tpe) before counting (any valid-tagged mention of
+    // the entity in the listing asserts). A delta's minus side counts under
+    // the PREVIOUS validity (what the recorded view contains), its plus
+    // side under the new one; validity flips on untouched urls are covered
+    // by the affected-url widening.
+    val valid = validTags
+    val typeCandCounts = st.counts("type_cand_counts", "ent", "tpe") { s =>
+      s(subjects).select(col("url"), col("listing_key"), col("ent"),
+          graft.taxonomy.ValidTags.shapeTag(col("label")).as("tag"))
+        .join(s(typeRules), Seq("url", "listing_key"))
+        .join(broadcast(s(valid)), Seq("tpe", "tag"), "left_semi")
+        .select("url", "listing_key", "ent", "tpe").distinct()
+        .groupBy("ent", "tpe").agg(count(lit(1)).as("cnt"))
+    }
+    val relCandCounts =
+      st.counts("rel_cand_counts", "ent", "pred", "obj") { s =>
+        s(subjectListings).join(s(relationRules), Seq("url", "listing_key"))
+          .groupBy("ent", "pred", "obj").agg(count(lit(1)).as("cnt"))
+      }
+    val provPairs = st.carried("prov_pairs", "url", urls) {
+      fresh(subjectListings.cur.select("ent", "url"))
+        .unionByName(fresh(typeRules.cur.select(col("tpe").as("ent"), col("url"))))
+        .distinct()
     }
 
-    val prevSubjList = prevCarried("subject_listings")
-    val subjListA = runner.run("subject_listings_fresh") {
-      subjectsA.select("url", "listing_key", "ent").distinct()
-    }
-    runner.runCarried("subject_listings", prevDir, Seq("url"), affectedUrls,
-                      runner.pathOf("subject_listings_fresh"))
-    val prevSubjListA = prevSubjList.join(affectedUrls, Seq("url"), "left_semi")
-
-    val typeRulesA = runner.run("type_rules_fresh") {
-      RuleMining.listingTypeRules(subjListA, seedTypes)
-    }
-    val typeRules = runner.runCarried("type_rules", prevDir, Seq("url"),
-                                      affectedUrls,
-                                      runner.pathOf("type_rules_fresh"))
-    val prevRelRules = prevCarried("relation_rules")
-    val relRulesA = runner.run("relation_rules_fresh") {
-      RuleMining.listingRelationRules(subjListA, seeds.seedRelations)
-    }
-    val relationRules = runner.runCarried("relation_rules", prevDir,
-                                          Seq("url"), affectedUrls,
-                                          runner.pathOf("relation_rules_fresh"))
-    val prevTypeRulesA = prevTypeRules.join(affectedUrls, Seq("url"), "left_semi")
-    val prevRelRulesA = prevRelRules.join(affectedUrls, Seq("url"), "left_semi")
-
-    // the count-view maintenance slices double as the TOUCHED-ENTITY sets
-    // the emit stages carry by: an entity absent from both slices has an
-    // unchanged candidate row set, hence unchanged types/relations rows
-    // (the guard, closure, and anti-joins are all per-entity given the
-    // fingerprint-enforced static seeds)
-    val typeMinusSlice = typeCandCountsOf(prevSubjectsA, prevTypeRulesA,
-                                          validPrev).localCheckpoint()
-    val typePlusSlice =
-      typeCandCountsOf(subjectsA, typeRulesA, validNew).localCheckpoint()
-    val typeCandCounts = runner.run("type_cand_counts") {
-      // minus under the PREVIOUS validity (what the recorded view
-      // contains), plus under the new one; validity flips on untouched
-      // urls are covered by the affected-set widening above
-      maintainCounts(prev("type_cand_counts"), typeMinusSlice,
-                     typePlusSlice, Seq("ent", "tpe"))
-    }
-    val relMinusSlice =
-      relCandCountsOf(prevSubjListA, prevRelRulesA).localCheckpoint()
-    val relPlusSlice =
-      relCandCountsOf(subjListA, relRulesA).localCheckpoint()
-    val relCandCounts = runner.run("rel_cand_counts") {
-      maintainCounts(prev("rel_cand_counts"), relMinusSlice, relPlusSlice,
-                     Seq("ent", "pred", "obj"))
-    }
-    val touchedTypeEnts = hintSmall(
-      typeMinusSlice.select("ent").unionByName(typePlusSlice.select("ent"))
-        .distinct().localCheckpoint())
-    val touchedRelEnts = hintSmall(
-      relMinusSlice.select("ent").unionByName(relPlusSlice.select("ent"))
-        .distinct().localCheckpoint())
-    val provPairsFresh =
-      runner.run("prov_pairs_fresh") { provPairsOf(subjListA, typeRulesA) }
-    val provPairs = runner.runCarried("prov_pairs", prevDir, Seq("url"),
-                                      affectedUrls,
-                                      runner.pathOf("prov_pairs_fresh"))
-    emitStages(spark, runner,
-               Mining(typeRules, relationRules, labelCounts, typeCandCounts,
-                      relCandCounts, provPairs), seeds,
-               carry = Some(EmitCarry(prevDir, affectedUrls, provPairsFresh,
-                                      touchedTypeEnts, touchedRelEnts)))
-  }
-
-  /** A delta run's emit-carry context: the parent outDir, the
-    * affected-url drop set, the fresh prov-pair slice (exactly the
-    * inputs `prov_pairs` itself carried with — so `triples_prov` and
-    * `prov_pairs` can never disagree on what changed), and the
-    * touched-entity sets of the two candidate count views (so `types`
-    * and `relations` recompute only entities whose candidates changed
-    * — both tables are entity-∝, which at web scale is corpus-∝). */
-  private case class EmitCarry(prevDir: String, affectedUrls: DataFrame,
-                               freshProvPairs: DataFrame,
-                               touchedTypeEnts: DataFrame,
-                               touchedRelEnts: DataFrame)
-
-  /** The emit stages: disjointness-guarded transitive typing, new-relation
-    * anti-join, and the triple write — all reading CANDIDATE-sized
-    * maintained aggregates (never the corpus), EXCEPT provenance. Shared
-    * verbatim by full and delta runs.
-    *
-    * The triple table is physically TWO stages: `triples` (pred-partitioned
-    * — labels, types, relations, ontology flavors: all candidate-sized) and
-    * `triples_prov` (the prov:wasDerivedFrom partition — the one CORPUS-∝
-    * block, ~`mentions × pages` rows; ≙ the reference serializing
-    * provenance into its own .nt files, `serialize.py:231-239`). Keeping
-    * prov in its own url-keyed (obj = page url) carryable table is what
-    * makes a DELTA run's write bill churn-sized: the r5 soak ladder
-    * measured the monolithic triple re-emit as the dominant delta cost —
-    * ∝ corpus, the exact shape that cannot ship at 10^12 docs — and a
-    * carried layer replaces it with `O(churn)` fresh rows + a drop set
-    * (BENCH/BASELINE.md). */
-  private def emitStages(spark: SparkSession, runner: StageRunner,
-                         m: Mining, seeds: Seeds,
-                         carry: Option[EmitCarry] = None): DataFrame = {
-    val seedTypes = seeds.entityTypes.select(col("ent"), col("tpe"))
+    // The emit stages: disjointness-guarded transitive typing, new-relation
+    // anti-join, and the triple write — all reading CANDIDATE-sized
+    // maintained aggregates (never the corpus), EXCEPT provenance.
     val closRep = new LoopReport
     val closureSelf = Disjointness.closureWithSelf(seeds.taxonomyEdges, closRep)
 
-    // the per-entity type derivation (J8 + disjointness guard + transitive
-    // closure): entity-local given the seed tables, so a delta run may
-    // evaluate it on any entity-complete candidate subset
-    def typesOf(candCounts: DataFrame, seedT: DataFrame): DataFrame = {
-      val cand = candCounts.select("ent", "tpe")
+    // Both tables are entity-∝ (at web scale, corpus-∝ — the r5 wide-world
+    // soak measured them as the dominant delta stages), so a delta
+    // recomputes ONLY the entities whose candidate-count rows changed —
+    // the keys of the count view's net change are exactly those
+    // TOUCHED-ENTITY sets: an entity absent from both maintenance slices has
+    // an unchanged candidate row set, hence unchanged types/relations rows
+    // (the guard, closure and anti-joins are all per-entity given the
+    // fingerprint-enforced static seeds). The seed side is semi-joined to
+    // the touched set so every join in the fresh slice is broadcast-sized.
+    def touchedEnts(counts: Rel): DataFrame =
+      hintSmall(counts.cur.select("ent").distinct().localCheckpoint())
+    lazy val touchedTypeEnts = touchedEnts(typeCandCounts)
+    lazy val touchedRelEnts = touchedEnts(relCandCounts)
+    // the per-entity type derivation: J8 + disjointness guard + transitive
+    // closure
+    val types = st.carried("types", "ent", touchedTypeEnts, report = closRep) {
+      val seedT = st.slice(seedTypes, touchedTypeEnts)
+      val cand = st.slice(typeCandCounts.all, touchedTypeEnts)
+        .select("ent", "tpe")
         .join(seedT, Seq("ent", "tpe"), "left_anti") // J8: drop existing
       val guarded = Disjointness.filterCandidates(
         cand, seedT, closureSelf, seeds.disjointPairs)
@@ -1448,57 +1208,22 @@ object Pipeline {
         .select(col("ent"), col("anc").as("tpe")).distinct()
         .join(seedT, Seq("ent", "tpe"), "left_anti")
     }
-    def relationsOf(candCounts: DataFrame, seedRels: DataFrame): DataFrame =
-      candCounts.select("ent", "pred", "obj")
+    val relations = st.carried("relations", "ent", touchedRelEnts) {
+      val seedRels = st.slice(seeds.seedRelations,
+                              touchedRelEnts.withColumnRenamed("ent", "sub"))
+      st.slice(relCandCounts.all, touchedRelEnts).select("ent", "pred", "obj")
         .join(seedRels.select(col("sub").as("ent"), col("pred"), col("obj")),
               Seq("ent", "pred", "obj"), "left_anti") // J7: only NEW relations
-
-    // FULL run: entity-keyed carryable checkpoints. DELTA run: both tables
-    // are entity-∝ (at web scale, corpus-∝ — the r5 wide-world soak
-    // measured them as the dominant delta stages), so recompute ONLY the
-    // entities whose candidate-count rows changed and carry the rest as an
-    // ent-keyed layer; the seed side is semi-joined to the touched set so
-    // every join in the fresh slice is broadcast-sized.
-    val types = carry match {
-      case None =>
-        runner.runKeyed("types", Seq("ent"), report = closRep) {
-          typesOf(m.typeCandCounts, seedTypes)
-        }
-      case Some(c) =>
-        runner.run("types_fresh", report = closRep) {
-          typesOf(m.typeCandCounts
-                    .join(c.touchedTypeEnts, Seq("ent"), "left_semi"),
-                  seedTypes.join(c.touchedTypeEnts, Seq("ent"), "left_semi"))
-        }
-        runner.runCarried("types", c.prevDir, Seq("ent"), c.touchedTypeEnts,
-                          runner.pathOf("types_fresh"))
-    }
-
-    val relations = carry match {
-      case None =>
-        runner.runKeyed("relations", Seq("ent")) {
-          relationsOf(m.relCandCounts, seeds.seedRelations)
-        }
-      case Some(c) =>
-        runner.run("relations_fresh") {
-          relationsOf(m.relCandCounts
-                        .join(c.touchedRelEnts, Seq("ent"), "left_semi"),
-                      seeds.seedRelations.join(
-                        c.touchedRelEnts.withColumnRenamed("ent", "sub"),
-                        Seq("sub"), "left_semi"))
-        }
-        runner.runCarried("relations", c.prevDir, Seq("ent"),
-                          c.touchedRelEnts, runner.pathOf("relations_fresh"))
     }
 
     // 6b. type-level axioms (Cat2Ax discipline over the listing rules) and
     // the instance facts they imply — both LISTING/candidate-sized, never
     // corpus-sized (Axioms scaladoc).
-    val axioms = runner.run("axioms") {
-      graft.taxonomy.Axioms.typeAxioms(m.typeRules, m.relationRules)
+    val axioms = st.runner.run("axioms") {
+      graft.taxonomy.Axioms.typeAxioms(typeRules.all, relationRules.all)
     }
-    val restrictionFacts = runner.run("restriction_facts") {
-      val allTypes = fresh(seedTypes).unionByName(types.select("ent", "tpe"))
+    val restrictionFacts = st.runner.run("restriction_facts") {
+      val allTypes = fresh(seedTypes).unionByName(types.all.select("ent", "tpe"))
       graft.taxonomy.Axioms.axiomFacts(axioms, allTypes, closureSelf)
     }
 
@@ -1512,11 +1237,11 @@ object Pipeline {
     // written before the carve-out still holds the prov rows inside its
     // "triples" checkpoint, and resuming it under the old name would emit
     // every provenance triple twice (the linked→linked_all lesson)
-    val trip = runner.runPartitioned("triples_core", "pred") {
+    val trip = st.runner.runPartitioned("triples_core", "pred") {
       TripleEmit.assembleFromCounts(
-        labelCounts = m.labelCounts,
-        types = types,
-        rels = relations,
+        labelCounts = labelCounts.all,
+        types = types.all,
+        rels = relations.all,
         extra = Seq(
           TripleEmit.ontologyClassTriples(seeds.taxonomyEdges,
                                           seeds.disjointPairs),
@@ -1530,34 +1255,28 @@ object Pipeline {
     // every subject entity wasDerivedFrom the pages mentioning it,
     // serialize.py:231-239; ONTOLOGY-CLASS — every mined type
     // wasDerivedFrom the listings whose rule asserted it,
-    // serialize.py:158-164). obj = the page url, so the table is url-keyed
-    // and carries like every other url-keyed stage: a full run writes it
-    // keyed (bucket-layout-capable), a delta run writes ONLY the affected
-    // slice as a layer over the parent's partition.
-    val provTrips = carry match {
-      case None =>
-        runner.runKeyed("triples_prov", Seq("obj")) {
-          TripleEmit.provenanceTriples(m.provPairs)
-        }
-      case Some(pc) =>
-        runner.run("triples_prov_fresh") {
-          TripleEmit.provenanceTriples(pc.freshProvPairs)
-        }
-        runner.runCarried("triples_prov", pc.prevDir, Seq("obj"),
-                          pc.affectedUrls.select(col("url").as("obj")),
-                          runner.pathOf("triples_prov_fresh"))
+    // serialize.py:158-164) — the one CORPUS-∝ block, ~`mentions × pages`
+    // rows, in its own table like the reference's separate .nt files.
+    // obj = the page url, so it is url-keyed and carries like every other
+    // url-keyed stage, from the same fresh prov-pair slice `prov_pairs`
+    // carried with: the r5 soak ladder measured the monolithic triple
+    // re-emit as the dominant delta cost (BENCH/BASELINE.md), and a carried
+    // layer replaces it with O(churn) fresh rows + a drop set.
+    val provTrips = st.carried("triples_prov", "obj",
+                               urls.select(col("url").as("obj"))) {
+      TripleEmit.provenanceTriples(provPairs.cur)
     }
 
     // 7b. void metadata (serialize.py:55-83) — three candidate-sized aggs,
     // its own table like the reference's separate metadata file
-    runner.run("ontology_meta") {
-      val nEnt = m.labelCounts.select("ent").distinct().count()
+    st.runner.run("ontology_meta") {
+      val nEnt = labelCounts.all.select("ent").distinct().count()
       val nCls = seeds.taxonomyEdges.select(col("child").as("t"))
         .unionByName(seeds.taxonomyEdges.select(col("parent").as("t")))
         .distinct().count()
       val nPred = seeds.seedRelations.select("pred").distinct().count()
-      TripleEmit.metadataTriples(spark, nEnt, nCls, nPred)
+      TripleEmit.metadataTriples(st.spark, nEnt, nCls, nPred)
     }
-    trip.unionByName(provTrips)
+    trip.unionByName(provTrips.all)
   }
 }

@@ -70,7 +70,8 @@ object VectorOps {
   }
 
   /** Column form: dot(a, b) with array<double> inputs (resolved through
-    * the session function registry — [[graft.core.Normalize.register]]
-    * installs "vec_dot", and every entry point of the engine registers). */
+    * the session function registry — [[graft.GraftExtensions]] and
+    * [[graft.core.Normalize.register]] install "vec_dot", and every entry
+    * point of the engine registers). */
   def dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
 }

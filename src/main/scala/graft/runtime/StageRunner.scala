@@ -49,24 +49,10 @@ final class StageRunner(spark: SparkSession, outDir: String, runId: String) {
     * iterative operator fills — its rounds/converged land in the lineage row
     * (loop_rounds = -1 ⇔ no iterative op ran). */
   def run(stage: String, rowsIn: Long = -1L, report: LoopReport = null)
-         (f: => DataFrame): DataFrame = {
-    val t0 = System.nanoTime()
-    def loopCols: (Long, Boolean) =
-      if (report == null) (-1L, true) else (report.rounds, report.converged)
-    if (done(stage)) {
-      val df = StageRunner.read(spark, path(stage))
-      appendLineage(Seq((stage, runId, rowsIn, rowsOut(stage, df), 0L,
-        (System.nanoTime() - t0) / 1000000, true, -1L, true)))
-      df
-    } else {
+         (f: => DataFrame): DataFrame =
+    runWith(stage, rowsIn, report) {
       f.write.mode(SaveMode.Overwrite).parquet(path(stage))
-      val df = spark.read.parquet(path(stage))
-      val (rounds, conv) = loopCols
-      appendLineage(Seq((stage, runId, rowsIn, rowsOut(stage, df), 0L,
-        (System.nanoTime() - t0) / 1000000, false, rounds, conv)))
-      df
     }
-  }
 
   /** [[run]] for a CARRYABLE key-keyed stage: under
     * `graft.delta.bucketedCarry` the checkpoint is laid out in
@@ -79,27 +65,27 @@ final class StageRunner(spark: SparkSession, outDir: String, runId: String) {
     * conf off (default) this IS [[run]]. */
   def runKeyed(stage: String, keys: Seq[String], rowsIn: Long = -1L,
                report: LoopReport = null)
-              (f: => DataFrame): DataFrame = {
+              (f: => DataFrame): DataFrame =
     if (!StageRunner.bucketedCarry(spark)) run(stage, rowsIn, report)(f)
-    else {
-      val t0 = System.nanoTime()
-      def loopCols: (Long, Boolean) =
-        if (report == null) (-1L, true) else (report.rounds, report.converged)
-      if (done(stage)) {
-        val df = StageRunner.read(spark, path(stage))
-        appendLineage(Seq((stage, runId, rowsIn, rowsOut(stage, df), 0L,
-          (System.nanoTime() - t0) / 1000000, true, -1L, true)))
-        df
-      } else {
-        val n = StageRunner.carryBuckets(spark)
-        StageRunner.writeBucketed(f, path(stage), keys.head, n)
-        val df = StageRunner.read(spark, path(stage))
-        val (rounds, conv) = loopCols
-        appendLineage(Seq((stage, runId, rowsIn, rowsOut(stage, df), 0L,
-          (System.nanoTime() - t0) / 1000000, false, rounds, conv)))
-        df
-      }
+    else runWith(stage, rowsIn, report) {
+      StageRunner.writeBucketed(f, path(stage), keys.head,
+                                StageRunner.carryBuckets(spark))
     }
+
+  /** The resume-or-`write`, read-back and lineage body of [[run]] and
+    * [[runKeyed]]. */
+  private def runWith(stage: String, rowsIn: Long, report: LoopReport)
+                     (write: => Unit): DataFrame = {
+    val t0 = System.nanoTime()
+    val resumed = done(stage)
+    if (!resumed) write
+    val df = StageRunner.read(spark, path(stage))
+    val (rounds, conv) =
+      if (resumed || report == null) (-1L, true)
+      else (report.rounds, report.converged)
+    appendLineage(Seq((stage, runId, rowsIn, rowsOut(stage, df), 0L,
+      (System.nanoTime() - t0) / 1000000, resumed, rounds, conv)))
+    df
   }
 
   /** Carry a url-keyed stage INCREMENTALLY: instead of rewriting the merged
@@ -266,18 +252,18 @@ object StageRunner {
     val fs = p.getFileSystem(conf)
     val subdirs = fs.listStatus(p).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$partCol="))
-    if (subdirs.isEmpty) return None
-    val out = subdirs.map { s =>
-      val raw = s.getPath.getName.drop(partCol.length + 1)
-      if (raw == "__HIVE_DEFAULT_PARTITION__") return None
-      footerRowCount(spark, s.getPath.toString) match {
-        case Some(n) =>
-          (org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-             .unescapePathName(raw), n)
-        case None => return None
+    // short-circuits: once a subdir defies the footer read, the rest are
+    // not opened
+    if (subdirs.isEmpty) None
+    else subdirs.foldLeft(Option(Vector.empty[(String, Long)])) {
+      (acc, s) => acc.flatMap { counts =>
+        val raw = s.getPath.getName.drop(partCol.length + 1)
+        if (raw == "__HIVE_DEFAULT_PARTITION__") None
+        else footerRowCount(spark, s.getPath.toString).map(n => counts :+
+          ((org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+             .unescapePathName(raw), n)))
       }
     }
-    Some(out)
   }
 
   /** Sum of the parquet footers' record counts under `dir` (recursive —
@@ -318,19 +304,22 @@ object StageRunner {
     * driver should do almost no data work — and this is no data). Writing
     * directly preserves the crash-audit property (the file is closed before
     * the method returns) and the on-disk contract (a parquet file under
-    * `_lineage/`, schema-identical to the previous Spark-written files). */
+    * `_lineage/`, schema-identical to the previous Spark-written files).
+    * The file is written under a `.`-prefixed name that parquet readers
+    * skip and renamed once closed, so a crash mid-write leaves no truncated
+    * file for [[StageRunner#lineage]] to trip on. */
   private[runtime] def appendLineageRows(spark: SparkSession, dir: String,
       rows: Seq[(String, String, Long, Long, Long, Long, Boolean, Long, Boolean)]): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val dirPath = new org.apache.hadoop.fs.Path(dir)
     val fs = dirPath.getFileSystem(conf)
     if (!fs.exists(dirPath)) fs.mkdirs(dirPath)
-    val file = new org.apache.hadoop.fs.Path(dirPath,
-      s"lineage-${System.nanoTime()}-${lineageSeq.incrementAndGet()}" +
-        ".snappy.parquet")
+    val name = s"lineage-${System.nanoTime()}-${lineageSeq.incrementAndGet()}" +
+      ".snappy.parquet"
+    val tmp = new org.apache.hadoop.fs.Path(dirPath, s".$name")
     val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
       .builder(org.apache.parquet.hadoop.util.HadoopOutputFile
-        .fromPath(file, conf))
+        .fromPath(tmp, conf))
       .withType(LineageSchema)
       .withCompressionCodec(
         org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
@@ -346,6 +335,8 @@ object StageRunner {
       g.append("converged", r._9)
       writer.write(g)
     } finally writer.close()
+    if (!fs.rename(tmp, new org.apache.hadoop.fs.Path(dirPath, name)))
+      throw new java.io.IOException(s"lineage: cannot commit $tmp")
   }
 
   /** A stage checkpoint is complete iff its parquet _SUCCESS marker exists

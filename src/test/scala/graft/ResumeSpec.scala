@@ -72,6 +72,24 @@ class ResumeSpec extends SparkSuite {
     assert(got == Set(("a", "rdf:type", 99), ("b", "rdfs:label", 2)))
   }
 
+  test("a truncated uncommitted lineage file does not break lineage()") {
+    import graft.runtime.StageRunner
+    val dir = SparkSuite.tempDir("graft-lineage-crash")
+    val runner = new StageRunner(spark, dir, "t1")
+    runner.run("a") { Seq(1, 2).toDF("v") }
+    // a crash mid-append leaves the dot-prefixed temp file behind
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(dir, "_lineage", ".lineage-1-1.snappy.parquet"),
+      Array[Byte]('P', 'A', 'R', '1', 0, 1, 2))
+    runner.run("b") { Seq(3).toDF("v") }
+    val stages = runner.lineage().select("stage").as[String].collect()
+    assert(stages.sorted.toSeq == Seq("a", "b"))
+    // committed appends leave no temp file of their own
+    val temps = new java.io.File(dir, "_lineage").list()
+      .filter(n => n.startsWith(".") && n.endsWith(".parquet"))
+    assert(temps.toSeq == Seq(".lineage-1-1.snappy.parquet"))
+  }
+
   test("per-partition lineage rows exist for the triple table") {
     val outDir = SparkSuite.tempDir("graft-lin")
     Pipeline.run(spark, world.pages.toDS().toDF(), seeds, outDir)
