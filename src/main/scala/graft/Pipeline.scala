@@ -768,8 +768,9 @@ object Pipeline {
           val d = drops
           val fresh = Option(freshName).getOrElse(s"${name}_fresh")
           val cur = runner.run(fresh, report = report)(rows)
-          new Rel(runner.runCarried(name, dir, Seq(key), d, runner.pathOf(fresh)),
-                  cur, prev(name).join(d, Seq(key), "left_semi"))
+          val all =
+            runner.runCarried(name, dir, Seq(key), d, runner.pathOf(fresh))
+          new Rel(all, cur, prev(name).join(d, Seq(key), "left_semi"))
       }
 
     /** `rows(side)` computes the view from one side of each input: `_.cur`
@@ -1170,7 +1171,8 @@ object Pipeline {
       }
     val provPairs = st.carried("prov_pairs", "url", urls) {
       fresh(subjectListings.cur.select("ent", "url"))
-        .unionByName(fresh(typeRules.cur.select(col("tpe").as("ent"), col("url"))))
+        .unionByName(
+          fresh(typeRules.cur.select(col("tpe").as("ent"), col("url"))))
         .distinct()
     }
 
