@@ -10,6 +10,7 @@ import graft.canonical.{AlignmentGraph, NilCluster}
 import graft.taxonomy.{Disjointness, RuleMining}
 import graft.emit.TripleEmit
 import graft.runtime.{LoopReport, StageRunner}
+import graft.runtime.Checkpoints.fresh
 
 /** The end-to-end KG-construction pipeline (north rule): pages → invariant
   * text extraction → listings/mentions → salted alias linking → NIL
@@ -172,8 +173,11 @@ object Pipeline {
   def runDelta(spark: SparkSession, newPages: DataFrame, seedsIn: Seeds,
                outDir: String, prevDir: String, runId: String = "delta-1",
                canon: Canonicalization = Canonicalization.Components): DataFrame = {
-    require(new java.io.File(outDir).getCanonicalPath !=
-              new java.io.File(prevDir).getCanonicalPath,
+    def qualified(dir: String) = {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p)
+    }
+    require(qualified(outDir) != qualified(prevDir),
             "runDelta: outDir must differ from prevDir — running in place " +
             "would resume every stage from the previous checkpoints and " +
             "silently ignore the new crawl")
@@ -202,20 +206,21 @@ object Pipeline {
     // A Components-mode prevDir (the prefix is canon-free) bootstraps the
     // same way.
     def canonFpReady: Boolean =
-      StageRunner.completed(prevDir, "graph_canon_fp") && {
+      StageRunner.completed(spark, prevDir, "graph_canon_fp") && {
         val cur = canonFpOf(spark, canon)
         val prev = spark.read.parquet(s"$prevDir/graph_canon_fp")
           .collect().map(r => r.getString(0) -> r.getString(1)).toMap
         !cur.exists(_._2 == "custom_fn") && prev == cur.toMap
       }
     val carryCorpus = graphState.isEmpty ||
-      (graphState.forall(StageRunner.completed(prevDir, _)) && canonFpReady)
+      (graphState.forall(StageRunner.completed(spark, prevDir, _)) &&
+        canonFpReady)
     val needed = prefixStages ++
       (if (!carryCorpus) Nil
        else if (graphState.isEmpty) sharedMining :+ "subjects"
        else sharedMining ++ graphState)
     for (stage <- needed)
-      require(StageRunner.completed(prevDir, stage),
+      require(StageRunner.completed(spark, prevDir, stage),
               s"runDelta: $prevDir lacks the '$stage' checkpoint — prevDir " +
               "must be the outDir of a completed run() or runDelta() in a " +
               "compatible canonicalization mode (pre-manifest or other-mode " +
@@ -459,9 +464,6 @@ object Pipeline {
       else AliasLink.foldRedirects(seeds.aliases, seeds.redirects)
     AliasLink.buildDict(aliasTable)
   }
-
-  private def fresh(df: DataFrame): DataFrame =
-    df.select(df.columns.map(c => col(c).as(c)): _*)
 
   /** The net change of an additive count aggregate: plus − minus per key,
     * over every key of either side (zero sums included — they are the
@@ -769,7 +771,7 @@ object Pipeline {
           val fresh = Option(freshName).getOrElse(s"${name}_fresh")
           val cur = runner.run(fresh, report = report)(rows)
           val all =
-            runner.runCarried(name, dir, Seq(key), d, runner.pathOf(fresh))
+            runner.runCarried(name, dir, Seq(key), d, fresh)
           new Rel(all, cur, prev(name).join(d, Seq(key), "left_semi"))
       }
 

@@ -27,14 +27,25 @@ object SparkEntry {
     * pressure (measured: several heavy queries 1.5-2.5× their isolated
     * walls in-bench). Each query entry releases its predecessors' blocks
     * explicitly — deterministic, pause-free (unlike a forced periodic GC,
-    * which A/B'd WORSE — and no result can change: every declared query
-    * recomputes from the parquet inputs by contract, and a freed cached
-    * plan (`.cache`) recomputes from its child on next access. Blocks
-    * belonging to the CURRENT query do not exist yet at entry, so a query
-    * never frees its own state. */
+    * which A/B'd WORSE). No result of a caller that keeps the contract on
+    * [[queries]] can change: every declared query recomputes from the
+    * parquet inputs, and a freed cached plan (`.cache`) recomputes from
+    * its child on next access — but a freed `localCheckpoint` does not,
+    * so a result must be consumed before the next query starts. Blocks belonging to the CURRENT query do not exist yet at
+    * entry, so a query never frees its own state. */
   private def freePriorQueryPins(spark: SparkSession): Unit =
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
 
+  /** The declared queries, by name: `(spark, sfDir) => result`.
+    *
+    * Contract: CONSUME each result before calling the next query. Entering
+    * a query frees every persistent RDD in the session
+    * (`freePriorQueryPins`), including the previous query's
+    * `localCheckpoint` blocks, which cannot recompute once freed. A caller
+    * that builds several query DataFrames before evaluating them, or
+    * evaluates one after entering another query, fails with a missing
+    * checkpoint block. Bench, Verify and BenchExtra evaluate each result
+    * fully before the next call. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     queryImpls.map { case (name, fn) =>
       name -> { (s: SparkSession, d: String) =>

@@ -80,10 +80,8 @@ object ConnectedComponents {
       // runs only when equality is actually possible (typically once, on
       // the final round). Fresh aliases keep the union children's exprIds
       // disjoint.
-      def fresh(df: DataFrame): DataFrame =
-        df.select(df.columns.map(c => col(c).as(c)): _*)
       converged = nextCount == eCount &&
-        fresh(next).unionByName(fresh(e))
+        Checkpoints.fresh(next).unionByName(Checkpoints.fresh(e))
           .groupBy("src", "dst").agg(count(lit(1)).as("c"))
           .filter(col("c") === 1).isEmpty
       // the previous round's checkpoint is now unreachable — free it so a

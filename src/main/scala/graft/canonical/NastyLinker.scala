@@ -3,6 +3,7 @@ package graft.canonical
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.runtime.Checkpoints.fresh
 
 /** NastyLinker clustering (G10; reference:
   * `/root/reference/impl/subject_entity/entity_disambiguation/matching/greedy_clustering.py:46-102`):
@@ -121,8 +122,6 @@ object NastyLinker {
         .orderBy(col("score").desc, col("ent").asc)
       // fresh alias every column: union children must not share exprIds
       // (cand derives from cur; checkpointing preserves attribute ids)
-      def fresh(df: DataFrame): DataFrame =
-        df.select(df.columns.map(c => col(c).as(c)): _*)
       val (merged, mergedIds) = graft.runtime.Checkpoints.tracked(
         fresh(cur).unionByName(fresh(cand))
           .withColumn("rn", row_number().over(w))

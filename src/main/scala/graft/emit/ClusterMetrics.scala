@@ -71,7 +71,7 @@ object ClusterMetrics {
   def evaluateDf(assign: DataFrame): DataFrame = {
     // localCheckpoint: four branches (joint/pred/gold/total aggregates)
     // consume the contingency table — without it each branch re-plans the
-    // corpus-scale shuffle (the round-3 PlanAudit caught 3 parquet scans);
+    // corpus-scale shuffle (a round-3 plan dump, see graft.tools.BenchExtra, caught 3 scans);
     // with it the corpus is read and shuffled exactly ONCE and every
     // downstream frame derives from the contingency-sized checkpoint
     val joint = assign.groupBy(col("pred"), col("gold"))

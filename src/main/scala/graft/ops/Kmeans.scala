@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.runtime.Checkpoints.fresh
 
 /** Spherical k-means centroid training for the IVF operators — the
   * trainable replacement for the deterministic centroid FIXTURE the oracle
@@ -120,8 +121,6 @@ object Kmeans {
                                first("emb").as("emb"))
         .orderBy(col("max_sim").asc, col("vec_id").asc).limit(1)
         .select(lit(i.toLong).as("cent_id"), col("emb").as("ce"))
-      def fresh(df: DataFrame): DataFrame =
-        df.select(df.columns.map(c => col(c).as(c)): _*)
       val (next, nextIds) = graft.runtime.Checkpoints.tracked(
         fresh(chosen).unionByName(fresh(far)))
       graft.runtime.Checkpoints.free(chosen, chosenIds)

@@ -1,6 +1,7 @@
 package graft.runtime
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 /** Generational cleanup for iterative-loop `localCheckpoint`s.
   *
@@ -29,4 +30,10 @@ object Checkpoints {
     val sc = df.sparkSession.sparkContext
     ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
   }
+
+  /** `df` with every column re-aliased to itself: fresh attribute ids, so
+    * frames derived from one source (or a checkpoint of it, which keeps
+    * the ids) can be children of one union or join. */
+  def fresh(df: DataFrame): DataFrame =
+    df.select(df.columns.map(c => col(c).as(c)): _*)
 }

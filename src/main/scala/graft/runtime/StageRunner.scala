@@ -1,8 +1,9 @@
 package graft.runtime
 
+import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
 
 /** Checkpoint-or-skip stage execution with lineage + counters — the Spark
   * re-expression of the reference's versioned cache memoization
@@ -12,46 +13,26 @@ import java.nio.file.{Files, Paths}
   *
   * Each stage writes to `<outDir>/<stage>` (parquet; partitioned stages use
   * partitionBy so a re-run overwrites idempotently). A stage whose output
-  * already exists (parquet _SUCCESS marker) is SKIPPED and read back —
-  * resume = re-running the driver after a crash re-executes only missing
-  * stages. Every run/skip appends a row to `<outDir>/_lineage`; partitioned
-  * stages additionally append one row per output partition (per-partition
-  * lineage).
+  * already exists (a committed `_SUCCESS` or `_layer` marker) is SKIPPED
+  * and read back — resume = re-running the driver after a crash
+  * re-executes only missing stages. Every run/skip appends a row to
+  * `<outDir>/_lineage`; partitioned stages additionally append one row per
+  * output partition (per-partition lineage). Every write kind goes through
+  * one private commit path; all metadata I/O goes through the
+  * Hadoop `FileSystem` of the session, so outDirs may be any Hadoop URI.
   */
 final class StageRunner(spark: SparkSession, outDir: String, runId: String) {
 
   private def path(stage: String) = s"$outDir/$stage"
 
-  /** rows_out for a just-written (or resumed materialized) stage table: sum of
-    * the parquet footers' record counts, read driver-side — numerically
-    * identical to `df.count()` on the same files, without the per-stage
-    * count JOB the old shape paid (~0.18 s of scheduling for metadata the
-    * footers already hold; tools/LineageProbe). Falls back to `df.count()`
-    * for layer views (which resolve through parents) and for tables with
-    * more files than a driver should list-and-open serially. */
-  private def rowsOut(stage: String, df: DataFrame): Long =
-    if (StageRunner.layerDepth(path(stage)) > 0) df.count()
-    else StageRunner.footerRowCount(spark, path(stage)).getOrElse(df.count())
-
-  /** Absolute path of a stage under this runner's outDir (carry layers
-    * reference fresh-slice checkpoints by path). */
-  def pathOf(stage: String): String = path(stage)
-  private def done(stage: String): Boolean =
-    StageRunner.completed(outDir, stage)
-
-  private def appendLineage(
-      rows: Seq[(String, String, Long, Long, Long, Long, Boolean, Long, Boolean)]): Unit =
-    StageRunner.appendLineageRows(spark, s"$outDir/_lineage", rows)
-
-  /** Run (or resume) an unpartitioned stage. `rowsIn` is a cheap driver-side
-    * count supplied by the caller when known (-1 = unknown; never forces an
-    * extra job on the hot path). `report`: a [[LoopReport]] the stage body's
-    * iterative operator fills — its rounds/converged land in the lineage row
-    * (loop_rounds = -1 ⇔ no iterative op ran). */
-  def run(stage: String, rowsIn: Long = -1L, report: LoopReport = null)
+  /** Run (or resume) an unpartitioned stage. `report`: a [[LoopReport]] the
+    * stage body's iterative operator fills — its rounds/converged land in
+    * the lineage row (loop_rounds = -1 ⇔ no iterative op ran). */
+  def run(stage: String, report: LoopReport = null)
          (f: => DataFrame): DataFrame =
-    runWith(stage, rowsIn, report) {
+    commit(stage, report) {
       f.write.mode(SaveMode.Overwrite).parquet(path(stage))
+      None
     }
 
   /** [[run]] for a CARRYABLE key-keyed stage: under
@@ -63,40 +44,26 @@ final class StageRunner(spark: SparkSession, outDir: String, runId: String) {
     * touched buckets, with NO broadcast of the drop set (the
     * >MaxBroadcastKeys re-crawl shape at 10^12 docs, SCALE.md). With the
     * conf off (default) this IS [[run]]. */
-  def runKeyed(stage: String, keys: Seq[String], rowsIn: Long = -1L,
-               report: LoopReport = null)
+  def runKeyed(stage: String, keys: Seq[String], report: LoopReport = null)
               (f: => DataFrame): DataFrame =
-    if (!StageRunner.bucketedCarry(spark)) run(stage, rowsIn, report)(f)
-    else runWith(stage, rowsIn, report) {
-      StageRunner.writeBucketed(f, path(stage), keys.head,
-                                StageRunner.carryBuckets(spark))
-    }
+    commit(stage, report) { writeKeyed(f, stage, keys.head); None }
 
-  /** The resume-or-`write`, read-back and lineage body of [[run]] and
-    * [[runKeyed]]. */
-  private def runWith(stage: String, rowsIn: Long, report: LoopReport)
-                     (write: => Unit): DataFrame = {
-    val t0 = System.nanoTime()
-    val resumed = done(stage)
-    if (!resumed) write
-    val df = StageRunner.read(spark, path(stage))
-    val (rounds, conv) =
-      if (resumed || report == null) (-1L, true)
-      else (report.rounds, report.converged)
-    appendLineage(Seq((stage, runId, rowsIn, rowsOut(stage, df), 0L,
-      (System.nanoTime() - t0) / 1000000, resumed, rounds, conv)))
-    df
-  }
+  private def writeKeyed(df: DataFrame, stage: String, key: String): Unit =
+    if (StageRunner.bucketedCarry(spark))
+      StageRunner.writeBucketed(df, path(stage), key,
+                                StageRunner.carryBuckets(spark))
+    else df.write.mode(SaveMode.Overwrite).parquet(path(stage))
 
   /** Carry a url-keyed stage INCREMENTALLY: instead of rewriting the merged
     * corpus-sized table (the dominant cost of a delta run once compute is
     * maintained — measured in BENCH/BASELINE.md), record a LAYER — the
     * parent run's stage path, the dropped-key set, and a path to the fresh
-    * slice (an already-checkpointed, delta-sized stage). Reading resolves
-    * `parent − drops ∪ fresh` with a broadcast anti-join on the small drop
-    * set; chained deltas resolve recursively through their ancestors, so a
-    * delta run writes only DELTA-sized data for carried stages — the
-    * log-structured (LSM/Delta-log) shape of incremental view maintenance.
+    * slice (`fresh`, a stage this runner already checkpointed, delta-sized).
+    * Reading resolves `parent − drops ∪ fresh` with a broadcast anti-join on
+    * the small drop set; chained deltas resolve recursively through their
+    * ancestors, so a delta run writes only DELTA-sized data for carried
+    * stages — the log-structured (LSM/Delta-log) shape of incremental view
+    * maintenance.
     *
     * Read amplification is bounded: when the chain would exceed
     * `graft.delta.maxLayerDepth` (default [[StageRunner.MaxLayerDepth]]),
@@ -105,67 +72,38 @@ final class StageRunner(spark: SparkSession, outDir: String, runId: String) {
     * them (compaction bounds the retention window).
     *
     * Layer layout under `<outDir>/<stage>/`: `_layer_drops/` (parquet key
-    * set), `_layer` (text: parent path, fresh path, depth, keys — written
-    * LAST as the commit marker). [[StageRunner.completed]] accepts either a
+    * set), `_layer` (text: parent path, fresh path, depth, keys — committed
+    * LAST as the marker). [[StageRunner.completed]] accepts either a
     * materialized `_SUCCESS` or a committed layer. */
   def runCarried(stage: String, parentDir: String, keys: Seq[String],
-                 drops: DataFrame, freshPath: String,
-                 rowsIn: Long = -1L): DataFrame = {
-    val t0 = System.nanoTime()
-    val parentPath = s"$parentDir/$stage"
-    // rows_out: counting a LAYER would resolve parent − drops ∪ fresh over
-    // the corpus-sized parent just to fill a counter — the exact job the
-    // layer exists to avoid (the run() discipline: never force an extra job
-    // on the hot path). Layers record -1 (unresolved view); materialized
-    // stages count from parquet metadata (no scan).
-    def outRows(df: DataFrame): Long =
-      if (StageRunner.layerDepth(path(stage)) > 0) -1L else rowsOut(stage, df)
-    if (done(stage)) {
-      val df = StageRunner.read(spark, path(stage))
-      appendLineage(Seq((stage, runId, rowsIn, outRows(df), 0L,
-        (System.nanoTime() - t0) / 1000000, true, -1L, true)))
-      df
-    } else {
+                 drops: DataFrame, fresh: String): DataFrame =
+    commit(stage) {
+      val parentPath = s"$parentDir/$stage"
       val maxDepth = spark.conf
         .get("graft.delta.maxLayerDepth", StageRunner.MaxLayerDepth.toString)
         .toInt
-      val depth = StageRunner.layerDepth(parentPath) + 1
-      val bucketed = StageRunner.bucketedCarry(spark)
-      val df =
-        if (depth > maxDepth) {
-          // compact: one full materialization resets the chain
-          val resolved = StageRunner.read(spark, parentPath)
-            .join(drops, keys, "left_anti")
-            .unionByName(spark.read.parquet(freshPath).drop(StageRunner.BucketCol))
-          if (bucketed)
-            StageRunner.writeBucketed(resolved, path(stage), keys.head,
-                                      StageRunner.carryBuckets(spark))
-          else
-            resolved.write.mode(SaveMode.Overwrite).parquet(path(stage))
-          StageRunner.read(spark, path(stage))
-        } else {
-          // bucketed mode shuffles the SMALL side into the parent's bucket
-          // layout at write time, so resolution can prune (read below)
-          val parentBuckets = StageRunner.bucketsOf(parentPath)
-          val dropCols = drops.select(keys.map(col): _*)
-          if (parentBuckets > 0)
-            StageRunner.writeBucketed(dropCols,
-              s"${path(stage)}/_layer_drops", keys.head, parentBuckets)
-          else
-            dropCols.write.mode(SaveMode.Overwrite)
-              .parquet(s"${path(stage)}/_layer_drops")
-          Files.write(
-            Paths.get(path(stage), "_layer"),
-            (s"parent=$parentPath\nfresh=$freshPath\ndepth=$depth\n" +
-              s"keys=${keys.mkString(",")}\n")
-              .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          StageRunner.read(spark, path(stage))
-        }
-      appendLineage(Seq((stage, runId, rowsIn, outRows(df), 0L,
-        (System.nanoTime() - t0) / 1000000, false, -1L, true)))
-      df
+      val depth = StageRunner.layerDepth(spark, parentPath) + 1
+      if (depth > maxDepth) {
+        // compact: one full materialization resets the chain
+        writeKeyed(StageRunner.read(spark, parentPath)
+          .join(drops, keys, "left_anti")
+          .unionByName(spark.read.parquet(path(fresh))
+            .drop(StageRunner.BucketCol)), stage, keys.head)
+        None
+      } else {
+        // bucketed mode shuffles the SMALL side into the parent's bucket
+        // layout at write time, so resolution can prune (read below)
+        val parentBuckets = StageRunner.bucketsOf(spark, parentPath)
+        val dropCols = drops.select(keys.map(col): _*)
+        val dropsPath = s"${path(stage)}/_layer_drops"
+        if (parentBuckets > 0)
+          StageRunner.writeBucketed(dropCols, dropsPath, keys.head,
+                                    parentBuckets)
+        else dropCols.write.mode(SaveMode.Overwrite).parquet(dropsPath)
+        Some("_layer" -> (s"parent=$parentPath\nfresh=${path(fresh)}\n" +
+          s"depth=$depth\nkeys=${keys.mkString(",")}\n"))
+      }
     }
-  }
 
   /** Run (or resume) a stage partitioned by `partCol` (the triple tables'
     * partitionBy(pred)); appends per-partition lineage rows.
@@ -176,32 +114,57 @@ final class StageRunner(spark: SparkSession, outDir: String, runId: String) {
     * parquet equivalent of Iceberg's idempotent partition-overwrite commit
     * (north rule: per-partition checkpoint; swap the format string for
     * "iceberg" when the runtime ships the jars). */
-  def runPartitioned(stage: String, partCol: String, rowsIn: Long = -1L)
-                    (f: => DataFrame): DataFrame = {
-    val t0 = System.nanoTime()
-    val resumed = done(stage)
-    if (!resumed)
+  def runPartitioned(stage: String, partCol: String)
+                    (f: => DataFrame): DataFrame =
+    commit(stage, partCol = partCol) {
       f.write.mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(partCol)
         .parquet(path(stage))
-    val df = spark.read.parquet(path(stage))
-    val wall = (System.nanoTime() - t0) / 1000000
-    // per-partition rows from the partition directories' parquet footers
-    // (driver-side, no job) — identical to the former groupBy(partCol)
-    // count job for the string partition columns used here; the job
-    // remains as the fallback for layouts footers can't settle (nulls'
-    // default-partition dir, oversized tables)
-    val perPartCounts: Seq[(String, Long)] =
-      StageRunner.partitionRowCounts(spark, path(stage), partCol)
-        .getOrElse(df.groupBy(partCol).count().collect().toSeq
-          .map(r => (String.valueOf(r.get(0)), r.getLong(1))))
-    val perPart = perPartCounts
-      .map { case (v, n) => (s"$stage/$partCol=$v", runId, rowsIn, n,
-                 0L, wall, resumed, -1L, true) }
-    appendLineage(perPart :+
-      ((stage, runId, rowsIn, perPart.map(_._4).sum, 0L, wall, resumed,
-        -1L, true)))
+      // a dynamic partition overwrite commits no _SUCCESS at the table root
+      Some("_SUCCESS" -> "")
+    }
+
+  /** The one commit path of every stage: skip a completed stage, else run
+    * `write`, then commit the (name, text) marker file it returns — None
+    * when Spark's output committer already wrote `_SUCCESS`. Then read the
+    * table back and append its lineage: rows_out from the parquet footers
+    * (driver-side, numerically identical to `df.count()` without the count
+    * job — ~0.18 s of scheduling per stage, measured in round 6), -1 for a
+    * layer (counting it would resolve parent − drops ∪ fresh over the
+    * corpus-sized parent — the exact job the layer exists to avoid), and
+    * per-partition rows plus their total when `partCol` is set. */
+  private def commit(stage: String, report: LoopReport = null,
+                     partCol: String = null)
+                    (write: => Option[(String, String)]): DataFrame = {
+    val t0 = System.nanoTime()
+    val dir = path(stage)
+    val resumed = StageRunner.completed(spark, outDir, stage)
+    if (!resumed)
+      write.foreach { case (name, text) =>
+        StageRunner.commitMarker(spark, dir, name, text)
+      }
+    val df = StageRunner.read(spark, dir)
+    val rows: Seq[(String, Long)] =
+      if (partCol != null) {
+        // the groupBy job remains as the fallback for layouts footers can't
+        // settle (nulls' default-partition dir, oversized tables)
+        val parts = StageRunner.partitionRowCounts(spark, dir, partCol)
+          .getOrElse(df.groupBy(partCol).count().collect().toSeq
+            .map(r => (String.valueOf(r.get(0)), r.getLong(1))))
+          .map { case (v, n) => (s"$stage/$partCol=$v", n) }
+        parts :+ (stage -> parts.map(_._2).sum)
+      } else if (StageRunner.metaOf(spark, dir).isDefined) Seq(stage -> -1L)
+      else Seq(stage ->
+        StageRunner.footerRowCount(spark, dir).getOrElse(df.count()))
+    val wallMs = (System.nanoTime() - t0) / 1000000
+    val (rounds, conv) =
+      if (resumed || report == null) (-1L, true)
+      else (report.rounds, report.converged)
+    StageRunner.appendLineageRows(spark, s"$outDir/_lineage", rows.map {
+      case (name, n) =>
+        StageRunner.LineageRow(name, runId, n, wallMs, resumed, rounds, conv)
+    })
     df
   }
 
@@ -213,6 +176,13 @@ object StageRunner {
   /** Default maximum layer-chain length before [[StageRunner#runCarried]]
     * compacts (session conf `graft.delta.maxLayerDepth` overrides). */
   val MaxLayerDepth = 3
+
+  /** One `_lineage` row. The file schema also holds `rows_in` (always -1)
+    * and `skipped` (always 0), kept so files of older runs read together
+    * with new ones. */
+  private[runtime] final case class LineageRow(
+      stage: String, runId: String, rowsOut: Long, wallMs: Long,
+      resumed: Boolean, loopRounds: Long, converged: Boolean)
 
   /** The `_lineage` parquet schema, matching what the former
     * `toDF(...).write.parquet` append produced (strings optional,
@@ -238,6 +208,9 @@ object StageRunner {
     * (a cluster-scale stage) fall back to a distributed `count()`. */
   private val FooterCountMaxFiles = 512
 
+  private def fs(spark: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
   /** Per-partition-value row counts for a `partitionBy(partCol)` stage
     * table: one (unescaped value, footer row sum) pair per `partCol=...`
     * directory. None when the layout defies the driver-side read (no
@@ -247,10 +220,8 @@ object StageRunner {
     * used here equal the groupBy job's `String.valueOf(r.get(0))`. */
   private[runtime] def partitionRowCounts(spark: SparkSession, dir: String,
       partCol: String): Option[Seq[(String, Long)]] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(conf)
-    val subdirs = fs.listStatus(p).toSeq
+    val p = new Path(dir)
+    val subdirs = fs(spark, p).listStatus(p).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$partCol="))
     // short-circuits: once a subdir defies the footer read, the rest are
     // not opened
@@ -274,11 +245,10 @@ object StageRunner {
   private[runtime] def footerRowCount(spark: SparkSession,
                                       dir: String): Option[Long] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(conf)
+    val p = new Path(dir)
     val files = scala.collection.mutable.ArrayBuffer
       .empty[org.apache.hadoop.fs.LocatedFileStatus]
-    val it = fs.listFiles(p, true)
+    val it = fs(spark, p).listFiles(p, true)
     while (it.hasNext) {
       val f = it.next()
       val name = f.getPath.getName
@@ -296,70 +266,94 @@ object StageRunner {
     Some(n)
   }
 
+  /** Write `<dir>/<name>` under a `.`-prefixed temp name — which parquet
+    * readers and [[completed]] ignore — and rename it into place once
+    * closed, so a crash mid-write leaves no truncated marker or lineage
+    * file behind. */
+  private def commitFile(spark: SparkSession, dir: Path, name: String)
+                        (write: (FileSystem, Path) => Unit): Unit = {
+    val dfs = fs(spark, dir)
+    val tmp = new Path(dir, s".$name")
+    write(dfs, tmp)
+    if (!dfs.rename(tmp, new Path(dir, name)))
+      throw new java.io.IOException(s"cannot commit $tmp")
+  }
+
+  private def commitMarker(spark: SparkSession, dir: String, name: String,
+                           text: String): Unit =
+    commitFile(spark, new Path(dir), name) { (dfs, tmp) =>
+      val out = dfs.create(tmp, true)
+      try out.write(text.getBytes(UTF_8)) finally out.close()
+    }
+
   /** Append lineage rows as ONE driver-written parquet file — the row is a
     * handful of scalars the driver already holds, and the former 1-row
     * LocalRelation write job cost ~0.15 s of job scheduling + commit
-    * protocol PER STAGE (measured, tools/LineageProbe), which at ~25 stages
-    * per pipeline run was seconds of pure fixed overhead (guide §1.2: the
-    * driver should do almost no data work — and this is no data). Writing
-    * directly preserves the crash-audit property (the file is closed before
-    * the method returns) and the on-disk contract (a parquet file under
-    * `_lineage/`, schema-identical to the previous Spark-written files).
-    * The file is written under a `.`-prefixed name that parquet readers
-    * skip and renamed once closed, so a crash mid-write leaves no truncated
-    * file for [[StageRunner#lineage]] to trip on. */
+    * protocol PER STAGE (measured in round 6), which at ~25 stages per
+    * pipeline run was seconds of pure fixed overhead (guide §1.2: the
+    * driver should do almost no data work — and this is no data). The
+    * file is committed before the method returns (crash audit) and keeps
+    * the on-disk contract (a parquet file under `_lineage/`,
+    * schema-identical to the previous Spark-written files). */
   private[runtime] def appendLineageRows(spark: SparkSession, dir: String,
-      rows: Seq[(String, String, Long, Long, Long, Long, Boolean, Long, Boolean)]): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dirPath = new org.apache.hadoop.fs.Path(dir)
-    val fs = dirPath.getFileSystem(conf)
-    if (!fs.exists(dirPath)) fs.mkdirs(dirPath)
+                                         rows: Seq[LineageRow]): Unit = {
+    val dirPath = new Path(dir)
     val name = s"lineage-${System.nanoTime()}-${lineageSeq.incrementAndGet()}" +
       ".snappy.parquet"
-    val tmp = new org.apache.hadoop.fs.Path(dirPath, s".$name")
-    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
-      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile
-        .fromPath(tmp, conf))
-      .withType(LineageSchema)
-      .withCompressionCodec(
-        org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-      .build()
-    val factory = new org.apache.parquet.example.data.simple.SimpleGroupFactory(
-      LineageSchema)
-    try rows.foreach { r =>
-      val g = factory.newGroup()
-      g.append("stage", r._1).append("run_id", r._2)
-      g.append("rows_in", r._3).append("rows_out", r._4)
-      g.append("skipped", r._5).append("wall_ms", r._6)
-      g.append("resumed", r._7).append("loop_rounds", r._8)
-      g.append("converged", r._9)
-      writer.write(g)
-    } finally writer.close()
-    if (!fs.rename(tmp, new org.apache.hadoop.fs.Path(dirPath, name)))
-      throw new java.io.IOException(s"lineage: cannot commit $tmp")
+    commitFile(spark, dirPath, name) { (_, tmp) =>
+      val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
+        .builder(org.apache.parquet.hadoop.util.HadoopOutputFile
+          .fromPath(tmp, spark.sparkContext.hadoopConfiguration))
+        .withType(LineageSchema)
+        .withCompressionCodec(
+          org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
+        .build()
+      val factory =
+        new org.apache.parquet.example.data.simple.SimpleGroupFactory(
+          LineageSchema)
+      try rows.foreach { r =>
+        val g = factory.newGroup()
+        g.append("stage", r.stage).append("run_id", r.runId)
+        g.append("rows_in", -1L).append("rows_out", r.rowsOut)
+        g.append("skipped", 0L).append("wall_ms", r.wallMs)
+        g.append("resumed", r.resumed).append("loop_rounds", r.loopRounds)
+        g.append("converged", r.converged)
+        writer.write(g)
+      } finally writer.close()
+    }
   }
 
-  /** A stage checkpoint is complete iff its parquet _SUCCESS marker exists
-    * OR it is a committed carry layer (`_layer` marker, written last) — the
+  /** A stage checkpoint is complete iff its `_SUCCESS` marker exists OR it
+    * is a committed carry layer (`_layer` marker, written last) — the
     * single definition of "done" (resume-or-skip here, the prevDir contract
-    * probe in [[graft.Pipeline.runDelta]]); an object-store-aware
-    * completeness check replaces exactly this one method. */
-  def completed(dir: String, stage: String): Boolean =
-    Files.exists(Paths.get(s"$dir/$stage", "_SUCCESS")) ||
-      Files.exists(Paths.get(s"$dir/$stage", "_layer"))
+    * probe in [[graft.Pipeline.runDelta]]). */
+  def completed(spark: SparkSession, dir: String, stage: String): Boolean = {
+    val p = new Path(s"$dir/$stage")
+    val dfs = fs(spark, p)
+    dfs.exists(new Path(p, "_SUCCESS")) || dfs.exists(new Path(p, "_layer"))
+  }
 
   /** Length of the layer chain hanging off `path` (0 = materialized). */
-  def layerDepth(path: String): Int = {
-    val meta = Paths.get(path, "_layer")
-    if (Files.exists(meta)) metaOf(path)("depth").toInt else 0
+  def layerDepth(spark: SparkSession, path: String): Int =
+    metaOf(spark, path).fold(0)(_("depth").toInt)
+
+  private def readText(spark: SparkSession, p: Path): Option[String] = {
+    val dfs = fs(spark, p)
+    if (!dfs.exists(p)) None
+    else {
+      val in = dfs.open(p)
+      try Some(new String(in.readAllBytes(), UTF_8)) finally in.close()
+    }
   }
 
-  private def metaOf(path: String): Map[String, String] =
-    new String(Files.readAllBytes(Paths.get(path, "_layer")),
-               java.nio.charset.StandardCharsets.UTF_8)
-      .linesIterator.filter(_.contains("="))
-      .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }
-      .toMap
+  /** The committed `_layer` marker of `path` as key → value, None for a
+    * materialized table. */
+  private def metaOf(spark: SparkSession,
+                     path: String): Option[Map[String, String]] =
+    readText(spark, new Path(path, "_layer")).map(
+      _.linesIterator.filter(_.contains("="))
+        .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }
+        .toMap)
 
   /** The url-bucketed carry shape (SCALE.md's >MaxBroadcastKeys re-crawl
     * rule): carryable checkpoints lay out in hash-of-key directories so
@@ -391,26 +385,21 @@ object StageRunner {
                                      key: String, n: Int): Unit = {
     val keyed = df.withColumn(BucketCol, bucketExpr(key, n))
     keyed.write.mode(SaveMode.Overwrite).partitionBy(BucketCol).parquet(path)
-    val listing = Files.list(Paths.get(path))
-    val wroteData =
-      try listing.anyMatch(
-        p => p.getFileName.toString.startsWith(s"$BucketCol="))
-      finally listing.close()
-    if (!wroteData)
+    val p = new Path(path)
+    if (!fs(df.sparkSession, p).listStatus(p)
+          .exists(_.getPath.getName.startsWith(s"$BucketCol=")))
       keyed.limit(0).write.mode(SaveMode.Append).parquet(path)
-    Files.write(Paths.get(path, "_buckets"),
-                n.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    commitMarker(df.sparkSession, path, "_buckets", n.toString)
   }
 
   /** Bucket count of a stage table, resolved through layer chains to the
     * materialized root (0 = unbucketed). */
-  private[runtime] def bucketsOf(path: String): Int = {
-    if (Files.exists(Paths.get(path, "_layer"))) bucketsOf(metaOf(path)("parent"))
-    else if (Files.exists(Paths.get(path, "_buckets")))
-      new String(Files.readAllBytes(Paths.get(path, "_buckets")),
-                 java.nio.charset.StandardCharsets.UTF_8).trim.toInt
-    else 0
-  }
+  private[runtime] def bucketsOf(spark: SparkSession, path: String): Int =
+    metaOf(spark, path) match {
+      case Some(m) => bucketsOf(spark, m("parent"))
+      case None =>
+        readText(spark, new Path(path, "_buckets")).fold(0)(_.trim.toInt)
+    }
 
   /** Read a stage table, resolving carry layers recursively:
     * `parent − drops ∪ fresh` per layer (compaction bounds the recursion).
@@ -430,30 +419,28 @@ object StageRunner {
   def read(spark: SparkSession, path: String): DataFrame =
     resolve(spark, path).drop(BucketCol)
 
-  private def resolve(spark: SparkSession, path: String): DataFrame = {
-    val meta = Paths.get(path, "_layer")
-    if (!Files.exists(meta)) spark.read.parquet(path)
-    else {
-      val m = metaOf(path)
-      val drops = spark.read.parquet(s"$path/_layer_drops")
-      val keys = m("keys").split(",").toSeq
-      val parent = resolve(spark, m("parent"))
-      val fresh = spark.read.parquet(m("fresh")).drop(BucketCol)
-      if (parent.columns.contains(BucketCol) &&
-          drops.columns.contains(BucketCol)) {
-        val n = bucketsOf(path)
-        val touched = drops.select(BucketCol).distinct().collect()
-          .map(_.getInt(0)).toSeq
-        val untouched = parent.filter(!col(BucketCol).isin(touched: _*))
-        val joined = parent.filter(col(BucketCol).isin(touched: _*))
-          .join(drops.drop(BucketCol), keys, "left_anti")
-        untouched.unionByName(joined)
-          .unionByName(fresh.withColumn(BucketCol, bucketExpr(keys.head, n)))
-      } else {
-        parent.drop(BucketCol)
-          .join(drops.drop(BucketCol), keys, "left_anti")
-          .unionByName(fresh)
-      }
+  private def resolve(spark: SparkSession, path: String): DataFrame =
+    metaOf(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some(m) =>
+        val drops = spark.read.parquet(s"$path/_layer_drops")
+        val keys = m("keys").split(",").toSeq
+        val parent = resolve(spark, m("parent"))
+        val fresh = spark.read.parquet(m("fresh")).drop(BucketCol)
+        if (parent.columns.contains(BucketCol) &&
+            drops.columns.contains(BucketCol)) {
+          val n = bucketsOf(spark, path)
+          val touched = drops.select(BucketCol).distinct().collect()
+            .map(_.getInt(0)).toSeq
+          val untouched = parent.filter(!col(BucketCol).isin(touched: _*))
+          val joined = parent.filter(col(BucketCol).isin(touched: _*))
+            .join(drops.drop(BucketCol), keys, "left_anti")
+          untouched.unionByName(joined)
+            .unionByName(fresh.withColumn(BucketCol, bucketExpr(keys.head, n)))
+        } else {
+          parent.drop(BucketCol)
+            .join(drops.drop(BucketCol), keys, "left_anti")
+            .unionByName(fresh)
+        }
     }
-  }
 }

@@ -118,14 +118,14 @@ class DeltaSpec extends SparkSuite {
     try {
       Pipeline.run(spark, v1.toDS().toDF(), seeds, d0)
       Pipeline.runDelta(spark, mid.toDS().toDF(), seeds, d1, d0)
-      assert(graft.runtime.StageRunner.layerDepth(s"$d1/subjects") == 1)
+      assert(graft.runtime.StageRunner.layerDepth(spark, s"$d1/subjects") == 1)
       val triples = Pipeline.runDelta(spark, v2.toDS().toDF(), seeds, d2, d1)
       val pr = TripleDiff.diff(triples, world.expectedTriples.toDS().toDF())
       assert(pr.precision == 1.0 && pr.recall == 1.0, s"compaction drift: $pr")
       for (st <- Seq("pages_text", "linked_all", "subjects",
                      "subject_listings", "type_rules", "relation_rules",
                      "prov_pairs", "hypernyms_by_url")) {
-        assert(graft.runtime.StageRunner.layerDepth(s"$d2/$st") == 0,
+        assert(graft.runtime.StageRunner.layerDepth(spark, s"$d2/$st") == 0,
                s"$st should have compacted")
         assert(java.nio.file.Files.exists(
                  java.nio.file.Paths.get(s"$d2/$st", "_SUCCESS")),
@@ -180,7 +180,7 @@ class DeltaSpec extends SparkSuite {
     // CC-mode prevDir lacks the ED state → this was the BOOTSTRAP path,
     // which must itself record the state for the next delta in the chain
     Seq("subjects_ed", "ed_components", "ed_key_counts").foreach { s =>
-      assert(graft.runtime.StageRunner.completed(outDir, s),
+      assert(graft.runtime.StageRunner.completed(spark, outDir, s),
              s"bootstrap did not record $s")
     }
   }
@@ -203,7 +203,7 @@ class DeltaSpec extends SparkSuite {
     // the bootstrap recorded the BU graph state — the next delta is
     // component-bounded
     Seq("subjects_bu", "bu_components", "bu_key_counts").foreach { s =>
-      assert(graft.runtime.StageRunner.completed(outDir, s),
+      assert(graft.runtime.StageRunner.completed(spark, outDir, s),
              s"bootstrap did not record '$s'")
     }
   }
@@ -419,7 +419,8 @@ class DeltaSpec extends SparkSuite {
     assert(pr.precision == 1.0 && pr.recall == 1.0, s"canon-fp drift: $pr")
     // bootstrap evidence: no component-slice stage was written, and the
     // new outDir recorded the CHANGED fingerprint for the next chain hop
-    assert(!graft.runtime.StageRunner.completed(outDir, "subjects_ed_fresh"),
+    assert(!graft.runtime.StageRunner
+             .completed(spark, outDir, "subjects_ed_fresh"),
            "parameter change must not slice-carry")
     val fp = spark.read.parquet(s"$outDir/graph_canon_fp")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap

@@ -41,6 +41,44 @@ class ResumeSpec extends SparkSuite {
            s"late stages should re-run: $lin")
   }
 
+  test("re-running a complete outDir resumes every stage, triples_core too") {
+    val outDir = SparkSuite.tempDir("graft-rerun")
+    val pagesDf = world.pages.toDS().toDF()
+    Pipeline.run(spark, pagesDf, seeds, outDir, runId = "run-1")
+    Pipeline.run(spark, pagesDf, seeds, outDir, runId = "run-2")
+    val lin = spark.read.parquet(s"$outDir/_lineage")
+      .filter(col("run_id") === "run-2")
+      .select("stage", "resumed").as[(String, Boolean)].collect()
+    assert(lin.map(_._1).contains("triples_core"), lin.toSeq)
+    assert(lin.forall(_._2), s"stages re-run: ${lin.filterNot(_._2).toSeq}")
+  }
+
+  test("file:// URI outDirs resume a completed stage and commit a layer") {
+    import graft.runtime.StageRunner
+    val prev = "file://" + SparkSuite.tempDir("graft-uri-prev")
+    val out = "file://" + SparkSuite.tempDir("graft-uri-out")
+    new StageRunner(spark, prev, "r1").run("t") {
+      Seq(("a", 1), ("b", 2)).toDF("url", "v")
+    }
+    val again = new StageRunner(spark, prev, "r2")
+    again.run("t") { sys.error("a completed stage must not re-run") }
+    assert(again.lineage().filter(col("run_id") === "r2")
+      .select("resumed").as[Boolean].collect().toSeq == Seq(true))
+    val delta = new StageRunner(spark, out, "d1")
+    delta.run("t_fresh") { Seq(("b", 3), ("c", 4)).toDF("url", "v") }
+    val carried = delta.runCarried("t", prev, Seq("url"),
+                                   Seq("b").toDF("url"), "t_fresh")
+    assert(StageRunner.layerDepth(spark, s"$out/t") == 1)
+    assert(carried.select("url", "v").as[(String, Int)].collect().toSet ==
+             Set(("a", 1), ("b", 3), ("c", 4)))
+    // one directory in two spellings is still the same outDir
+    val e = intercept[IllegalArgumentException] {
+      Pipeline.runDelta(spark, world.pages.toDS().toDF(), seeds,
+                        prev, prev.stripPrefix("file://"))
+    }
+    assert(e.getMessage.contains("outDir must differ"))
+  }
+
   test("partition backfill rewrites only the targeted predicate partition") {
     import graft.runtime.StageRunner
     val dir = SparkSuite.tempDir("graft-backfill")
