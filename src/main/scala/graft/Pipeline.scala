@@ -9,7 +9,7 @@ import graft.link.AliasLink
 import graft.canonical.{AlignmentGraph, NilCluster}
 import graft.taxonomy.{Disjointness, RuleMining}
 import graft.emit.TripleEmit
-import graft.runtime.{LoopReport, StageRunner}
+import graft.runtime.{LoopReport, Node, StageRunner}
 import graft.runtime.Checkpoints.fresh
 
 /** The end-to-end KG-construction pipeline (north rule): pages → invariant
@@ -30,6 +30,17 @@ import graft.runtime.Checkpoints.fresh
   * counts, provenance pairs) is checkpointed as a MATERIALIZED VIEW keyed
   * either by url (carried tables) or by its group key (count tables) — the
   * shape [[runDelta]] maintains incrementally instead of recomputing.
+  *
+  * Stages form a graph, not a sequence: each declares its input stages,
+  * and a stage runs as soon as they have committed, concurrently with
+  * every other ready stage ([[StageRunner#execute]]). The contract that
+  * makes this safe: a stage body reads only its declared inputs (a read
+  * of anything else fails on every run); stage and lineage file names
+  * are unique, so concurrent commits never collide; the previous-run
+  * tables ([[Stages#prev]]) are read through a concurrent map; and
+  * [[run]]/[[runDelta]] return only once every stage and its `_lineage`
+  * row are committed, rethrowing the first failure after cancelling the
+  * stages in flight.
   */
 object Pipeline {
 
@@ -233,8 +244,12 @@ object Pipeline {
     * corpus stages carry from it (false = graph-mode bootstrap). */
   private case class Prev(dir: String, carryCorpus: Boolean)
 
-  /** The one stage list behind [[run]] (`prev` = None) and [[runDelta]]:
-    * the per-page prefix, then [[corpus]]. */
+  /** The one stage graph behind [[run]] (`prev` = None) and [[runDelta]]:
+    * the per-page prefix, then [[corpus]]. Every stage names its input
+    * stages, and [[StageRunner#execute]] runs each as soon as they have
+    * committed — independent branches (the manifest and the seeds
+    * fingerprint, hypernym mining, the tag gate beside NIL clustering, the
+    * rule miners, the taxonomy closure, provenance) overlap. */
   private def stages(spark: SparkSession, pages: DataFrame, seedsIn: Seeds,
                      outDir: String, runId: String, canon: Canonicalization,
                      prev: Option[Prev]): DataFrame = {
@@ -247,59 +262,68 @@ object Pipeline {
     // consumed crawl slice. A later [[runDelta]] anti-joins its new crawl
     // against this to find changed/added pages — the content fingerprint
     // catches a capture rewritten under an unchanged timestamp. Plus the
-    // seeds fingerprint: carried links are only valid under identical seeds.
+    // seeds fingerprint: carried links are only valid under identical seeds
+    // (checked before any stage runs).
     val seedsFp = prev match {
       case None => seedsFingerprint(spark, seeds)
       case Some(p) => checkedSeedsFp(spark, seeds, p.dir)
     }
-    val manifest = runner.run("crawl_manifest") { manifestOf(pages) }
-    runner.run("seeds_fp") { seedsFp }
-    lazy val touched = touchedUrls(manifest, st.prev("crawl_manifest"))
+    runner.execute {
+      val manifest = runner.stage("crawl_manifest") { manifestOf(pages) }
+      runner.stage("seeds_fp") { seedsFp }
+      val touched = st.deltaNode("touched_urls", manifest) {
+        touchedUrls(manifest(), st.prev("crawl_manifest"))
+      }
 
-    // 1. invariant text extraction (byte-identical per url)
-    val pagesText = st.carried("pages_text", "url", touched) {
-      TextExtract.extract(st.slice(pages, touched))
-    }
+      // 1. invariant text extraction (byte-identical per url)
+      val pagesText = st.carried("pages_text", "url", touched, Nil) {
+        TextExtract.extract(slice(pages, touched.map(_())))
+      }
 
-    // 2. listings → items → subject mentions. Only the slice's mentions
-    // are checkpointed ("mentions_fresh" on a delta — run()'s corpus-wide
-    // "mentions" checkpoint must never resume into the delta-only shape or
-    // vice versa, the linked_all/linked lesson)
-    val mentions = st.sliceOnly("mentions") {
-      ListingExtract.mentions(pagesText.cur)
-    }
+      // 2. listings → items → subject mentions. Only the slice's mentions
+      // are checkpointed ("mentions_fresh" on a delta — run()'s corpus-wide
+      // "mentions" checkpoint must never resume into the delta-only shape
+      // or vice versa, the linked_all/linked lesson)
+      val mentions = st.sliceOnly("mentions", Seq(pagesText)) {
+        ListingExtract.mentions(pagesText().cur)
+      }
 
-    // 3. entity linking (broadcast alias dict incl. folded spelling
-    // redirects). ONE broadcast-join execution; linked/unlinked are filters
-    // over the checkpointed join output (ent nullable), not two separate
-    // stages. Stage name is "linked_all", NOT the pre-r3 "linked": the
-    // checkpoint shape changed (nullable ent, unlinked rows included) and
-    // StageRunner resumes by name — a stale "linked" checkpoint must never
-    // resume into the new shape (it would silently empty the NIL path).
-    val dict = buildDict(seeds)
-    val linkedAll = st.carried("linked_all", "url", touched,
-                               freshName = "linked_fresh") {
-      AliasLink.linkAll(mentions, dict)
-    }
+      // 3. entity linking (broadcast alias dict incl. folded spelling
+      // redirects). ONE broadcast-join execution; linked/unlinked are
+      // filters over the checkpointed join output (ent nullable), not two
+      // separate stages. Stage name is "linked_all", NOT the pre-r3
+      // "linked": the checkpoint shape changed (nullable ent, unlinked rows
+      // included) and StageRunner resumes by name — a stale "linked"
+      // checkpoint must never resume into the new shape (it would silently
+      // empty the NIL path).
+      val dict = buildDict(seeds)
+      val linkedAll = st.carried("linked_all", "url", touched, Seq(mentions),
+                                 freshName = "linked_fresh") {
+        AliasLink.linkAll(mentions(), dict)
+      }
 
-    // 1b. corpus hypernym mining over page prose (A5/N9 — Hearst patterns),
-    // checkpointed per url first; the global aggregate is its rollup, so a
-    // delta's minus side is a row drop from the url-keyed view, NOT a
-    // re-parse of dropped prose (maintenance cost is 1× the churn, not 2×)
-    val hypByUrl = st.carried("hypernyms_by_url", "url", touched) {
-      import spark.implicits._
-      graft.mine.Hearst.corpusCountsByUrl(
-        pagesText.cur.select("url", "text").as[(String, String)])
-    }
-    st.counts("hypernyms", "sub", "obj") { s =>
-      s(hypByUrl).groupBy("sub", "obj").agg(sum("cnt").as("cnt"))
-    }
+      // 1b. corpus hypernym mining over page prose (A5/N9 — Hearst
+      // patterns), checkpointed per url first; the global aggregate is its
+      // rollup, so a delta's minus side is a row drop from the url-keyed
+      // view, NOT a re-parse of dropped prose (maintenance cost is 1× the
+      // churn, not 2×)
+      val hypByUrl = st.carried("hypernyms_by_url", "url", touched,
+                                Seq(pagesText)) {
+        import spark.implicits._
+        graft.mine.Hearst.corpusCountsByUrl(
+          pagesText().cur.select("url", "text").as[(String, String)])
+      }
+      st.counts("hypernyms", Seq("sub", "obj"), hypByUrl) { s =>
+        s(hypByUrl()).groupBy("sub", "obj").agg(sum("cnt").as("cnt"))
+      }
 
-    if (prev.forall(_.carryCorpus))
-      corpus(st, linkedAll, touched, dict, seeds, canon)
-    else
-      corpus(new Stages(spark, runner, None),
-             new Rel(linkedAll.all, linkedAll.all), touched, dict, seeds, canon)
+      if (prev.forall(_.carryCorpus))
+        corpus(st, linkedAll, touched, dict, seeds, canon)
+      else
+        corpus(new Stages(spark, runner, None),
+               linkedAll.map(r => new Rel(r.all, r.all)), None, dict, seeds,
+               canon)
+    }
   }
 
   /** The seeds contract of a delta: the recorded fingerprint must match
@@ -718,9 +742,15 @@ object Pipeline {
     lazy val old: DataFrame = oldRows
   }
 
+  /** `df` restricted to the keys of `drops` on a delta (Some); all of it on
+    * a full run (None). */
+  private def slice(df: DataFrame, drops: Option[DataFrame]): DataFrame =
+    drops.fold(df)(d => df.join(d, d.columns.toSeq, "left_semi"))
+
   /** The stage declarations of one run, against an optional previous state
     * (`prevDir`, None on a full run). Each corpus-level stage names its
-    * maintenance rule by the method that runs it:
+    * maintenance rule by the method that declares it, and its input nodes
+    * (`inputs`, plus the drop set on a delta):
     *  - [[carried]]: a key-keyed table. Full run: its rows over the whole
     *    input, written under its own name. Delta: its rows over the affected
     *    slice as `<name>_fresh`, then a carry layer over the previous table
@@ -730,55 +760,66 @@ object Pipeline {
     *    whole input. Delta: [[maintainCounts]] of the previous view with the
     *    rows of the old and the new slice;
     *  - [[derived]]: recomputed from maintained inputs in both runs;
-    *  - [[sliceOnly]]: an intermediate only its own run reads.
-    * `drops` arguments are only evaluated on a delta, before the stage body
-    * runs. */
+    *  - [[sliceOnly]]: an intermediate only its own run reads;
+    *  - [[deltaNode]]: a driver-side value only a delta computes (None on
+    *    a full run) — the touched and affected key sets.
+    * `drops` nodes are None exactly on a full run. Bodies run concurrently,
+    * so [[prev]] is safe to call from any of them. */
   private final class Stages(val spark: SparkSession, val runner: StageRunner,
                              prevDir: Option[String]) {
     def delta: Boolean = prevDir.isDefined
 
     private val prevTables =
-      scala.collection.mutable.Map.empty[String, DataFrame]
+      new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
     /** The previous run's `stage` table (carry layers resolved), read once
       * per run. */
     def prev(stage: String): DataFrame =
-      prevTables.getOrElseUpdate(stage,
-        StageRunner.read(spark, s"${prevDir.get}/$stage"))
+      prevTables.computeIfAbsent(stage,
+        s => StageRunner.read(spark, s"${prevDir.get}/$s"))
 
-    /** `df` restricted to the keys of `drops` on a delta; all of it on a
-      * full run. */
-    def slice(df: DataFrame, drops: => DataFrame): DataFrame =
-      if (delta) df.join(drops, drops.columns.toSeq, "left_semi") else df
+    def deltaNode[A](name: String, inputs: Node[_]*)
+                    (body: => A): Option[Node[A]] =
+      if (delta) Some(runner.node(name, inputs: _*)(body)) else None
 
-    def sliceOnly(name: String, report: LoopReport = null)
-                 (rows: => DataFrame): DataFrame =
-      runner.run(if (delta) s"${name}_fresh" else name, report = report)(rows)
+    def sliceOnly(name: String, inputs: Seq[Node[_]], report: LoopReport = null)
+                 (rows: => DataFrame): Node[DataFrame] = {
+      val stage = if (delta) s"${name}_fresh" else name
+      runner.node(stage, inputs: _*)(runner.run(stage, report = report)(rows))
+    }
 
     /** `keyed` picks the full-run writer: [[StageRunner#runKeyed]] (bucket
       * layout capable) or plain [[StageRunner#run]]. */
-    def carried(name: String, key: String, drops: => DataFrame,
-                keyed: Boolean = true, freshName: String = null,
-                report: LoopReport = null)(rows: => DataFrame): Rel =
-      prevDir match {
-        case None =>
-          val t =
-            if (keyed) runner.runKeyed(name, Seq(key), report = report)(rows)
-            else runner.run(name, report = report)(rows)
-          new Rel(t, t)
-        case Some(dir) =>
-          val d = drops
-          val fresh = Option(freshName).getOrElse(s"${name}_fresh")
-          val cur = runner.run(fresh, report = report)(rows)
-          val all =
-            runner.runCarried(name, dir, Seq(key), d, fresh)
-          new Rel(all, cur, prev(name).join(d, Seq(key), "left_semi"))
+    def carried(name: String, key: String, drops: Option[Node[DataFrame]],
+                inputs: Seq[Node[_]], keyed: Boolean = true,
+                freshName: String = null, report: LoopReport = null)
+               (rows: => DataFrame): Node[Rel] =
+      runner.node(name, inputs ++ drops: _*) {
+        prevDir match {
+          case None =>
+            val t =
+              if (keyed) runner.runKeyed(name, Seq(key), report = report)(rows)
+              else runner.run(name, report = report)(rows)
+            new Rel(t, t)
+          case Some(dir) =>
+            val d = drops.get()
+            val fresh = Option(freshName).getOrElse(s"${name}_fresh")
+            val cur = runner.run(fresh, report = report)(rows)
+            val all =
+              runner.runCarried(name, dir, Seq(key), d, fresh)
+            new Rel(all, cur, prev(name).join(d, Seq(key), "left_semi"))
+        }
       }
 
     /** `rows(side)` computes the view from one side of each input: `_.cur`
       * on a full run; `_.old` (minus) and `_.cur` (plus) on a delta. */
-    def counts(name: String, keys: String*)
-              (rows: (Rel => DataFrame) => DataFrame): Rel =
+    def counts(name: String, keys: Seq[String], inputs: Node[_]*)
+              (rows: (Rel => DataFrame) => DataFrame): Node[Rel] =
+      runner.node(name, inputs: _*)(countView(name, keys)(rows))
+
+    /** [[counts]] inside the body of the node that declares it. */
+    def countView(name: String, keys: Seq[String])
+                 (rows: (Rel => DataFrame) => DataFrame): Rel =
       if (!delta) {
         val t = runner.run(name)(rows(_.cur))
         new Rel(t, t)
@@ -787,10 +828,12 @@ object Pipeline {
         new Rel(runner.run(name)(maintainCounts(prev(name), net, keys)), net)
       }
 
-    def derived(name: String)(rows: => DataFrame): Rel = {
-      val t = runner.run(name)(rows)
-      new Rel(t, t, prev(name))
-    }
+    def derived(name: String, inputs: Node[_]*)
+               (rows: => DataFrame): Node[Rel] =
+      runner.node(name, inputs: _*) {
+        val t = runner.run(name)(rows)
+        new Rel(t, t, prev(name))
+      }
   }
 
   /** Rows in exactly one of two distinct sets: the keys whose threshold
@@ -804,37 +847,39 @@ object Pipeline {
   /** The corpus-level stages downstream of the per-page prefix:
     * canonicalization (the mode's own stages) → [[mineAndEmit]].
     * `touched` is the delta's touched-url set. */
-  private def corpus(st: Stages, linkedAll: Rel, touched: => DataFrame,
-                     dict: DataFrame, seeds: Seeds,
-                     canon: Canonicalization): DataFrame = {
+  private def corpus(st: Stages, linkedAll: Node[Rel],
+                     touched: Option[Node[DataFrame]], dict: DataFrame,
+                     seeds: Seeds, canon: Canonicalization): Node[DataFrame] = {
     val seedTypes = seeds.entityTypes.select(col("ent"), col("tpe"))
 
     // 3b. F9: frequent unknown labels (boilerplate) — counted as a
     // maintained view, filtered before clustering
     def frequentOf(counts: DataFrame): DataFrame =
       counts.filter(col("cnt") > MaxUnknownLabelFreq).select("label")
-    val unlCounts = st.counts("unlinked_label_counts", "label") { s =>
-      s(linkedAll).filter(col("ent").isNull)
+    val unlCounts = st.counts("unlinked_label_counts", Seq("label"),
+                              linkedAll) { s =>
+      s(linkedAll()).filter(col("ent").isNull)
         .groupBy("label").agg(count(lit(1)).as("cnt"))
     }
-    val frequent = hintSmall(fresh(frequentOf(unlCounts.all)))
+    val frequent = st.runner.node("frequent_labels", unlCounts) {
+      hintSmall(fresh(frequentOf(unlCounts().all)))
+    }
 
     // A9 tag gate inputs: P(tag|type) stats over linked mentions, validity
     // ≥ threshold with parent-tag inheritance (driver fixpoint over the
     // broadcast taxonomy). The stats count LINKED mentions × seed types —
     // the reference's df_train slice (known entities only,
-    // `listing/extract.py:47-48`). Lazy: a full run writes them among the
-    // mining stages, a delta before it slices canonicalization (their flips
-    // widen the slice).
-    lazy val tagStats = st.counts("tag_stats", "tpe", "tag") { s =>
+    // `listing/extract.py:47-48`). They run beside canonicalization; a
+    // delta's slice waits for them (their flips widen it).
+    val tagStats = st.counts("tag_stats", Seq("tpe", "tag"), linkedAll) { s =>
       graft.taxonomy.ValidTags.tagStats(
-        s(linkedAll).filter(col("ent").isNotNull)
+        s(linkedAll()).filter(col("ent").isNotNull)
           .select(col("ent"),
                   graft.taxonomy.ValidTags.shapeTag(col("label")).as("tag")),
         seedTypes)
     }
-    lazy val validTags = st.derived("valid_tags") {
-      graft.taxonomy.ValidTags.validTagsFromStats(tagStats.all,
+    val validTags = st.derived("valid_tags", tagStats) {
+      graft.taxonomy.ValidTags.validTagsFromStats(tagStats().all,
                                                   seeds.taxonomyEdges)
     }
 
@@ -842,42 +887,50 @@ object Pipeline {
     //   touched —
     // a label crossing the F9 boilerplate threshold changes the kept
     // mentions of every url holding it
-    lazy val flippedLabels = flipped(frequentOf(unlCounts.all),
-      frequentOf(st.prev("unlinked_label_counts")), "label")
+    val flippedLabels = st.deltaNode("flipped_labels", unlCounts) {
+      flipped(frequentOf(unlCounts().all),
+              frequentOf(st.prev("unlinked_label_counts")), "label")
+    }
     // the urls the mining stages re-derive: the touched ones, every url
     // holding an unlinked mention whose F9 verdict flipped, and every url
     // whose (prev subjects × prev rules) rows hit a (tpe, tag) pair whose
     // A9 validity flipped (it changes gated assertions there), plus the
-    // mode's own widenings
-    def affectedUrls(subjectsStage: String, extra: DataFrame*): DataFrame = {
-      val f9FlipUrls =
-        if (flippedLabels.isEmpty) None
-        else Some(linkedAll.all.filter(col("ent").isNull)
-          .join(hintSmall(flippedLabels), Seq("label"), "left_semi")
-          .select("url"))
-      val flippedTags = flipped(validTags.all, validTags.old, "tpe", "tag")
-      val tagFlipUrls =
-        if (flippedTags.isEmpty) None
-        else {
-          // restrict rules to flipped types FIRST (tiny broadcast) so the
-          // listing-keyed join is map-side against a small side
-          val rulesFlipped = st.prev("type_rules").join(
-            hintSmall(flippedTags.select("tpe").distinct()),
-            Seq("tpe"), "left_semi")
-          Some(st.prev(subjectsStage)
-            .select(col("url"), col("listing_key"),
-                    graft.taxonomy.ValidTags.shapeTag(col("label")).as("tag"))
-            .join(rulesFlipped, Seq("url", "listing_key"))
-            .join(hintSmall(flippedTags), Seq("tpe", "tag"), "left_semi")
+    // urls of the graph closure's components
+    def affectedUrls(subjectsStage: String,
+                     closure: Option[Node[GraphClosure]])
+        : Option[Node[DataFrame]] =
+      st.deltaNode("affected_urls", Seq(linkedAll, validTags) ++ touched ++
+                   flippedLabels ++ closure: _*) {
+        val labels = flippedLabels.get()
+        val f9FlipUrls =
+          if (labels.isEmpty) None
+          else Some(linkedAll().all.filter(col("ent").isNull)
+            .join(hintSmall(labels), Seq("label"), "left_semi")
             .select("url"))
-        }
-      val widenings = f9FlipUrls.toSeq ++ tagFlipUrls ++ extra
-      hintSmall(
-        (if (widenings.isEmpty) touched
-         else widenings.foldLeft(touched.select("url"))(_ unionByName _)
-           .distinct())
-          .localCheckpoint())
-    }
+        val flippedTags = flipped(validTags().all, validTags().old, "tpe", "tag")
+        val tagFlipUrls =
+          if (flippedTags.isEmpty) None
+          else {
+            // restrict rules to flipped types FIRST (tiny broadcast) so the
+            // listing-keyed join is map-side against a small side
+            val rulesFlipped = st.prev("type_rules").join(
+              hintSmall(flippedTags.select("tpe").distinct()),
+              Seq("tpe"), "left_semi")
+            Some(st.prev(subjectsStage)
+              .select(col("url"), col("listing_key"),
+                      graft.taxonomy.ValidTags.shapeTag(col("label")).as("tag"))
+              .join(rulesFlipped, Seq("url", "listing_key"))
+              .join(hintSmall(flippedTags), Seq("tpe", "tag"), "left_semi")
+              .select("url"))
+          }
+        val widenings = f9FlipUrls.toSeq ++ tagFlipUrls ++
+          closure.toSeq.flatMap(_().urls)
+        hintSmall(
+          (if (widenings.isEmpty) touched.get()
+           else widenings.foldLeft(touched.get().select("url"))(_ unionByName _)
+             .distinct())
+            .localCheckpoint())
+      }
 
     /** Graph canonicalization. Besides the subject table, a run records the
       * mode's delta state: the components stage (the alignment graph's
@@ -888,53 +941,60 @@ object Pipeline {
       * components ([[graphClosure]]); one lazy recompute feeds the subject
       * and component stages (a fully-resumed outDir never builds the graph,
       * a partial resume builds it once). */
-    def graphCanon(mode: GraphMode): DataFrame = {
+    def graphCanon(mode: GraphMode): Node[DataFrame] = {
       def keptAllOf(la: DataFrame): DataFrame = {
         val (l, u) = AliasLink.splitLinked(la)
         fresh(l).unionByName(
-          fresh(u.join(frequent, Seq("label"), "left_anti"))
+          fresh(u.join(frequent(), Seq("label"), "left_anti"))
             .withColumn("ent", lit(null).cast("string")))
       }
-      def keyCounts(members: Rel): Rel =
-        st.counts(mode.keyCountsStage, "key") { s =>
-          AlignmentGraph.graphMentions(s(members))
-            .groupBy("key").agg(count(lit(1)).as("cnt"))
-        }
-      val closure =
-        if (!st.delta) None
-        else Some(graphClosure(st, mode, linkedAll, touched, frequent,
-                               flippedLabels, dict, keptAllOf, keyCounts))
+      def keyCountsOf(s: Rel => DataFrame, members: Rel): DataFrame =
+        AlignmentGraph.graphMentions(s(members))
+          .groupBy("key").agg(count(lit(1)).as("cnt"))
+      val closure = st.deltaNode("graph_closure", Seq(linkedAll, frequent) ++
+                                 touched ++ flippedLabels: _*) {
+        graphClosure(st, mode, linkedAll(), touched.get(), frequent(),
+                     flippedLabels.get(), dict, keptAllOf,
+                     members => st.countView(mode.keyCountsStage, Seq("key"))(
+                       keyCountsOf(_, members)))
+      }
       val rep = new LoopReport
+      // forced by the subjects stage, or by the components stage when the
+      // subjects stage resumed — never by both at once: the components
+      // stage waits for the subjects stage
       lazy val recomputed = closure match {
         case None =>
-          mode.recompute(keptAllOf(linkedAll.all).localCheckpoint(), None, rep)
-        case Some(c) => mode.recompute(c.slice, Some(c.hotKeys), rep)
+          mode.recompute(keptAllOf(linkedAll().all).localCheckpoint(), None,
+                         rep)
+        case Some(c) => mode.recompute(c().slice, Some(c().hotKeys), rep)
       }
       // carries: the subjects stage drops the affected components' mention
       // ids (a MENTION-keyed layer — affected mentions live on untouched
       // urls); the components stage drops whole components
       val subjects = st.carried(mode.subjectsStage, "mention_id",
-                                closure.get.mentionDrops, keyed = false,
-                                report = rep) { recomputed._1 }
-      st.carried(mode.compsStage, "comp", closure.get.compDrops) {
-        recomputed._2
-      }
-      if (closure.isEmpty) keyCounts(new Rel(subjects.all, subjects.all))
-      st.runner.run("graph_canon_fp") {
+                                closure.map(_.map(_.mentionDrops)),
+                                Seq(linkedAll, frequent) ++ closure,
+                                keyed = false, report = rep) { recomputed._1 }
+      st.carried(mode.compsStage, "comp", closure.map(_.map(_.compDrops)),
+                 Seq(subjects)) { recomputed._2 }
+      if (closure.isEmpty)
+        st.counts(mode.keyCountsStage, Seq("key"), subjects)(
+          keyCountsOf(_, subjects()))
+      st.runner.stage("graph_canon_fp") {
         canonFpDf(st.spark, mode.canonFp)
       }
       // mining re-derives every url holding an affected mention
-      lazy val urls = affectedUrls(mode.subjectsStage, closure.get.urls: _*)
-      val subjectsA =
-        if (!st.delta) subjects
-        else {
-          val u = urls
-          new Rel(subjects.all,
-            st.runner.run(s"${mode.subjectsStage}_affected") {
-              subjects.all.join(u, Seq("url"), "left_semi")
+      val urls = affectedUrls(mode.subjectsStage, closure)
+      val subjectsA = urls.fold(subjects) { u =>
+        val name = s"${mode.subjectsStage}_affected"
+        st.runner.node(name, subjects, u) {
+          new Rel(subjects().all,
+            st.runner.run(name) {
+              subjects().all.join(u(), Seq("url"), "left_semi")
             },
-            st.prev(mode.subjectsStage).join(u, Seq("url"), "left_semi"))
+            st.prev(mode.subjectsStage).join(u(), Seq("url"), "left_semi"))
         }
+      }
       mineAndEmit(st, subjectsA, urls, validTags, seeds)
     }
 
@@ -946,21 +1006,28 @@ object Pipeline {
         // are content-derived and page-local — see NilCluster — listing
         // rules are per (url, listing_key) and the count views are additive
         // over url contributions, so slice ∪ carry ≡ full recompute)
-        lazy val urls = affectedUrls("subjects")
-        val (linked, unlinked) =
-          AliasLink.splitLinked(st.slice(linkedAll.all, urls))
-        val keptUnlinked = unlinked.join(frequent, Seq("label"), "left_anti")
+        val urls = affectedUrls("subjects", None)
+        // the slice's linked mentions and its kept (non-boilerplate) NIL
+        // mentions
+        def split(): (DataFrame, DataFrame) = {
+          val (linked, unlinked) =
+            AliasLink.splitLinked(slice(linkedAll().all, urls.map(_())))
+          (linked, unlinked.join(frequent(), Seq("label"), "left_anti"))
+        }
         val nilRep = new LoopReport
-        val nilAssign = st.sliceOnly("nil_entities", nilRep) {
-          NilCluster.cluster(keptUnlinked, nilRep)
+        val nilAssign = st.sliceOnly("nil_entities",
+                                     Seq(linkedAll, frequent) ++ urls, nilRep) {
+          NilCluster.cluster(split()._2, nilRep)
         }
         // linked mentions keep their argmax entity; kept-NIL mentions take
         // their content-derived cluster id
-        val subjects = st.carried("subjects", "url", urls) {
+        val subjects = st.carried("subjects", "url", urls,
+                                  Seq(linkedAll, frequent, nilAssign)) {
+          val (linked, keptUnlinked) = split()
           linked.select("url", "listing_key", "mention_id", "label", "ent")
             .withColumn("is_new", lit(false))
             .unionByName(
-              keptUnlinked.join(nilAssign, "mention_id")
+              keptUnlinked.join(nilAssign(), "mention_id")
                 .select("url", "listing_key", "mention_id", "label", "ent")
                 .withColumn("is_new", lit(true)))
         }
@@ -1127,25 +1194,31 @@ object Pipeline {
   /** The mining aggregates (url-keyed tables + count views — the
     * checkpointed materialized views a delta maintains) and the emit
     * stages, over the `subjects` of the affected `urls` (every url on a
-    * full run). */
-  private def mineAndEmit(st: Stages, subjects: Rel, urls: => DataFrame,
-                          validTags: => Rel, seeds: Seeds): DataFrame = {
+    * full run, None). Returns the node of the triple table. */
+  private def mineAndEmit(st: Stages, subjects: Node[Rel],
+                          urls: Option[Node[DataFrame]], validTags: Node[Rel],
+                          seeds: Seeds): Node[DataFrame] = {
     val seedTypes = seeds.entityTypes.select(col("ent"), col("tpe"))
     // 6a. the distinct (url, listing_key, ent) projection feeds FIVE
     // consumers (both rule miners, both candidate counts, provenance) —
     // checkpoint it once instead of paying the corpus-wide distinct
     // shuffle per consumer
-    val subjectListings = st.carried("subject_listings", "url", urls) {
-      subjects.cur.select("url", "listing_key", "ent").distinct()
+    val subjectListings = st.carried("subject_listings", "url", urls,
+                                     Seq(subjects)) {
+      subjects().cur.select("url", "listing_key", "ent").distinct()
     }
-    val typeRules = st.carried("type_rules", "url", urls) {
-      RuleMining.listingTypeRules(subjectListings.cur, seedTypes)
+    val typeRules = st.carried("type_rules", "url", urls,
+                               Seq(subjectListings)) {
+      RuleMining.listingTypeRules(subjectListings().cur, seedTypes)
     }
-    val relationRules = st.carried("relation_rules", "url", urls) {
-      RuleMining.listingRelationRules(subjectListings.cur, seeds.seedRelations)
+    val relationRules = st.carried("relation_rules", "url", urls,
+                                   Seq(subjectListings)) {
+      RuleMining.listingRelationRules(subjectListings().cur,
+                                      seeds.seedRelations)
     }
-    val labelCounts = st.counts("label_counts", "ent", "label") { s =>
-      s(subjects).groupBy("ent", "label").agg(count(lit(1)).as("cnt"))
+    val labelCounts = st.counts("label_counts", Seq("ent", "label"),
+                                subjects) { s =>
+      s(subjects()).groupBy("ent", "label").agg(count(lit(1)).as("cnt"))
     }
     // A9 tag gate at ASSERTION level (≙ `listing/extract.py:158-162`: an
     // assertion survives only when the subject mention's NE tag is valid
@@ -1157,32 +1230,37 @@ object Pipeline {
     // the PREVIOUS validity (what the recorded view contains), its plus
     // side under the new one; validity flips on untouched urls are covered
     // by the affected-url widening.
-    val valid = validTags
-    val typeCandCounts = st.counts("type_cand_counts", "ent", "tpe") { s =>
-      s(subjects).select(col("url"), col("listing_key"), col("ent"),
+    val typeCandCounts = st.counts("type_cand_counts", Seq("ent", "tpe"),
+                                   subjects, typeRules, validTags) { s =>
+      s(subjects()).select(col("url"), col("listing_key"), col("ent"),
           graft.taxonomy.ValidTags.shapeTag(col("label")).as("tag"))
-        .join(s(typeRules), Seq("url", "listing_key"))
-        .join(broadcast(s(valid)), Seq("tpe", "tag"), "left_semi")
+        .join(s(typeRules()), Seq("url", "listing_key"))
+        .join(broadcast(s(validTags())), Seq("tpe", "tag"), "left_semi")
         .select("url", "listing_key", "ent", "tpe").distinct()
         .groupBy("ent", "tpe").agg(count(lit(1)).as("cnt"))
     }
     val relCandCounts =
-      st.counts("rel_cand_counts", "ent", "pred", "obj") { s =>
-        s(subjectListings).join(s(relationRules), Seq("url", "listing_key"))
+      st.counts("rel_cand_counts", Seq("ent", "pred", "obj"),
+                subjectListings, relationRules) { s =>
+        s(subjectListings()).join(s(relationRules()), Seq("url", "listing_key"))
           .groupBy("ent", "pred", "obj").agg(count(lit(1)).as("cnt"))
       }
-    val provPairs = st.carried("prov_pairs", "url", urls) {
-      fresh(subjectListings.cur.select("ent", "url"))
+    val provPairs = st.carried("prov_pairs", "url", urls,
+                               Seq(subjectListings, typeRules)) {
+      fresh(subjectListings().cur.select("ent", "url"))
         .unionByName(
-          fresh(typeRules.cur.select(col("tpe").as("ent"), col("url"))))
+          fresh(typeRules().cur.select(col("tpe").as("ent"), col("url"))))
         .distinct()
     }
 
     // The emit stages: disjointness-guarded transitive typing, new-relation
     // anti-join, and the triple write — all reading CANDIDATE-sized
-    // maintained aggregates (never the corpus), EXCEPT provenance.
+    // maintained aggregates (never the corpus), EXCEPT provenance. The
+    // taxonomy closure depends on the seeds only, so it runs from the start.
     val closRep = new LoopReport
-    val closureSelf = Disjointness.closureWithSelf(seeds.taxonomyEdges, closRep)
+    val closureSelf = st.runner.node("closure_with_self") {
+      Disjointness.closureWithSelf(seeds.taxonomyEdges, closRep)
+    }
 
     // Both tables are entity-∝ (at web scale, corpus-∝ — the r5 wide-world
     // soak measured them as the dominant delta stages), so a delta
@@ -1193,29 +1271,37 @@ object Pipeline {
     // (the guard, closure and anti-joins are all per-entity given the
     // fingerprint-enforced static seeds). The seed side is semi-joined to
     // the touched set so every join in the fresh slice is broadcast-sized.
-    def touchedEnts(counts: Rel): DataFrame =
-      hintSmall(counts.cur.select("ent").distinct().localCheckpoint())
-    lazy val touchedTypeEnts = touchedEnts(typeCandCounts)
-    lazy val touchedRelEnts = touchedEnts(relCandCounts)
+    def touchedEnts(counts: Node[Rel]): Option[Node[DataFrame]] =
+      st.deltaNode(s"${counts.name}_ents", counts) {
+        hintSmall(counts().cur.select("ent").distinct().localCheckpoint())
+      }
+    val touchedTypeEnts = touchedEnts(typeCandCounts)
+    val touchedRelEnts = touchedEnts(relCandCounts)
     // the per-entity type derivation: J8 + disjointness guard + transitive
     // closure
-    val types = st.carried("types", "ent", touchedTypeEnts, report = closRep) {
-      val seedT = st.slice(seedTypes, touchedTypeEnts)
-      val cand = st.slice(typeCandCounts.all, touchedTypeEnts)
+    val types = st.carried("types", "ent", touchedTypeEnts,
+                           Seq(typeCandCounts, closureSelf),
+                           report = closRep) {
+      val ents = touchedTypeEnts.map(_())
+      val seedT = slice(seedTypes, ents)
+      val cand = slice(typeCandCounts().all, ents)
         .select("ent", "tpe")
         .join(seedT, Seq("ent", "tpe"), "left_anti") // J8: drop existing
+      val closure = closureSelf()
       val guarded = Disjointness.filterCandidates(
-        cand, seedT, closureSelf, seeds.disjointPairs)
+        cand, seedT, closure, seeds.disjointPairs)
       // transitive typing: mined type + all its ancestors, minus existing
       guarded
-        .join(broadcast(closureSelf), guarded("tpe") === closureSelf("node"))
+        .join(broadcast(closure), guarded("tpe") === closure("node"))
         .select(col("ent"), col("anc").as("tpe")).distinct()
         .join(seedT, Seq("ent", "tpe"), "left_anti")
     }
-    val relations = st.carried("relations", "ent", touchedRelEnts) {
-      val seedRels = st.slice(seeds.seedRelations,
-                              touchedRelEnts.withColumnRenamed("ent", "sub"))
-      st.slice(relCandCounts.all, touchedRelEnts).select("ent", "pred", "obj")
+    val relations = st.carried("relations", "ent", touchedRelEnts,
+                               Seq(relCandCounts)) {
+      val ents = touchedRelEnts.map(_())
+      val seedRels = slice(seeds.seedRelations,
+                           ents.map(_.withColumnRenamed("ent", "sub")))
+      slice(relCandCounts().all, ents).select("ent", "pred", "obj")
         .join(seedRels.select(col("sub").as("ent"), col("pred"), col("obj")),
               Seq("ent", "pred", "obj"), "left_anti") // J7: only NEW relations
     }
@@ -1223,12 +1309,13 @@ object Pipeline {
     // 6b. type-level axioms (Cat2Ax discipline over the listing rules) and
     // the instance facts they imply — both LISTING/candidate-sized, never
     // corpus-sized (Axioms scaladoc).
-    val axioms = st.runner.run("axioms") {
-      graft.taxonomy.Axioms.typeAxioms(typeRules.all, relationRules.all)
+    val axioms = st.runner.stage("axioms", typeRules, relationRules) {
+      graft.taxonomy.Axioms.typeAxioms(typeRules().all, relationRules().all)
     }
-    val restrictionFacts = st.runner.run("restriction_facts") {
-      val allTypes = fresh(seedTypes).unionByName(types.all.select("ent", "tpe"))
-      graft.taxonomy.Axioms.axiomFacts(axioms, allTypes, closureSelf)
+    val restrictionFacts = st.runner.stage("restriction_facts", types,
+                                           axioms, closureSelf) {
+      val allTypes = fresh(seedTypes).unionByName(types().all.select("ent", "tpe"))
+      graft.taxonomy.Axioms.axiomFacts(axioms(), allTypes, closureSelf())
     }
 
     // 7. triples, partitioned by predicate — the candidate-sized blocks.
@@ -1241,18 +1328,21 @@ object Pipeline {
     // written before the carve-out still holds the prov rows inside its
     // "triples" checkpoint, and resuming it under the old name would emit
     // every provenance triple twice (the linked→linked_all lesson)
-    val trip = st.runner.runPartitioned("triples_core", "pred") {
-      TripleEmit.assembleFromCounts(
-        labelCounts = labelCounts.all,
-        types = types.all,
-        rels = relations.all,
-        extra = Seq(
-          TripleEmit.ontologyClassTriples(seeds.taxonomyEdges,
-                                          seeds.disjointPairs),
-          TripleEmit.ontologyPredicateTriples(
-            seeds.seedRelations.select("pred")),
-          TripleEmit.restrictionTriples(axioms),
-          TripleEmit.relationTriples(restrictionFacts)))
+    val trip = st.runner.node("triples_core", labelCounts, types, relations,
+                              axioms, restrictionFacts) {
+      st.runner.runPartitioned("triples_core", "pred") {
+        TripleEmit.assembleFromCounts(
+          labelCounts = labelCounts().all,
+          types = types().all,
+          rels = relations().all,
+          extra = Seq(
+            TripleEmit.ontologyClassTriples(seeds.taxonomyEdges,
+                                            seeds.disjointPairs),
+            TripleEmit.ontologyPredicateTriples(
+              seeds.seedRelations.select("pred")),
+            TripleEmit.restrictionTriples(axioms()),
+            TripleEmit.relationTriples(restrictionFacts())))
+      }
     }
 
     // 7a. the provenance partition (both reference flavors: INSTANCE —
@@ -1267,20 +1357,23 @@ object Pipeline {
     // re-emit as the dominant delta cost (BENCH/BASELINE.md), and a carried
     // layer replaces it with O(churn) fresh rows + a drop set.
     val provTrips = st.carried("triples_prov", "obj",
-                               urls.select(col("url").as("obj"))) {
-      TripleEmit.provenanceTriples(provPairs.cur)
+                               urls.map(_.map(_.select(col("url").as("obj")))),
+                               Seq(provPairs)) {
+      TripleEmit.provenanceTriples(provPairs().cur)
     }
 
     // 7b. void metadata (serialize.py:55-83) — three candidate-sized aggs,
     // its own table like the reference's separate metadata file
-    st.runner.run("ontology_meta") {
-      val nEnt = labelCounts.all.select("ent").distinct().count()
+    st.runner.stage("ontology_meta", labelCounts) {
+      val nEnt = labelCounts().all.select("ent").distinct().count()
       val nCls = seeds.taxonomyEdges.select(col("child").as("t"))
         .unionByName(seeds.taxonomyEdges.select(col("parent").as("t")))
         .distinct().count()
       val nPred = seeds.seedRelations.select("pred").distinct().count()
       TripleEmit.metadataTriples(st.spark, nEnt, nCls, nPred)
     }
-    trip.unionByName(provTrips.all)
+    st.runner.node("triples", trip, provTrips) {
+      trip().unionByName(provTrips().all)
+    }
   }
 }

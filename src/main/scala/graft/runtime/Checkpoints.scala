@@ -17,12 +17,16 @@ import org.apache.spark.sql.functions.col
 object Checkpoints {
 
   /** Eager localCheckpoint; returns the new frame plus the persisted RDD
-    * ids it created (the ids to free once the round is superseded). */
+    * ids it created (the ids to free once the round is superseded). The
+    * ids are the checkpoint's own — the RDDs under the `LogicalRDD` the
+    * new frame scans — not a session-wide before/after diff, which would
+    * also claim a checkpoint another thread took meanwhile (concurrent
+    * pipeline stages) and free blocks that thread still reads. */
   def tracked(df: DataFrame): (DataFrame, Set[Int]) = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
     val out = df.localCheckpoint() // eager
-    (out, sc.getPersistentRDDs.keySet.toSet -- before)
+    (out, out.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }.toSet)
   }
 
   /** Unpersist the blocks of a superseded checkpoint (non-blocking). */

@@ -1,7 +1,12 @@
 package graft.runtime
 
 import java.nio.charset.StandardCharsets.UTF_8
-import org.apache.hadoop.fs.{FileSystem, Path}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, Executors}
+import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
+import scala.concurrent.{Await, ExecutionContext, Future, Promise}
+import scala.concurrent.duration.Duration
+import scala.util.{Failure, Success}
+import org.apache.hadoop.fs.{FileSystem, LocatedFileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,6 +25,25 @@ import org.apache.spark.sql.functions._
   * output partition (per-partition lineage). Every write kind goes through
   * one private commit path; all metadata I/O goes through the
   * Hadoop `FileSystem` of the session, so outDirs may be any Hadoop URI.
+  *
+  * A run declares its stages as a graph inside [[execute]]: each [[node]]
+  * names its input nodes, and its body runs on the run's driver-side pool
+  * as soon as every input has completed, so independent stages overlap.
+  * The concurrency contract:
+  *  - a body reads only its declared inputs (and their inputs): a
+  *    [[Node]] read anywhere else fails, on every run, not just on the
+  *    unlucky ones;
+  *  - stage names are unique within a run (each names its own checkpoint
+  *    directory), and lineage files are named `lineage-<nanoTime>-<seq>`
+  *    with a process-wide sequence, so concurrent commits never collide;
+  *  - no body blocks on another node: composition is by `Future`
+  *    combinators, and the one blocking wait is at the end of [[execute]],
+  *    which returns only when every node has finished — every stage and
+  *    its lineage row are committed then;
+  *  - each body runs in its own Spark job group; the first failure cancels
+  *    the groups in flight (and their later jobs), starts no further node,
+  *    and is rethrown unwrapped once every node has settled. A stage is
+  *    therefore either fully committed (data, marker, lineage) or absent.
   */
 final class StageRunner(spark: SparkSession, outDir: String, runId: String) {
 
@@ -138,6 +162,7 @@ final class StageRunner(spark: SparkSession, outDir: String, runId: String) {
                      partCol: String = null)
                     (write: => Option[(String, String)]): DataFrame = {
     val t0 = System.nanoTime()
+    val startMs = System.currentTimeMillis()
     val dir = path(stage)
     val resumed = StageRunner.completed(spark, outDir, stage)
     if (!resumed)
@@ -161,14 +186,122 @@ final class StageRunner(spark: SparkSession, outDir: String, runId: String) {
     val (rounds, conv) =
       if (resumed || report == null) (-1L, true)
       else (report.rounds, report.converged)
+    val endMs = System.currentTimeMillis()
     StageRunner.appendLineageRows(spark, s"$outDir/_lineage", rows.map {
       case (name, n) =>
-        StageRunner.LineageRow(name, runId, n, wallMs, resumed, rounds, conv)
+        StageRunner.LineageRow(name, runId, n, wallMs, resumed, rounds, conv,
+                               startMs, endMs)
     })
     df
   }
 
-  def lineage(): DataFrame = spark.read.parquet(s"$outDir/_lineage")
+  /** Every `_lineage` row of this outDir. Files written before the
+    * `start_ms`/`end_ms` columns existed read with nulls there. */
+  def lineage(): DataFrame =
+    StageRunner.readDataFiles(spark, s"$outDir/_lineage", mergeSchema = true)
+
+  // — the stage graph of one run —
+
+  /** The graph [[execute]] is running; null outside it. */
+  @volatile private var graph: StageRunner.Graph = _
+
+  /** Declare a node: `body` runs on the run's pool once every input has
+    * completed, in its own Spark job group. Only valid while [[execute]]
+    * declares its graph, on the declaring thread. */
+  def node[A](name: String, inputs: Node[_]*)(body: => A): Node[A] = {
+    val g = graph
+    require(g != null && Node.current.get == null,
+            s"node $name: nodes are declared inside execute, not by a body")
+    val p = Promise[A]()
+    val n = new Node[A](name, inputs, p.future, this)
+    g.nodes.add(n)
+    implicit val ec: ExecutionContext = g.ec
+    Future.sequence(inputs.map(_.future: Future[Any])).onComplete {
+      case Failure(t) => p.failure(t)
+      case Success(_) =>
+        p.complete(try Success(runBody(g, n, body))
+                   catch { case t: Throwable => Failure(t) })
+    }
+    n
+  }
+
+  /** A stage node: [[run]] of `f` once every input has committed. */
+  def stage(name: String, inputs: Node[_]*)(f: => DataFrame): Node[DataFrame] =
+    node(name, inputs: _*)(run(name)(f))
+
+  private def runBody[A](g: StageRunner.Graph, n: Node[A], body: => A): A = {
+    val sc = spark.sparkContext
+    val group = s"graft-${g.id}-${g.seq.incrementAndGet()}"
+    // registered before the failure check: a failure that lands after the
+    // check sees this group and cancels it
+    g.inFlight.add(group)
+    try {
+      if (g.failure.get != null)
+        throw new java.util.concurrent.CancellationException(
+          s"${n.name} not started: the run already failed")
+      sc.setJobGroup(group, s"$runId ${n.name}")
+      Node.current.set(n)
+      try body
+      catch { case t: Throwable => fail(g, t); throw t }
+      finally { Node.current.remove(); sc.clearJobGroup() }
+    } finally g.inFlight.remove(group)
+  }
+
+  private def fail(g: StageRunner.Graph, t: Throwable): Unit =
+    if (g.failure.compareAndSet(null, t))
+      g.inFlight.forEach { group =>
+        spark.sparkContext.cancelJobGroupAndFutureJobs(group,
+          s"a sibling stage failed: $t")
+      }
+
+  /** Declare the run's graph with `declare`, wait until every declared
+    * node has finished, and return the value of the node `declare`
+    * returns. The first failure — of a body or of `declare` itself — is
+    * rethrown as it was raised, after every node has settled. */
+  def execute[A](declare: => Node[A]): A = {
+    require(graph == null, "execute: one graph per runner at a time")
+    val g = new StageRunner.Graph(runId)
+    graph = g
+    try {
+      val result =
+        try declare catch { case t: Throwable => fail(g, t); null }
+      g.nodes.forEach(n => Await.ready(n.future, Duration.Inf))
+      Option(g.failure.get).foreach(t => throw t)
+      result()
+    } finally {
+      graph = null
+      g.pool.shutdown()
+    }
+  }
+}
+
+/** A value of one run's stage graph ([[StageRunner#node]]): a stage's
+  * table, or a driver-side value derived from stages. */
+final class Node[+A] private[runtime] (val name: String, inputs: Seq[Node[_]],
+                                       private[runtime] val future: Future[A],
+                                       runner: StageRunner) {
+  /** Every node this one transitively waits for. */
+  private val upstream: Set[Node[_]] =
+    inputs.foldLeft(Set.empty[Node[_]])((s, i) => s ++ i.upstream + i)
+
+  /** The value. Inside a node's body only a node it waits for may be
+    * read; outside every body, only a completed node. */
+  def apply(): A = {
+    val reader = Node.current.get
+    if (reader != null)
+      require(reader.upstream.contains(this),
+              s"${reader.name} reads $name without declaring it as an input")
+    else require(future.isCompleted, s"$name read before it completed")
+    future.value.get.get
+  }
+
+  /** A node of `f` over this node's value. */
+  def map[B](f: A => B): Node[B] = runner.node(s"$name'", this)(f(this()))
+}
+
+object Node {
+  /** The node whose body runs on this thread. */
+  private[runtime] val current = new ThreadLocal[Node[_]]
 }
 
 object StageRunner {
@@ -179,10 +312,31 @@ object StageRunner {
 
   /** One `_lineage` row. The file schema also holds `rows_in` (always -1)
     * and `skipped` (always 0), kept so files of older runs read together
-    * with new ones. */
+    * with new ones. `startMs`/`endMs`: the stage's commit span in epoch
+    * milliseconds — with concurrent stages, the record of which overlapped
+    * (nullable: older files lack them). */
   private[runtime] final case class LineageRow(
       stage: String, runId: String, rowsOut: Long, wallMs: Long,
-      resumed: Boolean, loopRounds: Long, converged: Boolean)
+      resumed: Boolean, loopRounds: Long, converged: Boolean,
+      startMs: Long, endMs: Long)
+
+  /** The state of one [[StageRunner#execute]]: its pool, its nodes, and
+    * the first failure. Pool threads are created on demand, so the graph's
+    * width bounds the concurrency. */
+  private final class Graph(runId: String) {
+    val id: String = java.util.UUID.randomUUID().toString
+    val seq = new AtomicLong()
+    private val threads = new AtomicLong()
+    val pool = Executors.newCachedThreadPool { (r: Runnable) =>
+      val t = new Thread(r, s"graft-stages-$runId-${threads.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    }
+    val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    val nodes = new ConcurrentLinkedQueue[Node[_]]()
+    val inFlight: java.util.Set[String] = ConcurrentHashMap.newKeySet[String]()
+    val failure = new AtomicReference[Throwable]()
+  }
 
   /** The `_lineage` parquet schema, matching what the former
     * `toDF(...).write.parquet` append produced (strings optional,
@@ -200,9 +354,11 @@ object StageRunner {
            required boolean resumed;
            required int64 loop_rounds;
            required boolean converged;
+           optional int64 start_ms;
+           optional int64 end_ms;
          }""")
 
-  private val lineageSeq = new java.util.concurrent.atomic.AtomicLong()
+  private val lineageSeq = new AtomicLong()
 
   /** Max data files for the driver-side footer row count; bigger tables
     * (a cluster-scale stage) fall back to a distributed `count()`. */
@@ -245,25 +401,38 @@ object StageRunner {
   private[runtime] def footerRowCount(spark: SparkSession,
                                       dir: String): Option[Long] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = new Path(dir)
-    val files = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.hadoop.fs.LocatedFileStatus]
-    val it = fs(spark, p).listFiles(p, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val name = f.getPath.getName
-      if (name.endsWith(".parquet") && !name.startsWith("_") &&
-          !name.startsWith("."))
-        files += f
-      if (files.size > FooterCountMaxFiles) return None
-    }
-    var n = 0L
-    files.foreach { f =>
+    val files = dataFiles(spark, dir).take(FooterCountMaxFiles + 1).toSeq
+    if (files.size > FooterCountMaxFiles) None
+    else Some(files.map { f =>
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try n += r.getRecordCount finally r.close()
+      try r.getRecordCount finally r.close()
+    }.sum)
+  }
+
+  /** The parquet data files under `dir`, recursively (partition and bucket
+    * subdirectories included), listed lazily. */
+  private def dataFiles(spark: SparkSession,
+                        dir: String): Iterator[LocatedFileStatus] = {
+    val p = new Path(dir)
+    val it = fs(spark, p).listFiles(p, true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).filter { f =>
+      val name = f.getPath.getName
+      name.endsWith(".parquet") && !name.startsWith("_") &&
+        !name.startsWith(".")
     }
-    Some(n)
+  }
+
+  /** The parquet table under a `_`-named directory (`_lineage`, a layer's
+    * `_layer_drops`), read by its data files: Spark drops a hidden root
+    * path from a directory read and logs `All paths were ignored` for it.
+    * `basePath` keeps the `_kb=` bucket directories as a column. */
+  private[runtime] def readDataFiles(spark: SparkSession, dir: String,
+                                     mergeSchema: Boolean = false): DataFrame = {
+    val files = dataFiles(spark, dir).map(_.getPath.toString).toSeq
+    val reader = spark.read.option("mergeSchema", mergeSchema.toString)
+    if (files.isEmpty) reader.parquet(dir)
+    else reader.option("basePath", dir).parquet(files: _*)
   }
 
   /** Write `<dir>/<name>` under a `.`-prefixed temp name — which parquet
@@ -318,6 +487,7 @@ object StageRunner {
         g.append("skipped", 0L).append("wall_ms", r.wallMs)
         g.append("resumed", r.resumed).append("loop_rounds", r.loopRounds)
         g.append("converged", r.converged)
+        g.append("start_ms", r.startMs).append("end_ms", r.endMs)
         writer.write(g)
       } finally writer.close()
     }
@@ -423,7 +593,7 @@ object StageRunner {
     metaOf(spark, path) match {
       case None => spark.read.parquet(path)
       case Some(m) =>
-        val drops = spark.read.parquet(s"$path/_layer_drops")
+        val drops = readDataFiles(spark, s"$path/_layer_drops")
         val keys = m("keys").split(",").toSeq
         val parent = resolve(spark, m("parent"))
         val fresh = spark.read.parquet(m("fresh")).drop(BucketCol)

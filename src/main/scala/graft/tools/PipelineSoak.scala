@@ -7,8 +7,31 @@ import org.apache.spark.sql.functions._
   * measures the delta-refresh bill vs the full bill; 10 evidences the
   * 1×-churn maintenance cost at high churn), "eddelta" / "budelta" (the
   * same full+delta pair in ScoredEd / BottomUp mode — exercises the
-  * component-bounded graph deltas). */
+  * component-bounded graph deltas). After each call it prints every
+  * stage's start/end offset into the call (from `_lineage`'s
+  * `start_ms`/`end_ms`) and the call's overlap: Σ stage wall / call wall,
+  * above 1 when stages ran concurrently. */
 object PipelineSoak {
+  /** The stage timeline of the call that wrote `runId`'s rows into
+    * `outDir` and ran from `startMs` to `endMs` (epoch ms). */
+  private def timeline(spark: SparkSession, outDir: String, runId: String,
+                       startMs: Long, endMs: Long): Unit = {
+    val rows = new graft.runtime.StageRunner(spark, outDir, runId).lineage()
+      .filter(col("run_id") === runId && !col("stage").contains("/"))
+      .select("stage", "start_ms", "end_ms").collect()
+      .map(r => (r.getString(0), r.getLong(1) - startMs, r.getLong(2) - startMs))
+      .sortBy(r => (r._2, r._1))
+    rows.foreach { case (stage, s, e) =>
+      println(f"STAGE $stage%-26s start=${s / 1e3}%8.3f end=${e / 1e3}%8.3f " +
+              f"wall=${(e - s) / 1e3}%7.3f")
+    }
+    val sum = rows.map(r => r._3 - r._2).sum
+    println(f"OVERLAP run=$runId stages=${rows.length} " +
+            f"stage_wall_s=${sum / 1e3}%.3f call_s=${(endMs - startMs) / 1e3}%.3f " +
+            f"overlap=${sum.toDouble / (endMs - startMs)}%.2f")
+  }
+
+
   def main(args: Array[String]): Unit = {
     val pagesPath = args(0)
     val mode = if (args.length > 1) args(1) else "cc"
@@ -34,11 +57,14 @@ object PipelineSoak {
         graft.Pipeline.Canonicalization.BottomUp()
       else graft.Pipeline.Canonicalization.Components
     val t0 = System.nanoTime()
+    val t0Ms = System.currentTimeMillis()
     val triples = graft.Pipeline.run(spark, pages, seeds, out, canon = canon)
+    val t1Ms = System.currentTimeMillis()
     val nt = triples.count()
     val sec = (System.nanoTime() - t0) / 1e9
     println(s"SOAK mode=$mode pages=$n triples=$nt sec=$sec " +
             s"pages_per_s=${n/sec} triples_per_s=${nt/sec}")
+    timeline(spark, out, "run-1", t0Ms, t1Ms)
     if (mode == "delta" || mode == "eddelta" || mode == "budelta") {
       // re-crawl: ~churnPct% of pages get a new capture (bumped warc_ts,
       // body appended — changes text, not the mention set, so triples and
@@ -56,14 +82,17 @@ object PipelineSoak {
       val nChanged = v2.filter(changed).count()
       val outD = java.nio.file.Files.createTempDirectory("graft-soak-d").toString
       val tD = System.nanoTime()
+      val tDMs = System.currentTimeMillis()
       val deltaTriples = graft.Pipeline.runDelta(spark, v2, seeds, outD, out,
                                                  canon = canon)
+      val tD1Ms = System.currentTimeMillis()
       val ntD = deltaTriples.count()
       val secD = (System.nanoTime() - tD) / 1e9
       println(s"SOAK mode=$mode churn_pct=$churnPct pages=$n " +
               s"changed=$nChanged triples=$ntD " +
               s"sec=$secD pages_per_s=${n/secD} full_sec=$sec " +
               s"speedup=${sec/secD}")
+      timeline(spark, outD, "delta-1", tDMs, tD1Ms)
     }
     spark.stop()
   }

@@ -80,6 +80,39 @@ class DeltaSpec extends SparkSuite {
     assert(deltaMentions.count() < fullMentions.count() / 4)
   }
 
+  test("a delta reads its carry layers' drop sets without hidden-path warnings") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val v2 = world.pages
+    val (v1, _, _) = previousCrawl(v2)
+    val prevDir = SparkSuite.tempDir("graft-delta-warn-prev")
+    val outDir = SparkSuite.tempDir("graft-delta-warn-out")
+    Pipeline.run(spark, v1.toDS().toDF(), seeds, prevDir)
+    // Spark logs a directory read of a `_`-named root (the layers'
+    // `_layer_drops`) as "All paths were ignored"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("graft-delta-warn", null, null, true,
+                                       Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val logger = LogManager
+      .getLogger("org.apache.spark.sql.execution.datasources.DataSource")
+      .asInstanceOf[CoreLogger]
+    logger.addAppender(capture)
+    val n = try {
+      Pipeline.runDelta(spark, v2.toDS().toDF(), seeds, outDir, prevDir)
+        .count()
+    } finally { logger.removeAppender(capture); capture.stop() }
+    assert(n > 0)
+    val ignored = seen.asScala.filter(_.contains("All paths were ignored"))
+    assert(ignored.isEmpty, ignored.mkString("\n"))
+  }
+
   test("chained deltas: a delta outDir is a valid prevDir for the next") {
     // crawl v1 (missing two classes of pages) → delta to v1.5 (adds the
     // modified page's new capture) → delta to v2 (adds the remaining page).

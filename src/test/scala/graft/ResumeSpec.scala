@@ -46,11 +46,39 @@ class ResumeSpec extends SparkSuite {
     val pagesDf = world.pages.toDS().toDF()
     Pipeline.run(spark, pagesDf, seeds, outDir, runId = "run-1")
     Pipeline.run(spark, pagesDf, seeds, outDir, runId = "run-2")
-    val lin = spark.read.parquet(s"$outDir/_lineage")
-      .filter(col("run_id") === "run-2")
+    def lineageOf(runId: String) = spark.read.parquet(s"$outDir/_lineage")
+      .filter(col("run_id") === runId)
       .select("stage", "resumed").as[(String, Boolean)].collect()
+    val lin = lineageOf("run-2")
     assert(lin.map(_._1).contains("triples_core"), lin.toSeq)
     assert(lin.forall(_._2), s"stages re-run: ${lin.filterNot(_._2).toSeq}")
+    // a resumed run records every stage the first run did (tag_stats too)
+    val first = lineageOf("run-1").map(_._1).toSet
+    assert(lin.map(_._1).toSet == first,
+           s"missing: ${first -- lin.map(_._1)}, extra: ${lin.map(_._1).toSet -- first}")
+  }
+
+  test("losing concurrent branches re-runs exactly those stages") {
+    val outDir = SparkSuite.tempDir("graft-resume-branches")
+    val pagesDf = world.pages.toDS().toDF()
+    def triples(runId: String) =
+      Pipeline.run(spark, pagesDf, seeds, outDir, runId = runId)
+        .select("subj", "pred", "obj").as[(String, String, String)]
+        .collect().sorted
+    val first = triples("run-1")
+    // three stages on side branches of the graph: hypernym mining, the
+    // relation branch and the axioms (their consumers stay committed)
+    def rm(p: java.io.File): Unit = {
+      if (p.isDirectory) p.listFiles.foreach(rm); p.delete()
+    }
+    val lost = Set("hypernyms", "relations", "axioms")
+    lost.foreach(s => rm(new java.io.File(s"$outDir/$s")))
+    val second = triples("run-2")
+    assert(first.sameElements(second))
+    val rerun = spark.read.parquet(s"$outDir/_lineage")
+      .filter(col("run_id") === "run-2" && !col("resumed"))
+      .select("stage").as[String].collect().toSet
+    assert(rerun == lost, s"re-ran: $rerun")
   }
 
   test("file:// URI outDirs resume a completed stage and commit a layer") {
