@@ -430,9 +430,8 @@ object StageRunner {
   private[runtime] def readDataFiles(spark: SparkSession, dir: String,
                                      mergeSchema: Boolean = false): DataFrame = {
     val files = dataFiles(spark, dir).map(_.getPath.toString).toSeq
-    val reader = spark.read.option("mergeSchema", mergeSchema.toString)
-    if (files.isEmpty) reader.parquet(dir)
-    else reader.option("basePath", dir).parquet(files: _*)
+    spark.read.option("mergeSchema", mergeSchema.toString)
+      .option("basePath", dir).parquet(files: _*)
   }
 
   /** Write `<dir>/<name>` under a `.`-prefixed temp name — which parquet
