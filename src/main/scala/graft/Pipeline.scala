@@ -9,8 +9,8 @@ import graft.link.AliasLink
 import graft.canonical.{AlignmentGraph, NilCluster}
 import graft.taxonomy.{Disjointness, RuleMining}
 import graft.emit.TripleEmit
-import graft.runtime.{LoopReport, Node, StageRunner}
-import graft.runtime.Checkpoints.fresh
+import graft.runtime.{Checkpoints, LoopReport, Node, StageRunner}
+import graft.runtime.Checkpoints.{fresh, pin}
 
 /** The end-to-end KG-construction pipeline (north rule): pages → invariant
   * text extraction → listings/mentions → salted alias linking → NIL
@@ -56,13 +56,13 @@ object Pipeline {
     * scan into a parallel block read; parquet-backed seeds pay one cheap
     * extra materialization. */
   private def pinSeeds(s: Seeds): Seeds =
-    Seeds(aliases = s.aliases.localCheckpoint(),
-          entityTypes = s.entityTypes.localCheckpoint(),
-          taxonomyEdges = s.taxonomyEdges.localCheckpoint(),
-          disjointPairs = s.disjointPairs.localCheckpoint(),
-          seedRelations = s.seedRelations.localCheckpoint(),
+    Seeds(aliases = pin(s.aliases),
+          entityTypes = pin(s.entityTypes),
+          taxonomyEdges = pin(s.taxonomyEdges),
+          disjointPairs = pin(s.disjointPairs),
+          seedRelations = pin(s.seedRelations),
           redirects =
-            if (s.redirects == null) null else s.redirects.localCheckpoint())
+            if (s.redirects == null) null else pin(s.redirects))
 
   /** How mentions become canonical entities (step 4). */
   sealed trait Canonicalization
@@ -249,10 +249,12 @@ object Pipeline {
     * stages, and [[StageRunner#execute]] runs each as soon as they have
     * committed — independent branches (the manifest and the seeds
     * fingerprint, hypernym mining, the tag gate beside NIL clustering, the
-    * rule miners, the taxonomy closure, provenance) overlap. */
+    * rule miners, the taxonomy closure, provenance) overlap. Every pin the
+    * call takes, on this thread or a stage's, is freed when it returns or
+    * throws ([[Checkpoints]]); the returned triples read only parquet. */
   private def stages(spark: SparkSession, pages: DataFrame, seedsIn: Seeds,
                      outDir: String, runId: String, canon: Canonicalization,
-                     prev: Option[Prev]): DataFrame = {
+                     prev: Option[Prev]): DataFrame = Checkpoints.owned {
     Normalize.register(spark)
     val seeds = pinSeeds(seedsIn)
     val runner = new StageRunner(spark, outDir, runId)
@@ -335,7 +337,7 @@ object Pipeline {
     * halves the delta's seed-scan bill). */
   private def checkedSeedsFp(spark: SparkSession, seeds: Seeds,
                              prevDir: String): DataFrame = {
-    val curFpDf = seedsFingerprint(spark, seeds).localCheckpoint()
+    val curFpDf = pin(seedsFingerprint(spark, seeds))
     val prevFp = spark.read.parquet(s"$prevDir/seeds_fp")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val curFp = curFpDf.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -380,9 +382,9 @@ object Pipeline {
     val changedCaptures = manifest.join(prevManifest, capKeys, "left_anti")
     val vanishedCaptures = prevManifest.join(manifest, capKeys, "left_anti")
     hintSmall(
-      changedCaptures.select("url")
+      pin(changedCaptures.select("url")
         .unionByName(vanishedCaptures.select("url"))
-        .distinct().localCheckpoint())
+        .distinct()))
   }
 
   /** The change fingerprint of a crawl slice: (url, warc_ts, content_fp)
@@ -496,10 +498,9 @@ object Pipeline {
     * it. */
   private def netCounts(minus: DataFrame, plus: DataFrame,
                         keys: Seq[String]): DataFrame =
-    fresh(plus)
+    pin(fresh(plus)
       .unionByName(fresh(minus).withColumn("cnt", -col("cnt")))
-      .groupBy(keys.map(col): _*).agg(sum("cnt").as("cnt"))
-      .localCheckpoint()
+      .groupBy(keys.map(col): _*).agg(sum("cnt").as("cnt")))
 
   /** The classic materialized-view maintenance identity for an additive
     * count aggregate: new = prev + net ([[netCounts]]), groups cancelling
@@ -672,16 +673,15 @@ object Pipeline {
       entityAdjacency = true,
       canonFp = canonFpOf(spark, ed),
       recompute = (all, hotIn, rep) => {
-        val edges = AlignmentGraph.buildScored(
+        val edges = pin(AlignmentGraph.buildScored(
             all.select("mention_id", "label"), dict, edScoreFn(ed),
-            ed.meThreshold, ed.mmThreshold, hotKeysIn = hotIn)
-          .localCheckpoint()
+            ed.meThreshold, ed.mmThreshold, hotKeysIn = hotIn))
         // ONE component table feeds both the NastyLinker split and the
         // recorded delta state — computed over the KEY-CONTRACTED graph
         // (identical output, no per-mention CC rounds — see
         // AlignmentGraph.components); NastyLinker still reads the FULL
         // weighted edge set.
-        val cc = AlignmentGraph.components(
+        val cc = pin(AlignmentGraph.components(
             all.select("mention_id", "label"),
             edges.filter(col("dst").startsWith("e:")).select("src", "dst"),
             ed.mmThreshold, hotIn,
@@ -689,8 +689,7 @@ object Pipeline {
             // ME edge set is a function of the key — hot buckets contract
             keyDeterminedScores =
               ed.scoreFn.isEmpty &&
-                (ed.meScore eq Canonicalization.DefaultMeScore))
-          .localCheckpoint()
+                (ed.meScore eq Canonicalization.DefaultMeScore)))
         val assign = AlignmentGraph.clusterEdges(
           all.select("mention_id", "label"), edges,
           ed.pathThreshold, rep, ccIn = Some(cc),
@@ -706,18 +705,16 @@ object Pipeline {
       entityAdjacency = false,
       canonFp = canonFpOf(spark, bu),
       recompute = (all, hotIn, _) => {
-        val edges = AlignmentGraph.buildScored(
+        val edges = pin(AlignmentGraph.buildScored(
             all.select("mention_id", "label"), dict, buScoreFn(bu),
-            bu.meThreshold, bu.mmThreshold, hotKeysIn = hotIn)
-          .localCheckpoint()
+            bu.meThreshold, bu.mmThreshold, hotKeysIn = hotIn))
         val mm = buMmEdges(edges, bu.mmThreshold)
         // MM components in closed form — same-key cliques ARE the
         // components, so no CC loop runs at all (see
         // AlignmentGraph.mmComponents); the fold still consumes the full
         // ordered `mm` edge list
-        val mmCc = AlignmentGraph.mmComponents(
-            all.select("mention_id", "label"), bu.mmThreshold, hotIn)
-          .localCheckpoint()
+        val mmCc = pin(AlignmentGraph.mmComponents(
+            all.select("mention_id", "label"), bu.mmThreshold, hotIn))
         val assign = graft.canonical.BottomUpCluster.cluster(
           buMeEdges(edges), mm, bu.mmThreshold, bu.meThreshold,
           ccIn = Some(mmCc))
@@ -839,10 +836,9 @@ object Pipeline {
   /** Rows in exactly one of two distinct sets: the keys whose threshold
     * verdict flipped, in either direction. */
   private def flipped(a: DataFrame, b: DataFrame, keys: String*): DataFrame =
-    fresh(a).unionByName(fresh(b))
+    pin(fresh(a).unionByName(fresh(b))
       .groupBy(keys.map(col): _*).agg(count(lit(1)).as("c"))
-      .filter(col("c") === 1).select(keys.map(col): _*)
-      .localCheckpoint()
+      .filter(col("c") === 1).select(keys.map(col): _*))
 
   /** The corpus-level stages downstream of the per-page prefix:
     * canonicalization (the mode's own stages) → [[mineAndEmit]].
@@ -926,10 +922,9 @@ object Pipeline {
         val widenings = f9FlipUrls.toSeq ++ tagFlipUrls ++
           closure.toSeq.flatMap(_().urls)
         hintSmall(
-          (if (widenings.isEmpty) touched.get()
+          pin((if (widenings.isEmpty) touched.get()
            else widenings.foldLeft(touched.get().select("url"))(_ unionByName _)
-             .distinct())
-            .localCheckpoint())
+             .distinct())))
       }
 
     /** Graph canonicalization. Besides the subject table, a run records the
@@ -964,8 +959,7 @@ object Pipeline {
       // stage waits for the subjects stage
       lazy val recomputed = closure match {
         case None =>
-          mode.recompute(keptAllOf(linkedAll().all).localCheckpoint(), None,
-                         rep)
+          mode.recompute(pin(keptAllOf(linkedAll().all)), None, rep)
         case Some(c) => mode.recompute(c().slice, Some(c().hotKeys), rep)
       }
       // carries: the subjects stage drops the affected components' mention
@@ -1093,7 +1087,7 @@ object Pipeline {
                            keptAllOf: DataFrame => DataFrame,
                            keyCounts: Rel => Rel): GraphClosure = {
     val prevLinked = st.prev("linked_all")
-    val prevComps = st.prev(mode.compsStage).localCheckpoint()
+    val prevComps = pin(st.prev(mode.compsStage))
     val prevCompMentions = prevComps.filter(col("mention_id").isNotNull)
     val prevKeyCounts = st.prev(mode.keyCountsStage)
 
@@ -1104,29 +1098,25 @@ object Pipeline {
       flippedLabels.join(frequent, Seq("label"), "left_anti")
     val droppedRows = prevCompMentions.join(dropUrls, Seq("url"), "left_semi")
     val leaverRows = prevCompMentions
-      .join(hintSmall(leaverLabels.localCheckpoint()), Seq("label"), "left_semi")
+      .join(hintSmall(pin(leaverLabels)), Seq("label"), "left_semi")
       .join(dropUrls, Seq("url"), "left_anti")
     // entrants carry full linked rows (subject assembly needs listing_key)
     val entrantRows = prevLinked.filter(col("ent").isNull)
       .join(dropUrls, Seq("url"), "left_anti")
-      .join(hintSmall(entrantLabels.localCheckpoint()), Seq("label"), "left_semi")
+      .join(hintSmall(pin(entrantLabels)), Seq("label"), "left_semi")
       .withColumn("ent", lit(null).cast("string"))
-    val freshKept = keptAllOf(linkedAll.cur).localCheckpoint()
-    val enteringMentions = fresh(freshKept.select("mention_id", "label"))
-      .unionByName(entrantRows.select("mention_id", "label"))
-      .localCheckpoint()
+    val freshKept = pin(keptAllOf(linkedAll.cur))
+    val enteringMentions = pin(fresh(freshKept.select("mention_id", "label"))
+      .unionByName(entrantRows.select("mention_id", "label")))
 
     // — key-count maintenance + hotness flips (the GLOBAL mm cap) —
     val keys = keyCounts(new Rel(null, enteringMentions,
       droppedRows.select("mention_id", "label")
         .unionByName(leaverRows.select("mention_id", "label"))))
     val maxBucket = AlignmentGraph.maxKeyBucket(st.spark)
-    val hotNew = keys.all
-      .filter(col("cnt") > maxBucket).select("key")
-      .localCheckpoint()
-    val hotPrev = prevKeyCounts
-      .filter(col("cnt") > maxBucket).select("key")
-      .localCheckpoint()
+    val hotNew = pin(keys.all.filter(col("cnt") > maxBucket).select("key"))
+    val hotPrev =
+      pin(prevKeyCounts.filter(col("cnt") > maxBucket).select("key"))
     val flippedKeys = flipped(hotNew, hotPrev, "key")
 
     // — affected components: exits ∪ flipped keys ∪ adjacency of entrants —
@@ -1139,11 +1129,10 @@ object Pipeline {
     // Hotness FLIPS (either direction) change the key's mm edges
     // everywhere and stay fully covered by viaFlippedKeys.
     val stablyHot = hotNew.join(hotPrev, Seq("key"), "left_semi")
-    val enteringKeys = AlignmentGraph.graphMentions(enteringMentions)
-      .select("key").distinct().localCheckpoint()
-    val enteringMmKeys = enteringKeys
-      .join(stablyHot, Seq("key"), "left_anti")
-      .localCheckpoint()
+    val enteringKeys = pin(AlignmentGraph.graphMentions(enteringMentions)
+      .select("key").distinct())
+    val enteringMmKeys =
+      pin(enteringKeys.join(stablyHot, Seq("key"), "left_anti"))
     val viaKey = prevCompMentions
       .join(hintSmall(enteringMmKeys), Seq("key"), "left_semi").select("comp")
     // ED only: an entering mention also reaches old components through its
@@ -1158,35 +1147,33 @@ object Pipeline {
           .join(broadcast(dict.select("key", "ent")), Seq("key"))
           .select(concat(lit("e:"), col("ent")).as("node")).distinct()
         Some(prevComps.filter(col("mention_id").isNull)
-          .join(hintSmall(enteringEntNodes.localCheckpoint()),
+          .join(hintSmall(pin(enteringEntNodes)),
                 Seq("node"), "left_semi")
           .select("comp"))
       }
     val viaFlippedKeys = prevCompMentions
       .join(hintSmall(flippedKeys), Seq("key"), "left_semi").select("comp")
     val affectedComps = hintSmall(
-      (Seq(leaverRows.select("comp"), viaKey) ++ viaEnt :+ viaFlippedKeys)
+      pin((Seq(leaverRows.select("comp"), viaKey) ++ viaEnt :+ viaFlippedKeys)
         .foldLeft(droppedRows.select("comp"))(_ unionByName _)
-        .distinct().localCheckpoint())
+        .distinct()))
 
     // — the slice: surviving members of affected components + entrants +
     //   fresh kept mentions (full rows via prevLinked / linkedAll.cur) —
-    val affectedPrevMentions = prevCompMentions
-      .join(affectedComps, Seq("comp"), "left_semi")
-      .localCheckpoint()
+    val affectedPrevMentions =
+      pin(prevCompMentions.join(affectedComps, Seq("comp"), "left_semi"))
     val survivorIds = affectedPrevMentions
       .join(dropUrls, Seq("url"), "left_anti")
       .join(hintSmall(leaverLabels), Seq("label"), "left_anti")
       .select("mention_id")
     val survivorRows = keptAllOf(
-      prevLinked.join(hintSmall(survivorIds.localCheckpoint()),
+      prevLinked.join(hintSmall(pin(survivorIds)),
                       Seq("mention_id"), "left_semi"))
-    val sliceAll = survivorRows.unionByName(entrantRows.select(
+    val sliceAll = pin(survivorRows.unionByName(entrantRows.select(
         survivorRows.columns.map(col): _*))
-      .unionByName(freshKept)
-      .localCheckpoint()
+      .unionByName(freshKept))
     GraphClosure(sliceAll, hotNew,
-      hintSmall(affectedPrevMentions.select("mention_id").localCheckpoint()),
+      hintSmall(pin(affectedPrevMentions.select("mention_id"))),
       affectedComps,
       Seq(affectedPrevMentions.select("url"), freshKept.select("url")))
   }
@@ -1273,7 +1260,7 @@ object Pipeline {
     // the touched set so every join in the fresh slice is broadcast-sized.
     def touchedEnts(counts: Node[Rel]): Option[Node[DataFrame]] =
       st.deltaNode(s"${counts.name}_ents", counts) {
-        hintSmall(counts().cur.select("ent").distinct().localCheckpoint())
+        hintSmall(pin(counts().cur.select("ent").distinct()))
       }
     val touchedTypeEnts = touchedEnts(typeCandCounts)
     val touchedRelEnts = touchedEnts(relCandCounts)

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import graft.ops._
+import graft.runtime.Checkpoints
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -17,39 +18,26 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     KgQueries.triples(spark, "/root/testdata/sf0.001")
 
-  /** Free the persistent-RDD blocks a PREVIOUS declared query left behind.
-    *
-    * Query functions pin multiply-consumed frames with `localCheckpoint`;
-    * those blocks are non-evictable and the ContextCleaner only releases
-    * them after a driver GC notices the dead references — so across a
-    * 70+-query session (the bench, Verify) completed queries' pins pile up
-    * as dead storage weight and later queries run under artificial memory
-    * pressure (measured: several heavy queries 1.5-2.5× their isolated
-    * walls in-bench). Each query entry releases its predecessors' blocks
-    * explicitly — deterministic, pause-free (unlike a forced periodic GC,
-    * which A/B'd WORSE). No result of a caller that keeps the contract on
-    * [[queries]] can change: every declared query recomputes from the
-    * parquet inputs, and a freed cached plan (`.cache`) recomputes from
-    * its child on next access — but a freed `localCheckpoint` does not,
-    * so a result must be consumed before the next query starts. Blocks belonging to the CURRENT query do not exist yet at
-    * entry, so a query never frees its own state. */
-  private def freePriorQueryPins(spark: SparkSession): Unit =
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+  /** The pins of the query entered last ([[Checkpoints]]). */
+  private val lastQueryPins =
+    new java.util.concurrent.atomic.AtomicReference[Checkpoints.Owner]()
 
   /** The declared queries, by name: `(spark, sfDir) => result`.
     *
-    * Contract: CONSUME each result before calling the next query. Entering
-    * a query frees every persistent RDD in the session
-    * (`freePriorQueryPins`), including the previous query's
-    * `localCheckpoint` blocks, which cannot recompute once freed. A caller
-    * that builds several query DataFrames before evaluating them, or
-    * evaluates one after entering another query, fails with a missing
-    * checkpoint block. Bench, Verify and BenchExtra evaluate each result
-    * fully before the next call. */
+    * Contract: CONSUME each result before calling the next query. A query
+    * function pins multiply-consumed frames under its own owner, and
+    * entering the next query frees those pins ([[Checkpoints]]). The
+    * returned frame may read them, and a freed pin cannot recompute. Only
+    * the previous query's own pins are freed: a caller's frames, a
+    * concurrent `Pipeline.run` and anything pinned outside a query keep
+    * theirs. Bench, Verify and BenchExtra evaluate each result fully
+    * before the next call. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     queryImpls.map { case (name, fn) =>
       name -> { (s: SparkSession, d: String) =>
-        freePriorQueryPins(s); fn(s, d)
+        val pins = new Checkpoints.Owner
+        Option(lastQueryPins.getAndSet(pins)).foreach(_.close())
+        Checkpoints.within(pins)(fn(s, d))
       }
     }
 

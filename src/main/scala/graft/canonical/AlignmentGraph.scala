@@ -3,6 +3,7 @@ package graft.canonical
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core.Normalize
+import graft.runtime.Checkpoints.pin
 
 /** Alignment-graph construction for entity disambiguation (reference:
   * `greedy_clustering.py:26-35` `_get_alignment_graph`): scored
@@ -119,9 +120,8 @@ object AlignmentGraph {
     // checkpoint: NastyLinker scans the edge set repeatedly (bidir groupBy,
     // CC, NIL subgraph) — without this the broadcast join + window + MM
     // self-join lineage would re-execute on every scan
-    val edges = buildScored(mentions, dict, scoreFn, meThreshold,
-                            mmThreshold, hotKeysIn)
-      .localCheckpoint()
+    val edges = pin(buildScored(mentions, dict, scoreFn, meThreshold,
+                                mmThreshold, hotKeysIn))
     clusterEdges(mentions, edges, pathThreshold, report,
                  nilCliqueHint =
                    Some(mmCliqueHint(mentions, mmThreshold, hotKeysIn)))
@@ -201,14 +201,13 @@ object AlignmentGraph {
     val contractible =
       if (keyDeterminedScores) keyed
       else keyed.join(hotKeys, Seq("key"), "left_anti")
-    val m2rep = contractible
+    val m2rep = pin(contractible
       .join(hotKeys.withColumn("is_hot", lit(true)), Seq("key"), "left")
       .join(contractible.groupBy("key")
               .agg(min("mention_id").as("rep"), count(lit(1)).as("bsize")),
             "key")
       .select(col("mention_id"), col("rep"), col("bsize"),
-              coalesce(col("is_hot"), lit(false)).as("is_hot"))
-      .localCheckpoint()
+              coalesce(col("is_hot"), lit(false)).as("is_hot")))
     // ME edges re-pointed at the key rep (non-contracted mentions keep
     // their own node)
     val meC = meEdges
@@ -217,7 +216,7 @@ object AlignmentGraph {
             Seq("mid"), "left")
       .select(concat(lit("m:"), coalesce(col("rep"), col("mid"))).as("src"),
               col("dst"))
-    val ccSmall = ConnectedComponents.run(meC).localCheckpoint()
+    val ccSmall = pin(ConnectedComponents.run(meC))
     // expansion: a member surfaces when its key has MM edges (small bucket
     // of size ≥ 2 — then a key with no ME adjacency is its own component)
     // or when its contracted rep reached the ME graph (covers singleton
@@ -280,10 +279,9 @@ object AlignmentGraph {
     // clustered is consumed TWICE below (the left_anti probe and the union
     // output) — without its own checkpoint each action re-executes
     // NastyLinker's cluster-assembly join tree once per consumer
-    val clustered = NastyLinker.cluster(edges, pathThreshold, report = report,
-                                        ccIn = ccIn,
-                                        nilCliqueHint = nilCliqueHint)
-      .localCheckpoint()
+    val clustered = pin(NastyLinker.cluster(edges, pathThreshold,
+                                            report = report, ccIn = ccIn,
+                                            nilCliqueHint = nilCliqueHint))
     // mentions with NO candidate edge at all never reach the graph: they
     // are singleton NIL clusters (the reference only clusters graph nodes;
     // the pipeline's F9/NIL path handles the rest — kept here for totality)

@@ -3,6 +3,7 @@ package graft.canonical
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.runtime.Checkpoints.pin
 
 /** Bottom-up union-find clustering over an ordered edge fold (G11 + W5;
   * reference: `/root/reference/impl/subject_entity/entity_disambiguation/matching/bottomup_clustering.py:33-83`).
@@ -92,7 +93,7 @@ object BottomUpCluster {
     // consumer and needs no pin
     val mmPlan = mmCandidates.filter(col("score") > mmThreshold)
       .select(col("m1"), col("m2"), col("score"))
-    val mm = if (ccIn.isEmpty) mmPlan.localCheckpoint() else mmPlan
+    val mm = if (ccIn.isEmpty) pin(mmPlan) else mmPlan
     // per-mention best entity above threshold (argmax score, tie → min ent)
     val me = meCandidates.filter(col("score") > meThreshold)
       .withColumn("rn", row_number().over(
@@ -114,11 +115,10 @@ object BottomUpCluster {
     // mention-sized; pinned — THREE fold branches (mention domain, ME
     // rows, MM rows) consume it, and each would otherwise re-run the CC
     // output join (and through it the whole candidate subtree)
-    val comp = domain
+    val comp = pin(domain
       .join(cc, domain("m") === cc("node"), "left")
       .select(col("m").as("node"),
-              coalesce(col("component"), col("m")).as("component"))
-      .localCheckpoint()
+              coalesce(col("component"), col("m")).as("component")))
 
     val mentionsByComp = comp
       .as[(String, String)].map(r => (r._2, r._1, true, "", 0.0))
@@ -135,7 +135,11 @@ object BottomUpCluster {
 
     // rows: (component, u, isMe, v, score); mention-domain rows are tagged
     // isMe=true with v="" (no real ME edge has an empty entity id)
-    val folded = mentionsByComp.union(meByComp).union(mmByComp)
+    // mention-sized; pinned — the entity-collapse aggregate AND the
+    // final join both consume it, and the fold (groupByKey +
+    // flatMapGroups over the whole candidate union) is the most
+    // expensive stage of this operator
+    val folded = pin(mentionsByComp.union(meByComp).union(mmByComp)
       .groupByKey(_._1)
       .flatMapGroups { (_: String, rows: Iterator[(String, String, Boolean, String, Double)]) =>
         val all = rows.toSeq
@@ -148,12 +152,7 @@ object BottomUpCluster {
                           Ordering.String, Ordering.Double.TotalOrdering))
         foldComponent(mentions, edges)
       }
-      .toDF("mention_id", "ent", "fold_cluster")
-      // mention-sized; pinned — the entity-collapse aggregate AND the
-      // final join both consume it, and the fold (groupByKey +
-      // flatMapGroups over the whole candidate union) is the most
-      // expensive stage of this operator
-      .localCheckpoint()
+      .toDF("mention_id", "ent", "fold_cluster"))
 
     // global collapse: clusters with the same (non-null) entity merge
     val entMin = folded.filter(col("ent").isNotNull)

@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * O(diameter) shuffle rounds; star contraction converges in O(log n) rounds
   * regardless of diameter, and every round is two shuffles (a window-min per
   * endpoint). No RDDs, no GraphFrames — windows + joins only, so AQE can
-  * coalesce/skew-split each round. `localCheckpoint()` per round truncates
-  * lineage (mandatory for iterative DataFrame algorithms).
+  * coalesce/skew-split each round. A pin per round truncates lineage
+  * (mandatory for iterative DataFrame algorithms).
   *
   * Determinism: component id = minimum node id in the component (total order
   * on the id type), so output is independent of partitioning and
@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
-  import graft.runtime.Checkpoints
+  import graft.runtime.Checkpoints.{free, fresh, pin}
 
   /** Edge-count bound for the driver fast path (conf `graft.cc.driverMax`,
     * 0 disables): below it the symmetrized edge set is BOUNDED — a few MB —
@@ -49,7 +49,7 @@ object ConnectedComponents {
     * path reports rounds = -1, the non-iterative convention). */
   def run(edges: DataFrame,
           report: graft.runtime.LoopReport = null): DataFrame = {
-    var (e, eIds) = Checkpoints.tracked(symmetrize(edges))
+    var e = pin(symmetrize(edges))
     // count of the just-checkpointed edge set: a shuffle-free job over the
     // in-memory blocks, used to SHORT-CIRCUIT the convergence check below
     // (and to gate the driver fast path)
@@ -63,14 +63,14 @@ object ConnectedComponents {
        dt == org.apache.spark.sql.types.IntegerType)
     if (driverable) {
       val out = runDriver(spark, e, dt)
-      Checkpoints.free(e, eIds)
+      free(e)
       if (report != null) { report.rounds = -1; report.converged = true }
       return out
     }
     var converged = false
     var iter = 0
     while (!converged && iter < 50) {
-      val (next, nextIds) = Checkpoints.tracked(smallStar(largeStar(e)))
+      val next = pin(smallStar(largeStar(e)))
       val nextCount = next.count()
       // Converged when the (directed, deduped) edge set is unchanged —
       // both sides are distinct sets, so the edge sets are equal iff the
@@ -81,13 +81,13 @@ object ConnectedComponents {
       // the final round). Fresh aliases keep the union children's exprIds
       // disjoint.
       converged = nextCount == eCount &&
-        Checkpoints.fresh(next).unionByName(Checkpoints.fresh(e))
+        fresh(next).unionByName(fresh(e))
           .groupBy("src", "dst").agg(count(lit(1)).as("c"))
           .filter(col("c") === 1).isEmpty
       // the previous round's checkpoint is now unreachable — free it so a
       // log-round loop holds TWO rounds of state, not all of them
-      Checkpoints.free(e, eIds)
-      e = next; eIds = nextIds; eCount = nextCount
+      free(e)
+      e = next; eCount = nextCount
       iter += 1
     }
     if (report != null) { report.rounds = iter; report.converged = converged }

@@ -3,7 +3,7 @@ package graft.canonical
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.runtime.Checkpoints.fresh
+import graft.runtime.Checkpoints.{free, fresh, pin}
 
 /** NastyLinker clustering (G10; reference:
   * `/root/reference/impl/subject_entity/entity_disambiguation/matching/greedy_clustering.py:46-102`):
@@ -69,10 +69,9 @@ object NastyLinker {
     // bidirMulti checkpoint via multiComps, the nilNodes checkpoint via
     // zeroEnt, the final assembly via `single`); the frame is
     // component-count-sized
-    val entComp = cc.filter(col("node").startsWith("e:"))
+    val entComp = pin(cc.filter(col("node").startsWith("e:"))
       .groupBy("component")
-      .agg(countDistinct("node").as("n_ents"), min("node").as("only_ent"))
-      .localCheckpoint()
+      .agg(countDistinct("node").as("n_ents"), min("node").as("only_ent")))
     val mentions = cc.filter(col("node").startsWith("m:"))
       .select("node", "component")
 
@@ -90,16 +89,15 @@ object NastyLinker {
     val multiNodes = cc.join(multiComps, "component").select("node")
     val eMulti = e.join(multiNodes.select(col("node").as("src")), "src")
     // undirected, multi-edge-deduped (keep best weight per direction)
-    val bidirMulti = eMulti
+    val bidirMulti = pin(eMulti
       .unionByName(eMulti.select(col("dst").as("src"), col("src").as("dst"),
                                  col("weight")))
-      .groupBy("src", "dst").agg(max("weight").as("weight"))
-      .localCheckpoint()
+      .groupBy("src", "dst").agg(max("weight").as("weight")))
 
     // — max-product propagation from entity nodes (threshold-pruned) —
     val entities = multiNodes.filter(col("node").startsWith("e:"))
       .select(col("node"), col("node").as("ent"), lit(1.0).as("score"))
-    var (cur, curIds) = graft.runtime.Checkpoints.tracked(entities)
+    var cur = pin(entities)
     // count of the just-checkpointed frontier — a shuffle-free job over the
     // in-memory blocks. Both `cur` and each round's `merged` hold exactly
     // one row per node (row_number = 1 per node window), so set equality
@@ -122,10 +120,9 @@ object NastyLinker {
         .orderBy(col("score").desc, col("ent").asc)
       // fresh alias every column: union children must not share exprIds
       // (cand derives from cur; checkpointing preserves attribute ids)
-      val (merged, mergedIds) = graft.runtime.Checkpoints.tracked(
-        fresh(cur).unionByName(fresh(cand))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1).drop("rn"))
+      val merged = pin(fresh(cur).unionByName(fresh(cand))
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1).drop("rn"))
       // convergence: symmetric difference of two keyed sets — run only when
       // the count gate says equality is possible (typically the final round)
       val mergedCount = merged.count()
@@ -134,8 +131,8 @@ object NastyLinker {
           .groupBy("node", "ent", "score").agg(count(lit(1)).as("c"))
           .filter(col("c") === 1).isEmpty
       // free the superseded round (same discipline as ConnectedComponents)
-      graft.runtime.Checkpoints.free(cur, curIds)
-      cur = merged; curIds = mergedIds; curCount = mergedCount
+      free(cur)
+      cur = merged; curCount = mergedCount
       iter += 1
     }
     if (report != null) { report.rounds = iter; report.converged = converged }
@@ -167,7 +164,7 @@ object NastyLinker {
     val zeroEnt = mentions
       .join(entComp.select("component"), Seq("component"), "left_anti")
       .select("node")
-    val nilNodes = unassigned.unionByName(zeroEnt).localCheckpoint()
+    val nilNodes = pin(unassigned.unionByName(zeroEnt))
     // components of the subgraph INDUCED on NIL nodes (both endpoints NIL)
     val nilCc = nilCliqueHint match {
       case Some(hint) =>

@@ -1,7 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
@@ -75,11 +75,13 @@ object Normalize {
   def aliasKeyJava(s: String): String = AliasKeyExpr.key(s)
 
   /** Register the native expressions ([[graft.GraftExtensions.Functions]])
-    * in the session's function registry (idempotent; the public way to
-    * splice a custom Expression into plans). */
+    * the session does not already resolve — a [[graft.GraftExtensions]]
+    * session or an earlier call has them — in its function registry (the
+    * public way to splice a custom Expression into plans). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = castToImpl(spark).sessionState.functionRegistry
-    for (f <- graft.GraftExtensions.Functions)
+    for (f <- graft.GraftExtensions.Functions
+         if !reg.functionExists(FunctionIdentifier(f.name)))
       reg.createOrReplaceTempFunction(f.name, f.build, "built-in")
   }
 

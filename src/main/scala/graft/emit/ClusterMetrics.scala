@@ -2,6 +2,7 @@ package graft.emit
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.runtime.Checkpoints.pin
 
 /** Clustering evaluation metrics for entity-disambiguation quality (A17;
   * reference: NMI/ARI/B³ family at
@@ -74,9 +75,8 @@ object ClusterMetrics {
     // corpus-scale shuffle (a round-3 plan dump, see graft.tools.BenchExtra, caught 3 scans);
     // with it the corpus is read and shuffled exactly ONCE and every
     // downstream frame derives from the contingency-sized checkpoint
-    val joint = assign.groupBy(col("pred"), col("gold"))
-      .agg(count(lit(1)).cast("double").as("n_sg"))
-      .localCheckpoint()
+    val joint = pin(assign.groupBy(col("pred"), col("gold"))
+      .agg(count(lit(1)).cast("double").as("n_sg")))
     // checkpoint is eager, so the emptiness probe is contingency-priced;
     // mirror the driver twin's contract instead of emitting an all-null row
     require(!joint.isEmpty, "empty assignment")

@@ -3,6 +3,7 @@ package graft.listings
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.runtime.Checkpoints.pin
 
 /** Text → listings → items → subject mentions, all windows partitioned by
   * url (page-local state never crosses a page boundary, so every window
@@ -196,7 +197,11 @@ object ListingExtract {
     val cum = byUrl.rowsBetween(Window.unboundedPreceding, 0)
     val cumPrev = byUrl.rowsBetween(Window.unboundedPreceding, -1)
 
-    val sectioned = lines
+    // line-level; pinned — three consumers (enum items, table sections,
+    // table content) would each re-run the explode + the url-keyed
+    // cumulative windows over the corpus (the formatted plan showed the
+    // full scan subtree repeated per consumer)
+    val sectioned = pin(lines
       .withColumn("section_hdr",
         when(col("line").rlike("^== .* ==$"),
              regexp_extract(col("line"), "^== (.*) ==$", 1)))
@@ -208,12 +213,7 @@ object ListingExtract {
           lit(0)))
       .withColumn("table_id",
         sum(when(col("line").startsWith("{|") && col("depth_prev") === 0, 1)
-          .otherwise(0)).over(cum))
-      // line-level; pinned — three consumers (enum items, table sections,
-      // table content) would each re-run the explode + the url-keyed
-      // cumulative windows over the corpus (the formatted plan showed the
-      // full scan subtree repeated per consumer)
-      .localCheckpoint()
+          .otherwise(0)).over(cum)))
 
     // — enum path (outside any table) —
     val enumItems = sectioned
@@ -246,7 +246,9 @@ object ListingExtract {
         when(col("is_hdr_line"), split(expr("substring(line, 2)"), "!!"))
           .otherwise(split(expr("substring(line, 2)"), "\\|\\|")))
     val attrPat = "^[^|\\[\\]]*=[^|\\[\\]]*\\|"
-    val cells = cellLines.select(col("url"), col("table_id"), col("row_mark"),
+    // cell-level; pinned — the row aggregate and the rowspan carrier
+    // both consume it (each cell pays three regexp_extracts to build)
+    val cells = pin(cellLines.select(col("url"), col("table_id"), col("row_mark"),
         col("line_idx"), col("is_hdr_line"),
         posexplode(col("chunks")).as(Seq("cell_pos", "chunk")))
       .withColumn("cell", trim(col("chunk")))
@@ -263,21 +265,17 @@ object ListingExtract {
       .withColumn("colspan",
         coalesce(nullif(regexp_extract(col("attrs"),
           "(?:^|\\s)colspan\\s*=\\s*\"?([0-9]+)", 1), lit("")).cast("int"),
-          lit(1)))
-      // cell-level; pinned — the row aggregate and the rowspan carrier
-      // both consume it (each cell pays three regexp_extracts to build)
-      .localCheckpoint()
-    val rowAgg = cells.groupBy("url", "table_id", "row_mark")
+          lit(1))))
+    // row-level; pinned — three consumers (span carrier, incoming
+    // left-outer, the grading join)
+    val rowAgg = pin(cells.groupBy("url", "table_id", "row_mark")
       .agg(count(lit(1)).as("raw"),
            sum("colspan").as("colspan_sum"),
            max(col("is_hdr_line").cast("int")).as("hdr_any"),
            min(struct(col("line_idx"), col("cell_pos"), col("content")))
              .getField("content").as("first_cell"))
       .withColumn("row_pos", row_number().over(
-        Window.partitionBy("url", "table_id").orderBy("row_mark")) - 1)
-      // row-level; pinned — three consumers (span carrier, incoming
-      // left-outer, the grading join)
-      .localCheckpoint()
+        Window.partitionBy("url", "table_id").orderBy("row_mark")) - 1))
     // incoming rowspan widths: spans from row r' reach rows r'+1..r'+k-1
     val spans = cells.filter(col("rowspan") > 1)
       .join(rowAgg.select(col("url"), col("table_id"), col("row_mark"),
@@ -305,14 +303,13 @@ object ListingExtract {
           .over(Window.partitionBy("url", "table_id")) === 1)
       .withColumn("is_header", col("row_pos") === 0 || col("hdr_any") === 1)
       .withColumn("span_affected", col("expanded") =!= col("raw"))
-    val dataRows = graded
+    // row-level; pinned — consumed by the surviving-table numbering AND
+    // the item join
+    val dataRows = pin(graded
       .filter(!col("table_dead") && !col("is_header") && !col("span_affected"))
       .withColumn("n_data", count(lit(1)).over(
         Window.partitionBy("url", "table_id")))
-      .filter(col("n_data") >= 3)
-      // row-level; pinned — consumed by the surviving-table numbering AND
-      // the item join
-      .localCheckpoint()
+      .filter(col("n_data") >= 3))
     // listing key: table:<section>, #idx for further tables in the section;
     // numbering counts only SURVIVING tables, in table order (≙ imperative)
     val keptTables = dataRows.select("url", "table_id").distinct()

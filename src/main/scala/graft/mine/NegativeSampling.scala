@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.PortableHash
+import graft.runtime.Checkpoints.pin
 
 /** Negative training-sample synthesis (M4; reference:
   * `/root/reference/impl/subject_entity/mention_detection/data/chunking.py:37-68`).
@@ -58,10 +59,9 @@ object NegativeSampling {
     import spark.implicits._
     val nPart = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     // pin: the counts job and the rank job must read the SAME layout
-    val sorted = df
+    val sorted = pin(df
       .repartitionByRange(nPart, col("gk"), col("listing_key"))
-      .sortWithinPartitions("gk", "listing_key")
-      .localCheckpoint()
+      .sortWithinPartitions("gk", "listing_key"))
     val counts = sorted
       .groupBy(spark_partition_id().as("pid"), col("gk"))
       .agg(count(lit(1)).as("c"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.runtime.Checkpoints.pin
 
 /** Similarity search over the embedding column (`Array[Float]`).
   *
@@ -268,12 +269,11 @@ object Ann {
         struct(lit(b).as("band"), sigBand(b).as("sig"))): _*)).as("bs"))
       .select(col("vec_id"), col("emb"), col("nrm"),
               col("bs.band").as("band"), col("bs.sig").as("sig"))
-    val small = signed.withColumn("bsize",
+    // pinned: both self-join sides re-pay the 16 hyperplane dot products
+    // per vector otherwise (the signature pass is the expensive stage)
+    val small = pin(signed.withColumn("bsize",
       count(lit(1)).over(Window.partitionBy("band", "sig")))
-      .filter(col("bsize") <= MaxBucket)
-      // pinned: both self-join sides re-pay the 16 hyperplane dot products
-      // per vector otherwise (the signature pass is the expensive stage)
-      .localCheckpoint()
+      .filter(col("bsize") <= MaxBucket))
     val cand = small.select(col("vec_id").as("a"), col("emb").as("ea"),
                             col("nrm").as("na"), col("band"), col("sig"))
       .join(small.select(col("vec_id").as("b"), col("emb").as("eb"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.runtime.Checkpoints.pin
 
 /** Document deduplication operators for a large-scale training-data pipeline:
   * exact (hash-groupBy), n-gram Jaccard, MinHash+LSH (shingle → minhash →
@@ -101,7 +102,7 @@ object Dedup {
     // blocked candidate join, the verify sets) would each re-pay the
     // split+transform explode over the corpus; one materialization is the
     // checkpoint-per-stage discipline a pipeline applies at scale
-    val sh = shingles(s, d).localCheckpoint()
+    val sh = pin(shingles(s, d))
     val rare = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
       .filter(col("df") <= RareDf).select("shingle")
     val shr = sh.join(rare, "shingle")
@@ -143,10 +144,9 @@ object Dedup {
     // the pin the collect_set aggregation (the most expensive pass of the
     // verify stage) runs twice; the plans confirmed two separate
     // Exchange+ObjectHashAggregate subtrees feeding the two broadcasts
-    val sets = sh.groupBy("doc_id")
+    val sets = pin(sh.groupBy("doc_id")
       .agg(sort_array(collect_set("shingle")).as("shs"))
-      .withColumn("n", size(col("shs")))
-      .localCheckpoint()
+      .withColumn("n", size(col("shs"))))
     cand
       .join(sets.select(col("doc_id").as("a"), col("shs").as("sa"),
                         col("n").as("na")), "a")
@@ -240,9 +240,8 @@ object Dedup {
     // pinned: the three pair branches (small a-side, small b-side, star)
     // otherwise re-run the whole shingle→minhash→window subtree — the
     // formatted plan showed THREE full parquet scans for this one operator
-    val sized = bands.withColumn("bsize", count(lit(1)).over(w))
-      .withColumn("bmin", min("doc_id").over(w))
-      .localCheckpoint()
+    val sized = pin(bands.withColumn("bsize", count(lit(1)).over(w))
+      .withColumn("bmin", min("doc_id").over(w)))
     val small = sized.filter(col("bsize") <= MaxBucket)
     val allPairs = small
       .select(col("doc_id").as("a"), col("band"), col("bucket"))
@@ -260,7 +259,7 @@ object Dedup {
   def minhashLsh(s: SparkSession, d: String): DataFrame =
     // two consumers (candidate sids + verify sets) — same pin discipline
     // as ngramJaccard's shingle frame
-    minhashLshFrom(shingles(s, d).localCheckpoint())
+    minhashLshFrom(pin(shingles(s, d)))
 
   /** Exact-oracle MinHash+LSH over a caller-supplied shingle frame (the
     * containment gate pins ONE shingle frame and feeds both paths). */
@@ -321,7 +320,7 @@ object Dedup {
     // THREE consumers read the exploded shingles (exact-path sids, verify
     // sets, fast-path sids) — pin once, same discipline (and measured A/B
     // methodology) as ngramJaccard's shingle pin
-    val sh = shingles(s, d).localCheckpoint()
+    val sh = pin(shingles(s, d))
     // the probe side of a left_semi is duplicate-insensitive — skip the
     // fast path's final pair-dedup shuffle (a provable no-op here)
     minhashLshFrom(sh).join(minhashLshFastFrom(sh, dedup = false),
@@ -386,9 +385,8 @@ object Dedup {
     val w = Window.partitionBy("band", "bval")
     // pinned: four consumers (small a/b sides, star hot a/b sides) would
     // each re-run the 64-aggregate fingerprint pass over the corpus
-    val sized = blocked.withColumn("bsize", count(lit(1)).over(w))
-      .withColumn("bmin", min("doc_id").over(w))
-      .localCheckpoint()
+    val sized = pin(blocked.withColumn("bsize", count(lit(1)).over(w))
+      .withColumn("bmin", min("doc_id").over(w)))
     val small = sized.filter(col("bsize") <= MaxBucket)
     val hamming = (0 until SimhashBands)
       .map(k => bit_count(col(s"fa$k").bitwiseXOR(col(s"fb$k"))))
@@ -461,11 +459,11 @@ object Dedup {
     * At scale the label column is the IVF-style partitioner; a full corpus
     * would use [[Ann.ivfTopK]]'s centroid assignment as the blocking key. */
   def embeddingCosine(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.embeddings(s, d)
+    // pinned: both self-join sides re-pay the norm pass otherwise
+    val e = pin(Tables.embeddings(s, d)
       .select(col("vec_id"), col("label"),
               transform(col("embedding"), x => x.cast("double")).as("emb"))
-      .withColumn("nrm", Ann.norm(col("emb"))) // hoisted out of the pair stage
-      .localCheckpoint() // both self-join sides re-pay the norm pass otherwise
+      .withColumn("nrm", Ann.norm(col("emb")))) // hoisted out of the pair stage
     val a = e.select(col("vec_id").as("a"), col("label"), col("emb").as("ea"),
                      col("nrm").as("na"))
     val b = e.select(col("vec_id").as("b"), col("label"), col("emb").as("eb"),
@@ -497,11 +495,10 @@ object Dedup {
 
   def embeddingCosineIvf(e: DataFrame, centroids: DataFrame,
                          nProbe: Int): DataFrame = {
-    val assigned = Ann.assignCells(e, centroids, nProbe)
-      .withColumn("nrm", Ann.norm(col("emb"))) // hoisted out of the pair stage
-      // pinned: the cell self-join's two sides each re-run the centroid
-      // broadcast join + per-vector argmax window otherwise
-      .localCheckpoint()
+    // pinned: the cell self-join's two sides each re-run the centroid
+    // broadcast join + per-vector argmax window otherwise
+    val assigned = pin(Ann.assignCells(e, centroids, nProbe)
+      .withColumn("nrm", Ann.norm(col("emb")))) // hoisted out of the pair stage
     assigned.select(col("vec_id").as("a"), col("emb").as("ea"),
                     col("nrm").as("na"), col("cell"))
       .join(assigned.select(col("vec_id").as("b"), col("emb").as("eb"),
@@ -568,7 +565,7 @@ object Dedup {
   def commonNgrams(s: SparkSession, d: String): DataFrame = {
     // two consumers (the df aggregate and the join-back) — pin so the
     // corpus is shingled once, not twice
-    val sh = shingles(s, d).localCheckpoint()
+    val sh = pin(shingles(s, d))
     val df = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
     sh.join(df, "shingle")
       .groupBy("doc_id")

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.runtime.Checkpoints.fresh
+import graft.runtime.Checkpoints.{free, fresh, pin}
 
 /** Spherical k-means centroid training for the IVF operators — the
   * trainable replacement for the deterministic centroid FIXTURE the oracle
@@ -20,7 +20,7 @@ import graft.runtime.Checkpoints.fresh
   *   recenter: element-wise mean per cell via posexplode + (cell, pos)
   *             aggregation (two small shuffles keyed by cell — centroid-
   *             sized, not corpus-sized), then re-normalization;
-  * with `localCheckpoint` per round truncating the iterative lineage
+  * with a pin per round truncating the iterative lineage
   * (the ConnectedComponents discipline). Empty cells keep their previous
   * centroid. The spherical objective Σ cos(x, c(x)) is non-decreasing per
   * round (Lloyd monotonicity — property-tested in KmeansSpec).
@@ -57,13 +57,13 @@ object Kmeans {
     * that is bounded by contract. When the normalized sample is
     * driver-sized (≤ [[DriverSeedMax]] rows, long ids, double embeddings)
     * the traversal runs as a driver loop over the COLLECTED sample with
-    * bit-identical arithmetic (the same left-fold dot-product order, the
-    * same (max_sim asc, vec_id asc) argmin) — the ValidTags-style
+    * bit-identical arithmetic (the same left-fold dot-product order, null
+    * on a length mismatch, the same (max_sim asc nulls first, vec_id asc)
+    * argmin, so ragged input seeds alike on both paths) — the ValidTags-style
     * "broadcast-sized by design" discipline. Larger or non-standard-typed
     * inputs take the original distributed loop. */
   def seedFarthestFirst(vectors: DataFrame, k: Int): DataFrame = {
-    val v = vectors.select(col("vec_id"), l2normalize(col("emb")).as("emb"))
-      .localCheckpoint()
+    val v = pin(vectors.select(col("vec_id"), l2normalize(col("emb")).as("emb")))
     val embOk = v.schema("emb").dataType match {
       case org.apache.spark.sql.types.ArrayType(
              org.apache.spark.sql.types.DoubleType, _) => true
@@ -79,40 +79,32 @@ object Kmeans {
     val sp = v.sparkSession
     import sp.implicits._
     val rows = v.as[(Long, Seq[Double])].collect()
-    def ddot(a: Seq[Double], b: Seq[Double]): Double = {
-      var acc = 0.0; var i = 0
-      while (i < a.length && i < b.length) { acc += a(i) * b(i); i += 1 }
-      acc // left fold in index order — identical to aggregate(zip_with)
-    }
-    val chosen = scala.collection.mutable.ArrayBuffer.empty[Int]
-    chosen += rows.indices.minBy(rows(_)._1)
-    while (chosen.size < k) {
+    // vec_dot: None (SQL null) on a length mismatch, else the left fold in
+    // index order
+    def ddot(a: Seq[Double], b: Seq[Double]): Option[Double] =
+      if (a.length != b.length) None
+      else Some(a.indices.foldLeft(0.0)((acc, i) => acc + a(i) * b(i)))
+    // Spark's double order (-0.0 = 0.0, NaN largest); null sorts first
+    val sim: Ordering[Double] =
+      (a, b) => if (a == b) 0 else java.lang.Double.compare(a, b)
+    val farthest = Ordering.Tuple2(Ordering.Option(sim), Ordering.Long)
+    val chosen = scala.collection.mutable.ArrayBuffer(rows.indices.minBy(rows(_)._1))
+    while (chosen.size < k)
       // min over ALL vectors (chosen included, as the join-based loop did)
-      // of (max cos to chosen set), ties by vec_id asc
-      var bestIdx = -1; var bestSim = Double.MaxValue; var bestId = 0L
-      var i = 0
-      while (i < rows.length) {
-        var ms = Double.MinValue
-        chosen.foreach { c =>
-          val s = ddot(rows(i)._2, rows(c)._2); if (s > ms) ms = s
-        }
-        if (bestIdx < 0 || ms < bestSim ||
-            (ms == bestSim && rows(i)._1 < bestId)) {
-          bestIdx = i; bestSim = ms; bestId = rows(i)._1
-        }
-        i += 1
-      }
-      chosen += bestIdx
-    }
+      // of (max cos to the chosen set, vec_id); like SQL's max, it skips
+      // null dots and is null when all are
+      chosen += rows.indices.minBy { i =>
+        (chosen.iterator.flatMap(c => ddot(rows(i)._2, rows(c)._2)).maxOption(sim),
+         rows(i)._1)
+      }(farthest)
     chosen.zipWithIndex
       .map { case (idx, ci) => (ci.toLong, rows(idx)._2) }.toSeq
       .toDF("cent_id", "ce")
   }
 
   private def seedDistributed(v: DataFrame, k: Int): DataFrame = {
-    var (chosen, chosenIds) = graft.runtime.Checkpoints.tracked(
-      v.orderBy("vec_id").limit(1)
-        .select(lit(0L).as("cent_id"), col("emb").as("ce")))
+    var chosen = pin(v.orderBy("vec_id").limit(1)
+      .select(lit(0L).as("cent_id"), col("emb").as("ce")))
     var i = 1
     while (i < k) {
       val far = v.join(broadcast(chosen))
@@ -121,10 +113,9 @@ object Kmeans {
                                first("emb").as("emb"))
         .orderBy(col("max_sim").asc, col("vec_id").asc).limit(1)
         .select(lit(i.toLong).as("cent_id"), col("emb").as("ce"))
-      val (next, nextIds) = graft.runtime.Checkpoints.tracked(
-        fresh(chosen).unionByName(fresh(far)))
-      graft.runtime.Checkpoints.free(chosen, chosenIds)
-      chosen = next; chosenIds = nextIds
+      val next = pin(fresh(chosen).unionByName(fresh(far)))
+      free(chosen)
+      chosen = next
       i += 1
     }
     chosen
@@ -141,10 +132,8 @@ object Kmeans {
   def train(vectors: DataFrame, init: DataFrame,
             iters: Int = 5, withObjective: Boolean = true)
       : (DataFrame, Seq[Double]) = {
-    val v = vectors.select(col("vec_id"), l2normalize(col("emb")).as("emb"))
-      .localCheckpoint()
-    var (cents, centIds) = graft.runtime.Checkpoints.tracked(
-      init.select(col("cent_id"), l2normalize(col("ce")).as("ce")))
+    val v = pin(vectors.select(col("vec_id"), l2normalize(col("emb")).as("emb")))
+    var cents = pin(init.select(col("cent_id"), l2normalize(col("ce")).as("ce")))
     val objective = scala.collection.mutable.ArrayBuffer.empty[Double]
     val centNumeric = init.schema("cent_id").dataType
       .isInstanceOf[org.apache.spark.sql.types.NumericType]
@@ -171,12 +160,10 @@ object Kmeans {
             .select(col("vec_id"), col("emb"), col("cent_id").as("cell"),
                     col("sim"))
         }
-      // the assigned frame is CORPUS-sized — tracked so each round's copy
-      // is freed before the next (Checkpoints doc: the 8 GiB soak lesson);
-      // only needed when it has two consumers (objective + means)
-      val (assigned, assignedIds) =
-        if (withObjective) graft.runtime.Checkpoints.tracked(assignedPlan)
-        else (assignedPlan, Set.empty[Int])
+      // the assigned frame is CORPUS-sized — pinned only when it has two
+      // consumers (objective + means), and then freed before the next
+      // round (Checkpoints doc: the 8 GiB soak lesson)
+      val assigned = if (withObjective) pin(assignedPlan) else assignedPlan
       if (withObjective)
         objective += assigned.agg(sum("sim")).head().getDouble(0)
       // element-wise mean per cell; empty cells keep the old centroid
@@ -188,13 +175,12 @@ object Kmeans {
         .select(col("cell").as("cent_id"),
                 l2normalize(transform(col("pm"), e => e.getField("m")))
                   .as("new_ce"))
-      val (nextCents, nextCentIds) = graft.runtime.Checkpoints.tracked(
-        cents.join(means, Seq("cent_id"), "left_outer")
-          .select(col("cent_id"),
-                  coalesce(col("new_ce"), col("ce")).as("ce")))
-      if (withObjective) graft.runtime.Checkpoints.free(assigned, assignedIds)
-      graft.runtime.Checkpoints.free(cents, centIds)
-      cents = nextCents; centIds = nextCentIds
+      val nextCents = pin(cents.join(means, Seq("cent_id"), "left_outer")
+        .select(col("cent_id"), coalesce(col("new_ce"), col("ce")).as("ce")))
+      // unpinned, `assigned` scans v and cents: free only its own pin
+      if (withObjective) free(assigned)
+      free(cents)
+      cents = nextCents
     }
     (cents, objective.toSeq)
   }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.mine.{Cat2Ax, Hearst}
 import graft.taxonomy.{Induction, PropertyFrequencies}
+import graft.runtime.Checkpoints.pin
 
 /** Driver-oracle queries for the operator families that were previously
   * covered only by unit tests (VERDICT r1 §next #3): the ZERO-PADDED median
@@ -34,19 +35,18 @@ object MiningQueries {
       concat(lit("g"), col("l_linenumber") % 3).as("tag"))
     val entBase = li.select(col("l_orderkey").as("okey"),
                             (col("l_orderkey") % 6).as("lf")).distinct()
-    val entTypes = entBase.select(
+    // no distinct on the union: entBase is already distinct and the two
+    // branches' tpe prefixes (t/p) are disjoint, so (ent, tpe) is unique
+    // by construction — a distinct here re-shuffles 2×|entities| rows
+    // for nothing
+    // consumed twice (the stats join + the inheritance universe) — pin
+    // so the corpus-sized distinct evaluates once
+    val entTypes = pin(entBase.select(
         concat(lit("o"), col("okey")).as("ent"),
         concat(lit("t"), col("lf")).as("tpe"))
       .unionByName(entBase.select(
         concat(lit("o"), col("okey")).as("ent"),
-        concat(lit("p"), (col("lf") / 2).cast("int")).as("tpe")))
-      // no distinct on the union: entBase is already distinct and the two
-      // branches' tpe prefixes (t/p) are disjoint, so (ent, tpe) is unique
-      // by construction — a distinct here re-shuffles 2×|entities| rows
-      // for nothing
-      // consumed twice (the stats join + the inheritance universe) — pin
-      // so the corpus-sized distinct evaluates once
-      .localCheckpoint()
+        concat(lit("p"), (col("lf") / 2).cast("int")).as("tpe"))))
     val edges = Seq("t0" -> "p0", "t1" -> "p0", "t2" -> "p1", "t3" -> "p1",
                     "t4" -> "p2", "t5" -> "p2", "t6" -> "p2",
                     "p0" -> "root", "p1" -> "root", "p2" -> "root")

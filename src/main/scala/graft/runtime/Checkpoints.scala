@@ -1,39 +1,82 @@
 package graft.runtime
 
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
 
-/** Generational cleanup for iterative-loop `localCheckpoint`s.
+/** Pins: eager `localCheckpoint`s, and the one place that frees them.
   *
-  * Every round of a DataFrame loop (star contraction, Lloyd iteration,
-  * closure growth, max-product propagation) checkpoints its state to
-  * truncate lineage — but checkpoint blocks are NON-evictable and the
-  * ContextCleaner only frees them after a driver GC notices the dead
-  * reference. On a 16M-edge NIL graph (1.2M-page soak, 8 GiB heap) the
-  * accumulated rounds exhausted execution memory before any cleanup ran.
-  * Tracking the RDD ids each checkpoint creates lets the loop free the
-  * superseded round explicitly, bounding live state to TWO rounds.
-  */
+  * A pin turns a multiply-consumed or iterated frame into cluster-resident
+  * blocks and truncates its lineage. Its blocks are NON-evictable, cannot
+  * recompute once freed, and the ContextCleaner only releases them after a
+  * driver GC notices the dead reference: on a 16M-edge NIL graph (1.2M-page
+  * soak, 8 GiB heap) accumulated loop rounds exhausted execution memory
+  * before any cleanup ran, and a 70+-query session piled up dead pins
+  * that slowed later queries 1.5-2.5×. So every pin is taken by [[pin]]
+  * and released explicitly, by whoever owns it:
+  *  - an [[Owner]] open on the pinning thread registers the pin and frees
+  *    it when it closes. `Pipeline.run`/`runDelta` open one around the
+  *    whole call (the stage graph's pool threads inherit it) and close it
+  *    when the call returns or throws — its result reads only parquet.
+  *    `SparkEntry.queries` opens one per query and closes it when the next
+  *    query is entered, so a query's result must be consumed before then;
+  *  - a loop operator frees each superseded round itself with [[free]],
+  *    bounding its live state to two rounds;
+  *  - a pin taken outside every owner is left to the ContextCleaner.
+  * No owner frees a block it did not register, so pins of a concurrent
+  * run, query or caller are never touched. */
 object Checkpoints {
 
-  /** Eager localCheckpoint; returns the new frame plus the persisted RDD
-    * ids it created (the ids to free once the round is superseded). The
-    * ids are the checkpoint's own — the RDDs under the `LogicalRDD` the
-    * new frame scans — not a session-wide before/after diff, which would
-    * also claim a checkpoint another thread took meanwhile (concurrent
-    * pipeline stages) and free blocks that thread still reads. */
-  def tracked(df: DataFrame): (DataFrame, Set[Int]) = {
-    val out = df.localCheckpoint() // eager
-    (out, out.queryExecution.logical.collect {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
-    }.toSet)
+  /** The pins of one run or query, freed (non-blocking) by [[close]]. */
+  final class Owner {
+    private[Checkpoints] val pins = ConcurrentHashMap.newKeySet[RDD[_]]()
+
+    def close(): Unit = pins.forEach { r => r.unpersist(false); pins.remove(r) }
   }
 
-  /** Unpersist the blocks of a superseded checkpoint (non-blocking). */
-  def free(df: DataFrame, ids: Set[Int]): Unit = {
-    val sc = df.sparkSession.sparkContext
-    ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
+  private val current = new ThreadLocal[Owner]
+
+  /** The owner open on this thread; null outside every owner. */
+  private[runtime] def owner: Owner = current.get
+
+  /** `body` with `o` as this thread's owner (null: none), restoring the
+    * previous owner after. Does not close `o`. */
+  def within[A](o: Owner)(body: => A): A = {
+    val prior = current.get
+    current.set(o)
+    try body finally current.set(prior)
   }
+
+  /** `body` under a new owner, closed when `body` returns or throws. */
+  def owned[A](body: => A): A = {
+    val o = new Owner
+    try within(o)(body) finally o.close()
+  }
+
+  /** Eager local checkpoint of `df`, registered with this thread's owner.
+    * Registered before the job that writes its blocks runs, so a failed or
+    * cancelled pin is freed with the rest. */
+  def pin(df: DataFrame): DataFrame = {
+    val out = df.localCheckpoint(eager = false)
+    val rdds = pinsOf(out)
+    Option(owner).foreach(o => rdds.foreach(o.pins.add))
+    rdds.foreach(_.count()) // the eager write: one job over every partition
+    out
+  }
+
+  /** Free (non-blocking) the checkpoints `df` itself scans: the RDDs under
+    * its own `LogicalRDD`s, so a pin another thread took meanwhile is never
+    * claimed. Call it on a superseded pin, not on a frame derived from
+    * pins that are still read. */
+  def free(df: DataFrame): Unit = pinsOf(df).foreach { r =>
+    r.unpersist(false)
+    Option(owner).foreach(_.pins.remove(r))
+  }
+
+  private def pinsOf(df: DataFrame): Seq[RDD[_]] =
+    df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
 
   /** `df` with every column re-aliased to itself: fresh attribute ids, so
     * frames derived from one source (or a checkpoint of it, which keeps

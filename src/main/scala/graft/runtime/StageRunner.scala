@@ -40,6 +40,9 @@ import org.apache.spark.sql.functions._
   *    combinators, and the one blocking wait is at the end of [[execute]],
   *    which returns only when every node has finished — every stage and
   *    its lineage row are committed then;
+  *  - each body runs under the pin owner of the thread that called
+  *    [[execute]] ([[Checkpoints]]), so its pins are released with the
+  *    run's;
   *  - each body runs in its own Spark job group; the first failure cancels
   *    the groups in flight (and their later jobs), starts no further node,
   *    and is rethrown unwrapped once every node has settled. A stage is
@@ -241,7 +244,7 @@ final class StageRunner(spark: SparkSession, outDir: String, runId: String) {
           s"${n.name} not started: the run already failed")
       sc.setJobGroup(group, s"$runId ${n.name}")
       Node.current.set(n)
-      try body
+      try Checkpoints.within(g.pins)(body)
       catch { case t: Throwable => fail(g, t); throw t }
       finally { Node.current.remove(); sc.clearJobGroup() }
     } finally g.inFlight.remove(group)
@@ -320,11 +323,13 @@ object StageRunner {
       resumed: Boolean, loopRounds: Long, converged: Boolean,
       startMs: Long, endMs: Long)
 
-  /** The state of one [[StageRunner#execute]]: its pool, its nodes, and
-    * the first failure. Pool threads are created on demand, so the graph's
-    * width bounds the concurrency. */
+  /** The state of one [[StageRunner#execute]]: its pool, its nodes, the
+    * first failure, and the pin owner of the thread that runs it, which
+    * every body runs under. Pool threads are created on demand, so the
+    * graph's width bounds the concurrency. */
   private final class Graph(runId: String) {
     val id: String = java.util.UUID.randomUUID().toString
+    val pins: Checkpoints.Owner = Checkpoints.owner
     val seq = new AtomicLong()
     private val threads = new AtomicLong()
     val pool = Executors.newCachedThreadPool { (r: Runnable) =>

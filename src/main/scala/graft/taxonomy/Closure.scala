@@ -2,6 +2,7 @@ package graft.taxonomy
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.runtime.Checkpoints.{free, pin}
 
 /** Transitive closure over a DAG edge table, as an iterative DataFrame join
   * fixpoint (reference: memoized ancestor walk `impl/util/base_graph.py:76-83`
@@ -10,8 +11,8 @@ import org.apache.spark.sql.functions._
   * Semantics: input `edges(node, anc)` = direct parent pairs; output all
   * (node, ancestor) pairs reachable via 1+ hops. Each round extends the
   * frontier by one hop and anti-joins out already-known pairs, so work per
-  * round is proportional to NEW pairs only. `localCheckpoint()` truncates
-  * plan lineage per round — without it the plan tree doubles every iteration
+  * round is proportional to NEW pairs only. A pin per round truncates
+  * plan lineage — without it the plan tree doubles every iteration
   * and Catalyst analysis time dominates after ~10 rounds.
   *
   * Scale: intended for taxonomy-sized graphs (<=10^7 edges, depth <=30 —
@@ -23,12 +24,9 @@ object Closure {
 
   def transitiveClosure(edges: DataFrame,
                         report: graft.runtime.LoopReport = null): DataFrame = {
-    import graft.runtime.Checkpoints
-    val e = edges.select(col("node"), col("anc")).distinct().localCheckpoint()
+    val e = pin(edges.select(col("node"), col("anc")).distinct())
     var closure = e
-    var closureIds = Set.empty[Int] // the seed checkpoint stays live (== e)
     var frontier = e
-    var frontierIds = Set.empty[Int]
     var done = false
     var rounds = 0
     while (!done && rounds < 64) {
@@ -36,18 +34,16 @@ object Closure {
         .join(e.alias("e"), col("f.anc") === col("e.node"))
         .select(col("f.node").as("node"), col("e.anc").as("anc"))
         .distinct()
-      val (fresh, freshIds) =
-        Checkpoints.tracked(next.join(closure, Seq("node", "anc"), "left_anti"))
-      if (fresh.isEmpty) { Checkpoints.free(fresh, freshIds); done = true }
+      val fresh = pin(next.join(closure, Seq("node", "anc"), "left_anti"))
+      if (fresh.isEmpty) { free(fresh); done = true }
       else {
-        val (nextClosure, nextClosureIds) =
-          Checkpoints.tracked(closure.unionByName(fresh))
+        val nextClosure = pin(closure.unionByName(fresh))
         // superseded generations: the old closure copy and the frontier
-        // BEFORE last (fresh itself stays live as the new frontier)
-        Checkpoints.free(closure, closureIds)
-        Checkpoints.free(frontier, frontierIds)
-        closure = nextClosure; closureIds = nextClosureIds
-        frontier = fresh; frontierIds = freshIds
+        // BEFORE last (fresh itself stays live as the new frontier); in
+        // the first round both are the seed, which stays live
+        if (rounds > 0) { free(closure); free(frontier) }
+        closure = nextClosure
+        frontier = fresh
       }
       rounds += 1
     }

@@ -3,6 +3,7 @@ package graft.taxonomy
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.runtime.Checkpoints.pin
 
 /** Ontology heuristics induced from instance data (A10-A12; reference:
   * `/root/reference/impl/dbpedia/heuristics.py`):
@@ -88,23 +89,21 @@ object Induction {
     // consume it, and through `weights` three more branches (norms, dot a/b
     // sides) would otherwise re-run the corpus-sized join+aggregate each
     // (the pre-pin plan held 92 parquet scans with ZERO exchange reuse)
-    val typePred = relations.select(col("sub").as("ent"), col("pred"))
+    val typePred = pin(relations.select(col("sub").as("ent"), col("pred"))
       .join(types, "ent")
-      .groupBy("tpe", "pred").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+      .groupBy("tpe", "pred").agg(count(lit(1)).as("cnt")))
     // type-list-sized; pinned — consumed by the nTypes count and both
     // cross-join sides (each was a full scan of the types input)
-    val allTypes = types.select("tpe").distinct().localCheckpoint()
+    val allTypes = pin(types.select("tpe").distinct())
     val nTypes = allTypes.count()
     val df = typePred.groupBy("pred")
       .agg(countDistinct("tpe").as("df"))
     val tf = typePred.withColumn("total",
       sum("cnt").over(Window.partitionBy("tpe")))
       .withColumn("tf", col("cnt") / col("total"))
-    val weights = tf.join(broadcast(df), "pred")
+    val weights = pin(tf.join(broadcast(df), "pred")
       .withColumn("w", col("tf") * log(lit(nTypes.toDouble) / col("df")))
-      .select("tpe", "pred", "w")
-      .localCheckpoint() // three consumers: norms + the two dot sides
+      .select("tpe", "pred", "w")) // three consumers: norms + the two dot sides
     val norms = weights.groupBy("tpe")
       .agg(sqrt(sum(col("w") * col("w"))).as("norm"))
     val a = weights.select(col("tpe").as("ta"), col("pred"), col("w").as("wa"))

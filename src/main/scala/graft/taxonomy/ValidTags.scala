@@ -2,6 +2,7 @@ package graft.taxonomy
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.runtime.Checkpoints.pin
 
 /** A9: valid NE tags per entity type (reference:
   * `/root/reference/impl/listing/context.py:134-171`
@@ -73,7 +74,7 @@ object ValidTags {
     // the stats view feeds BOTH collects below; pin it so a caller passing
     // an unmaterialized aggregation (e.g. the driver-contract query's
     // corpus-sized join) evaluates it once, not per collect
-    val statsC = stats.localCheckpoint()
+    val statsC = pin(stats)
     val direct = probabilitiesFromStats(statsC)
       .filter(col("proba") >= threshold).select("tpe", "tag")
       .as[(String, String)].collect()

@@ -1,6 +1,7 @@
 package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.runtime.Checkpoints.pin
 /** args: pagesPath [mode] [churnPct] — mode "cc" (default), "ed"
   * (ScoredEd), "bu" (BottomUp), "delta" (full run, then an incremental
   * run over a re-crawl with ~churnPct% of pages modified, default 1 —
@@ -70,15 +71,14 @@ object PipelineSoak {
       // body appended — changes text, not the mention set, so triples and
       // the correctness baseline are unchanged)
       val changed = pmod(xxhash64(col("url")), lit(100)) < churnPct
-      val v2 = pages
+      val v2 = pin(pages
         .withColumn("warc_ts",
           when(changed, col("warc_ts") + expr("INTERVAL 1 HOUR"))
             .otherwise(col("warc_ts")))
         .withColumn("html",
           when(changed, concat(col("html"),
             lit(" <p>updated</p>".getBytes("UTF-8"))))
-            .otherwise(col("html")))
-        .localCheckpoint()
+            .otherwise(col("html"))))
       val nChanged = v2.filter(changed).count()
       val outD = java.nio.file.Files.createTempDirectory("graft-soak-d").toString
       val tD = System.nanoTime()

@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
 /** A session configured only through [[GraftExtensions]] (the
@@ -38,5 +39,32 @@ class ExtensionsSpec extends SparkSuite {
       .head()
     assert(row.getAs[String]("alias_key") == "adalovelace")
     assert(row.getAs[Double]("vec_dot") == 11.0)
+  }
+
+  test("a second Pipeline.run on one session re-registers no function") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import spark.implicits._
+    val world = graft.testkit.CorpusGen.default
+    val seeds = world.seeds(spark)
+    val pages = world.pages.toDS().toDF()
+    Pipeline.run(spark, pages, seeds, SparkSuite.tempDir("graft-reg-1"))
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("graft-reg-warn", null, null, true,
+                                       Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val logger = LogManager
+      .getLogger("org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry")
+      .asInstanceOf[CoreLogger]
+    logger.addAppender(capture)
+    try Pipeline.run(spark, pages, seeds, SparkSuite.tempDir("graft-reg-2"))
+    finally { logger.removeAppender(capture); capture.stop() }
+    val replaced = seen.asScala.filter(_.contains("replaced a previously registered"))
+    assert(replaced.isEmpty, replaced.mkString("\n"))
   }
 }

@@ -47,6 +47,22 @@ class KmeansSpec extends SparkSuite {
     assert(byCluster.values.flatten.toSet.size == 3)
   }
 
+  test("ragged input seeds alike on the driver and the distributed path") {
+    // vector 1 is 3-long, the rest 2-long: vec_dot(0, 1) is null, which
+    // sorts first, so 1 is the farthest from 0 — a dot over the shared
+    // prefix (0.6) would pick 2 instead
+    val rows = Seq(0 -> Seq(1.0, 0.0), 1 -> Seq(0.6, 0.8, 0.0),
+                   2 -> Seq(0.0, 1.0), 3 -> Seq(0.6, 0.8))
+    def seeded(v: org.apache.spark.sql.DataFrame) =
+      Kmeans.seedFarthestFirst(v, 3).orderBy("cent_id")
+        .as[(Long, Seq[Double])].collect().toSeq
+    // long ids take the driver loop, int ids the distributed one
+    val driver = seeded(rows.map { case (i, e) => (i.toLong, e) }.toDF("vec_id", "emb"))
+    val distributed = seeded(rows.toDF("vec_id", "emb"))
+    assert(driver == distributed)
+    assert(distributed.map(_._2.size) == Seq(2, 3, 2))
+  }
+
   test("farthest-first seeding is partitioning-invariant") {
     val v = clustered()
     val a = Kmeans.seedFarthestFirst(v.repartition(1), 3)
