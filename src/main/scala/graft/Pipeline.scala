@@ -126,9 +126,8 @@ object Pipeline {
   val MaxUnknownLabelFreq = 20
 
   /** Above this row count a delta key set stops being broadcast-hinted and
-    * the carry joins degrade to AQE-planned shuffle joins (high-churn
-    * re-crawls must not OOM the driver on a forced broadcast — SCALE.md's
-    * url-bucketed shape takes over well before this at real scale). */
+    * AQE plans the carry joins (high-churn re-crawls must not OOM the
+    * driver on a forced broadcast — SCALE.md rule 1). */
   val MaxBroadcastKeys = 2000000L
 
   /** Run (or resume) the full pipeline; returns the triple table.
@@ -197,7 +196,8 @@ object Pipeline {
     val sharedMining = Seq("unlinked_label_counts", "subject_listings",
                            "type_rules", "relation_rules", "label_counts",
                            "tag_stats", "valid_tags", "type_cand_counts",
-                           "rel_cand_counts", "prov_pairs", "triples_prov")
+                           "rel_cand_counts", "types", "relations",
+                           "prov_pairs", "triples_prov")
     val graphState = canon match {
       case Canonicalization.Components => Nil
       case _: Canonicalization.ScoredEd =>
@@ -365,9 +365,7 @@ object Pipeline {
     * corpus twice and cost more than the full run it replaces (measured —
     * see BENCH/BASELINE.md). The broadcast hint is guarded: above
     * [[MaxBroadcastKeys]] (a high-churn re-crawl) the hint is dropped and
-    * AQE plans the join. At 10^12 docs, where even 1% outgrows a
-    * broadcast, the same shape holds with url-bucketed checkpoint tables
-    * (SCALE.md).
+    * AQE plans the join.
     *
     * A url is TOUCHED when its capture set changed in either direction:
     * new/changed captures (manifest ∖ prev) or vanished captures
@@ -469,8 +467,9 @@ object Pipeline {
     * (ADVICE r3: an unconditional hint OOMs on high-churn re-crawls);
     * beyond the threshold AQE plans the join unhinted. The session conf
     * `graft.delta.maxBroadcastKeys` overrides [[MaxBroadcastKeys]] —
-    * DeltaThresholdSpec pins it to 0 to prove the un-hinted fallback is
-    * result-identical (SCALE.md's high-churn shape). */
+    * DeltaThresholdSpec pins it to 0 to prove the un-hinted fallback, where
+    * AQE plans every carry join, is result-identical (SCALE.md's high-churn
+    * shape). */
   private def hintSmall(df: DataFrame): DataFrame = {
     val max = df.sparkSession.conf
       .get("graft.delta.maxBroadcastKeys", MaxBroadcastKeys.toString).toLong
@@ -785,18 +784,14 @@ object Pipeline {
       runner.node(stage, inputs: _*)(runner.run(stage, report = report)(rows))
     }
 
-    /** `keyed` picks the full-run writer: [[StageRunner#runKeyed]] (bucket
-      * layout capable) or plain [[StageRunner#run]]. */
     def carried(name: String, key: String, drops: Option[Node[DataFrame]],
-                inputs: Seq[Node[_]], keyed: Boolean = true,
-                freshName: String = null, report: LoopReport = null)
+                inputs: Seq[Node[_]], freshName: String = null,
+                report: LoopReport = null)
                (rows: => DataFrame): Node[Rel] =
       runner.node(name, inputs ++ drops: _*) {
         prevDir match {
           case None =>
-            val t =
-              if (keyed) runner.runKeyed(name, Seq(key), report = report)(rows)
-              else runner.run(name, report = report)(rows)
+            val t = runner.run(name, report = report)(rows)
             new Rel(t, t)
           case Some(dir) =>
             val d = drops.get()
@@ -968,7 +963,7 @@ object Pipeline {
       val subjects = st.carried(mode.subjectsStage, "mention_id",
                                 closure.map(_.map(_.mentionDrops)),
                                 Seq(linkedAll, frequent) ++ closure,
-                                keyed = false, report = rep) { recomputed._1 }
+                                report = rep) { recomputed._1 }
       st.carried(mode.compsStage, "comp", closure.map(_.map(_.compDrops)),
                  Seq(subjects)) { recomputed._2 }
       if (closure.isEmpty)

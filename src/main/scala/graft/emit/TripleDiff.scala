@@ -1,6 +1,7 @@
 package graft.emit
 
 import org.apache.spark.sql.DataFrame
+import graft.runtime.Checkpoints
 
 /** Triple-diff P/R job — the north rule's correctness gate (P/R >= 0.95 vs
   * reference-derived fixture triples; ≙ the evaluation aggregations at
@@ -14,10 +15,13 @@ object TripleDiff {
       else 2 * precision * recall / (precision + recall)
   }
 
-  def diff(got: DataFrame, expected: DataFrame): PR = {
+  /** Both distinct triple sets are pinned (each is read twice) and freed
+    * when `diff` returns. */
+  def diff(got: DataFrame, expected: DataFrame): PR = Checkpoints.owned {
     val keys = Seq("subj", "pred", "obj", "is_literal")
-    val g = got.select(keys.head, keys.tail: _*).distinct().cache()
-    val e = expected.select(keys.head, keys.tail: _*).distinct().cache()
+    val g = Checkpoints.pin(got.select(keys.head, keys.tail: _*).distinct())
+    val e = Checkpoints.pin(
+      expected.select(keys.head, keys.tail: _*).distinct())
     val inter = g.join(e, keys).count()
     val gn = g.count()
     val en = e.count()

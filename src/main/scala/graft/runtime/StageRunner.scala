@@ -17,7 +17,9 @@ import org.apache.spark.sql.functions._
   * metrics".
   *
   * Each stage writes to `<outDir>/<stage>` (parquet; partitioned stages use
-  * partitionBy so a re-run overwrites idempotently). A stage whose output
+  * partitionBy so a re-run overwrites idempotently); a carried stage is
+  * that table or a layer over its parent's ([[runCarried]]), and
+  * [[StageRunner.read]] is the one reader of both. A stage whose output
   * already exists (a committed `_SUCCESS` or `_layer` marker) is SKIPPED
   * and read back — resume = re-running the driver after a crash
   * re-executes only missing stages. Every run/skip appends a row to
@@ -62,25 +64,6 @@ final class StageRunner(spark: SparkSession, outDir: String, runId: String) {
       None
     }
 
-  /** [[run]] for a CARRYABLE key-keyed stage: under
-    * `graft.delta.bucketedCarry` the checkpoint is laid out in
-    * [[StageRunner.BucketCol]] directories (hash of `keys.head`, bucket
-    * count recorded beside the table), so a later [[runCarried]] layer
-    * resolves with BUCKET-PRUNED drops — untouched buckets stream through
-    * with no join at all and the anti-join's corpus side shrinks to the
-    * touched buckets, with NO broadcast of the drop set (the
-    * >MaxBroadcastKeys re-crawl shape at 10^12 docs, SCALE.md). With the
-    * conf off (default) this IS [[run]]. */
-  def runKeyed(stage: String, keys: Seq[String], report: LoopReport = null)
-              (f: => DataFrame): DataFrame =
-    commit(stage, report) { writeKeyed(f, stage, keys.head); None }
-
-  private def writeKeyed(df: DataFrame, stage: String, key: String): Unit =
-    if (StageRunner.bucketedCarry(spark))
-      StageRunner.writeBucketed(df, path(stage), key,
-                                StageRunner.carryBuckets(spark))
-    else df.write.mode(SaveMode.Overwrite).parquet(path(stage))
-
   /** Carry a url-keyed stage INCREMENTALLY: instead of rewriting the merged
     * corpus-sized table (the dominant cost of a delta run once compute is
     * maintained — measured in BENCH/BASELINE.md), record a LAYER — the
@@ -112,21 +95,14 @@ final class StageRunner(spark: SparkSession, outDir: String, runId: String) {
       val depth = StageRunner.layerDepth(spark, parentPath) + 1
       if (depth > maxDepth) {
         // compact: one full materialization resets the chain
-        writeKeyed(StageRunner.read(spark, parentPath)
+        StageRunner.read(spark, parentPath)
           .join(drops, keys, "left_anti")
-          .unionByName(spark.read.parquet(path(fresh))
-            .drop(StageRunner.BucketCol)), stage, keys.head)
+          .unionByName(spark.read.parquet(path(fresh)))
+          .write.mode(SaveMode.Overwrite).parquet(path(stage))
         None
       } else {
-        // bucketed mode shuffles the SMALL side into the parent's bucket
-        // layout at write time, so resolution can prune (read below)
-        val parentBuckets = StageRunner.bucketsOf(spark, parentPath)
-        val dropCols = drops.select(keys.map(col): _*)
-        val dropsPath = s"${path(stage)}/_layer_drops"
-        if (parentBuckets > 0)
-          StageRunner.writeBucketed(dropCols, dropsPath, keys.head,
-                                    parentBuckets)
-        else dropCols.write.mode(SaveMode.Overwrite).parquet(dropsPath)
+        drops.select(keys.map(col): _*).write.mode(SaveMode.Overwrite)
+          .parquet(s"${path(stage)}/_layer_drops")
         Some("_layer" -> (s"parent=$parentPath\nfresh=${path(fresh)}\n" +
           s"depth=$depth\nkeys=${keys.mkString(",")}\n"))
       }
@@ -399,7 +375,7 @@ object StageRunner {
   }
 
   /** Sum of the parquet footers' record counts under `dir` (recursive —
-    * partitioned/bucketed stages lay out in key subdirectories), or None
+    * partitioned stages lay out in partition subdirectories), or None
     * when the table is too many files for serial driver-side opens.
     * Parquet footers are authoritative row counts, so this equals
     * `spark.read.parquet(dir).count()` by construction. */
@@ -415,7 +391,7 @@ object StageRunner {
     }.sum)
   }
 
-  /** The parquet data files under `dir`, recursively (partition and bucket
+  /** The parquet data files under `dir`, recursively (partition
     * subdirectories included), listed lazily. */
   private def dataFiles(spark: SparkSession,
                         dir: String): Iterator[LocatedFileStatus] = {
@@ -430,14 +406,11 @@ object StageRunner {
 
   /** The parquet table under a `_`-named directory (`_lineage`, a layer's
     * `_layer_drops`), read by its data files: Spark drops a hidden root
-    * path from a directory read and logs `All paths were ignored` for it.
-    * `basePath` keeps the `_kb=` bucket directories as a column. */
+    * path from a directory read and logs `All paths were ignored` for it. */
   private[runtime] def readDataFiles(spark: SparkSession, dir: String,
-                                     mergeSchema: Boolean = false): DataFrame = {
-    val files = dataFiles(spark, dir).map(_.getPath.toString).toSeq
+                                     mergeSchema: Boolean = false): DataFrame =
     spark.read.option("mergeSchema", mergeSchema.toString)
-      .option("basePath", dir).parquet(files: _*)
-  }
+      .parquet(dataFiles(spark, dir).map(_.getPath.toString).toSeq: _*)
 
   /** Write `<dir>/<name>` under a `.`-prefixed temp name — which parquet
     * readers and [[completed]] ignore — and rename it into place once
@@ -529,92 +502,18 @@ object StageRunner {
         .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }
         .toMap)
 
-  /** The url-bucketed carry shape (SCALE.md's >MaxBroadcastKeys re-crawl
-    * rule): carryable checkpoints lay out in hash-of-key directories so
-    * layer resolution prunes — see [[StageRunner#runKeyed]]. */
-  val BucketCol = "_kb"
-
-  private[runtime] def bucketedCarry(spark: SparkSession): Boolean =
-    spark.conf.get("graft.delta.bucketedCarry", "false").toBoolean
-
-  private[runtime] def carryBuckets(spark: SparkSession): Int =
-    spark.conf.get("graft.delta.carryBuckets", "64").toInt
-
-  private def bucketExpr(key: String, n: Int) =
-    pmod(xxhash64(col(key)), lit(n.toLong)).cast("int")
-
-  /** Write `df` partitioned by the key-hash bucket column, with the bucket
-    * count recorded beside the table (`_buckets` — underscore-prefixed, so
-    * parquet readers ignore it) for later layers to bucket their drops
-    * consistently.
-    *
-    * Dynamic-partition writers create data files LAZILY: an EMPTY frame
-    * (a no-change re-crawl's drop set, a slice with no touched entities)
-    * leaves only `_SUCCESS` behind, and the immediate `spark.read.parquet`
-    * would die with "Unable to infer schema" — unlike a plain write, which
-    * emits a schema-bearing empty file. Backfill that file so an empty
-    * bucketed table reads like any other (the filesystem probe is free;
-    * re-running the frame's plan via isEmpty would not be). */
-  private[runtime] def writeBucketed(df: DataFrame, path: String,
-                                     key: String, n: Int): Unit = {
-    val keyed = df.withColumn(BucketCol, bucketExpr(key, n))
-    keyed.write.mode(SaveMode.Overwrite).partitionBy(BucketCol).parquet(path)
-    val p = new Path(path)
-    if (!fs(df.sparkSession, p).listStatus(p)
-          .exists(_.getPath.getName.startsWith(s"$BucketCol=")))
-      keyed.limit(0).write.mode(SaveMode.Append).parquet(path)
-    commitMarker(df.sparkSession, path, "_buckets", n.toString)
-  }
-
-  /** Bucket count of a stage table, resolved through layer chains to the
-    * materialized root (0 = unbucketed). */
-  private[runtime] def bucketsOf(spark: SparkSession, path: String): Int =
-    metaOf(spark, path) match {
-      case Some(m) => bucketsOf(spark, m("parent"))
-      case None =>
-        readText(spark, new Path(path, "_buckets")).fold(0)(_.trim.toInt)
-    }
-
   /** Read a stage table, resolving carry layers recursively:
     * `parent − drops ∪ fresh` per layer (compaction bounds the recursion).
-    *
-    * Two join shapes per layer:
-    *  - unbucketed (default): drops are delta-sized by construction, so
-    *    AQE plans a broadcast anti-join; at high churn it degrades to a
-    *    shuffle instead of OOMing the driver;
-    *  - bucketed root (`graft.delta.bucketedCarry`): drops were written
-    *    INTO the root's bucket layout, so resolution collects only the
-    *    touched BUCKET IDS (≤ carryBuckets values, never the keys) and
-    *    splits the parent on them — untouched buckets stream through with
-    *    no join at all (the `_kb` filter pushes down the chain to the root
-    *    scan as directory pruning) and the anti-join's corpus side is just
-    *    the touched buckets. Nothing broadcasts and nothing corpus-sized
-    *    shuffles on a host-clustered re-crawl, whatever the churn. */
+    * Drops are delta-sized by construction, so AQE plans a broadcast
+    * anti-join; at high churn it degrades to a shuffle instead of OOMing
+    * the driver. */
   def read(spark: SparkSession, path: String): DataFrame =
-    resolve(spark, path).drop(BucketCol)
-
-  private def resolve(spark: SparkSession, path: String): DataFrame =
     metaOf(spark, path) match {
       case None => spark.read.parquet(path)
       case Some(m) =>
-        val drops = readDataFiles(spark, s"$path/_layer_drops")
-        val keys = m("keys").split(",").toSeq
-        val parent = resolve(spark, m("parent"))
-        val fresh = spark.read.parquet(m("fresh")).drop(BucketCol)
-        if (parent.columns.contains(BucketCol) &&
-            drops.columns.contains(BucketCol)) {
-          val n = bucketsOf(spark, path)
-          val touched = drops.select(BucketCol).distinct().collect()
-            .map(_.getInt(0)).toSeq
-          val untouched = parent.filter(!col(BucketCol).isin(touched: _*))
-          val joined = parent.filter(col(BucketCol).isin(touched: _*))
-            .join(drops.drop(BucketCol), keys, "left_anti")
-          untouched.unionByName(joined)
-            .unionByName(fresh.withColumn(BucketCol, bucketExpr(keys.head, n)))
-        } else {
-          parent.drop(BucketCol)
-            .join(drops.drop(BucketCol), keys, "left_anti")
-            .unionByName(fresh)
-        }
+        read(spark, m("parent"))
+          .join(readDataFiles(spark, s"$path/_layer_drops"),
+                m("keys").split(",").toSeq, "left_anti")
+          .unionByName(spark.read.parquet(m("fresh")))
     }
 }

@@ -20,6 +20,11 @@ import graft.runtime.Checkpoints.pin
   */
 object Induction {
 
+  /** [[disjointness]] broadcast-hints its dot-product side only while the
+    * type-pair bound nTypes·(nTypes−1)/2 is at most this many rows (the
+    * scale of `Pipeline.MaxBroadcastKeys`); above it AQE plans the join. */
+  val MaxBroadcastPairs = 2000000L
+
   /** relations(sub, pred, obj) × types(ent, tpe) → (pred, domain, share).
     * TRIPLE-weighted like the reference (`heuristics.py:44-48`:
     * `triple_count = len(values)` — an entity contributes once per distinct
@@ -120,9 +125,12 @@ object Induction {
     // but the planner sees only checkpoint-derived frames with unknown
     // sizes and statically picks sort-merge joins (8 SMJ / 18 Exchange in
     // the recorded plan); the hints pin the broadcast strategy the sizes
-    // warrant instead of waiting for AQE's runtime conversion
+    // warrant instead of waiting for AQE's runtime conversion — for dots
+    // only while its pair bound is MaxBroadcastPairs or less
+    val pairBound = nTypes * (nTypes - 1) / 2
     allPairs
-      .join(broadcast(dots), Seq("ta", "tb"), "left_outer")
+      .join(if (pairBound <= MaxBroadcastPairs) broadcast(dots) else dots,
+            Seq("ta", "tb"), "left_outer")
       .na.fill(0.0, Seq("dot"))
       .join(broadcast(norms.select(col("tpe").as("ta"),
                                    col("norm").as("na"))), "ta")

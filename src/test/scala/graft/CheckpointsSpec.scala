@@ -112,13 +112,31 @@ class CheckpointsSpec extends SparkSuite {
     assert(persistentIds -- before == Set.empty[Int])
   }
 
+  test("TripleDiff.diff frees both distinct triple sets when it returns") {
+    val keys = Seq("subj", "pred", "obj", "is_literal")
+    val got = Seq(("a", "p", "b", false), ("a", "p", "c", false),
+                  ("a", "p", "c", false)).toDF(keys: _*)
+    val expected = Seq(("a", "p", "b", false), ("d", "p", "e", true))
+      .toDF(keys: _*)
+    val before = persistentIds
+    val pr = graft.emit.TripleDiff.diff(got, expected)
+    assert((pr.inter, pr.got, pr.expected) == ((1L, 2L, 2L)))
+    // storageLevel is the CacheManager lookup of the frame's plan
+    for (df <- Seq(got, expected))
+      assert(df.select(keys.head, keys.tail: _*).distinct().storageLevel ==
+               org.apache.spark.storage.StorageLevel.NONE)
+    assert(persistentIds -- before == Set.empty[Int])
+  }
+
   test("only Checkpoints takes or frees a pin in src/main") {
     val src = new java.io.File("src/main/scala")
     assume(src.isDirectory, "sources not reachable from the working dir")
     // the Bench and Verify mains keep their own checkpoints
     val exempt = Seq("graft/runtime/Checkpoints.scala", "graft/Bench.scala",
                      "graft/Verify.scala")
-    val banned = Seq("localCheckpoint(", "unpersist(", "getPersistentRDDs")
+    // a CacheManager cache is a second pin mechanism outside every owner
+    val banned = Seq("localCheckpoint(", "unpersist(", "getPersistentRDDs",
+                     ".cache()", ".persist(")
     def files(d: java.io.File): Seq[java.io.File] =
       d.listFiles.toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
     val hits = files(src)

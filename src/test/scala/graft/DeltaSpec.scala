@@ -512,6 +512,39 @@ class DeltaSpec extends SparkSuite {
     assert(e.getMessage.contains("outDir must differ"))
   }
 
+  test("runDelta refuses a prevDir without its types or relations checkpoint") {
+    // mining carries both from prevDir; without the guard the delta
+    // commits a layer over a missing parent, which every later read (and
+    // every resume of the outDir) fails on
+    import java.nio.file.{Files, Path, Paths}
+    def copyTree(from: Path, to: Path): Unit =
+      Files.walk(from).forEach { p =>
+        val t = to.resolve(from.relativize(p))
+        if (Files.isDirectory(p)) Files.createDirectories(t)
+        else Files.copy(p, t)
+      }
+    def rm(p: java.io.File): Unit = {
+      if (p.isDirectory) p.listFiles.foreach(rm); p.delete()
+    }
+    val v2 = world.pages
+    val (v1, _, _) = previousCrawl(v2)
+    val full = SparkSuite.tempDir("graft-delta-guard-full")
+    Pipeline.run(spark, v1.toDS().toDF(), seeds, full)
+    for (stage <- Seq("relations", "types")) {
+      val prevDir = SparkSuite.tempDir(s"graft-delta-guard-$stage")
+      copyTree(Paths.get(full), Paths.get(prevDir))
+      rm(new java.io.File(s"$prevDir/$stage"))
+      val outDir = SparkSuite.tempDir(s"graft-delta-guard-$stage-out")
+      val e = intercept[IllegalArgumentException] {
+        Pipeline.runDelta(spark, v2.toDS().toDF(), seeds, outDir, prevDir)
+      }
+      assert(e.getMessage.contains(s"lacks the '$stage' checkpoint"),
+             e.getMessage)
+      assert(!graft.runtime.StageRunner.completed(spark, outDir, stage),
+             s"$stage committed over a missing parent")
+    }
+  }
+
   test("delta over an unchanged crawl parses nothing and emits the same KG") {
     val v2 = world.pages
     val prevDir = SparkSuite.tempDir("graft-delta-same-prev")

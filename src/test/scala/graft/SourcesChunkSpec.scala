@@ -142,4 +142,20 @@ class SourcesChunkSpec extends SparkSuite {
     assert(dis.contains(("Artist", "City")) && dis.contains(("City", "Writer")))
     assert(!dis.contains(("Artist", "Writer")) && !dis.contains(("City", "Town")))
   }
+
+  test("disjointness broadcast-hints the dots join only below the pair bound") {
+    import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
+    def dotsHinted(nTypes: Int): Boolean = {
+      val types = (0 until nTypes).map(i => (s"e$i", f"T$i%05d"))
+        .toDF("ent", "tpe")
+      val rels = Seq(("e0", "p", "x"), ("e1", "p", "y"), ("e2", "q", "z"))
+        .toDF("sub", "pred", "obj")
+      Induction.disjointness(rels, types, 0.132).queryExecution.analyzed
+        .collect { case h: ResolvedHint if h.hints.strategy.isDefined => h }
+        .exists(_.output.exists(_.name == "dot"))
+    }
+    // 2,100 types bound 2,203,950 pairs: above MaxBroadcastPairs (2M)
+    assert(!dotsHinted(2100))
+    assert(dotsHinted(6))
+  }
 }
