@@ -9,7 +9,7 @@ import graft.link.AliasLink
 import graft.canonical.{AlignmentGraph, NilCluster}
 import graft.taxonomy.{Disjointness, RuleMining}
 import graft.emit.TripleEmit
-import graft.runtime.{Checkpoints, LoopReport, Node, StageRunner}
+import graft.runtime.{Checkpoints, Drops, LoopReport, Node, StageRunner}
 import graft.runtime.Checkpoints.{fresh, pin}
 
 /** The end-to-end KG-construction pipeline (north rule): pages → invariant
@@ -145,7 +145,8 @@ object Pipeline {
   def run(spark: SparkSession, pages: DataFrame, seedsIn: Seeds,
           outDir: String, runId: String = "run-1",
           canon: Canonicalization = Canonicalization.Components): DataFrame =
-    stages(spark, pages, seedsIn, outDir, runId, canon, prev = None)
+    stages(spark, pages, seedsIn, outDir, runId, graphMode(spark, canon),
+           prev = None)
 
   /** Incremental run over a RE-CRAWL (the recurring-snapshot shape the
     * reference handles by full re-extraction per dump): [[run]]'s stage
@@ -179,7 +180,15 @@ object Pipeline {
     * recorded seeds fingerprint — a dictionary change invalidates carried
     * links; use [[run]] on a fresh outDir for that). The same contract
     * covers the canonicalization parameters, enforced by bootstrap rather
-    * than refusal (see `graph_canon_fp`). */
+    * than refusal (see `graph_canon_fp`).
+    *
+    * The prevDir contract is read off the stage declarations ([[Stages]]):
+    * every table a declaration carries or maintains from prevDir is
+    * registered when it is declared, and once the graph is declared —
+    * before any stage runs — each must be committed in prevDir, else the
+    * delta refuses with "lacks the '<stage>' checkpoint" and commits
+    * nothing. The seeds fingerprint is checked the same way before the
+    * graph exists. */
   def runDelta(spark: SparkSession, newPages: DataFrame, seedsIn: Seeds,
                outDir: String, prevDir: String, runId: String = "delta-1",
                canon: Canonicalization = Canonicalization.Components): DataFrame = {
@@ -191,20 +200,7 @@ object Pipeline {
             "runDelta: outDir must differ from prevDir — running in place " +
             "would resume every stage from the previous checkpoints and " +
             "silently ignore the new crawl")
-    val prefixStages = Seq("crawl_manifest", "seeds_fp", "pages_text",
-                           "linked_all", "hypernyms_by_url", "hypernyms")
-    val sharedMining = Seq("unlinked_label_counts", "subject_listings",
-                           "type_rules", "relation_rules", "label_counts",
-                           "tag_stats", "valid_tags", "type_cand_counts",
-                           "rel_cand_counts", "types", "relations",
-                           "prov_pairs", "triples_prov")
-    val graphState = canon match {
-      case Canonicalization.Components => Nil
-      case _: Canonicalization.ScoredEd =>
-        Seq("subjects_ed", "ed_components", "ed_key_counts")
-      case _: Canonicalization.BottomUp =>
-        Seq("subjects_bu", "bu_components", "bu_key_counts")
-    }
+    val mode = graphMode(spark, canon)
     // ED/BU deltas are component-bounded when prevDir recorded the mode's
     // graph state (a same-mode run() or runDelta()) AND the recorded
     // canonicalization parameters match this run's: carried subject rows
@@ -216,29 +212,27 @@ object Pipeline {
     // parameters and record fresh state for the next delta in the chain.
     // A Components-mode prevDir (the prefix is canon-free) bootstraps the
     // same way.
-    def canonFpReady: Boolean =
+    def canonFpReady(m: GraphMode): Boolean =
       StageRunner.completed(spark, prevDir, "graph_canon_fp") && {
-        val cur = canonFpOf(spark, canon)
         val prev = spark.read.parquet(s"$prevDir/graph_canon_fp")
           .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-        !cur.exists(_._2 == "custom_fn") && prev == cur.toMap
+        !m.canonFp.exists(_._2 == "custom_fn") && prev == m.canonFp.toMap
       }
-    val carryCorpus = graphState.isEmpty ||
-      (graphState.forall(StageRunner.completed(spark, prevDir, _)) &&
-        canonFpReady)
-    val needed = prefixStages ++
-      (if (!carryCorpus) Nil
-       else if (graphState.isEmpty) sharedMining :+ "subjects"
-       else sharedMining ++ graphState)
-    for (stage <- needed)
-      require(StageRunner.completed(spark, prevDir, stage),
-              s"runDelta: $prevDir lacks the '$stage' checkpoint — prevDir " +
-              "must be the outDir of a completed run() or runDelta() in a " +
-              "compatible canonicalization mode (pre-manifest or other-mode " +
-              "outDirs cannot seed a delta; run full once)")
-    stages(spark, newPages, seedsIn, outDir, runId, canon,
+    val carryCorpus = mode.forall(m =>
+      m.stateStages.forall(StageRunner.completed(spark, prevDir, _)) &&
+        canonFpReady(m))
+    stages(spark, newPages, seedsIn, outDir, runId, mode,
            prev = Some(Prev(prevDir, carryCorpus)))
   }
+
+  /** The prevDir contract of [[runDelta]], one stage at a time. */
+  private def requirePrevStage(spark: SparkSession, prevDir: String,
+                               stage: String): Unit =
+    require(StageRunner.completed(spark, prevDir, stage),
+            s"runDelta: $prevDir lacks the '$stage' checkpoint — prevDir " +
+            "must be the outDir of a completed run() or runDelta() in a " +
+            "compatible canonicalization mode (pre-manifest or other-mode " +
+            "outDirs cannot seed a delta; run full once)")
 
   /** A delta run's previous state: the parent outDir, and whether the
     * corpus stages carry from it (false = graph-mode bootstrap). */
@@ -251,9 +245,10 @@ object Pipeline {
     * fingerprint, hypernym mining, the tag gate beside NIL clustering, the
     * rule miners, the taxonomy closure, provenance) overlap. Every pin the
     * call takes, on this thread or a stage's, is freed when it returns or
-    * throws ([[Checkpoints]]); the returned triples read only parquet. */
+    * throws ([[Checkpoints]]); the returned triples read only parquet.
+    * `mode` is the graph canonicalization mode, None for Components. */
   private def stages(spark: SparkSession, pages: DataFrame, seedsIn: Seeds,
-                     outDir: String, runId: String, canon: Canonicalization,
+                     outDir: String, runId: String, mode: Option[GraphMode],
                      prev: Option[Prev]): DataFrame = Checkpoints.owned {
     Normalize.register(spark)
     val seeds = pinSeeds(seedsIn)
@@ -273,6 +268,7 @@ object Pipeline {
     runner.execute {
       val manifest = runner.stage("crawl_manifest") { manifestOf(pages) }
       runner.stage("seeds_fp") { seedsFp }
+      st.reads("crawl_manifest")
       val touched = st.deltaNode("touched_urls", manifest) {
         touchedUrls(manifest(), st.prev("crawl_manifest"))
       }
@@ -319,12 +315,15 @@ object Pipeline {
         s(hypByUrl()).groupBy("sub", "obj").agg(sum("cnt").as("cnt"))
       }
 
-      if (prev.forall(_.carryCorpus))
-        corpus(st, linkedAll, touched, dict, seeds, canon)
-      else
-        corpus(new Stages(spark, runner, None),
-               linkedAll.map(r => new Rel(r.all, r.all)), None, dict, seeds,
-               canon)
+      val triples =
+        if (prev.forall(_.carryCorpus))
+          corpus(st, linkedAll, touched, dict, seeds, mode)
+        else
+          corpus(new Stages(spark, runner, None),
+                 linkedAll.map(r => new Rel(r.all, r.all)), None, dict,
+                 seeds, mode)
+      st.requirePrev()
+      triples
     }
   }
 
@@ -337,6 +336,7 @@ object Pipeline {
     * halves the delta's seed-scan bill). */
   private def checkedSeedsFp(spark: SparkSession, seeds: Seeds,
                              prevDir: String): DataFrame = {
+    requirePrevStage(spark, prevDir, "seeds_fp")
     val curFpDf = pin(seedsFingerprint(spark, seeds))
     val prevFp = spark.read.parquet(s"$prevDir/seeds_fp")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -375,11 +375,11 @@ object Pipeline {
     * re-derives from the survivors instead of carrying the deleted capture
     * forward. */
   private def touchedUrls(manifest: DataFrame,
-                          prevManifest: DataFrame): DataFrame = {
+                          prevManifest: DataFrame): Drops = {
     val capKeys = Seq("url", "warc_ts", "content_fp")
     val changedCaptures = manifest.join(prevManifest, capKeys, "left_anti")
     val vanishedCaptures = prevManifest.join(manifest, capKeys, "left_anti")
-    hintSmall(
+    dropSet(
       pin(changedCaptures.select("url")
         .unionByName(vanishedCaptures.select("url"))
         .distinct()))
@@ -463,23 +463,25 @@ object Pipeline {
     }
   }
 
-  /** Broadcast-hint a delta key set only while it is actually small
-    * (ADVICE r3: an unconditional hint OOMs on high-churn re-crawls);
-    * beyond the threshold AQE plans the join unhinted. The session conf
+  /** `df` as [[Drops]], small only while it actually is (ADVICE r3: an
+    * unconditional hint OOMs on high-churn re-crawls); beyond the threshold
+    * AQE plans the join unhinted. The session conf
     * `graft.delta.maxBroadcastKeys` overrides [[MaxBroadcastKeys]] —
     * DeltaThresholdSpec pins it to 0 to prove the un-hinted fallback, where
     * AQE plans every carry join, is result-identical (SCALE.md's high-churn
     * shape). */
-  private def hintSmall(df: DataFrame): DataFrame = {
+  private def dropSet(df: DataFrame): Drops = {
     val max = df.sparkSession.conf
       .get("graft.delta.maxBroadcastKeys", MaxBroadcastKeys.toString).toLong
     // probe limit is computed min-first: `max + 1` on Long.MaxValue wraps
     // negative and .toInt would yield a limit(0) that "proves" every frame
     // small — the exact OOM this guard exists to prevent
     val probeRows = (math.min(max, Int.MaxValue.toLong - 1) + 1).toInt
-    if (max > 0 && df.limit(probeRows).count() <= max) broadcast(df)
-    else df
+    Drops(df, max > 0 && df.limit(probeRows).count() <= max)
   }
+
+  /** `df` broadcast-hinted while it is small ([[dropSet]]), for a join. */
+  private def hintSmall(df: DataFrame): DataFrame = dropSet(df).hinted
 
   /** Alias dictionary incl. folded spelling redirects (shared by [[run]]
     * and [[runDelta]]). */
@@ -520,70 +522,163 @@ object Pipeline {
           .filter(col("cnt") > 0))
   }
 
-  /** The ME scorer of a ScoredEd config as the whole-DataFrame seam. */
-  private def edScoreFn(ed: Canonicalization.ScoredEd)
-      : DataFrame => DataFrame =
-    ed.scoreFn.getOrElse(cand => cand.withColumn("score", ed.meScore))
+  /** One graph canonicalization mode, defined once: the three stages that
+    * record its delta state, its `graph_canon_fp` rows, whether entity
+    * nodes join its components, and its recompute. [[runDelta]]'s
+    * bootstrap decision and [[corpus]] both read this one value; the
+    * stages, and on a delta the slice closure ([[graphClosure]]), are
+    * shared verbatim by the modes.
+    *
+    * `canonFp` fingerprints the canonicalization parameters: carried
+    * subject rows embed the thresholds, scorer, and hot-key cap of the run
+    * that produced them, so a delta under DIFFERENT parameters must not
+    * carry (it would mix two configurations' decisions — the
+    * seeds-fingerprint argument, applied to the canon config). A
+    * caller-supplied `scoreFn` is opaque (`custom_fn`) and never matches —
+    * such chains bootstrap every delta (sound: the bootstrap recomputes
+    * under the CURRENT scorer).
+    *
+    * `entityAdjacency`: ED's CC runs over ME+MM edges, so an entering
+    * mention can reach an old component through a shared DICTIONARY
+    * CANDIDATE, and entity nodes are component members; BU components are
+    * MM-only. `cluster(mentions, edges, hotKeysIn, report)` returns the
+    * mode's (mention_id, ent) assignment and the (node, component) table
+    * it clustered per component. */
+  private final case class GraphMode(
+      tag: String, canonFp: Seq[(String, String)], entityAdjacency: Boolean,
+      meScore: DataFrame => DataFrame, meThreshold: Double,
+      mmThreshold: Double,
+      cluster: (DataFrame, DataFrame, Option[DataFrame], LoopReport)
+        => (DataFrame, DataFrame)) {
+    val subjectsStage = s"subjects_$tag"
+    val compsStage = s"${tag}_components"
+    /** Kept-mention key counts: the GLOBAL hot-key cap a slice recompute
+      * must use. */
+    val keyCountsStage = s"${tag}_key_counts"
+    def stateStages: Seq[String] = Seq(subjectsStage, compsStage, keyCountsStage)
 
-  /** ED subject assembly: kept mentions × NastyLinker assignment; NIL
-    * mentions take the content-derived "new:<alias key>" id (shared by the
-    * full run and the delta's component slice — one definition so they
-    * cannot diverge). */
-  private def edSubjectsOf(keptAll: DataFrame, assign: DataFrame): DataFrame =
-    keptAll.drop("ent")
-      .join(assign.select(col("mention_id"), col("ent").as("ed_ent")),
-            "mention_id")
-      .select(col("url"), col("listing_key"), col("mention_id"),
-              col("label"),
-              coalesce(col("ed_ent"),
-                       concat(lit("new:"), col("key"))).as("ent"),
-              col("ed_ent").isNull.as("is_new"))
+    /** The subject and component rows of the kept mentions `all`
+      * (`hotKeysIn` = None on a full run, the maintained GLOBAL hot set on
+      * a delta slice). NIL mentions take the content-derived
+      * "new:<alias key>" id, shared by the full run and the delta's
+      * component slice; the LEFT join keeps a mention the assignment does
+      * not cover (the BottomUp fold covers only mentions with a scored
+      * candidate or MM edge) as NIL. */
+    def recompute(dict: DataFrame, all: DataFrame, hotKeysIn: Option[DataFrame],
+                  report: LoopReport): (DataFrame, DataFrame) = {
+      val mentions = all.select("mention_id", "label")
+      val edges = pin(AlignmentGraph.buildScored(mentions, dict, meScore,
+          meThreshold, mmThreshold, hotKeysIn = hotKeysIn))
+      val (assign, cc) = cluster(mentions, edges, hotKeysIn, report)
+      val subjects = all.drop("ent")
+        .join(assign.select(col("mention_id"), col("ent").as("graph_ent")),
+              Seq("mention_id"), "left")
+        .select(col("url"), col("listing_key"), col("mention_id"),
+                col("label"),
+                coalesce(col("graph_ent"),
+                         concat(lit("new:"), col("key"))).as("ent"),
+                col("graph_ent").isNull.as("is_new"))
+      (subjects, componentRows(all, cc))
+    }
 
-  /** [[edSubjectsOf]] for the BottomUp fold's assignment, which only
-    * covers mentions in the fold domain (≥1 scored candidate or MM edge)
-    * — a LEFT join keeps the rest as NIL with the shared "new:<key>" id. */
-  private def buSubjectsOf(keptAll: DataFrame, assign: DataFrame): DataFrame =
-    keptAll.drop("ent")
-      .join(assign.select(col("mention_id"), col("ent").as("bu_ent")),
-            Seq("mention_id"), "left")
-      .select(col("url"), col("listing_key"), col("mention_id"),
-              col("label"),
-              coalesce(col("bu_ent"),
-                       concat(lit("new:"), col("key"))).as("ent"),
-              col("bu_ent").isNull.as("is_new"))
-
-  /** The alignment graph's connected components, recorded as the ED delta
-    * state: one row per KEPT MENTION (comp, node, mention_id, url, key,
-    * label — isolated mentions are their own component) and one per ENTITY
-    * node (comp, node, nulls). Component ids are the component's minimum
-    * node id ([[graft.canonical.ConnectedComponents]]) — content-derived,
-    * so a component slice recomputed by [[runDelta]] reproduces the ids a
-    * full run would. `cc` is the SHARED checkpointed component table the
-    * caller also feeds NastyLinker — the CC loop runs once per edge set,
-    * not once per consuming stage. */
-  private def edComponentsOf(keptAll: DataFrame, cc: DataFrame): DataFrame = {
-    val mentionRows = keptAll
-      .select(col("mention_id"), col("url"), col("label"),
-              Normalize.aliasKey(col("label")).as("key"))
-      .withColumn("node", concat(lit("m:"), col("mention_id")))
-      .join(cc, Seq("node"), "left_outer")
-      .select(coalesce(col("component"), col("node")).as("comp"),
-              col("node"), col("mention_id"), col("url"), col("key"),
-              col("label"))
-    val entityRows = cc.filter(col("node").startsWith("e:"))
-      .select(col("component").as("comp"), col("node"),
-              lit(null).cast("string").as("mention_id"),
-              lit(null).cast("string").as("url"),
-              lit(null).cast("string").as("key"),
-              lit(null).cast("string").as("label"))
-    mentionRows.unionByName(entityRows)
+    /** The connected components as recorded delta state: one row per KEPT
+      * MENTION (comp, node, mention_id, url, key, label — isolated mentions
+      * are their own component) and, with `entityAdjacency`, one per
+      * ENTITY node (comp, node, nulls). Component ids are the component's
+      * minimum node id ([[graft.canonical.ConnectedComponents]]) —
+      * content-derived, so a component slice recomputed by [[runDelta]]
+      * reproduces the ids a full run would. */
+    private def componentRows(all: DataFrame, cc: DataFrame): DataFrame = {
+      val mentionRows = all
+        .select(col("mention_id"), col("url"), col("label"),
+                Normalize.aliasKey(col("label")).as("key"))
+        .withColumn("node",
+          if (entityAdjacency) concat(lit("m:"), col("mention_id"))
+          else col("mention_id"))
+        .join(cc, Seq("node"), "left_outer")
+        .select(coalesce(col("component"), col("node")).as("comp"),
+                col("node"), col("mention_id"), col("url"), col("key"),
+                col("label"))
+      if (!entityAdjacency) mentionRows
+      else mentionRows.unionByName(cc.filter(col("node").startsWith("e:"))
+        .select(col("component").as("comp"), col("node"),
+                lit(null).cast("string").as("mention_id"),
+                lit(null).cast("string").as("url"),
+                lit(null).cast("string").as("key"),
+                lit(null).cast("string").as("label")))
+    }
   }
 
-  /** The BottomUp fold's ME scorer as the whole-DataFrame seam
-    * (≙ [[edScoreFn]]). */
-  private def buScoreFn(bu: Canonicalization.BottomUp)
-      : DataFrame => DataFrame =
-    cand => cand.withColumn("score", bu.meScore)
+  /** The [[GraphMode]] of `canon`; None for Components. */
+  private def graphMode(spark: SparkSession,
+                        canon: Canonicalization): Option[GraphMode] = {
+    val maxKeyBucket = AlignmentGraph.maxKeyBucket(spark).toString
+    def scorer(meScore: Column): DataFrame => DataFrame =
+      _.withColumn("score", meScore)
+    canon match {
+      case Canonicalization.Components => None
+      // 4b. scored ED over ALL kept mentions: alignment graph (full
+      // candidate dictionary, not the argmax-reduced one) → NastyLinker.
+      // ONE corpus-side pass builds the graph; the split decides linked
+      // vs NIL, overriding the prior-argmax join.
+      case ed: Canonicalization.ScoredEd => Some(GraphMode("ed",
+        Seq("mode" -> "scored_ed",
+            "me_threshold" -> ed.meThreshold.toString,
+            "mm_threshold" -> ed.mmThreshold.toString,
+            "path_threshold" -> ed.pathThreshold.toString,
+            "me_score" ->
+              (if (ed.scoreFn.isDefined) "custom_fn" else ed.meScore.toString),
+            "max_key_bucket" -> maxKeyBucket),
+        entityAdjacency = true, ed.scoreFn.getOrElse(scorer(ed.meScore)),
+        ed.meThreshold, ed.mmThreshold,
+        (mentions, edges, hotIn, rep) => {
+          // ONE component table feeds both the NastyLinker split and the
+          // recorded delta state — computed over the KEY-CONTRACTED graph
+          // (identical output, no per-mention CC rounds — see
+          // AlignmentGraph.components); NastyLinker still reads the FULL
+          // weighted edge set.
+          val cc = pin(AlignmentGraph.components(
+              mentions,
+              edges.filter(col("dst").startsWith("e:")).select("src", "dst"),
+              ed.mmThreshold, hotIn,
+              // the default prior scorer reads only dict-row columns, so
+              // the ME edge set is a function of the key — hot buckets
+              // contract
+              keyDeterminedScores =
+                ed.scoreFn.isEmpty &&
+                  (ed.meScore eq Canonicalization.DefaultMeScore)))
+          (AlignmentGraph.clusterEdges(mentions, edges, ed.pathThreshold, rep,
+             ccIn = Some(cc),
+             nilCliqueHint = Some(AlignmentGraph.mmCliqueHint(
+               mentions, ed.mmThreshold, hotIn))),
+           cc)
+        }))
+      // 4c. bottom-up union-find over the SAME scored alignment graph as
+      // ScoredEd, but clustered by the reference's ordered edge fold
+      // (per-MM-component, see BottomUpCluster) — argmax entity, no
+      // path-threshold demotion.
+      case bu: Canonicalization.BottomUp => Some(GraphMode("bu",
+        Seq("mode" -> "bottom_up",
+            "me_threshold" -> bu.meThreshold.toString,
+            "mm_threshold" -> bu.mmThreshold.toString,
+            "me_score" -> bu.meScore.toString,
+            "max_key_bucket" -> maxKeyBucket),
+        entityAdjacency = false, scorer(bu.meScore),
+        bu.meThreshold, bu.mmThreshold,
+        (mentions, edges, hotIn, _) => {
+          // MM components in closed form — same-key cliques ARE the
+          // components, so no CC loop runs at all (see
+          // AlignmentGraph.mmComponents); the fold still consumes the full
+          // ordered MM edge list
+          val mmCc = pin(AlignmentGraph.mmComponents(mentions, bu.mmThreshold,
+                                                     hotIn))
+          (graft.canonical.BottomUpCluster.cluster(
+             buMeEdges(edges), buMmEdges(edges, bu.mmThreshold),
+             bu.mmThreshold, bu.meThreshold, ccIn = Some(mmCc)),
+           mmCc)
+        }))
+    }
+  }
 
   /** The alignment graph's ME edges in [[graft.canonical.BottomUpCluster]]
     * shape (bare mention/entity ids). */
@@ -603,129 +698,6 @@ object Pipeline {
               col("weight").as("score"))
       .filter(col("score") > mmThreshold)
 
-  /** [[edComponentsOf]] for BottomUp mode: MM-edge components only (bare
-    * mention-id nodes, no entity rows — ME edges never merge fold
-    * clusters across components, so entities are not component members).
-    * One row per kept mention; isolated mentions are their own
-    * component. Component ids are the component's minimum mention id —
-    * content-derived, so a delta's component-slice recompute reproduces
-    * the ids a full run would. */
-  private def buComponentsOf(keptAll: DataFrame, cc: DataFrame): DataFrame =
-    keptAll
-      .select(col("mention_id"), col("url"), col("label"),
-              Normalize.aliasKey(col("label")).as("key"))
-      .withColumn("node", col("mention_id"))
-      .join(cc, Seq("node"), "left_outer")
-      .select(coalesce(col("component"), col("node")).as("comp"),
-              col("node"), col("mention_id"), col("url"), col("key"),
-              col("label"))
-
-  /** What distinguishes one graph canonicalization mode from the other: the
-    * recorded stage names, whether entity nodes join components (ED's CC
-    * runs over ME+MM edges, so an entering mention can reach an old
-    * component through a shared DICTIONARY CANDIDATE; BU components are
-    * MM-only), the canonicalization-parameter fingerprint
-    * ([[canonFpOf]]), and the graph recompute itself (`recompute(all,
-    * hotKeysIn, report)` — `hotKeysIn = None` on a full run, the
-    * maintained GLOBAL hot set on a delta slice). Everything else —
-    * the stages, and on a delta the slice closure ([[graphClosure]]) — is
-    * shared verbatim by the two modes. */
-  private case class GraphMode(
-      subjectsStage: String, compsStage: String, keyCountsStage: String,
-      entityAdjacency: Boolean,
-      canonFp: Seq[(String, String)],
-      recompute: (DataFrame, Option[DataFrame], LoopReport)
-        => (DataFrame, DataFrame))
-
-  /** The canonicalization-parameter fingerprint recorded beside the graph
-    * state (`graph_canon_fp`): carried subject rows embed the thresholds,
-    * scorer, and hot-key cap of the run that produced them, so a delta
-    * under DIFFERENT parameters must not carry (it would mix two
-    * configurations' decisions — the seeds-fingerprint argument, applied
-    * to the canon config). A caller-supplied `scoreFn` is opaque
-    * (`custom_fn`) and never matches — such chains bootstrap every delta
-    * (sound: the bootstrap recomputes under the CURRENT scorer). */
-  private def canonFpOf(spark: SparkSession,
-                        canon: Canonicalization): Seq[(String, String)] =
-    canon match {
-      case Canonicalization.Components => Seq("mode" -> "components")
-      case ed: Canonicalization.ScoredEd => Seq(
-        "mode" -> "scored_ed",
-        "me_threshold" -> ed.meThreshold.toString,
-        "mm_threshold" -> ed.mmThreshold.toString,
-        "path_threshold" -> ed.pathThreshold.toString,
-        "me_score" ->
-          (if (ed.scoreFn.isDefined) "custom_fn" else ed.meScore.toString),
-        "max_key_bucket" -> AlignmentGraph.maxKeyBucket(spark).toString)
-      case bu: Canonicalization.BottomUp => Seq(
-        "mode" -> "bottom_up",
-        "me_threshold" -> bu.meThreshold.toString,
-        "mm_threshold" -> bu.mmThreshold.toString,
-        "me_score" -> bu.meScore.toString,
-        "max_key_bucket" -> AlignmentGraph.maxKeyBucket(spark).toString)
-    }
-
-  private def edMode(spark: SparkSession, dict: DataFrame,
-                     ed: Canonicalization.ScoredEd): GraphMode =
-    GraphMode(
-      "subjects_ed", "ed_components", "ed_key_counts",
-      entityAdjacency = true,
-      canonFp = canonFpOf(spark, ed),
-      recompute = (all, hotIn, rep) => {
-        val edges = pin(AlignmentGraph.buildScored(
-            all.select("mention_id", "label"), dict, edScoreFn(ed),
-            ed.meThreshold, ed.mmThreshold, hotKeysIn = hotIn))
-        // ONE component table feeds both the NastyLinker split and the
-        // recorded delta state — computed over the KEY-CONTRACTED graph
-        // (identical output, no per-mention CC rounds — see
-        // AlignmentGraph.components); NastyLinker still reads the FULL
-        // weighted edge set.
-        val cc = pin(AlignmentGraph.components(
-            all.select("mention_id", "label"),
-            edges.filter(col("dst").startsWith("e:")).select("src", "dst"),
-            ed.mmThreshold, hotIn,
-            // the default prior scorer reads only dict-row columns, so the
-            // ME edge set is a function of the key — hot buckets contract
-            keyDeterminedScores =
-              ed.scoreFn.isEmpty &&
-                (ed.meScore eq Canonicalization.DefaultMeScore)))
-        val assign = AlignmentGraph.clusterEdges(
-          all.select("mention_id", "label"), edges,
-          ed.pathThreshold, rep, ccIn = Some(cc),
-          nilCliqueHint = Some(AlignmentGraph.mmCliqueHint(
-            all.select("mention_id", "label"), ed.mmThreshold, hotIn)))
-        (edSubjectsOf(all, assign), edComponentsOf(all, cc))
-      })
-
-  private def buMode(spark: SparkSession, dict: DataFrame,
-                     bu: Canonicalization.BottomUp): GraphMode =
-    GraphMode(
-      "subjects_bu", "bu_components", "bu_key_counts",
-      entityAdjacency = false,
-      canonFp = canonFpOf(spark, bu),
-      recompute = (all, hotIn, _) => {
-        val edges = pin(AlignmentGraph.buildScored(
-            all.select("mention_id", "label"), dict, buScoreFn(bu),
-            bu.meThreshold, bu.mmThreshold, hotKeysIn = hotIn))
-        val mm = buMmEdges(edges, bu.mmThreshold)
-        // MM components in closed form — same-key cliques ARE the
-        // components, so no CC loop runs at all (see
-        // AlignmentGraph.mmComponents); the fold still consumes the full
-        // ordered `mm` edge list
-        val mmCc = pin(AlignmentGraph.mmComponents(
-            all.select("mention_id", "label"), bu.mmThreshold, hotIn))
-        val assign = graft.canonical.BottomUpCluster.cluster(
-          buMeEdges(edges), mm, bu.mmThreshold, bu.meThreshold,
-          ccIn = Some(mmCc))
-        (buSubjectsOf(all, assign), buComponentsOf(all, mmCc))
-      })
-
-  private def canonFpDf(spark: SparkSession,
-                        fp: Seq[(String, String)]): DataFrame = {
-    import spark.implicits._
-    fp.toDF("param", "value")
-  }
-
   /** A stage table as the stages downstream of it read it: every row
     * (`all`), the rows this run computed (`cur` — every row on a full run;
     * the net change per touched key for a delta's count view) and, on a
@@ -740,8 +712,8 @@ object Pipeline {
 
   /** `df` restricted to the keys of `drops` on a delta (Some); all of it on
     * a full run (None). */
-  private def slice(df: DataFrame, drops: Option[DataFrame]): DataFrame =
-    drops.fold(df)(d => df.join(d, d.columns.toSeq, "left_semi"))
+  private def slice(df: DataFrame, drops: Option[Drops]): DataFrame =
+    drops.fold(df)(d => df.join(d.hinted, d.rows.columns.toSeq, "left_semi"))
 
   /** The stage declarations of one run, against an optional previous state
     * (`prevDir`, None on a full run). Each corpus-level stage names its
@@ -760,19 +732,40 @@ object Pipeline {
     *  - [[deltaNode]]: a driver-side value only a delta computes (None on
     *    a full run) — the touched and affected key sets.
     * `drops` nodes are None exactly on a full run. Bodies run concurrently,
-    * so [[prev]] is safe to call from any of them. */
+    * so [[prev]] is safe to call from any of them.
+    *
+    * On a delta, [[carried]], [[counts]] and [[derived]] register their
+    * table as a previous-run table when they are declared, and [[reads]]
+    * registers any other table a body reads with [[prev]]. [[prev]] of a
+    * table nobody registered fails on every run, and [[requirePrev]] —
+    * called once the graph is declared, before any body runs — requires
+    * every registered table in prevDir: the registrations ARE the prevDir
+    * contract of [[runDelta]]. */
   private final class Stages(val spark: SparkSession, val runner: StageRunner,
                              prevDir: Option[String]) {
     def delta: Boolean = prevDir.isDefined
 
+    private val prevStages =
+      java.util.Collections.synchronizedSet(new java.util.LinkedHashSet[String])
     private val prevTables =
       new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
+    /** Register `stage` as a previous-run table of this delta. */
+    def reads(stage: String): Unit = if (delta) prevStages.add(stage)
+
+    /** Fail unless prevDir holds every registered table. */
+    def requirePrev(): Unit =
+      prevDir.foreach(dir => prevStages.forEach(requirePrevStage(spark, dir, _)))
+
     /** The previous run's `stage` table (carry layers resolved), read once
       * per run. */
-    def prev(stage: String): DataFrame =
+    def prev(stage: String): DataFrame = {
+      require(prevStages.contains(stage),
+              s"a delta reads the previous run's '$stage' table, which no " +
+              "declaration registered")
       prevTables.computeIfAbsent(stage,
         s => StageRunner.read(spark, s"${prevDir.get}/$s"))
+    }
 
     def deltaNode[A](name: String, inputs: Node[_]*)
                     (body: => A): Option[Node[A]] =
@@ -784,10 +777,11 @@ object Pipeline {
       runner.node(stage, inputs: _*)(runner.run(stage, report = report)(rows))
     }
 
-    def carried(name: String, key: String, drops: Option[Node[DataFrame]],
+    def carried(name: String, key: String, drops: Option[Node[Drops]],
                 inputs: Seq[Node[_]], freshName: String = null,
                 report: LoopReport = null)
-               (rows: => DataFrame): Node[Rel] =
+               (rows: => DataFrame): Node[Rel] = {
+      reads(name)
       runner.node(name, inputs ++ drops: _*) {
         prevDir match {
           case None =>
@@ -799,17 +793,21 @@ object Pipeline {
             val cur = runner.run(fresh, report = report)(rows)
             val all =
               runner.runCarried(name, dir, Seq(key), d, fresh)
-            new Rel(all, cur, prev(name).join(d, Seq(key), "left_semi"))
+            new Rel(all, cur, prev(name).join(d.hinted, Seq(key), "left_semi"))
         }
       }
+    }
 
     /** `rows(side)` computes the view from one side of each input: `_.cur`
       * on a full run; `_.old` (minus) and `_.cur` (plus) on a delta. */
     def counts(name: String, keys: Seq[String], inputs: Node[_]*)
-              (rows: (Rel => DataFrame) => DataFrame): Node[Rel] =
+              (rows: (Rel => DataFrame) => DataFrame): Node[Rel] = {
+      reads(name)
       runner.node(name, inputs: _*)(countView(name, keys)(rows))
+    }
 
-    /** [[counts]] inside the body of the node that declares it. */
+    /** [[counts]] inside the body of the node that declares it; the node's
+      * declaration registers `name` ([[reads]]). */
     def countView(name: String, keys: Seq[String])
                  (rows: (Rel => DataFrame) => DataFrame): Rel =
       if (!delta) {
@@ -821,11 +819,13 @@ object Pipeline {
       }
 
     def derived(name: String, inputs: Node[_]*)
-               (rows: => DataFrame): Node[Rel] =
+               (rows: => DataFrame): Node[Rel] = {
+      reads(name)
       runner.node(name, inputs: _*) {
         val t = runner.run(name)(rows)
         new Rel(t, t, prev(name))
       }
+    }
   }
 
   /** Rows in exactly one of two distinct sets: the keys whose threshold
@@ -836,11 +836,11 @@ object Pipeline {
       .filter(col("c") === 1).select(keys.map(col): _*))
 
   /** The corpus-level stages downstream of the per-page prefix:
-    * canonicalization (the mode's own stages) → [[mineAndEmit]].
-    * `touched` is the delta's touched-url set. */
+    * canonicalization (the graph `mode`'s own stages, or Components' when
+    * None) → [[mineAndEmit]]. `touched` is the delta's touched-url set. */
   private def corpus(st: Stages, linkedAll: Node[Rel],
-                     touched: Option[Node[DataFrame]], dict: DataFrame,
-                     seeds: Seeds, canon: Canonicalization): Node[DataFrame] = {
+                     touched: Option[Node[Drops]], dict: DataFrame,
+                     seeds: Seeds, mode: Option[GraphMode]): Node[DataFrame] = {
     val seedTypes = seeds.entityTypes.select(col("ent"), col("tpe"))
 
     // 3b. F9: frequent unknown labels (boilerplate) — counted as a
@@ -854,6 +854,13 @@ object Pipeline {
     }
     val frequent = st.runner.node("frequent_labels", unlCounts) {
       hintSmall(fresh(frequentOf(unlCounts().all)))
+    }
+    // the kept mentions of linked rows: the linked ones, and the unlinked
+    // ones whose label is not boilerplate (read inside bodies that declare
+    // `frequent`)
+    def kept(la: DataFrame): (DataFrame, DataFrame) = {
+      val (linked, unlinked) = AliasLink.splitLinked(la)
+      (linked, unlinked.join(frequent(), Seq("label"), "left_anti"))
     }
 
     // A9 tag gate inputs: P(tag|type) stats over linked mentions, validity
@@ -889,7 +896,7 @@ object Pipeline {
     // urls of the graph closure's components
     def affectedUrls(subjectsStage: String,
                      closure: Option[Node[GraphClosure]])
-        : Option[Node[DataFrame]] =
+        : Option[Node[Drops]] =
       st.deltaNode("affected_urls", Seq(linkedAll, validTags) ++ touched ++
                    flippedLabels ++ closure: _*) {
         val labels = flippedLabels.get()
@@ -916,9 +923,10 @@ object Pipeline {
           }
         val widenings = f9FlipUrls.toSeq ++ tagFlipUrls ++
           closure.toSeq.flatMap(_().urls)
-        hintSmall(
-          pin((if (widenings.isEmpty) touched.get()
-           else widenings.foldLeft(touched.get().select("url"))(_ unionByName _)
+        val touchedUrls = touched.get().rows
+        dropSet(
+          pin((if (widenings.isEmpty) touchedUrls
+           else widenings.foldLeft(touchedUrls.select("url"))(_ unionByName _)
              .distinct())))
       }
 
@@ -933,17 +941,18 @@ object Pipeline {
       * a partial resume builds it once). */
     def graphCanon(mode: GraphMode): Node[DataFrame] = {
       def keptAllOf(la: DataFrame): DataFrame = {
-        val (l, u) = AliasLink.splitLinked(la)
-        fresh(l).unionByName(
-          fresh(u.join(frequent(), Seq("label"), "left_anti"))
-            .withColumn("ent", lit(null).cast("string")))
+        val (linked, keptUnlinked) = kept(la)
+        fresh(linked).unionByName(
+          fresh(keptUnlinked).withColumn("ent", lit(null).cast("string")))
       }
       def keyCountsOf(s: Rel => DataFrame, members: Rel): DataFrame =
         AlignmentGraph.graphMentions(s(members))
           .groupBy("key").agg(count(lit(1)).as("cnt"))
+      // the closure maintains the key counts inside its body
+      st.reads(mode.keyCountsStage)
       val closure = st.deltaNode("graph_closure", Seq(linkedAll, frequent) ++
                                  touched ++ flippedLabels: _*) {
-        graphClosure(st, mode, linkedAll(), touched.get(), frequent(),
+        graphClosure(st, mode, linkedAll(), touched.get().hinted, frequent(),
                      flippedLabels.get(), dict, keptAllOf,
                      members => st.countView(mode.keyCountsStage, Seq("key"))(
                        keyCountsOf(_, members)))
@@ -954,8 +963,8 @@ object Pipeline {
       // stage waits for the subjects stage
       lazy val recomputed = closure match {
         case None =>
-          mode.recompute(pin(keptAllOf(linkedAll().all)), None, rep)
-        case Some(c) => mode.recompute(c().slice, Some(c().hotKeys), rep)
+          mode.recompute(dict, pin(keptAllOf(linkedAll().all)), None, rep)
+        case Some(c) => mode.recompute(dict, c().slice, Some(c().hotKeys), rep)
       }
       // carries: the subjects stage drops the affected components' mention
       // ids (a MENTION-keyed layer — affected mentions live on untouched
@@ -970,7 +979,8 @@ object Pipeline {
         st.counts(mode.keyCountsStage, Seq("key"), subjects)(
           keyCountsOf(_, subjects()))
       st.runner.stage("graph_canon_fp") {
-        canonFpDf(st.spark, mode.canonFp)
+        import st.spark.implicits._
+        mode.canonFp.toDF("param", "value")
       }
       // mining re-derives every url holding an affected mention
       val urls = affectedUrls(mode.subjectsStage, closure)
@@ -979,17 +989,19 @@ object Pipeline {
         st.runner.node(name, subjects, u) {
           new Rel(subjects().all,
             st.runner.run(name) {
-              subjects().all.join(u(), Seq("url"), "left_semi")
+              subjects().all.join(u().hinted, Seq("url"), "left_semi")
             },
-            st.prev(mode.subjectsStage).join(u(), Seq("url"), "left_semi"))
+            st.prev(mode.subjectsStage).join(u().hinted, Seq("url"),
+                                             "left_semi"))
         }
       }
       mineAndEmit(st, subjectsA, urls, validTags, seeds)
     }
 
     // 4 + 5. canonicalization → subject-entity table (known + new)
-    canon match {
-      case Canonicalization.Components =>
+    mode match {
+      case Some(m) => graphCanon(m)
+      case None =>
         // 4a. NIL canonicalization via connected components. A delta
         // re-derives the affected urls with the SAME expressions (NIL ids
         // are content-derived and page-local — see NilCluster — listing
@@ -998,11 +1010,8 @@ object Pipeline {
         val urls = affectedUrls("subjects", None)
         // the slice's linked mentions and its kept (non-boilerplate) NIL
         // mentions
-        def split(): (DataFrame, DataFrame) = {
-          val (linked, unlinked) =
-            AliasLink.splitLinked(slice(linkedAll().all, urls.map(_())))
-          (linked, unlinked.join(frequent(), Seq("label"), "left_anti"))
-        }
+        def split(): (DataFrame, DataFrame) =
+          kept(slice(linkedAll().all, urls.map(_())))
         val nilRep = new LoopReport
         val nilAssign = st.sliceOnly("nil_entities",
                                      Seq(linkedAll, frequent) ++ urls, nilRep) {
@@ -1021,18 +1030,6 @@ object Pipeline {
                 .withColumn("is_new", lit(true)))
         }
         mineAndEmit(st, subjects, urls, validTags, seeds)
-      case ed: Canonicalization.ScoredEd =>
-        // 4b. scored ED over ALL kept mentions: alignment graph (full
-        // candidate dictionary, not the argmax-reduced one) → NastyLinker.
-        // ONE corpus-side pass builds the graph; the split decides linked
-        // vs NIL, overriding the prior-argmax join above.
-        graphCanon(edMode(st.spark, dict, ed))
-      case bu: Canonicalization.BottomUp =>
-        // 4c. bottom-up union-find over the SAME scored alignment graph
-        // as ScoredEd, but clustered by the reference's ordered edge fold
-        // (per-MM-component, see BottomUpCluster) — argmax entity, no
-        // path-threshold demotion.
-        graphCanon(buMode(st.spark, dict, bu))
     }
   }
 
@@ -1041,8 +1038,8 @@ object Pipeline {
     * of the subject (`mentionDrops`) and component (`compDrops`) stages, and
     * the urls whose subjects that changes. */
   private case class GraphClosure(slice: DataFrame, hotKeys: DataFrame,
-                                  mentionDrops: DataFrame,
-                                  compDrops: DataFrame, urls: Seq[DataFrame])
+                                  mentionDrops: Drops, compDrops: Drops,
+                                  urls: Seq[DataFrame])
 
   /** Graph-canonicalization DELTA bound, component-bounded (VERDICT r4 #3).
     * Both graph modes' decisions are COMPONENT-LOCAL (NastyLinker: CC →
@@ -1088,12 +1085,12 @@ object Pipeline {
 
     // — graph-membership deltas —
     val leaverLabels =
-      flippedLabels.join(frequent, Seq("label"), "left_semi")
+      hintSmall(pin(flippedLabels.join(frequent, Seq("label"), "left_semi")))
     val entrantLabels =
       flippedLabels.join(frequent, Seq("label"), "left_anti")
     val droppedRows = prevCompMentions.join(dropUrls, Seq("url"), "left_semi")
     val leaverRows = prevCompMentions
-      .join(hintSmall(pin(leaverLabels)), Seq("label"), "left_semi")
+      .join(leaverLabels, Seq("label"), "left_semi")
       .join(dropUrls, Seq("url"), "left_anti")
     // entrants carry full linked rows (subject assembly needs listing_key)
     val entrantRows = prevLinked.filter(col("ent").isNull)
@@ -1148,18 +1145,18 @@ object Pipeline {
       }
     val viaFlippedKeys = prevCompMentions
       .join(hintSmall(flippedKeys), Seq("key"), "left_semi").select("comp")
-    val affectedComps = hintSmall(
+    val affectedComps = dropSet(
       pin((Seq(leaverRows.select("comp"), viaKey) ++ viaEnt :+ viaFlippedKeys)
         .foldLeft(droppedRows.select("comp"))(_ unionByName _)
         .distinct()))
 
     // — the slice: surviving members of affected components + entrants +
     //   fresh kept mentions (full rows via prevLinked / linkedAll.cur) —
-    val affectedPrevMentions =
-      pin(prevCompMentions.join(affectedComps, Seq("comp"), "left_semi"))
+    val affectedPrevMentions = pin(
+      prevCompMentions.join(affectedComps.hinted, Seq("comp"), "left_semi"))
     val survivorIds = affectedPrevMentions
       .join(dropUrls, Seq("url"), "left_anti")
-      .join(hintSmall(leaverLabels), Seq("label"), "left_anti")
+      .join(leaverLabels, Seq("label"), "left_anti")
       .select("mention_id")
     val survivorRows = keptAllOf(
       prevLinked.join(hintSmall(pin(survivorIds)),
@@ -1168,7 +1165,7 @@ object Pipeline {
         survivorRows.columns.map(col): _*))
       .unionByName(freshKept))
     GraphClosure(sliceAll, hotNew,
-      hintSmall(pin(affectedPrevMentions.select("mention_id"))),
+      dropSet(pin(affectedPrevMentions.select("mention_id"))),
       affectedComps,
       Seq(affectedPrevMentions.select("url"), freshKept.select("url")))
   }
@@ -1178,7 +1175,7 @@ object Pipeline {
     * stages, over the `subjects` of the affected `urls` (every url on a
     * full run, None). Returns the node of the triple table. */
   private def mineAndEmit(st: Stages, subjects: Node[Rel],
-                          urls: Option[Node[DataFrame]], validTags: Node[Rel],
+                          urls: Option[Node[Drops]], validTags: Node[Rel],
                           seeds: Seeds): Node[DataFrame] = {
     val seedTypes = seeds.entityTypes.select(col("ent"), col("tpe"))
     // 6a. the distinct (url, listing_key, ent) projection feeds FIVE
@@ -1253,9 +1250,9 @@ object Pipeline {
     // (the guard, closure and anti-joins are all per-entity given the
     // fingerprint-enforced static seeds). The seed side is semi-joined to
     // the touched set so every join in the fresh slice is broadcast-sized.
-    def touchedEnts(counts: Node[Rel]): Option[Node[DataFrame]] =
+    def touchedEnts(counts: Node[Rel]): Option[Node[Drops]] =
       st.deltaNode(s"${counts.name}_ents", counts) {
-        hintSmall(pin(counts().cur.select("ent").distinct()))
+        dropSet(pin(counts().cur.select("ent").distinct()))
       }
     val touchedTypeEnts = touchedEnts(typeCandCounts)
     val touchedRelEnts = touchedEnts(relCandCounts)
@@ -1281,8 +1278,7 @@ object Pipeline {
     val relations = st.carried("relations", "ent", touchedRelEnts,
                                Seq(relCandCounts)) {
       val ents = touchedRelEnts.map(_())
-      val seedRels = slice(seeds.seedRelations,
-                           ents.map(_.withColumnRenamed("ent", "sub")))
+      val seedRels = slice(seeds.seedRelations, ents.map(_.renamed("sub")))
       slice(relCandCounts().all, ents).select("ent", "pred", "obj")
         .join(seedRels.select(col("sub").as("ent"), col("pred"), col("obj")),
               Seq("ent", "pred", "obj"), "left_anti") // J7: only NEW relations
@@ -1339,7 +1335,7 @@ object Pipeline {
     // re-emit as the dominant delta cost (BENCH/BASELINE.md), and a carried
     // layer replaces it with O(churn) fresh rows + a drop set.
     val provTrips = st.carried("triples_prov", "obj",
-                               urls.map(_.map(_.select(col("url").as("obj")))),
+                               urls.map(_.map(_.renamed("obj"))),
                                Seq(provPairs)) {
       TripleEmit.provenanceTriples(provPairs().cur)
     }

@@ -29,9 +29,9 @@ import org.apache.spark.sql.functions._
   * Hadoop `FileSystem` of the session, so outDirs may be any Hadoop URI.
   *
   * A run declares its stages as a graph inside [[execute]]: each [[node]]
-  * names its input nodes, and its body runs on the run's driver-side pool
-  * as soon as every input has completed, so independent stages overlap.
-  * The concurrency contract:
+  * names its input nodes, and once the whole graph is declared its body
+  * runs on the run's driver-side pool as soon as every input has
+  * completed, so independent stages overlap. The concurrency contract:
   *  - a body reads only its declared inputs (and their inputs): a
   *    [[Node]] read anywhere else fails, on every run, not just on the
   *    unlucky ones;
@@ -84,9 +84,12 @@ final class StageRunner(spark: SparkSession, outDir: String, runId: String) {
     * Layer layout under `<outDir>/<stage>/`: `_layer_drops/` (parquet key
     * set), `_layer` (text: parent path, fresh path, depth, keys — committed
     * LAST as the marker). [[StageRunner.completed]] accepts either a
-    * materialized `_SUCCESS` or a committed layer. */
+    * materialized `_SUCCESS` or a committed layer.
+    *
+    * The layer writes `drops.rows`; the compaction's anti-join reads
+    * `drops.hinted`. */
   def runCarried(stage: String, parentDir: String, keys: Seq[String],
-                 drops: DataFrame, fresh: String): DataFrame =
+                 drops: Drops, fresh: String): DataFrame =
     commit(stage) {
       val parentPath = s"$parentDir/$stage"
       val maxDepth = spark.conf
@@ -96,12 +99,12 @@ final class StageRunner(spark: SparkSession, outDir: String, runId: String) {
       if (depth > maxDepth) {
         // compact: one full materialization resets the chain
         StageRunner.read(spark, parentPath)
-          .join(drops, keys, "left_anti")
+          .join(drops.hinted, keys, "left_anti")
           .unionByName(spark.read.parquet(path(fresh)))
           .write.mode(SaveMode.Overwrite).parquet(path(stage))
         None
       } else {
-        drops.select(keys.map(col): _*).write.mode(SaveMode.Overwrite)
+        drops.rows.select(keys.map(col): _*).write.mode(SaveMode.Overwrite)
           .parquet(s"${path(stage)}/_layer_drops")
         Some("_layer" -> (s"parent=$parentPath\nfresh=${path(fresh)}\n" +
           s"depth=$depth\nkeys=${keys.mkString(",")}\n"))
@@ -184,9 +187,10 @@ final class StageRunner(spark: SparkSession, outDir: String, runId: String) {
   /** The graph [[execute]] is running; null outside it. */
   @volatile private var graph: StageRunner.Graph = _
 
-  /** Declare a node: `body` runs on the run's pool once every input has
-    * completed, in its own Spark job group. Only valid while [[execute]]
-    * declares its graph, on the declaring thread. */
+  /** Declare a node: `body` runs on the run's pool once the graph is
+    * declared and every input has completed, in its own Spark job group.
+    * Only valid while [[execute]] declares its graph, on the declaring
+    * thread. */
   def node[A](name: String, inputs: Node[_]*)(body: => A): Node[A] = {
     val g = graph
     require(g != null && Node.current.get == null,
@@ -195,7 +199,8 @@ final class StageRunner(spark: SparkSession, outDir: String, runId: String) {
     val n = new Node[A](name, inputs, p.future, this)
     g.nodes.add(n)
     implicit val ec: ExecutionContext = g.ec
-    Future.sequence(inputs.map(_.future: Future[Any])).onComplete {
+    val ready = g.declared.future +: inputs.map(_.future: Future[Any])
+    Future.sequence(ready).onComplete {
       case Failure(t) => p.failure(t)
       case Success(_) =>
         p.complete(try Success(runBody(g, n, body))
@@ -233,25 +238,38 @@ final class StageRunner(spark: SparkSession, outDir: String, runId: String) {
           s"a sibling stage failed: $t")
       }
 
-  /** Declare the run's graph with `declare`, wait until every declared
-    * node has finished, and return the value of the node `declare`
-    * returns. The first failure — of a body or of `declare` itself — is
-    * rethrown as it was raised, after every node has settled. */
+  /** Declare the run's graph with `declare`, then run it: no node body
+    * starts until `declare` has returned, so `declare` may check the whole
+    * graph before any stage commits, and a `declare` that throws leaves
+    * every stage uncommitted. Waits until every declared node has
+    * finished and returns the value of the node `declare` returns. The
+    * first failure — of a body or of `declare` itself — is rethrown as it
+    * was raised, after every node has settled. */
   def execute[A](declare: => Node[A]): A = {
     require(graph == null, "execute: one graph per runner at a time")
     val g = new StageRunner.Graph(runId)
     graph = g
     try {
-      val result =
-        try declare catch { case t: Throwable => fail(g, t); null }
+      val result: Either[Throwable, Node[A]] =
+        try Right(declare) catch { case t: Throwable => fail(g, t); Left(t) }
+      g.declared.complete(result.map(_ => ()).toTry)
       g.nodes.forEach(n => Await.ready(n.future, Duration.Inf))
       Option(g.failure.get).foreach(t => throw t)
-      result()
+      result.fold(t => throw t, _())
     } finally {
       graph = null
       g.pool.shutdown()
     }
   }
+}
+
+/** A delta's drop-key set and whether it is small enough to broadcast.
+  * Joins read [[hinted]]; a write reads `rows`, so no broadcast hint
+  * reaches a write, where Spark would only log that it ignored it. */
+final case class Drops(rows: DataFrame, small: Boolean) {
+  def hinted: DataFrame = if (small) broadcast(rows) else rows
+  /** The set with its one key column named `key`. */
+  def renamed(key: String): Drops = Drops(rows.toDF(key), small)
 }
 
 /** A value of one run's stage graph ([[StageRunner#node]]): a stage's
@@ -300,9 +318,10 @@ object StageRunner {
       startMs: Long, endMs: Long)
 
   /** The state of one [[StageRunner#execute]]: its pool, its nodes, the
-    * first failure, and the pin owner of the thread that runs it, which
-    * every body runs under. Pool threads are created on demand, so the
-    * graph's width bounds the concurrency. */
+    * promise every node waits for (completed once the graph is declared),
+    * the first failure, and the pin owner of the thread that runs it,
+    * which every body runs under. Pool threads are created on demand, so
+    * the graph's width bounds the concurrency. */
   private final class Graph(runId: String) {
     val id: String = java.util.UUID.randomUUID().toString
     val pins: Checkpoints.Owner = Checkpoints.owner
@@ -315,6 +334,7 @@ object StageRunner {
     }
     val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     val nodes = new ConcurrentLinkedQueue[Node[_]]()
+    val declared = Promise[Unit]()
     val inFlight: java.util.Set[String] = ConcurrentHashMap.newKeySet[String]()
     val failure = new AtomicReference[Throwable]()
   }

@@ -81,11 +81,6 @@ class DeltaSpec extends SparkSuite {
   }
 
   test("a delta reads its carry layers' drop sets without hidden-path warnings") {
-    import scala.jdk.CollectionConverters._
-    import org.apache.logging.log4j.LogManager
-    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.Property
     val v2 = world.pages
     val (v1, _, _) = previousCrawl(v2)
     val prevDir = SparkSuite.tempDir("graft-delta-warn-prev")
@@ -93,24 +88,36 @@ class DeltaSpec extends SparkSuite {
     Pipeline.run(spark, v1.toDS().toDF(), seeds, prevDir)
     // Spark logs a directory read of a `_`-named root (the layers'
     // `_layer_drops`) as "All paths were ignored"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val capture = new AbstractAppender("graft-delta-warn", null, null, true,
-                                       Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        seen.add(e.getMessage.getFormattedMessage)
-    }
-    capture.start()
-    val logger = LogManager
-      .getLogger("org.apache.spark.sql.execution.datasources.DataSource")
-      .asInstanceOf[CoreLogger]
-    logger.addAppender(capture)
-    val n = try {
-      Pipeline.runDelta(spark, v2.toDS().toDF(), seeds, outDir, prevDir)
-        .count()
-    } finally { logger.removeAppender(capture); capture.stop() }
+    val (n, seen) =
+      logged("org.apache.spark.sql.execution.datasources.DataSource") {
+        Pipeline.runDelta(spark, v2.toDS().toDF(), seeds, outDir, prevDir)
+          .count()
+      }
     assert(n > 0)
-    val ignored = seen.asScala.filter(_.contains("All paths were ignored"))
+    val ignored = seen.filter(_.contains("All paths were ignored"))
     assert(ignored.isEmpty, ignored.mkString("\n"))
+  }
+
+  test("a delta puts no broadcast hint outside a join") {
+    // a hinted drop set written as a carry layer makes Spark log the hint
+    // as ignored, once per committed layer; a Components delta and a
+    // carrying ScoredEd delta together write every kind of drop set
+    val v2 = world.pages
+    val (v1, _, _) = previousCrawl(v2)
+    for (canon <- Seq(Pipeline.Canonicalization.Components,
+                      Pipeline.Canonicalization.ScoredEd())) {
+      val prevDir = SparkSuite.tempDir("graft-delta-hint-prev")
+      Pipeline.run(spark, v1.toDS().toDF(), seeds, prevDir, canon = canon)
+      val (n, seen) =
+        logged("org.apache.spark.sql.catalyst.analysis.HintErrorLogger") {
+          Pipeline.runDelta(spark, v2.toDS().toDF(), seeds,
+                            SparkSuite.tempDir("graft-delta-hint-out"),
+                            prevDir, canon = canon).count()
+        }
+      assert(n > 0)
+      val ignored = seen.filter(_.contains("not part of a join relation"))
+      assert(ignored.isEmpty, s"$canon: ${ignored.size} ignored hints")
+    }
   }
 
   test("chained deltas: a delta outDir is a valid prevDir for the next") {
@@ -512,10 +519,12 @@ class DeltaSpec extends SparkSuite {
     assert(e.getMessage.contains("outDir must differ"))
   }
 
-  test("runDelta refuses a prevDir without its types or relations checkpoint") {
-    // mining carries both from prevDir; without the guard the delta
-    // commits a layer over a missing parent, which every later read (and
-    // every resume of the outDir) fails on
+  test("a prevDir missing any one stage is refused or does not matter") {
+    // every prevDir table a delta reads is registered by the declaration
+    // that reads it, and checked before any stage runs: without the check
+    // a delta commits a layer over a missing parent, which every later
+    // read (and every resume of the outDir) fails on. A stage no delta
+    // reads may be missing.
     import java.nio.file.{Files, Path, Paths}
     def copyTree(from: Path, to: Path): Unit =
       Files.walk(from).forEach { p =>
@@ -530,19 +539,34 @@ class DeltaSpec extends SparkSuite {
     val (v1, _, _) = previousCrawl(v2)
     val full = SparkSuite.tempDir("graft-delta-guard-full")
     Pipeline.run(spark, v1.toDS().toDF(), seeds, full)
-    for (stage <- Seq("relations", "types")) {
+    def delta(prevDir: String, outDir: String) =
+      Pipeline.runDelta(spark, v2.toDS().toDF(), seeds, outDir, prevDir)
+        .collect().toSet
+    val intact = delta(full, SparkSuite.tempDir("graft-delta-guard-intact"))
+    val stages = new java.io.File(full).listFiles.toSeq
+      .filter(f => f.isDirectory && !f.getName.startsWith("_"))
+      .map(_.getName).sorted
+    val unread = stages.filter { stage =>
       val prevDir = SparkSuite.tempDir(s"graft-delta-guard-$stage")
       copyTree(Paths.get(full), Paths.get(prevDir))
       rm(new java.io.File(s"$prevDir/$stage"))
       val outDir = SparkSuite.tempDir(s"graft-delta-guard-$stage-out")
-      val e = intercept[IllegalArgumentException] {
-        Pipeline.runDelta(spark, v2.toDS().toDF(), seeds, outDir, prevDir)
+      try {
+        assert(delta(prevDir, outDir) == intact, s"without $stage")
+        true
+      } catch {
+        case e: IllegalArgumentException =>
+          assert(e.getMessage.contains(s"lacks the '$stage' checkpoint"),
+                 e.getMessage)
+          val written = new java.io.File(outDir).list().toSeq
+          assert(written.isEmpty, s"without $stage the delta wrote $written")
+          false
       }
-      assert(e.getMessage.contains(s"lacks the '$stage' checkpoint"),
-             e.getMessage)
-      assert(!graft.runtime.StageRunner.completed(spark, outDir, stage),
-             s"$stage committed over a missing parent")
     }
+    assert(stages.contains("types") && stages.contains("relations"))
+    assert(unread == Seq("mentions", "nil_entities", "ontology_meta",
+                         "restriction_facts", "triples_core", "axioms")
+             .sorted, s"stages a delta need not read: $unread")
   }
 
   test("delta over an unchanged crawl parses nothing and emits the same KG") {

@@ -1,6 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
 /** A session configured only through [[GraftExtensions]] (the
@@ -42,29 +41,16 @@ class ExtensionsSpec extends SparkSuite {
   }
 
   test("a second Pipeline.run on one session re-registers no function") {
-    import org.apache.logging.log4j.LogManager
-    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.Property
     import spark.implicits._
     val world = graft.testkit.CorpusGen.default
     val seeds = world.seeds(spark)
     val pages = world.pages.toDS().toDF()
     Pipeline.run(spark, pages, seeds, SparkSuite.tempDir("graft-reg-1"))
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val capture = new AbstractAppender("graft-reg-warn", null, null, true,
-                                       Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        seen.add(e.getMessage.getFormattedMessage)
-    }
-    capture.start()
-    val logger = LogManager
-      .getLogger("org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry")
-      .asInstanceOf[CoreLogger]
-    logger.addAppender(capture)
-    try Pipeline.run(spark, pages, seeds, SparkSuite.tempDir("graft-reg-2"))
-    finally { logger.removeAppender(capture); capture.stop() }
-    val replaced = seen.asScala.filter(_.contains("replaced a previously registered"))
+    val (_, seen) =
+      logged("org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry") {
+        Pipeline.run(spark, pages, seeds, SparkSuite.tempDir("graft-reg-2"))
+      }
+    val replaced = seen.filter(_.contains("replaced a previously registered"))
     assert(replaced.isEmpty, replaced.mkString("\n"))
   }
 }

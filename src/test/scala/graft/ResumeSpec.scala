@@ -82,7 +82,7 @@ class ResumeSpec extends SparkSuite {
   }
 
   test("file:// URI outDirs resume a completed stage and commit a layer") {
-    import graft.runtime.StageRunner
+    import graft.runtime.{Drops, StageRunner}
     val prev = "file://" + SparkSuite.tempDir("graft-uri-prev")
     val out = "file://" + SparkSuite.tempDir("graft-uri-out")
     new StageRunner(spark, prev, "r1").run("t") {
@@ -95,7 +95,8 @@ class ResumeSpec extends SparkSuite {
     val delta = new StageRunner(spark, out, "d1")
     delta.run("t_fresh") { Seq(("b", 3), ("c", 4)).toDF("url", "v") }
     val carried = delta.runCarried("t", prev, Seq("url"),
-                                   Seq("b").toDF("url"), "t_fresh")
+                                   Drops(Seq("b").toDF("url"), small = false),
+                                   "t_fresh")
     assert(StageRunner.layerDepth(spark, s"$out/t") == 1)
     assert(carried.select("url", "v").as[(String, Int)].collect().toSet ==
              Set(("a", 1), ("b", 3), ("c", 4)))

@@ -58,6 +58,28 @@ class StageGraphSpec extends SparkSuite {
     assert(e.getMessage.contains("b reads a without declaring it"), e.getMessage)
   }
 
+  test("no body starts before declare returns, so a throwing declare commits nothing") {
+    val dir = SparkSuite.tempDir("graft-graph-declare")
+    val started = new CountDownLatch(1)
+    val boom = new IllegalStateException("declare failed")
+    var startedEarly = false
+    val runner = new StageRunner(spark, dir, "d1")
+    val thrown = intercept[IllegalStateException] {
+      runner.execute {
+        runner.stage("a") { started.countDown(); Seq(1).toDF("v") }
+        // a stage with no inputs that started here would commit before
+        // (or race) the failure below
+        startedEarly = started.await(3, TimeUnit.SECONDS)
+        throw boom
+      }
+    }
+    assert(thrown eq boom, s"rethrown: $thrown")
+    assert(!startedEarly, "a's body started while the graph was declared")
+    assert(!StageRunner.completed(spark, dir, "a"), "a committed")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_lineage")) ||
+             !lineageOf(dir, "d1").contains("a"), "a has a lineage row")
+  }
+
   test("a failing stage cancels its sibling, starts nothing downstream, resumes") {
     val l = StageGraphSpecLatch
     l.entered = new CountDownLatch(1)
