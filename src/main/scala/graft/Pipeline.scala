@@ -6,7 +6,7 @@ import graft.core.Normalize
 import graft.ingest.TextExtract
 import graft.listings.ListingExtract
 import graft.link.AliasLink
-import graft.canonical.{AlignmentGraph, NilCluster}
+import graft.canonical.{AlignmentGraph, BottomUpCluster, NilCluster}
 import graft.taxonomy.{Disjointness, RuleMining}
 import graft.emit.TripleEmit
 import graft.runtime.{Checkpoints, Drops, LoopReport, Node, StageRunner}
@@ -541,35 +541,38 @@ object Pipeline {
     * `entityAdjacency`: ED's CC runs over ME+MM edges, so an entering
     * mention can reach an old component through a shared DICTIONARY
     * CANDIDATE, and entity nodes are component members; BU components are
-    * MM-only. `cluster(mentions, edges, hotKeysIn, report)` returns the
-    * mode's (mention_id, ent) assignment and the (node, component) table
-    * it clustered per component. */
+    * MM-only. `cluster(mentions, edges, hotKeys, report)` is the mode's one
+    * clusterer in `graft.canonical` ([[AlignmentGraph.disambiguate]],
+    * [[BottomUpCluster.clusterGraph]]): it returns the (mention_id, ent)
+    * assignment and the (node, component) table it clustered per
+    * component. */
   private final case class GraphMode(
       tag: String, canonFp: Seq[(String, String)], entityAdjacency: Boolean,
       meScore: DataFrame => DataFrame, meThreshold: Double,
       mmThreshold: Double,
-      cluster: (DataFrame, DataFrame, Option[DataFrame], LoopReport)
+      cluster: (DataFrame, DataFrame, DataFrame, LoopReport)
         => (DataFrame, DataFrame)) {
     val subjectsStage = s"subjects_$tag"
     val compsStage = s"${tag}_components"
-    /** Kept-mention key counts: the GLOBAL hot-key cap a slice recompute
-      * must use. */
+    /** Kept-mention key counts: the GLOBAL hot-key cap every recompute
+      * reads ([[AlignmentGraph.hotKeys]]). */
     val keyCountsStage = s"${tag}_key_counts"
     def stateStages: Seq[String] = Seq(subjectsStage, compsStage, keyCountsStage)
 
-    /** The subject and component rows of the kept mentions `all`
-      * (`hotKeysIn` = None on a full run, the maintained GLOBAL hot set on
-      * a delta slice). NIL mentions take the content-derived
+    /** The subject and component rows of the kept mentions `all`, capped
+      * by `hotKeys` — the hot set of the mode's key-count view, which is
+      * GLOBAL on a delta slice too. NIL mentions take the content-derived
       * "new:<alias key>" id, shared by the full run and the delta's
       * component slice; the LEFT join keeps a mention the assignment does
       * not cover (the BottomUp fold covers only mentions with a scored
       * candidate or MM edge) as NIL. */
-    def recompute(dict: DataFrame, all: DataFrame, hotKeysIn: Option[DataFrame],
+    def recompute(dict: DataFrame, all: DataFrame, hotKeys: DataFrame,
                   report: LoopReport): (DataFrame, DataFrame) = {
       val mentions = all.select("mention_id", "label")
-      val edges = pin(AlignmentGraph.buildScored(mentions, dict, meScore,
-          meThreshold, mmThreshold, hotKeysIn = hotKeysIn))
-      val (assign, cc) = cluster(mentions, edges, hotKeysIn, report)
+      val edges = pin(AlignmentGraph.buildScored(mentions, dict, hotKeys,
+                                                 meScore, meThreshold,
+                                                 mmThreshold))
+      val (assign, cc) = cluster(mentions, edges, hotKeys, report)
       val subjects = all.drop("ent")
         .join(assign.select(col("mention_id"), col("ent").as("graph_ent")),
               Seq("mention_id"), "left")
@@ -578,34 +581,7 @@ object Pipeline {
                 coalesce(col("graph_ent"),
                          concat(lit("new:"), col("key"))).as("ent"),
                 col("graph_ent").isNull.as("is_new"))
-      (subjects, componentRows(all, cc))
-    }
-
-    /** The connected components as recorded delta state: one row per KEPT
-      * MENTION (comp, node, mention_id, url, key, label — isolated mentions
-      * are their own component) and, with `entityAdjacency`, one per
-      * ENTITY node (comp, node, nulls). Component ids are the component's
-      * minimum node id ([[graft.canonical.ConnectedComponents]]) —
-      * content-derived, so a component slice recomputed by [[runDelta]]
-      * reproduces the ids a full run would. */
-    private def componentRows(all: DataFrame, cc: DataFrame): DataFrame = {
-      val mentionRows = all
-        .select(col("mention_id"), col("url"), col("label"),
-                Normalize.aliasKey(col("label")).as("key"))
-        .withColumn("node",
-          if (entityAdjacency) concat(lit("m:"), col("mention_id"))
-          else col("mention_id"))
-        .join(cc, Seq("node"), "left_outer")
-        .select(coalesce(col("component"), col("node")).as("comp"),
-                col("node"), col("mention_id"), col("url"), col("key"),
-                col("label"))
-      if (!entityAdjacency) mentionRows
-      else mentionRows.unionByName(cc.filter(col("node").startsWith("e:"))
-        .select(col("component").as("comp"), col("node"),
-                lit(null).cast("string").as("mention_id"),
-                lit(null).cast("string").as("url"),
-                lit(null).cast("string").as("key"),
-                lit(null).cast("string").as("label")))
+      (subjects, AlignmentGraph.componentRows(all, cc, entityAdjacency))
     }
   }
 
@@ -631,28 +607,13 @@ object Pipeline {
             "max_key_bucket" -> maxKeyBucket),
         entityAdjacency = true, ed.scoreFn.getOrElse(scorer(ed.meScore)),
         ed.meThreshold, ed.mmThreshold,
-        (mentions, edges, hotIn, rep) => {
-          // ONE component table feeds both the NastyLinker split and the
-          // recorded delta state — computed over the KEY-CONTRACTED graph
-          // (identical output, no per-mention CC rounds — see
-          // AlignmentGraph.components); NastyLinker still reads the FULL
-          // weighted edge set.
-          val cc = pin(AlignmentGraph.components(
-              mentions,
-              edges.filter(col("dst").startsWith("e:")).select("src", "dst"),
-              ed.mmThreshold, hotIn,
-              // the default prior scorer reads only dict-row columns, so
-              // the ME edge set is a function of the key — hot buckets
-              // contract
-              keyDeterminedScores =
-                ed.scoreFn.isEmpty &&
-                  (ed.meScore eq Canonicalization.DefaultMeScore)))
-          (AlignmentGraph.clusterEdges(mentions, edges, ed.pathThreshold, rep,
-             ccIn = Some(cc),
-             nilCliqueHint = Some(AlignmentGraph.mmCliqueHint(
-               mentions, ed.mmThreshold, hotIn))),
-           cc)
-        }))
+        (mentions, edges, hotKeys, report) => AlignmentGraph.disambiguate(
+          mentions, edges, hotKeys, ed.mmThreshold, ed.pathThreshold,
+          // the default prior scorer reads only dict-row columns, so the ME
+          // edge set is a function of the key — hot buckets contract
+          keyDeterminedScores = ed.scoreFn.isEmpty &&
+            (ed.meScore eq Canonicalization.DefaultMeScore),
+          report = report)))
       // 4c. bottom-up union-find over the SAME scored alignment graph as
       // ScoredEd, but clustered by the reference's ordered edge fold
       // (per-MM-component, see BottomUpCluster) — argmax entity, no
@@ -665,38 +626,10 @@ object Pipeline {
             "max_key_bucket" -> maxKeyBucket),
         entityAdjacency = false, scorer(bu.meScore),
         bu.meThreshold, bu.mmThreshold,
-        (mentions, edges, hotIn, _) => {
-          // MM components in closed form — same-key cliques ARE the
-          // components, so no CC loop runs at all (see
-          // AlignmentGraph.mmComponents); the fold still consumes the full
-          // ordered MM edge list
-          val mmCc = pin(AlignmentGraph.mmComponents(mentions, bu.mmThreshold,
-                                                     hotIn))
-          (graft.canonical.BottomUpCluster.cluster(
-             buMeEdges(edges), buMmEdges(edges, bu.mmThreshold),
-             bu.mmThreshold, bu.meThreshold, ccIn = Some(mmCc)),
-           mmCc)
-        }))
+        (mentions, edges, hotKeys, _) => BottomUpCluster.clusterGraph(
+          mentions, edges, hotKeys, bu.meThreshold, bu.mmThreshold)))
     }
   }
-
-  /** The alignment graph's ME edges in [[graft.canonical.BottomUpCluster]]
-    * shape (bare mention/entity ids). */
-  private def buMeEdges(edges: DataFrame): DataFrame =
-    edges.filter(col("dst").startsWith("e:"))
-      .select(expr("substring(src, 3)").as("mention_id"),
-              expr("substring(dst, 3)").as("ent"),
-              col("weight").as("score"))
-
-  /** The alignment graph's MM edges above the fold threshold, bare ids —
-    * the edge set whose connected components bound the fold
-    * ([[graft.canonical.BottomUpCluster.cluster]] `ccIn` contract). */
-  private def buMmEdges(edges: DataFrame, mmThreshold: Double): DataFrame =
-    edges.filter(col("dst").startsWith("m:"))
-      .select(expr("substring(src, 3)").as("m1"),
-              expr("substring(dst, 3)").as("m2"),
-              col("weight").as("score"))
-      .filter(col("score") > mmThreshold)
 
   /** A stage table as the stages downstream of it read it: every row
     * (`all`), the rows this run computed (`cur` — every row on a full run;
@@ -771,10 +704,10 @@ object Pipeline {
                     (body: => A): Option[Node[A]] =
       if (delta) Some(runner.node(name, inputs: _*)(body)) else None
 
-    def sliceOnly(name: String, inputs: Seq[Node[_]], report: LoopReport = null)
+    def sliceOnly(name: String, inputs: Seq[Node[_]])
                  (rows: => DataFrame): Node[DataFrame] = {
       val stage = if (delta) s"${name}_fresh" else name
-      runner.node(stage, inputs: _*)(runner.run(stage, report = report)(rows))
+      runner.stage(stage, inputs: _*)(rows)
     }
 
     def carried(name: String, key: String, drops: Option[Node[Drops]],
@@ -933,21 +866,20 @@ object Pipeline {
     /** Graph canonicalization. Besides the subject table, a run records the
       * mode's delta state: the components stage (the alignment graph's
       * connected components), the key-counts stage (kept-mention key counts
-      * — the GLOBAL hot-key cap a slice recompute must use) and
+      * — the GLOBAL hot-key cap every recompute reads) and
       * `graph_canon_fp` (the parameter fingerprint a delta compares before
-      * carrying). A delta first bounds the recompute to the affected
-      * components ([[graphClosure]]); one lazy recompute feeds the subject
-      * and component stages (a fully-resumed outDir never builds the graph,
-      * a partial resume builds it once). */
+      * carrying). A full run declares the key-count view over the kept
+      * mentions before the recompute; a delta maintains it while it bounds
+      * the recompute to the affected components ([[graphClosure]]). Either
+      * way the recompute reads its hot set from that one view. One lazy
+      * recompute feeds the subject and component stages (a fully-resumed
+      * outDir never builds the graph, a partial resume builds it once). */
     def graphCanon(mode: GraphMode): Node[DataFrame] = {
       def keptAllOf(la: DataFrame): DataFrame = {
         val (linked, keptUnlinked) = kept(la)
         fresh(linked).unionByName(
           fresh(keptUnlinked).withColumn("ent", lit(null).cast("string")))
       }
-      def keyCountsOf(s: Rel => DataFrame, members: Rel): DataFrame =
-        AlignmentGraph.graphMentions(s(members))
-          .groupBy("key").agg(count(lit(1)).as("cnt"))
       // the closure maintains the key counts inside its body
       st.reads(mode.keyCountsStage)
       val closure = st.deltaNode("graph_closure", Seq(linkedAll, frequent) ++
@@ -955,29 +887,31 @@ object Pipeline {
         graphClosure(st, mode, linkedAll(), touched.get().hinted, frequent(),
                      flippedLabels.get(), dict, keptAllOf,
                      members => st.countView(mode.keyCountsStage, Seq("key"))(
-                       keyCountsOf(_, members)))
+                       s => AlignmentGraph.keyCounts(s(members))))
+      }
+      val hotKeys = closure match {
+        case Some(c) => c.map(_.hotKeys)
+        case None =>
+          st.runner.stage(mode.keyCountsStage, linkedAll, frequent) {
+            AlignmentGraph.keyCounts(keptAllOf(linkedAll().all))
+          }.map(AlignmentGraph.hotKeys)
       }
       val rep = new LoopReport
       // forced by the subjects stage, or by the components stage when the
       // subjects stage resumed — never by both at once: the components
       // stage waits for the subjects stage
-      lazy val recomputed = closure match {
-        case None =>
-          mode.recompute(dict, pin(keptAllOf(linkedAll().all)), None, rep)
-        case Some(c) => mode.recompute(dict, c().slice, Some(c().hotKeys), rep)
-      }
+      lazy val recomputed = mode.recompute(dict,
+        closure.fold(pin(keptAllOf(linkedAll().all)))(_().slice), hotKeys(),
+        rep)
       // carries: the subjects stage drops the affected components' mention
       // ids (a MENTION-keyed layer — affected mentions live on untouched
       // urls); the components stage drops whole components
       val subjects = st.carried(mode.subjectsStage, "mention_id",
                                 closure.map(_.map(_.mentionDrops)),
-                                Seq(linkedAll, frequent) ++ closure,
+                                Seq(linkedAll, frequent, hotKeys) ++ closure,
                                 report = rep) { recomputed._1 }
       st.carried(mode.compsStage, "comp", closure.map(_.map(_.compDrops)),
                  Seq(subjects)) { recomputed._2 }
-      if (closure.isEmpty)
-        st.counts(mode.keyCountsStage, Seq("key"), subjects)(
-          keyCountsOf(_, subjects()))
       st.runner.stage("graph_canon_fp") {
         import st.spark.implicits._
         mode.canonFp.toDF("param", "value")
@@ -1012,10 +946,9 @@ object Pipeline {
         // mentions
         def split(): (DataFrame, DataFrame) =
           kept(slice(linkedAll().all, urls.map(_())))
-        val nilRep = new LoopReport
         val nilAssign = st.sliceOnly("nil_entities",
-                                     Seq(linkedAll, frequent) ++ urls, nilRep) {
-          NilCluster.cluster(split()._2, nilRep)
+                                     Seq(linkedAll, frequent) ++ urls) {
+          NilCluster.cluster(split()._2)
         }
         // linked mentions keep their argmax entity; kept-NIL mentions take
         // their content-derived cluster id
@@ -1105,10 +1038,8 @@ object Pipeline {
     val keys = keyCounts(new Rel(null, enteringMentions,
       droppedRows.select("mention_id", "label")
         .unionByName(leaverRows.select("mention_id", "label"))))
-    val maxBucket = AlignmentGraph.maxKeyBucket(st.spark)
-    val hotNew = pin(keys.all.filter(col("cnt") > maxBucket).select("key"))
-    val hotPrev =
-      pin(prevKeyCounts.filter(col("cnt") > maxBucket).select("key"))
+    val hotNew = pin(AlignmentGraph.hotKeys(keys.all))
+    val hotPrev = pin(AlignmentGraph.hotKeys(prevKeyCounts))
     val flippedKeys = flipped(hotNew, hotPrev, "key")
 
     // — affected components: exits ∪ flipped keys ∪ adjacency of entrants —
@@ -1134,15 +1065,10 @@ object Pipeline {
     // hot-key entrant's ME adjacency is real in both graphs.
     val viaEnt =
       if (!mode.entityAdjacency) None
-      else {
-        val enteringEntNodes = enteringKeys
-          .join(broadcast(dict.select("key", "ent")), Seq("key"))
-          .select(concat(lit("e:"), col("ent")).as("node")).distinct()
-        Some(prevComps.filter(col("mention_id").isNull)
-          .join(hintSmall(pin(enteringEntNodes)),
-                Seq("node"), "left_semi")
-          .select("comp"))
-      }
+      else Some(prevComps.filter(col("mention_id").isNull)
+        .join(hintSmall(pin(AlignmentGraph.candidateNodes(enteringKeys, dict))),
+              Seq("node"), "left_semi")
+        .select("comp"))
     val viaFlippedKeys = prevCompMentions
       .join(hintSmall(flippedKeys), Seq("key"), "left_semi").select("comp")
     val affectedComps = dropSet(

@@ -24,7 +24,15 @@ import graft.runtime.Checkpoints.pin
   *    key cannot go quadratic.
   *
   * Output edges (src, dst, weight) use the "m:"/"e:" node namespaces the
-  * clusterers expect. Scores are clamped at 1 (min(score,1), :33-34).
+  * clusterers expect; the format is private to this package. Scores are
+  * clamped at 1 (min(score,1), :33-34).
+  *
+  * The MM cap is one derivation ([[hotKeys]] over a [[keyCounts]] view),
+  * passed explicitly to every step that reads it: a pipeline run reads it
+  * from the key-count stage it records (the view a delta maintains), and
+  * only [[build]] derives it from its own mentions. [[disambiguate]] is
+  * the one ED clusterer over the built graph; the BottomUp fold's entry
+  * is [[BottomUpCluster.clusterGraph]].
   */
 object AlignmentGraph {
 
@@ -40,13 +48,28 @@ object AlignmentGraph {
   def maxKeyBucket(spark: org.apache.spark.sql.SparkSession): Int =
     spark.conf.get("graft.ed.maxKeyBucket", MaxKeyBucket.toString).toInt
 
-  /** mentions(mention_id, label) × dict(key, ent, freq) → weighted edges.
-    * `meScore`: any Column over the joined (mention × candidate) row. */
+  /** Kept-mention key counts (key, cnt): the view the MM hot-key cap is
+    * read from ([[hotKeys]]). A pipeline run records it as the mode's
+    * `<tag>_key_counts` stage and maintains it across a delta chain. */
+  def keyCounts(mentions: DataFrame): DataFrame =
+    graphMentions(mentions).groupBy("key").agg(count(lit(1)).as("cnt"))
+
+  /** The hot keys (key) of a [[keyCounts]] view: keys with more than
+    * [[maxKeyBucket]] mentions, whose buckets form no MM edges. The one
+    * derivation of the cap — the edge build, the component contraction,
+    * the clique hint and the delta's hotness flips all read its result. */
+  def hotKeys(keyCounts: DataFrame): DataFrame =
+    keyCounts.filter(col("cnt") > maxKeyBucket(keyCounts.sparkSession))
+      .select("key")
+
+  /** mentions(mention_id, label) × dict(key, ent, freq) → weighted edges,
+    * capped by the hot keys of `mentions` itself. `meScore`: any Column
+    * over the joined (mention × candidate) row. */
   def build(mentions: DataFrame, dict: DataFrame,
             meThreshold: Double = 0.5, mmThreshold: Double = 0.5,
             meScore: Column = col("freq")): DataFrame =
-    buildScored(mentions, dict, cand => cand.withColumn("score", meScore),
-                meThreshold, mmThreshold)
+    buildScored(mentions, dict, hotKeys(keyCounts(mentions)),
+                _.withColumn("score", meScore), meThreshold, mmThreshold)
 
   /** Whole-DataFrame scorer seam (the M2 batched-model path): `scoreFn`
     * receives the ME candidate join (mention_id, label, key + the dict
@@ -54,12 +77,18 @@ object AlignmentGraph {
     * scorer stays codegen'd (that's what [[build]] passes); a batched
     * model scorer routes the same frame through
     * [[graft.link.BatchedScorer.modelScoreFn]] — the clamp, null-as-zero,
-    * and strict-> threshold semantics below apply identically to both. */
-  def buildScored(mentions: DataFrame, dict: DataFrame,
+    * and strict-> threshold semantics below apply identically to both.
+    *
+    * `hotKeys` ([[hotKeys]]) is the MM cap, and it is required: a
+    * component-slice recompute (a delta) must cap by the GLOBAL
+    * kept-mention key counts, not the slice-local ones, or its MM edges
+    * diverge from a full run's — so every caller names the view it caps
+    * by, and a full pipeline run reads the same recorded view a delta
+    * maintains. */
+  def buildScored(mentions: DataFrame, dict: DataFrame, hotKeys: DataFrame,
                   scoreFn: DataFrame => DataFrame,
                   meThreshold: Double = 0.5,
-                  mmThreshold: Double = 0.5,
-                  hotKeysIn: Option[DataFrame] = None): DataFrame = {
+                  mmThreshold: Double = 0.5): DataFrame = {
     val keyed = graphMentions(mentions)
 
     // — ME edges: scored candidates above the threshold (strict >, :31).
@@ -68,76 +97,76 @@ object AlignmentGraph {
     val me = scoreFn(keyed.join(broadcast(dict), Seq("key")))
       .withColumn("score", least(coalesce(col("score"), lit(0.0)), lit(1.0)))
       .filter(col("score") > meThreshold)
-      .select(concat(lit("m:"), col("mention_id")).as("src"),
-              concat(lit("e:"), col("ent")).as("dst"),
+      .select(mentionNode(col("mention_id")).as("src"),
+              entityNode(col("ent")).as("dst"),
               col("score").as("weight"))
 
     // — MM edges: same lexical key ⇒ candidate pair, weight 1.0 (> any
-    //   threshold < 1), capped per key. The cap is computed with a
-    //   map-side-combinable groupBy count + a broadcast ANTI-join against
-    //   the (tiny) hot-key set — NOT a window over the mention set, which
+    //   threshold < 1), capped per key: a broadcast ANTI-join against the
+    //   (tiny) hot-key set — NOT a window over the mention set, which
     //   would sort every hot key's 10^8 boilerplate mentions in one task
     //   purely to discard them (the head-key skew the salted link exists
-    //   to avoid). `hotKeysIn` overrides the computed set: a COMPONENT
-    //   SLICE recompute (delta) must cap by the GLOBAL kept-mention key
-    //   counts, not the slice-local ones, or its mm edges diverge from a
-    //   full run's. —
-    val hotKeys = hotKeysIn.getOrElse(
-      keyed.groupBy("key").agg(count(lit(1)).as("bsize"))
-        .filter(col("bsize") > maxKeyBucket(mentions.sparkSession))
-        .select("key"))
+    //   to avoid). —
     val small = keyed.join(hotKeys, Seq("key"), "left_anti")
     val mm = small.select(col("mention_id").as("a"), col("key"))
       .join(small.select(col("mention_id").as("b"), col("key")), "key")
       .filter(col("a") < col("b"))
-      .select(concat(lit("m:"), col("a")).as("src"),
-              concat(lit("m:"), col("b")).as("dst"),
+      .select(mentionNode(col("a")).as("src"),
+              mentionNode(col("b")).as("dst"),
               lit(1.0).as("weight"))
       .filter(lit(1.0) > mmThreshold)
 
     me.unionByName(mm)
   }
 
-  /** The full ED run: mentions → alignment graph → NastyLinker split.
-    * Returns (mention_id, ent | null, cluster_id). */
-  def disambiguate(mentions: DataFrame, dict: DataFrame,
-                   meThreshold: Double = 0.5, mmThreshold: Double = 0.5,
-                   pathThreshold: Double = 0.75,
-                   meScore: Column = col("freq")): DataFrame =
-    disambiguateScored(mentions, dict,
-                       cand => cand.withColumn("score", meScore),
-                       meThreshold, mmThreshold, pathThreshold)
-
-  /** [[disambiguate]] with the whole-DataFrame scorer seam of
-    * [[buildScored]] — the entry point for a batched model scorer. */
-  def disambiguateScored(mentions: DataFrame, dict: DataFrame,
-                         scoreFn: DataFrame => DataFrame,
-                         meThreshold: Double = 0.5,
-                         mmThreshold: Double = 0.5,
-                         pathThreshold: Double = 0.75,
-                         report: graft.runtime.LoopReport = null,
-                         hotKeysIn: Option[DataFrame] = None): DataFrame = {
-    // checkpoint: NastyLinker scans the edge set repeatedly (bidir groupBy,
-    // CC, NIL subgraph) — without this the broadcast join + window + MM
-    // self-join lineage would re-execute on every scan
-    val edges = pin(buildScored(mentions, dict, scoreFn, meThreshold,
-                                mmThreshold, hotKeysIn))
-    clusterEdges(mentions, edges, pathThreshold, report,
-                 nilCliqueHint =
-                   Some(mmCliqueHint(mentions, mmThreshold, hotKeysIn)))
+  /** The ED clusterer — mentions → alignment graph → NastyLinker split
+    * (the reference's predict() path, `greedy_clustering.py:55-59`) — and
+    * the one ED entry: the pipeline's ScoredEd mode and the tests both
+    * call it. `edges` is [[buildScored]] over `mentions` under the same
+    * `hotKeys` and `mmThreshold`, checkpointed by the caller (the split
+    * scans it repeatedly: bidirectional groupBy, propagation, NIL
+    * subgraph).
+    *
+    * The split reads the full weighted edge set; its component table is
+    * computed over the KEY-CONTRACTED graph ([[components]]) and its NIL
+    * clustering takes the MM clique structure ([[mmCliqueHint]]), both
+    * identical to the plain loops over `edges` (AlignmentContractionSpec
+    * holds the entry to [[NastyLinker.cluster]] over the uncontracted
+    * edges). `keyDeterminedScores`: see [[components]].
+    *
+    * Returns the assignment (mention_id, ent | null, cluster_id) — every
+    * mention, one with no candidate edge as a singleton NIL cluster (the
+    * reference only clusters graph nodes; kept here for totality) — and
+    * the (node, component) table the split ran over, which the pipeline
+    * records as delta state. `report` receives the propagation loop's
+    * rounds. */
+  def disambiguate(mentions: DataFrame, edges: DataFrame, hotKeys: DataFrame,
+                   mmThreshold: Double = 0.5, pathThreshold: Double = 0.75,
+                   keyDeterminedScores: Boolean = false,
+                   report: graft.runtime.LoopReport = null)
+      : (DataFrame, DataFrame) = {
+    val cc = pin(components(
+      mentions, edges.filter(isEntityNode(col("dst"))).select("src", "dst"),
+      mmThreshold, hotKeys, keyDeterminedScores))
+    // clustered is consumed TWICE below (the left_anti probe and the union
+    // output) — without its own checkpoint each action re-executes
+    // NastyLinker's cluster-assembly join tree once per consumer
+    val clustered = pin(NastyLinker.cluster(edges, pathThreshold,
+      report = report, ccIn = Some(cc),
+      nilCliqueHint = Some(mmCliqueHint(mentions, mmThreshold, hotKeys))))
+    val isolated = mentions.select(col("mention_id"))
+      .join(clustered.select("mention_id"), Seq("mention_id"), "left_anti")
+      .select(col("mention_id"), lit(null).cast("string").as("ent"),
+              concat(lit("nil:"), col("mention_id")).as("cluster_id"))
+    (clustered.unionByName(isolated), cc)
   }
 
   /** Small-bucket mentions with their per-key representative:
     * (mention_id, key, rep = min mention_id of the key, bsize). The cap
     * mirrors [[buildScored]] exactly (same hot-key exclusion). */
   private def smallWithRep(mentions: DataFrame,
-                           hotKeysIn: Option[DataFrame]): DataFrame = {
-    val keyed = graphMentions(mentions)
-    val hotKeys = hotKeysIn.getOrElse(
-      keyed.groupBy("key").agg(count(lit(1)).as("bsize"))
-        .filter(col("bsize") > maxKeyBucket(mentions.sparkSession))
-        .select("key"))
-    val small = keyed.join(hotKeys, Seq("key"), "left_anti")
+                           hotKeys: DataFrame): DataFrame = {
+    val small = graphMentions(mentions).join(hotKeys, Seq("key"), "left_anti")
     small.join(
       small.groupBy("key").agg(min("mention_id").as("rep"),
                                count(lit(1)).as("bsize")), "key")
@@ -153,12 +182,10 @@ object AlignmentGraph {
     * same min-id component labels. Empty when mmThreshold ≥ 1 (no MM edges
     * survive), mirroring the builder's filter. */
   def mmComponents(mentions: DataFrame, mmThreshold: Double,
-                   hotKeysIn: Option[DataFrame]): DataFrame = {
-    val m2rep = smallWithRep(mentions, hotKeysIn)
-    m2rep
+                   hotKeys: DataFrame): DataFrame =
+    smallWithRep(mentions, hotKeys)
       .filter(lit(1.0 > mmThreshold) && col("bsize") >= 2)
       .select(col("mention_id").as("node"), col("rep").as("component"))
-  }
 
   /** Connected components of the FULL alignment graph (ME ∪ MM edges),
     * computed over the KEY-CONTRACTED graph: every same-key MM clique is
@@ -173,7 +200,7 @@ object AlignmentGraph {
     * preserves because rep is each clique's min mention. Falls back to the
     * plain loop when mmThreshold ≥ 1 (no MM edges → nothing to contract).
     *
-    * `meEdges`: the builder's ME edge subset ("m:" src, "e:" dst).
+    * `meEdges`: the builder's ME edge subset (mention src, entity dst).
     *
     * `keyDeterminedScores = true` asserts the ME edge SET is a function of
     * the mention's KEY alone (true for the default prior scorer: the score
@@ -185,16 +212,11 @@ object AlignmentGraph {
     * over ~|keys| + |entities| nodes. Per-mention scorers must pass false
     * (hot mentions then stay individual nodes). */
   def components(mentions: DataFrame, meEdges: DataFrame,
-                 mmThreshold: Double,
-                 hotKeysIn: Option[DataFrame],
+                 mmThreshold: Double, hotKeys: DataFrame,
                  keyDeterminedScores: Boolean = false): DataFrame = {
     if (!(1.0 > mmThreshold))
       return ConnectedComponents.run(meEdges.select("src", "dst"))
     val keyed = graphMentions(mentions)
-    val hotKeys = hotKeysIn.getOrElse(
-      keyed.groupBy("key").agg(count(lit(1)).as("bsize"))
-        .filter(col("bsize") > maxKeyBucket(mentions.sparkSession))
-        .select("key"))
     // (mention, rep, bsize, is_small): rep/bsize over the CONTRACTIBLE
     // population — small buckets always; hot buckets too when scores are
     // key-determined
@@ -211,10 +233,10 @@ object AlignmentGraph {
     // ME edges re-pointed at the key rep (non-contracted mentions keep
     // their own node)
     val meC = meEdges
-      .select(expr("substring(src, 3)").as("mid"), col("dst"))
+      .select(nodeId(col("src")).as("mid"), col("dst"))
       .join(m2rep.select(col("mention_id").as("mid"), col("rep")),
             Seq("mid"), "left")
-      .select(concat(lit("m:"), coalesce(col("rep"), col("mid"))).as("src"),
+      .select(mentionNode(coalesce(col("rep"), col("mid"))).as("src"),
               col("dst"))
     val ccSmall = pin(ConnectedComponents.run(meC))
     // expansion: a member surfaces when its key has MM edges (small bucket
@@ -224,8 +246,8 @@ object AlignmentGraph {
     // members carry no MM edges and so exist in the full graph only
     // through their ME edges)
     val expanded = m2rep
-      .select(concat(lit("m:"), col("mention_id")).as("node"),
-              concat(lit("m:"), col("rep")).as("rep_node"),
+      .select(mentionNode(col("mention_id")).as("node"),
+              mentionNode(col("rep")).as("rep_node"),
               col("bsize"), col("is_hot"))
       .join(ccSmall.select(col("node").as("rep_node"), col("component")),
             Seq("rep_node"), "left")
@@ -236,29 +258,29 @@ object AlignmentGraph {
     // entities (+ hot-key mentions when not contracted) pass through from
     // the contracted run
     val repNodes = m2rep
-      .select(concat(lit("m:"), col("rep")).as("node")).distinct()
+      .select(mentionNode(col("rep")).as("node")).distinct()
     val passThrough = ccSmall.join(repNodes, Seq("node"), "left_anti")
     expanded.unionByName(passThrough)
   }
 
   /** The MM clique structure of [[buildScored]]'s edge set as a
-    * (node, clique) map over the small-bucket mention nodes ("m:" ids →
-    * key): the caller-side assertion [[NastyLinker.cluster]]'s
+    * (node, clique) map over the small-bucket mention nodes (mention node
+    * → key): the caller-side assertion [[NastyLinker.cluster]]'s
     * `nilCliqueHint` consumes — every MM edge connects two nodes of one
     * clique and every clique is complete, so any induced subgraph of the
     * MM part clusters per clique in closed form. Empty when
     * mmThreshold ≥ 1 (no MM edges). */
   def mmCliqueHint(mentions: DataFrame, mmThreshold: Double,
-                   hotKeysIn: Option[DataFrame]): DataFrame =
-    smallWithRep(mentions, hotKeysIn)
+                   hotKeys: DataFrame): DataFrame =
+    smallWithRep(mentions, hotKeys)
       .filter(lit(1.0 > mmThreshold))
-      .select(concat(lit("m:"), col("mention_id")).as("node"),
+      .select(mentionNode(col("mention_id")).as("node"),
               col("key").as("clique"))
 
   /** The mention key projection shared by the edge builder and the
-    * delta-maintained key-count view ([[graft.Pipeline]]'s `ed_key_counts`)
-    * — one definition so the hot-key cap and its maintenance can never
-    * disagree on which mentions are graph nodes. */
+    * key-count view ([[keyCounts]]) — one definition so the hot-key cap
+    * and its maintenance can never disagree on which mentions are graph
+    * nodes. */
   def graphMentions(mentions: DataFrame): DataFrame =
     mentions
       .select(col("mention_id"), col("label"))
@@ -267,28 +289,51 @@ object AlignmentGraph {
       // share a key vacuously — they must not form edges with each other
       .filter(length(col("key")) > 0)
 
-  /** NastyLinker split + isolated-mention totality over an already-built
-    * (and checkpointed) edge set — the tail of [[disambiguateScored]],
-    * public so a caller that also needs the EDGES (the ED delta records
-    * their connected components) builds them once. */
-  def clusterEdges(mentions: DataFrame, edges: DataFrame,
-                   pathThreshold: Double = 0.75,
-                   report: graft.runtime.LoopReport = null,
-                   ccIn: Option[DataFrame] = None,
-                   nilCliqueHint: Option[DataFrame] = None): DataFrame = {
-    // clustered is consumed TWICE below (the left_anti probe and the union
-    // output) — without its own checkpoint each action re-executes
-    // NastyLinker's cluster-assembly join tree once per consumer
-    val clustered = pin(NastyLinker.cluster(edges, pathThreshold,
-                                            report = report, ccIn = ccIn,
-                                            nilCliqueHint = nilCliqueHint))
-    // mentions with NO candidate edge at all never reach the graph: they
-    // are singleton NIL clusters (the reference only clusters graph nodes;
-    // the pipeline's F9/NIL path handles the rest — kept here for totality)
-    val isolated = mentions.select(col("mention_id"))
-      .join(clustered.select("mention_id"), Seq("mention_id"), "left_anti")
-      .select(col("mention_id"), lit(null).cast("string").as("ent"),
-              concat(lit("nil:"), col("mention_id")).as("cluster_id"))
-    clustered.unionByName(isolated)
+  /** A component table as recorded delta state: one row per mention of
+    * `mentions` (mention_id, url, label) — (comp, node, mention_id, url,
+    * key, label), a mention `cc` does not cover being its own component —
+    * and, with `entityNodes`, one per entity node of `cc` (comp, node,
+    * nulls). `entityNodes` says which graph `cc` is over: the full
+    * alignment graph ([[disambiguate]]: mention and entity node ids) or
+    * the MM-only graph (the BottomUp fold: bare mention ids). Component
+    * ids are the component's minimum node id — content-derived, so a
+    * component slice recomputed by a delta reproduces the ids a full run
+    * would. */
+  def componentRows(mentions: DataFrame, cc: DataFrame,
+                    entityNodes: Boolean): DataFrame = {
+    val mentionRows = mentions
+      .select(col("mention_id"), col("url"), col("label"),
+              Normalize.aliasKey(col("label")).as("key"))
+      .withColumn("node",
+        if (entityNodes) mentionNode(col("mention_id")) else col("mention_id"))
+      .join(cc, Seq("node"), "left_outer")
+      .select(coalesce(col("component"), col("node")).as("comp"),
+              col("node"), col("mention_id"), col("url"), col("key"),
+              col("label"))
+    if (!entityNodes) mentionRows
+    else mentionRows.unionByName(cc.filter(isEntityNode(col("node")))
+      .select(col("component").as("comp"), col("node"),
+              lit(null).cast("string").as("mention_id"),
+              lit(null).cast("string").as("url"),
+              lit(null).cast("string").as("key"),
+              lit(null).cast("string").as("label")))
   }
+
+  /** The entity nodes (node) of the dictionary candidates of `keys` (key):
+    * the old components a mention of one of these keys can reach through
+    * an ME edge, before any score test. */
+  def candidateNodes(keys: DataFrame, dict: DataFrame): DataFrame =
+    keys.join(broadcast(dict.select("key", "ent")), Seq("key"))
+      .select(entityNode(col("ent")).as("node")).distinct()
+
+  // — the node-id format: "m:<mention_id>", "e:<ent>" — known only in this
+  //   package ([[NastyLinker]] and [[BottomUpCluster]] read it too) —
+  private[canonical] def mentionNode(id: Column): Column = concat(lit("m:"), id)
+  private[canonical] def entityNode(id: Column): Column = concat(lit("e:"), id)
+  private[canonical] def isEntityNode(node: Column): Column =
+    node.startsWith("e:")
+  private[canonical] def isMentionNode(node: Column): Column =
+    node.startsWith("m:")
+  /** The bare mention or entity id of a node. */
+  private[canonical] def nodeId(node: Column): Column = node.substr(3, Int.MaxValue)
 }

@@ -72,6 +72,31 @@ object BottomUpCluster {
     }
   }
 
+  /** BottomUp mode over a built alignment graph, and its one entry: the
+    * pipeline's BottomUp mode calls it. `edges` is
+    * [[AlignmentGraph.buildScored]] over `mentions` under the same
+    * `hotKeys` and `mmThreshold` (so every MM edge clears `mmThreshold`).
+    * The MM components come in closed form — same-key cliques ARE the
+    * components ([[AlignmentGraph.mmComponents]]), so no CC loop runs —
+    * and the fold still consumes the full ordered MM edge list. Returns
+    * the assignment (mention_id, ent | null, cluster_id) of every mention
+    * with a scored candidate or an MM edge, and the (node, component)
+    * table of the MM-only graph (bare mention ids) the fold ran per
+    * component, which the pipeline records as delta state. */
+  def clusterGraph(mentions: DataFrame, edges: DataFrame, hotKeys: DataFrame,
+                   meThreshold: Double, mmThreshold: Double)
+      : (DataFrame, DataFrame) = {
+    import AlignmentGraph.{isEntityNode, isMentionNode, nodeId}
+    val mmCc = pin(AlignmentGraph.mmComponents(mentions, mmThreshold, hotKeys))
+    val me = edges.filter(isEntityNode(col("dst")))
+      .select(nodeId(col("src")).as("mention_id"), nodeId(col("dst")).as("ent"),
+              col("weight").as("score"))
+    val mm = edges.filter(isMentionNode(col("dst")))
+      .select(nodeId(col("src")).as("m1"), nodeId(col("dst")).as("m2"),
+              col("weight").as("score"))
+    (cluster(me, mm, mmThreshold, meThreshold, ccIn = Some(mmCc)), mmCc)
+  }
+
   /** meCandidates(mention_id, ent, score), mmCandidates(m1, m2, score) →
     * (mention_id, ent nullable, cluster_id). cluster_id = min mention id of
     * the final cluster (clusters sharing an entity are collapsed globally,
@@ -79,9 +104,8 @@ object BottomUpCluster {
     * seen in either candidate set (:56-61).
     *
     * `ccIn`: precomputed connected components (node, component) of the
-    * THRESHOLDED mm edge set — a caller that also records the MM components
-    * (the BU delta state, [[graft.Pipeline]]) runs the CC loop once and
-    * shares it, the same discipline as `AlignmentGraph.clusterEdges`. */
+    * THRESHOLDED mm edge set — [[clusterGraph]] passes the closed-form
+    * components it also returns, so no CC loop runs. */
   def cluster(meCandidates: DataFrame, mmCandidates: DataFrame,
               mmThreshold: Double, meThreshold: Double,
               ccIn: Option[DataFrame] = None): DataFrame = {

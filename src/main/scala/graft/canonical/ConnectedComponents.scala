@@ -43,12 +43,8 @@ object ConnectedComponents {
     spark.conf.get("graft.cc.driverMax", DriverMaxDefault.toString).toLong
 
   /** edges(src, dst): undirected pairs (any orientation, self-loops ok).
-    * Returns (node, component) for every node appearing in `edges`.
-    * `report`, when given, receives the round count and convergence flag
-    * (surfaced into stage lineage — north-rule counters; the driver fast
-    * path reports rounds = -1, the non-iterative convention). */
-  def run(edges: DataFrame,
-          report: graft.runtime.LoopReport = null): DataFrame = {
+    * Returns (node, component) for every node appearing in `edges`. */
+  def run(edges: DataFrame): DataFrame = {
     var e = pin(symmetrize(edges))
     // count of the just-checkpointed edge set: a shuffle-free job over the
     // in-memory blocks, used to SHORT-CIRCUIT the convergence check below
@@ -64,7 +60,6 @@ object ConnectedComponents {
     if (driverable) {
       val out = runDriver(spark, e, dt)
       free(e)
-      if (report != null) { report.rounds = -1; report.converged = true }
       return out
     }
     var converged = false
@@ -90,7 +85,6 @@ object ConnectedComponents {
       e = next; eCount = nextCount
       iter += 1
     }
-    if (report != null) { report.rounds = iter; report.converged = converged }
     // e is now a star forest: src -> root. Roots have no outgoing edge; add
     // the (root, root) self-mapping.
     e.select(col("src").as("node"), col("dst").as("component"))

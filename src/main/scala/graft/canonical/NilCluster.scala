@@ -30,11 +30,7 @@ object NilCluster {
     * any url-slice of the input yields the same (mention_id, ent) rows as
     * clustering the whole corpus (the property [[graft.Pipeline.runDelta]]'s
     * subjects maintenance relies on). */
-  def cluster(unlinked: DataFrame,
-              report: graft.runtime.LoopReport = null): DataFrame = {
-    // no iterative operator runs anymore: -1 is the lineage convention
-    if (report != null) { report.rounds = -1; report.converged = true }
+  def cluster(unlinked: DataFrame): DataFrame =
     unlinked.select(col("mention_id"),
                     concat(lit("new:"), col("key")).as("ent")).distinct()
-  }
 }

@@ -57,9 +57,10 @@ object BatchedScorer {
     }(Encoders.row(schema))
   }
 
-  /** Adapter for `AlignmentGraph.buildScored` / `disambiguateScored`:
-    * score the candidate join through `model` and surface the result as
-    * the `score` column the seam expects. */
+  /** Adapter for the `scoreFn` seam of `AlignmentGraph.buildScored` (and
+    * so of `Pipeline.Canonicalization.ScoredEd`): score the candidate join
+    * through `model` and surface the result as the `score` column the seam
+    * expects. */
   def modelScoreFn(model: Seq[(String, String)] => Seq[Double],
                    batchSize: Int = DefaultBatchSize)
       : DataFrame => DataFrame =

@@ -8,7 +8,9 @@ import graft.canonical.{AlignmentGraph, ConnectedComponents, NastyLinker}
   * components ([[AlignmentGraph.mmComponents]]), and NastyLinker's
   * clique-hinted NIL clustering must return EXACTLY what the generic
   * star-contraction loop returns over the full clique edge set — across
-  * hot keys, singleton buckets, entity bridges, and ME-less keys. */
+  * hot keys, singleton buckets, entity bridges, and ME-less keys. The ED
+  * entry that combines them ([[AlignmentGraph.disambiguate]]) must return
+  * what the plain [[NastyLinker.cluster]] returns over the same edges. */
 class AlignmentContractionSpec extends SparkSuite {
   import spark.implicits._
 
@@ -35,8 +37,11 @@ class AlignmentContractionSpec extends SparkSuite {
     ("hotlabel", "H", 0.9))
     .toDF("key", "ent", "freq")
 
+  // read under the cap, so inside withCap only
+  private def hot = AlignmentGraph.hotKeys(AlignmentGraph.keyCounts(mentions))
+
   private def edges(mmThr: Double) = AlignmentGraph.buildScored(
-    mentions, dict, cand => cand.withColumn("score", col("freq")),
+    mentions, dict, hot, _.withColumn("score", col("freq")),
     meThreshold = 0.5, mmThreshold = mmThr)
 
   private def asSet(df: org.apache.spark.sql.DataFrame) =
@@ -48,7 +53,7 @@ class AlignmentContractionSpec extends SparkSuite {
         val e = edges(mmThr).localCheckpoint()
         val got = asSet(AlignmentGraph.components(
           mentions, e.filter(col("dst").startsWith("e:")).select("src", "dst"),
-          mmThr, None, keyDeterminedScores = keyDet))
+          mmThr, hot, keyDeterminedScores = keyDet))
         val want = asSet(ConnectedComponents.run(e.select("src", "dst")))
         assert(got == want, s"mmThr=$mmThr keyDet=$keyDet:\n$got\nvs\n$want")
       }
@@ -61,22 +66,42 @@ class AlignmentContractionSpec extends SparkSuite {
       val mmPairs = e.filter(col("dst").startsWith("m:"))
         .select(expr("substring(src, 3)").as("src"),
                 expr("substring(dst, 3)").as("dst"))
-      val got = asSet(AlignmentGraph.mmComponents(mentions, 0.5, None))
+      val got = asSet(AlignmentGraph.mmComponents(mentions, 0.5, hot))
       val want = asSet(ConnectedComponents.run(mmPairs))
       assert(got == want, s"$got\nvs\n$want")
       // mmThreshold >= 1: no MM edges survive → empty
-      assert(AlignmentGraph.mmComponents(mentions, 1.0, None).isEmpty)
+      assert(AlignmentGraph.mmComponents(mentions, 1.0, hot).isEmpty)
     }
   }
 
   test("NastyLinker clique-hinted NIL clustering ≡ generic induced CC") {
     withCap {
       val e = edges(0.5).localCheckpoint()
-      val hint = AlignmentGraph.mmCliqueHint(mentions, 0.5, None)
+      val hint = AlignmentGraph.mmCliqueHint(mentions, 0.5, hot)
       def rows(h: Option[org.apache.spark.sql.DataFrame]) =
-        AlignmentGraph.clusterEdges(mentions, e, 0.75, null, None, h)
+        NastyLinker.cluster(e, 0.75, nilCliqueHint = h)
           .as[(String, Option[String], String)].collect().toSet
       assert(rows(Some(hint)) == rows(None))
+    }
+  }
+
+  test("the ED entry ≡ NastyLinker.cluster over the uncontracted edges") {
+    withCap {
+      val e = edges(0.5).localCheckpoint()
+      // the plain path: CC and NIL clustering over every edge; the entry
+      // adds each edge-less mention as a singleton NIL cluster
+      val plain = NastyLinker.cluster(e, 0.75)
+        .as[(String, Option[String], String)].collect().toSet
+      val want = plain ++ Set(("m11", None, "nil:m11"))
+      assert(!plain.exists(_._1 == "m11"), "m11 has no candidate edge")
+      for (keyDet <- Seq(false, true)) {
+        val (assign, cc) = AlignmentGraph.disambiguate(
+          mentions, e, hot, keyDeterminedScores = keyDet)
+        val got = assign.as[(String, Option[String], String)].collect().toSet
+        assert(got == want, s"keyDet=$keyDet:\n$got\nvs\n$want")
+        assert(asSet(cc) == asSet(ConnectedComponents.run(e.select("src", "dst"))),
+               s"keyDet=$keyDet: component table")
+      }
     }
   }
 }

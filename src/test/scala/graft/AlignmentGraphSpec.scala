@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.canonical.AlignmentGraph
 
@@ -24,6 +25,15 @@ class AlignmentGraphSpec extends SparkSuite {
     ("m5", "Unseen Label") // no dict key at all → isolated NIL
   ).toDF("mention_id", "label")
 
+  /** The ED entry over the graph of `m` under its own hot set. */
+  private def disambiguate(m: DataFrame, dict: DataFrame,
+                           meScore: Column = col("freq")): DataFrame = {
+    val hot = AlignmentGraph.hotKeys(AlignmentGraph.keyCounts(m))
+    val edges = AlignmentGraph.buildScored(m, dict, hot,
+                                           _.withColumn("score", meScore))
+    AlignmentGraph.disambiguate(m, edges, hot)._1
+  }
+
   test("build: thresholds, clamping, and MM key edges") {
     val edges = AlignmentGraph.build(mentions, dict)
       .as[(String, String, Double)].collect().toSet
@@ -37,7 +47,7 @@ class AlignmentGraphSpec extends SparkSuite {
   }
 
   test("disambiguate: clusters + singleton NIL for edge-less mentions") {
-    val got = AlignmentGraph.disambiguate(mentions, dict)
+    val got = disambiguate(mentions, dict)
       .as[(String, Option[String], String)].collect()
       .map(r => r._1 -> r._2).toMap
     assert(got("m1").contains("A") && got("m2").contains("A"))
@@ -62,7 +72,7 @@ class AlignmentGraphSpec extends SparkSuite {
       .toDF("mention_id", "label")
     val edges = AlignmentGraph.build(weird, dict)
     assert(edges.isEmpty, "empty-key labels must not MM-clique")
-    val got = AlignmentGraph.disambiguate(weird, dict)
+    val got = disambiguate(weird, dict)
       .as[(String, Option[String], String)].collect()
     assert(got.length == 3 && got.forall(_._2.isEmpty),
            "each becomes its own singleton NIL")
@@ -74,7 +84,7 @@ class AlignmentGraphSpec extends SparkSuite {
     // both m1 and m2 share the key, but the score column sees the label
     val ctx = when(col("label").contains("-") && col("ent") === "B", 0.95)
       .otherwise(col("freq"))
-    val got = AlignmentGraph.disambiguate(mentions, dict, meScore = ctx)
+    val got = disambiguate(mentions, dict, meScore = ctx)
       .as[(String, Option[String], String)].collect()
       .map(r => r._1 -> r._2).toMap
     // m2 gets a 0.95 edge to B; the 1.0-weight MM edge RELAYS that path to

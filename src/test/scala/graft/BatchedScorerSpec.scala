@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.canonical.AlignmentGraph
 import graft.link.BatchedScorer
@@ -62,14 +63,18 @@ class BatchedScorerSpec extends SparkSuite {
     // path score — NastyLinker's validity rule); pathThreshold 0.5 lets
     // the 2/3-jaccard ada edges through (the 0.75 default is tuned for
     // prior scores, not token overlap)
-    val viaColumn = AlignmentGraph.disambiguate(
-        mentions, dict, meThreshold = 0.35, pathThreshold = 0.5, meScore =
-          BatchedScorer.jaccardColumn(col("label"), col("ent")))
+    val hot = AlignmentGraph.hotKeys(AlignmentGraph.keyCounts(mentions))
+    def disambiguate(scoreFn: DataFrame => DataFrame) =
+      AlignmentGraph.disambiguate(mentions,
+        AlignmentGraph.buildScored(mentions, dict, hot, scoreFn,
+                                   meThreshold = 0.35),
+        hot, pathThreshold = 0.5)._1
+    val viaColumn = disambiguate(
+        _.withColumn("score",
+                     BatchedScorer.jaccardColumn(col("label"), col("ent"))))
       .as[(String, Option[String], String)].collect().toSet
-    val viaBatch = AlignmentGraph.disambiguateScored(
-        mentions, dict,
-        BatchedScorer.modelScoreFn(BatchedScorer.jaccardModel, batchSize = 2),
-        meThreshold = 0.35, pathThreshold = 0.5)
+    val viaBatch = disambiguate(
+        BatchedScorer.modelScoreFn(BatchedScorer.jaccardModel, batchSize = 2))
       .as[(String, Option[String], String)].collect().toSet
     assert(viaBatch == viaColumn)
     // and the scorer actually decides: token overlap links m1/m2 to

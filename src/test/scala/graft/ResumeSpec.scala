@@ -11,6 +11,10 @@ class ResumeSpec extends SparkSuite {
   private lazy val world = CorpusGen.default
   private def seeds = world.seeds(spark)
 
+  private def rm(p: java.io.File): Unit = {
+    if (p.isDirectory) p.listFiles.foreach(rm); p.delete()
+  }
+
   test("resume after simulated mid-pipeline kill reproduces the snapshot") {
     val outDir = SparkSuite.tempDir("graft-resume")
     val pagesDf = world.pages.toDS().toDF()
@@ -19,9 +23,6 @@ class ResumeSpec extends SparkSuite {
       .collect().sorted
 
     // simulate a crash that lost the late stages
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) p.listFiles.foreach(rm); p.delete()
-    }
     Seq("types", "relations", "triples_core", "triples_prov").foreach(s =>
       rm(new java.io.File(s"$outDir/$s")))
 
@@ -68,9 +69,6 @@ class ResumeSpec extends SparkSuite {
     val first = triples("run-1")
     // three stages on side branches of the graph: hypernym mining, the
     // relation branch and the axioms (their consumers stay committed)
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) p.listFiles.foreach(rm); p.delete()
-    }
     val lost = Set("hypernyms", "relations", "axioms")
     lost.foreach(s => rm(new java.io.File(s"$outDir/$s")))
     val second = triples("run-2")
@@ -80,6 +78,35 @@ class ResumeSpec extends SparkSuite {
       .select("stage").as[String].collect().toSet
     assert(rerun == lost, s"re-ran: $rerun")
   }
+
+  for ((tag, canon) <- Seq("ed" -> Pipeline.Canonicalization.ScoredEd(),
+                           "bu" -> Pipeline.Canonicalization.BottomUp()))
+    test(s"losing subjects_$tag re-runs it from the recorded key counts") {
+      val outDir = SparkSuite.tempDir(s"graft-resume-$tag")
+      val pagesDf = world.pages.toDS().toDF()
+      def triples(runId: String) =
+        Pipeline.run(spark, pagesDf, seeds, outDir, runId = runId,
+                     canon = canon)
+          .select("subj", "pred", "obj").as[(String, String, String)]
+          .collect().sorted
+      val first = triples("run-1")
+      // the subjects stage and every stage downstream of it; the key-count
+      // view the recompute reads its hot set from stays
+      val lost = Set(s"subjects_$tag", s"${tag}_components",
+                     "subject_listings", "type_rules", "relation_rules",
+                     "label_counts", "type_cand_counts", "rel_cand_counts",
+                     "prov_pairs", "types", "relations", "axioms",
+                     "restriction_facts", "triples_core", "triples_prov",
+                     "ontology_meta")
+      lost.foreach(s => rm(new java.io.File(s"$outDir/$s")))
+      val second = triples("run-2")
+      assert(first.sameElements(second))
+      val lin = spark.read.parquet(s"$outDir/_lineage")
+        .filter(col("run_id") === "run-2" && !col("stage").contains("/"))
+        .select("stage", "resumed").as[(String, Boolean)].collect().toMap
+      assert(lin(s"${tag}_key_counts"), s"key counts should resume: $lin")
+      assert(lin.filterNot(_._2).keySet == lost, s"re-ran: $lin")
+    }
 
   test("file:// URI outDirs resume a completed stage and commit a layer") {
     import graft.runtime.{Drops, StageRunner}
@@ -119,9 +146,6 @@ class ResumeSpec extends SparkSuite {
     val labelDir = new java.io.File(s"$dir/tp/pred=rdfs%3Alabel")
     val beforeFiles = labelDir.listFiles().map(f => f.getName -> f.lastModified).toMap
     // simulate a damaged/missing type partition + stale success marker
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) p.listFiles.foreach(rm); p.delete()
-    }
     rm(new java.io.File(s"$dir/tp/pred=rdf%3Atype"))
     new java.io.File(s"$dir/tp/_SUCCESS").delete()
     // backfill ONLY the type partition
