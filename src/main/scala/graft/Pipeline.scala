@@ -13,8 +13,8 @@ import graft.runtime.{Checkpoints, Drops, LoopReport, Node, StageRunner}
 import graft.runtime.Checkpoints.{fresh, pin}
 
 /** The end-to-end KG-construction pipeline (north rule): pages → invariant
-  * text extraction → listings/mentions → salted alias linking → NIL
-  * canonicalization (connected components) → listing rule mining +
+  * text extraction → listings/mentions → salted alias linking →
+  * canonicalization (new entities for NIL mentions) → listing rule mining +
   * disjointness-guarded, taxonomy-aware type inference → (subj, pred, obj)
   * triples partitioned by predicate, with per-stage checkpoints + lineage.
   *
@@ -67,9 +67,10 @@ object Pipeline {
   /** How mentions become canonical entities (step 4). */
   sealed trait Canonicalization
   object Canonicalization {
-    /** Linked mentions keep their broadcast-argmax entity; NIL mentions
-      * cluster via connected components over the mention↔key bipartite
-      * graph ([[NilCluster]]). The cheap default. */
+    /** Linked mentions keep their broadcast-argmax entity; each kept NIL
+      * mention takes the new entity of its alias key ([[NilCluster]]: the
+      * mention↔key graph's components in closed form, a per-row
+      * projection). The cheap default. */
     case object Components extends Canonicalization
 
     /** The reference's PRODUCTION ED path
@@ -242,7 +243,7 @@ object Pipeline {
     * the per-page prefix, then [[corpus]]. Every stage names its input
     * stages, and [[StageRunner#execute]] runs each as soon as they have
     * committed — independent branches (the manifest and the seeds
-    * fingerprint, hypernym mining, the tag gate beside NIL clustering, the
+    * fingerprint, hypernym mining, the tag gate beside canonicalization, the
     * rule miners, the taxonomy closure, provenance) overlap. Every pin the
     * call takes, on this thread or a stage's, is freed when it returns or
     * throws ([[Checkpoints]]); the returned triples read only parquet.
@@ -561,11 +562,10 @@ object Pipeline {
 
     /** The subject and component rows of the kept mentions `all`, capped
       * by `hotKeys` — the hot set of the mode's key-count view, which is
-      * GLOBAL on a delta slice too. NIL mentions take the content-derived
-      * "new:<alias key>" id, shared by the full run and the delta's
-      * component slice; the LEFT join keeps a mention the assignment does
-      * not cover (the BottomUp fold covers only mentions with a scored
-      * candidate or MM edge) as NIL. */
+      * GLOBAL on a delta slice too. The clusterer's entity-less mentions
+      * are NIL ([[subjectRows]]); the LEFT join keeps a mention the
+      * assignment does not cover (the BottomUp fold covers only mentions
+      * with a scored candidate or MM edge) as NIL. */
     def recompute(dict: DataFrame, all: DataFrame, hotKeys: DataFrame,
                   report: LoopReport): (DataFrame, DataFrame) = {
       val mentions = all.select("mention_id", "label")
@@ -573,17 +573,24 @@ object Pipeline {
                                                  meScore, meThreshold,
                                                  mmThreshold))
       val (assign, cc) = cluster(mentions, edges, hotKeys, report)
-      val subjects = all.drop("ent")
+      val subjects = subjectRows(all.drop("ent")
         .join(assign.select(col("mention_id"), col("ent").as("graph_ent")),
-              Seq("mention_id"), "left")
-        .select(col("url"), col("listing_key"), col("mention_id"),
-                col("label"),
-                coalesce(col("graph_ent"),
-                         concat(lit("new:"), col("key"))).as("ent"),
-                col("graph_ent").isNull.as("is_new"))
+              Seq("mention_id"), "left"), col("graph_ent"))
       (subjects, AlignmentGraph.componentRows(all, cc, entityAdjacency))
     }
   }
+
+  /** The subject rows of the kept mentions `kept` (url, listing_key,
+    * mention_id, label, key), whose entity is `ent`: a null `ent` is a NIL
+    * mention, which takes the new entity of its alias key. All three
+    * canonicalization modes assemble their subject table here; `is_new`
+    * stays in the table so carry layers over older outDirs still union by
+    * name. */
+  private def subjectRows(kept: DataFrame, ent: Column): DataFrame =
+    kept.select(col("url"), col("listing_key"), col("mention_id"),
+                col("label"),
+                coalesce(ent, NilCluster.entity(col("key"))).as("ent"),
+                ent.isNull.as("is_new"))
 
   /** The [[GraphMode]] of `canon`; None for Components. */
   private def graphMode(spark: SparkSession,
@@ -789,12 +796,12 @@ object Pipeline {
       hintSmall(fresh(frequentOf(unlCounts().all)))
     }
     // the kept mentions of linked rows: the linked ones, and the unlinked
-    // ones whose label is not boilerplate (read inside bodies that declare
-    // `frequent`)
-    def kept(la: DataFrame): (DataFrame, DataFrame) = {
-      val (linked, unlinked) = AliasLink.splitLinked(la)
-      (linked, unlinked.join(frequent(), Seq("label"), "left_anti"))
-    }
+    // ones (`ent` null) whose label is not boilerplate (read inside bodies
+    // that declare `frequent`)
+    def kept(la: DataFrame): DataFrame =
+      fresh(la.filter(col("ent").isNotNull)).unionByName(fresh(
+        la.filter(col("ent").isNull)
+          .join(frequent(), Seq("label"), "left_anti")))
 
     // A9 tag gate inputs: P(tag|type) stats over linked mentions, validity
     // ≥ threshold with parent-tag inheritance (driver fixpoint over the
@@ -875,17 +882,12 @@ object Pipeline {
       * recompute feeds the subject and component stages (a fully-resumed
       * outDir never builds the graph, a partial resume builds it once). */
     def graphCanon(mode: GraphMode): Node[DataFrame] = {
-      def keptAllOf(la: DataFrame): DataFrame = {
-        val (linked, keptUnlinked) = kept(la)
-        fresh(linked).unionByName(
-          fresh(keptUnlinked).withColumn("ent", lit(null).cast("string")))
-      }
       // the closure maintains the key counts inside its body
       st.reads(mode.keyCountsStage)
       val closure = st.deltaNode("graph_closure", Seq(linkedAll, frequent) ++
                                  touched ++ flippedLabels: _*) {
         graphClosure(st, mode, linkedAll(), touched.get().hinted, frequent(),
-                     flippedLabels.get(), dict, keptAllOf,
+                     flippedLabels.get(), dict, kept,
                      members => st.countView(mode.keyCountsStage, Seq("key"))(
                        s => AlignmentGraph.keyCounts(s(members))))
       }
@@ -893,7 +895,7 @@ object Pipeline {
         case Some(c) => c.map(_.hotKeys)
         case None =>
           st.runner.stage(mode.keyCountsStage, linkedAll, frequent) {
-            AlignmentGraph.keyCounts(keptAllOf(linkedAll().all))
+            AlignmentGraph.keyCounts(kept(linkedAll().all))
           }.map(AlignmentGraph.hotKeys)
       }
       val rep = new LoopReport
@@ -901,7 +903,7 @@ object Pipeline {
       // subjects stage resumed — never by both at once: the components
       // stage waits for the subjects stage
       lazy val recomputed = mode.recompute(dict,
-        closure.fold(pin(keptAllOf(linkedAll().all)))(_().slice), hotKeys(),
+        closure.fold(pin(kept(linkedAll().all)))(_().slice), hotKeys(),
         rep)
       // carries: the subjects stage drops the affected components' mention
       // ids (a MENTION-keyed layer — affected mentions live on untouched
@@ -936,31 +938,17 @@ object Pipeline {
     mode match {
       case Some(m) => graphCanon(m)
       case None =>
-        // 4a. NIL canonicalization via connected components. A delta
-        // re-derives the affected urls with the SAME expressions (NIL ids
-        // are content-derived and page-local — see NilCluster — listing
-        // rules are per (url, listing_key) and the count views are additive
-        // over url contributions, so slice ∪ carry ≡ full recompute)
+        // 4a. Components: linked mentions keep their argmax entity, kept NIL
+        // mentions take the new entity of their alias key — one projection
+        // of the kept mentions. A delta re-derives the affected urls with
+        // the SAME expression (NIL ids are content-derived and page-local —
+        // see NilCluster — listing rules are per (url, listing_key) and the
+        // count views are additive over url contributions, so slice ∪ carry
+        // ≡ full recompute)
         val urls = affectedUrls("subjects", None)
-        // the slice's linked mentions and its kept (non-boilerplate) NIL
-        // mentions
-        def split(): (DataFrame, DataFrame) =
-          kept(slice(linkedAll().all, urls.map(_())))
-        val nilAssign = st.sliceOnly("nil_entities",
-                                     Seq(linkedAll, frequent) ++ urls) {
-          NilCluster.cluster(split()._2)
-        }
-        // linked mentions keep their argmax entity; kept-NIL mentions take
-        // their content-derived cluster id
         val subjects = st.carried("subjects", "url", urls,
-                                  Seq(linkedAll, frequent, nilAssign)) {
-          val (linked, keptUnlinked) = split()
-          linked.select("url", "listing_key", "mention_id", "label", "ent")
-            .withColumn("is_new", lit(false))
-            .unionByName(
-              keptUnlinked.join(nilAssign(), "mention_id")
-                .select("url", "listing_key", "mention_id", "label", "ent")
-                .withColumn("is_new", lit(true)))
+                                  Seq(linkedAll, frequent)) {
+          subjectRows(kept(slice(linkedAll().all, urls.map(_()))), col("ent"))
         }
         mineAndEmit(st, subjects, urls, validTags, seeds)
     }
@@ -1009,7 +997,7 @@ object Pipeline {
   private def graphClosure(st: Stages, mode: GraphMode, linkedAll: Rel,
                            dropUrls: DataFrame, frequent: DataFrame,
                            flippedLabels: DataFrame, dict: DataFrame,
-                           keptAllOf: DataFrame => DataFrame,
+                           kept: DataFrame => DataFrame,
                            keyCounts: Rel => Rel): GraphClosure = {
     val prevLinked = st.prev("linked_all")
     val prevComps = pin(st.prev(mode.compsStage))
@@ -1030,7 +1018,7 @@ object Pipeline {
       .join(dropUrls, Seq("url"), "left_anti")
       .join(hintSmall(pin(entrantLabels)), Seq("label"), "left_semi")
       .withColumn("ent", lit(null).cast("string"))
-    val freshKept = pin(keptAllOf(linkedAll.cur))
+    val freshKept = pin(kept(linkedAll.cur))
     val enteringMentions = pin(fresh(freshKept.select("mention_id", "label"))
       .unionByName(entrantRows.select("mention_id", "label")))
 
@@ -1084,7 +1072,7 @@ object Pipeline {
       .join(dropUrls, Seq("url"), "left_anti")
       .join(leaverLabels, Seq("label"), "left_anti")
       .select("mention_id")
-    val survivorRows = keptAllOf(
+    val survivorRows = kept(
       prevLinked.join(hintSmall(pin(survivorIds)),
                       Seq("mention_id"), "left_semi"))
     val sliceAll = pin(survivorRows.unionByName(entrantRows.select(

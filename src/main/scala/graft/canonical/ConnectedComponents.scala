@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
-  import graft.runtime.Checkpoints.{free, fresh, pin}
+  import graft.runtime.Checkpoints.{free, fresh, pinCount}
 
   /** Edge-count bound for the driver fast path (conf `graft.cc.driverMax`,
     * 0 disables): below it the symmetrized edge set is BOUNDED — a few MB —
@@ -34,8 +34,8 @@ object ConnectedComponents {
     * a driver-side union-find over the collected pairs. Many CC call sites
     * are verified-pair or taxonomy-scale graphs (dedup clusterKeep: dozens
     * of pairs; g9: hundreds of edges) that paid seconds of loop scaffolding
-    * for microseconds of work. The count is free: the loop already
-    * checkpoints + counts the symmetrized set before round 1. Same
+    * for microseconds of work. The count is free: it is the row count of
+    * the symmetrized set's pin, which the loop takes before round 1. Same
     * "broadcast-sized by design" rule as the ValidTags driver fixpoint. */
   val DriverMaxDefault = 65536L
 
@@ -45,11 +45,9 @@ object ConnectedComponents {
   /** edges(src, dst): undirected pairs (any orientation, self-loops ok).
     * Returns (node, component) for every node appearing in `edges`. */
   def run(edges: DataFrame): DataFrame = {
-    var e = pin(symmetrize(edges))
-    // count of the just-checkpointed edge set: a shuffle-free job over the
-    // in-memory blocks, used to SHORT-CIRCUIT the convergence check below
-    // (and to gate the driver fast path)
-    var eCount = e.count()
+    // the pin's row count SHORT-CIRCUITS the convergence check below (and
+    // gates the driver fast path)
+    var (e, eCount) = pinCount(symmetrize(edges))
     val spark = edges.sparkSession
     val dt = e.schema("src").dataType
     val driverable = eCount <= driverMax(spark) &&
@@ -65,8 +63,7 @@ object ConnectedComponents {
     var converged = false
     var iter = 0
     while (!converged && iter < 50) {
-      val next = pin(smallStar(largeStar(e)))
-      val nextCount = next.count()
+      val (next, nextCount) = pinCount(smallStar(largeStar(e)))
       // Converged when the (directed, deduped) edge set is unchanged —
       // both sides are distinct sets, so the edge sets are equal iff the
       // counts match AND the symmetric difference (count==1 groups of the

@@ -3,7 +3,7 @@ package graft.canonical
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.runtime.Checkpoints.{free, fresh, pin}
+import graft.runtime.Checkpoints.{free, fresh, pin, pinCount}
 
 /** NastyLinker clustering (G10; reference:
   * `/root/reference/impl/subject_entity/entity_disambiguation/matching/greedy_clustering.py:46-102`):
@@ -97,14 +97,12 @@ object NastyLinker {
     // — max-product propagation from entity nodes (threshold-pruned) —
     val entities = multiNodes.filter(col("node").startsWith("e:"))
       .select(col("node"), col("node").as("ent"), lit(1.0).as("score"))
-    var cur = pin(entities)
-    // count of the just-checkpointed frontier — a shuffle-free job over the
-    // in-memory blocks. Both `cur` and each round's `merged` hold exactly
+    // the pin's row count: both `cur` and each round's `merged` hold exactly
     // one row per node (row_number = 1 per node window), so set equality
-    // REQUIRES equal counts; the cheap count gate below skips the
-    // union+aggregate symmetric-difference job on every round that still
-    // grows the reached set (same discipline as ConnectedComponents.run).
-    var curCount = cur.count()
+    // REQUIRES equal counts; the count gate below skips the union+aggregate
+    // symmetric-difference job on every round that still grows the reached
+    // set (same discipline as ConnectedComponents.run).
+    var (cur, curCount) = pinCount(entities)
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
@@ -120,12 +118,11 @@ object NastyLinker {
         .orderBy(col("score").desc, col("ent").asc)
       // fresh alias every column: union children must not share exprIds
       // (cand derives from cur; checkpointing preserves attribute ids)
-      val merged = pin(fresh(cur).unionByName(fresh(cand))
+      val (merged, mergedCount) = pinCount(fresh(cur).unionByName(fresh(cand))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1).drop("rn"))
       // convergence: symmetric difference of two keyed sets — run only when
       // the count gate says equality is possible (typically the final round)
-      val mergedCount = merged.count()
       converged = mergedCount == curCount &&
         fresh(merged).unionByName(fresh(cur))
           .groupBy("node", "ent", "score").agg(count(lit(1)).as("c"))

@@ -3,18 +3,21 @@ package graft.emit
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core.Schemas
+import graft.canonical.NilCluster
+import graft.canonical.NilCluster.isNew
 
 /** External-KB export flavors — the reference's "DBpedia-side" result files
   * (≙ `/root/reference/impl/caligraph/serialize.py:240-302`): the mined KG
   * projected back into the seed KB's namespace so a consumer of the seed KB
   * can ingest the new knowledge without adopting the graft namespace.
   *
-  * Entity-id convention (see [[graft.canonical.NilCluster]]): LINKED
-  * entities carry the seed KB's id verbatim (one id space — the engine's
-  * analogue of `ent.get_dbp_entity()`), NEW entities are `"new:<key>"`
-  * (`has_dbp_entity` ≙ NOT new). `res2dbp_iri` ≙ [[extSubject]]: a new id
-  * re-namespaces under the caller's external prefix; a linked id passes
-  * through.
+  * Entity ids: LINKED entities carry the seed KB's id verbatim (one id
+  * space — the engine's analogue of `ent.get_dbp_entity()`); NEW entities
+  * carry the NIL-cluster id of their alias key, whose format
+  * [[graft.canonical.NilCluster]] alone knows (`has_dbp_entity` ≙ NOT
+  * `NilCluster.isNew`). `res2dbp_iri` ≙ [[extSubject]]: a new id
+  * re-namespaces its alias key under the caller's external prefix; a linked
+  * id passes through.
   *
   * All five flavors are candidate-/seed-sized DataFrame algebra: the only
   * corpus-scale input is the mined type/relation/label aggregates the
@@ -24,18 +27,10 @@ import graft.core.Schemas
   */
 object ExternalKbExport {
 
-  /** NIL-cluster id prefix ([[graft.canonical.NilCluster]] "new:<key>"). */
-  val NewPrefix = "new:"
-
-  def isNew(ent: Column): Column = ent.startsWith(NewPrefix)
-
   /** ≙ `dbp_util.res2dbp_iri` (serialize.py:243,261,292): new entities
     * re-namespace under `prefix`; linked entities already ARE seed-KB ids. */
   def extSubject(ent: Column, prefix: String): Column =
-    when(isNew(ent),
-         concat(lit(prefix), ent.substr(lit(NewPrefix.length + 1),
-                                        length(ent))))
-      .otherwise(ent)
+    when(isNew(ent), concat(lit(prefix), NilCluster.key(ent))).otherwise(ent)
 
   private def asTriple(subj: Column, pred: String, obj: Column,
                        isLit: Boolean)(df: DataFrame): DataFrame =
@@ -104,7 +99,7 @@ object ExternalKbExport {
     * new; a fact the seed KB already holds under the mapped predicate is
     * skipped (the reference's containment guard only fires when subject and
     * value are both seed-linked — an anti-join on verbatim ids encodes
-    * exactly that, since a `new:` id can never match a seed row).
+    * exactly that, since a new id can never match a seed row).
     *
     * Inputs: `rels` (ent, pred, obj) — entity-valued mined relations;
     * `predMap` (pred, ext); `seedExtRelations` (sub, pred, obj) in external

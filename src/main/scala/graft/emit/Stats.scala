@@ -2,6 +2,7 @@ package graft.emit
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.canonical.NilCluster
 
 /** KG statistics report (S9; ≙ the ~25 aggregate statistics at
   * `/root/reference/impl/caligraph/serialize.py:345-396`) and the tiny
@@ -18,7 +19,7 @@ object Stats {
     val totals = triples.agg(
       count(lit(1)).as("triples_total"),
       countDistinct("subj").as("entities"),
-      countDistinct(when(col("subj").startsWith("new:"), col("subj")))
+      countDistinct(when(NilCluster.isNew(col("subj")), col("subj")))
         .as("new_entities"),
       countDistinct("pred").as("predicates"),
       avg(when(col("pred") === graft.core.Schemas.Preds.Type, 1.0)

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.runtime.Checkpoints.{free, fresh, pin}
+import graft.runtime.Checkpoints.{free, fresh, pin, pinCount}
 
 /** Spherical k-means centroid training for the IVF operators — the
   * trainable replacement for the deterministic centroid FIXTURE the oracle
@@ -63,7 +63,8 @@ object Kmeans {
     * "broadcast-sized by design" discipline. Larger or non-standard-typed
     * inputs take the original distributed loop. */
   def seedFarthestFirst(vectors: DataFrame, k: Int): DataFrame = {
-    val v = pin(vectors.select(col("vec_id"), l2normalize(col("emb")).as("emb")))
+    val (v, n) =
+      pinCount(vectors.select(col("vec_id"), l2normalize(col("emb")).as("emb")))
     val embOk = v.schema("emb").dataType match {
       case org.apache.spark.sql.types.ArrayType(
              org.apache.spark.sql.types.DoubleType, _) => true
@@ -71,7 +72,7 @@ object Kmeans {
     }
     val driverable =
       v.schema("vec_id").dataType == org.apache.spark.sql.types.LongType &&
-      embOk && v.count() <= DriverSeedMax
+      embOk && n <= DriverSeedMax
     if (driverable) seedDriver(v, k) else seedDistributed(v, k)
   }
 

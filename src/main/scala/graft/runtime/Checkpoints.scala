@@ -58,12 +58,16 @@ object Checkpoints {
   /** Eager local checkpoint of `df`, registered with this thread's owner.
     * Registered before the job that writes its blocks runs, so a failed or
     * cancelled pin is freed with the rest. */
-  def pin(df: DataFrame): DataFrame = {
+  def pin(df: DataFrame): DataFrame = pinCount(df)._1
+
+  /** [[pin]], with the row count of the pinned frame: the eager write is a
+    * count job over every partition, so a caller that needs the count reads
+    * it here instead of running a second job. */
+  def pinCount(df: DataFrame): (DataFrame, Long) = {
     val out = df.localCheckpoint(eager = false)
     val rdds = pinsOf(out)
     Option(owner).foreach(o => rdds.foreach(o.pins.add))
-    rdds.foreach(_.count()) // the eager write: one job over every partition
-    out
+    (out, rdds.map(_.count()).sum)
   }
 
   /** Free (non-blocking) the checkpoints `df` itself scans: the RDDs under

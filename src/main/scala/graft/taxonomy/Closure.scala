@@ -2,7 +2,7 @@ package graft.taxonomy
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.runtime.Checkpoints.{free, pin}
+import graft.runtime.Checkpoints.{free, pin, pinCount}
 
 /** Transitive closure over a DAG edge table, as an iterative DataFrame join
   * fixpoint (reference: memoized ancestor walk `impl/util/base_graph.py:76-83`
@@ -34,8 +34,9 @@ object Closure {
         .join(e.alias("e"), col("f.anc") === col("e.node"))
         .select(col("f.node").as("node"), col("e.anc").as("anc"))
         .distinct()
-      val fresh = pin(next.join(closure, Seq("node", "anc"), "left_anti"))
-      if (fresh.isEmpty) { free(fresh); done = true }
+      val (fresh, nFresh) =
+        pinCount(next.join(closure, Seq("node", "anc"), "left_anti"))
+      if (nFresh == 0) { free(fresh); done = true }
       else {
         val nextClosure = pin(closure.unionByName(fresh))
         // superseded generations: the old closure copy and the frontier

@@ -564,8 +564,8 @@ class DeltaSpec extends SparkSuite {
       }
     }
     assert(stages.contains("types") && stages.contains("relations"))
-    assert(unread == Seq("mentions", "nil_entities", "ontology_meta",
-                         "restriction_facts", "triples_core", "axioms")
+    assert(unread == Seq("mentions", "ontology_meta", "restriction_facts",
+                         "triples_core", "axioms")
              .sorted, s"stages a delta need not read: $unread")
   }
 

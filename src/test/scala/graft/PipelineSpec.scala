@@ -141,4 +141,53 @@ class PipelineSpec extends SparkSuite {
       .collect().sorted
     assert(t1.sameElements(t2))
   }
+
+  test("two captures of one url: each new entity keeps its own labels " +
+       "(all three modes)") {
+    // a later capture of one page holds, at the same listing positions as
+    // the first, unknown labels with different alias keys — so two rows
+    // share each `url#listing_key#item_idx` mention id. A new entity's
+    // label counts (and its emitted rdfs:label) must come from its own
+    // mentions only, never from the other capture's row with that id
+    import graft.core.Normalize.aliasKeyJava
+    val host = world.pages.find(_.url.contains("list-of-books")).get
+    def body(name: String) = (Seq("== Extra ==") ++
+      (0 until 4).map(j => s"* [[$name $j]] — extra entry.")).mkString("\n")
+    val first = body("Quill Marrow")
+    val later = body("Vesper Tarn")
+    val pages = world.pages.map { p =>
+      if (p.url == host.url)
+        p.copy(html = world.htmlFor(first), text = first)
+      else p
+    } :+ host.copy(warc_ts = new java.sql.Timestamp(host.warc_ts.getTime + 777777L),
+                   html = world.htmlFor(later), text = later)
+    val planted = (for (name <- Seq("Quill Marrow", "Vesper Tarn");
+                        j <- 0 until 4) yield s"$name $j")
+      .map(l => s"new:${aliasKeyJava(l)}" -> l).toMap
+    for ((canon, subjects) <- Seq(
+           Pipeline.Canonicalization.Components -> "subjects",
+           Pipeline.Canonicalization.ScoredEd() -> "subjects_ed",
+           Pipeline.Canonicalization.BottomUp() -> "subjects_bu")) {
+      val outDir = SparkSuite.tempDir("graft-two-captures")
+      val triples = Pipeline.run(spark, pages.toDS().toDF(), seeds, outDir,
+                                 canon = canon)
+      // the fixture does share mention ids between differently-keyed rows
+      val shared = spark.read.parquet(s"$outDir/$subjects")
+        .groupBy("mention_id").agg(countDistinct("label").as("n"))
+        .filter(col("n") > 1).count()
+      assert(shared == 4, s"$canon: $shared shared mention ids")
+      val counts = spark.read.parquet(s"$outDir/label_counts")
+        .filter(col("ent").startsWith("new:"))
+        .select("ent", "label").as[(String, String)].collect()
+      val foreign = counts.filter { case (e, l) =>
+        e.stripPrefix("new:") != aliasKeyJava(l) }
+      assert(foreign.isEmpty, s"$canon: foreign labels ${foreign.toSeq}")
+      assert(planted.toSet.subsetOf(counts.toSet), s"$canon: ${counts.toSeq}")
+      val labels = triples
+        .filter(col("pred") === graft.core.Schemas.Preds.Label &&
+                col("subj").isin(planted.keys.toSeq: _*))
+        .select("subj", "obj").as[(String, String)].collect().toMap
+      assert(labels == planted, s"$canon: rdfs:label $labels")
+    }
+  }
 }

@@ -194,10 +194,11 @@ class ResumeSpec extends SparkSuite {
       .select("stage", "loop_rounds", "converged")
       .as[(String, Long, Boolean)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
-    // nil_entities is a closed-form projection since r6 (the mention↔key
-    // graph is degree-1-bipartite) — it must report NON-iterative
-    assert(lin("nil_entities")._1 == -1L && lin("nil_entities")._2,
-           s"nil_entities counters: ${lin("nil_entities")}")
+    // Components canonicalization is a closed-form projection (the
+    // mention↔key graph is degree-1-bipartite) — subjects must report
+    // NON-iterative
+    assert(lin("subjects")._1 == -1L && lin("subjects")._2,
+           s"subjects counters: ${lin("subjects")}")
     assert(lin("types")._1 >= 1 && lin("types")._2, // taxonomy closure loop
            s"types counters: ${lin("types")}")
     assert(lin("pages_text")._1 == -1L) // non-iterative stages stay unmarked
