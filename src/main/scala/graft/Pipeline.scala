@@ -10,7 +10,7 @@ import graft.canonical.{AlignmentGraph, BottomUpCluster, NilCluster}
 import graft.taxonomy.{Disjointness, RuleMining}
 import graft.emit.TripleEmit
 import graft.runtime.{Checkpoints, Drops, LoopReport, Node, StageRunner}
-import graft.runtime.Checkpoints.{fresh, pin}
+import graft.runtime.Checkpoints.{fresh, pin, pinCount}
 
 /** The end-to-end KG-construction pipeline (north rule): pages → invariant
   * text extraction → listings/mentions → salted alias linking →
@@ -142,12 +142,13 @@ object Pipeline {
     * rows over a slice of its inputs, and its maintenance rule — a carried
     * key-keyed table or a count view ([[Stages]]). With no previous state
     * every slice is the whole input and each stage is written under its
-    * own name. */
+    * own name. The default `runId` is new on every call, so a resume's
+    * `_lineage` rows are told apart from the first run's. */
   def run(spark: SparkSession, pages: DataFrame, seedsIn: Seeds,
-          outDir: String, runId: String = "run-1",
+          outDir: String, runId: String = s"run-${java.util.UUID.randomUUID}",
           canon: Canonicalization = Canonicalization.Components): DataFrame =
     stages(spark, pages, seedsIn, outDir, runId, graphMode(spark, canon),
-           prev = None)
+           prevDir = None)
 
   /** Incremental run over a RE-CRAWL (the recurring-snapshot shape the
     * reference handles by full re-extraction per dump): [[run]]'s stage
@@ -169,29 +170,38 @@ object Pipeline {
     * [[Canonicalization.ScoredEd]] and [[Canonicalization.BottomUp]] modes
     * canonicalization is COMPONENT-bounded instead ([[graphClosure]]):
     * graph decisions propagate across urls through shared keys, but stay
-    * local to an alignment-graph / MM component. A prevDir without the
-    * mode's recorded graph state (or with a different canonicalization-
-    * parameter fingerprint) bootstraps: the corpus stages run with no
-    * previous state once and record the state for the next delta in the
-    * chain. Output is IDENTICAL to a full [[run]] over the new crawl
-    * (DeltaSpec asserts exactness, including rules and candidate counts
-    * crossing their thresholds in both directions).
+    * local to an alignment-graph / MM component. Output is IDENTICAL to a
+    * full [[run]] over the new crawl (DeltaSpec asserts exactness,
+    * including rules and candidate counts crossing their thresholds in
+    * both directions).
     *
-    * Seeds must be IDENTICAL to the previous run's (checked against the
-    * recorded seeds fingerprint — a dictionary change invalidates carried
-    * links; use [[run]] on a fresh outDir for that). The same contract
-    * covers the canonicalization parameters, enforced by bootstrap rather
-    * than refusal (see `graph_canon_fp`).
+    * What the delta may take from prevDir is decided by one rule
+    * ([[carriesCorpus]]), before any stage runs: it compares this run's
+    * fingerprint ([[runFingerprint]]) with the `run_fp` table prevDir
+    * recorded.
     *
-    * The prevDir contract is read off the stage declarations ([[Stages]]):
-    * every table a declaration carries or maintains from prevDir is
-    * registered when it is declared, and once the graph is declared —
-    * before any stage runs — each must be committed in prevDir, else the
-    * delta refuses with "lacks the '<stage>' checkpoint" and commits
-    * nothing. The seeds fingerprint is checked the same way before the
-    * graph exists. */
+    * | prevDir's `run_fp`                        | outcome   |
+    * |-------------------------------------------|-----------|
+    * | missing                                   | refused   |
+    * | `format` row differs                      | refused   |
+    * | a `seeds.*` row differs                   | refused   |
+    * | a `canon.*` row differs, or `custom_fn`   | bootstrap |
+    * | equal                                     | carry     |
+    *
+    * Refused: "lacks the 'run_fp' checkpoint", "FORMAT changed", "seed
+    * tables differ" (a dictionary change invalidates carried links; use
+    * [[run]] on a fresh outDir). Bootstrap: the corpus stages run with no
+    * previous state under this run's parameters and record fresh state for
+    * the next delta. The prefix (manifest, text, mentions, links,
+    * hypernyms) is canonicalization-free and carries in both the last two
+    * rows. Carry: every table a declaration reads from prevDir is
+    * registered when it is declared ([[Stages]]), and once the graph is
+    * declared each must be committed in prevDir, else the delta refuses
+    * with "lacks the '<stage>' checkpoint". A refused delta commits
+    * nothing. The default `runId` is new on every call. */
   def runDelta(spark: SparkSession, newPages: DataFrame, seedsIn: Seeds,
-               outDir: String, prevDir: String, runId: String = "delta-1",
+               outDir: String, prevDir: String,
+               runId: String = s"delta-${java.util.UUID.randomUUID}",
                canon: Canonicalization = Canonicalization.Components): DataFrame = {
     def qualified(dir: String) = {
       val p = new org.apache.hadoop.fs.Path(dir)
@@ -201,29 +211,8 @@ object Pipeline {
             "runDelta: outDir must differ from prevDir — running in place " +
             "would resume every stage from the previous checkpoints and " +
             "silently ignore the new crawl")
-    val mode = graphMode(spark, canon)
-    // ED/BU deltas are component-bounded when prevDir recorded the mode's
-    // graph state (a same-mode run() or runDelta()) AND the recorded
-    // canonicalization parameters match this run's: carried subject rows
-    // embed prevDir's thresholds/scorer/hot-cap, so carrying them under
-    // different parameters would mix two configurations' decisions. Any
-    // mismatch — including a prevDir without the fingerprint, or an
-    // opaque caller-supplied scoreFn (never provably equal) — BOOTSTRAPS:
-    // the corpus stages run with no previous state under the CURRENT
-    // parameters and record fresh state for the next delta in the chain.
-    // A Components-mode prevDir (the prefix is canon-free) bootstraps the
-    // same way.
-    def canonFpReady(m: GraphMode): Boolean =
-      StageRunner.completed(spark, prevDir, "graph_canon_fp") && {
-        val prev = spark.read.parquet(s"$prevDir/graph_canon_fp")
-          .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-        !m.canonFp.exists(_._2 == "custom_fn") && prev == m.canonFp.toMap
-      }
-    val carryCorpus = mode.forall(m =>
-      m.stateStages.forall(StageRunner.completed(spark, prevDir, _)) &&
-        canonFpReady(m))
-    stages(spark, newPages, seedsIn, outDir, runId, mode,
-           prev = Some(Prev(prevDir, carryCorpus)))
+    stages(spark, newPages, seedsIn, outDir, runId, graphMode(spark, canon),
+           Some(prevDir))
   }
 
   /** The prevDir contract of [[runDelta]], one stage at a time. */
@@ -231,44 +220,39 @@ object Pipeline {
                                stage: String): Unit =
     require(StageRunner.completed(spark, prevDir, stage),
             s"runDelta: $prevDir lacks the '$stage' checkpoint — prevDir " +
-            "must be the outDir of a completed run() or runDelta() in a " +
-            "compatible canonicalization mode (pre-manifest or other-mode " +
-            "outDirs cannot seed a delta; run full once)")
+            "must be the outDir of a completed run() or runDelta() " +
+            "(outDirs of an older engine cannot seed a delta; run full once)")
 
-  /** A delta run's previous state: the parent outDir, and whether the
-    * corpus stages carry from it (false = graph-mode bootstrap). */
-  private case class Prev(dir: String, carryCorpus: Boolean)
-
-  /** The one stage graph behind [[run]] (`prev` = None) and [[runDelta]]:
-    * the per-page prefix, then [[corpus]]. Every stage names its input
-    * stages, and [[StageRunner#execute]] runs each as soon as they have
-    * committed — independent branches (the manifest and the seeds
-    * fingerprint, hypernym mining, the tag gate beside canonicalization, the
-    * rule miners, the taxonomy closure, provenance) overlap. Every pin the
-    * call takes, on this thread or a stage's, is freed when it returns or
-    * throws ([[Checkpoints]]); the returned triples read only parquet.
+  /** The one stage graph behind [[run]] (`prevDir` = None) and
+    * [[runDelta]]: the per-page prefix, then [[corpus]]. Every stage names
+    * its input stages, and [[StageRunner#execute]] runs each as soon as
+    * they have committed — independent branches (the manifest and the run
+    * fingerprint, hypernym mining, the tag gate beside canonicalization,
+    * the rule miners, the taxonomy closure, provenance) overlap. Every pin
+    * the call takes, on this thread or a stage's, is freed when it returns
+    * or throws ([[Checkpoints]]); the returned triples read only parquet.
     * `mode` is the graph canonicalization mode, None for Components. */
   private def stages(spark: SparkSession, pages: DataFrame, seedsIn: Seeds,
                      outDir: String, runId: String, mode: Option[GraphMode],
-                     prev: Option[Prev]): DataFrame = Checkpoints.owned {
+                     prevDir: Option[String]): DataFrame = Checkpoints.owned {
     Normalize.register(spark)
     val seeds = pinSeeds(seedsIn)
+    val fp = runFingerprint(seeds, mode)
+    val carryCorpus = prevDir.forall(carriesCorpus(spark, _, fp))
     val runner = new StageRunner(spark, outDir, runId)
-    val st = new Stages(spark, runner, prev.map(_.dir))
+    val st = new Stages(spark, runner, prevDir)
 
     // 0. crawl manifest: the (url, warc_ts, content_fp) fingerprint of the
     // consumed crawl slice. A later [[runDelta]] anti-joins its new crawl
     // against this to find changed/added pages — the content fingerprint
     // catches a capture rewritten under an unchanged timestamp. Plus the
-    // seeds fingerprint: carried links are only valid under identical seeds
-    // (checked before any stage runs).
-    val seedsFp = prev match {
-      case None => seedsFingerprint(spark, seeds)
-      case Some(p) => checkedSeedsFp(spark, seeds, p.dir)
-    }
+    // run fingerprint a later delta compares.
     runner.execute {
       val manifest = runner.stage("crawl_manifest") { manifestOf(pages) }
-      runner.stage("seeds_fp") { seedsFp }
+      runner.stage("run_fp") {
+        import spark.implicits._
+        fp.toDF("param", "value")
+      }
       st.reads("crawl_manifest")
       val touched = st.deltaNode("touched_urls", manifest) {
         touchedUrls(manifest(), st.prev("crawl_manifest"))
@@ -317,7 +301,7 @@ object Pipeline {
       }
 
       val triples =
-        if (prev.forall(_.carryCorpus))
+        if (carryCorpus)
           corpus(st, linkedAll, touched, dict, seeds, mode)
         else
           corpus(new Stages(spark, runner, None),
@@ -328,34 +312,37 @@ object Pipeline {
     }
   }
 
-  /** The seeds contract of a delta: the recorded fingerprint must match
-    * (carried pages_text/linked_all rows silently mix stale semantics
-    * otherwise). Returns the current fingerprint, localCheckpointed so the
-    * seed tables are scanned ONCE: the comparison collect and the seeds_fp
-    * stage write both read the 6-row checkpoint instead of re-aggregating
-    * every seed table (aliases is the largest seed input — at scale this
-    * halves the delta's seed-scan bill). */
-  private def checkedSeedsFp(spark: SparkSession, seeds: Seeds,
-                             prevDir: String): DataFrame = {
-    requirePrevStage(spark, prevDir, "seeds_fp")
-    val curFpDf = pin(seedsFingerprint(spark, seeds))
-    val prevFp = spark.read.parquet(s"$prevDir/seeds_fp")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val curFp = curFpDf.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    // a FORMAT change is not a seed change: report it as such instead of
-    // claiming the (possibly byte-identical) seeds differ (ADVICE r4)
-    val prevVer = prevFp.getOrElse("__fp_version", 1L)
-    require(prevVer == SeedsFpVersion,
-            s"runDelta: seeds-fingerprint FORMAT changed (prevDir " +
-            s"recorded v$prevVer, this engine computes v$SeedsFpVersion) " +
-            "— the seed tables may be byte-identical, but the recorded " +
-            "fingerprint cannot be compared; run full once on a fresh " +
-            "outDir to re-record it")
-    require(prevFp == curFp,
+  /** The one decision of a delta over `prevDir` ([[runDelta]]'s table),
+    * made before any stage runs: compares this run's fingerprint `fp` with
+    * prevDir's `run_fp`. Refuses a missing fingerprint, a changed `format`
+    * (a changed formula is not a seed change, and is not reported as one —
+    * ADVICE r4) and changed seeds (carried pages_text/linked_all rows would
+    * silently mix stale semantics). Returns whether the corpus stages
+    * carry: only when every `canon.*` row matches and none is an opaque
+    * `custom_fn` scorer (never provably equal). Carried subject rows embed
+    * prevDir's thresholds, scorer and hot-key cap, so carrying them under
+    * other parameters would mix two configurations' decisions. */
+  private def carriesCorpus(spark: SparkSession, prevDir: String,
+                            fp: Seq[(String, String)]): Boolean = {
+    requirePrevStage(spark, prevDir, "run_fp")
+    val prev = spark.read.parquet(s"$prevDir/run_fp")
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val cur = fp.toMap
+    def rows(m: Map[String, String], prefix: String) =
+      m.filter(_._1.startsWith(prefix))
+    require(prev.get("format") == cur.get("format"),
+            s"runDelta: run-fingerprint FORMAT changed (prevDir recorded " +
+            s"v${prev.getOrElse("format", "?")}, this engine computes " +
+            s"v$RunFpFormat) — the seed tables may be byte-identical, but " +
+            "the recorded fingerprint cannot be compared; run full once on " +
+            "a fresh outDir to re-record it")
+    require(rows(prev, "seeds.") == rows(cur, "seeds."),
             s"runDelta: seed tables differ from prevDir's recorded " +
-            s"fingerprint (prev=$prevFp, current=$curFp) — carried links " +
-            "would be stale; run full on a fresh outDir instead")
-    curFpDf
+            s"fingerprint (prev=${rows(prev, "seeds.")}, " +
+            s"current=${rows(cur, "seeds.")}) — carried links would be " +
+            "stale; run full on a fresh outDir instead")
+    val canon = rows(cur, "canon.")
+    canon == rows(prev, "canon.") && !canon.values.exists(_ == "custom_fn")
   }
 
   /** The urls a delta re-derives. The join must be keyed by the SMALL
@@ -380,10 +367,9 @@ object Pipeline {
     val capKeys = Seq("url", "warc_ts", "content_fp")
     val changedCaptures = manifest.join(prevManifest, capKeys, "left_anti")
     val vanishedCaptures = prevManifest.join(manifest, capKeys, "left_anti")
-    dropSet(
-      pin(changedCaptures.select("url")
-        .unionByName(vanishedCaptures.select("url"))
-        .distinct()))
+    dropSet(changedCaptures.select("url")
+      .unionByName(vanishedCaptures.select("url"))
+      .distinct())
   }
 
   /** The change fingerprint of a crawl slice: (url, warc_ts, content_fp)
@@ -397,92 +383,67 @@ object Pipeline {
     pages.filter(col("lang") === "en")
       .select(col("url"), col("warc_ts"), xxhash64(col("html")).as("content_fp"))
 
-  /** Order-independent, multiset-sensitive fingerprint of every seed
-    * table: SUM of per-row xxhash64 (as decimal(38,0) — wide enough for
-    * any row count, and ANSI-safe where a Long sum could overflow-throw),
-    * mixed with the row count. bit_xor was multiset-BLIND: even-
-    * multiplicity duplicate-row swaps ({A,A,C} → {B,B,C}) cancelled to the
-    * same xor, so a changed seed dump could slip past [[runDelta]]'s
-    * staleness guard. Nulls coalesce to a per-column marker so a value
-    * shifting position across columns cannot alias (xxhash64 folds null
-    * fields without a position contribution). Partitioning-invariant;
-    * recorded at run time; [[runDelta]] refuses to carry across a change.
-    *
-    * The fingerprint FORMULA is versioned (the `__fp_version` row): when
-    * the formula changes, a byte-identical seed set still produces
-    * different fp values, and without the version row [[runDelta]] would
-    * misreport that as "seed tables differ" (ADVICE r4 — the r3→r4 formula
-    * change silently invalidated every existing delta chain with a
-    * misleading diagnostic). Bump [[SeedsFpVersion]] on ANY formula
-    * change. */
-  private val SeedsFpVersion = 2L
+  /** The format of the run fingerprint. Bump it on ANY change to how a
+    * row is computed: a byte-identical seed set then yields different
+    * values, and without the `format` row [[carriesCorpus]] would misreport
+    * that as "seed tables differ" (ADVICE r4). */
+  private val RunFpFormat = "1"
 
-  private def seedsFingerprint(spark: SparkSession, seeds: Seeds): DataFrame = {
-    import spark.implicits._
+  /** The run fingerprint: the (param, value) rows every run records as its
+    * `run_fp` stage, and the one thing [[carriesCorpus]] compares.
+    *  - `format`: [[RunFpFormat]];
+    *  - `seeds.<table>`: an order-independent, multiset-sensitive hash of
+    *    each seed table — the SUM of per-row xxhash64 (as decimal(38,0),
+    *    which no row count overflows), mixed with the row count; "empty"
+    *    for an empty table and "none" for an absent one. A xor of row
+    *    hashes would be multiset-BLIND: duplicate-row swaps ({A,A,C} →
+    *    {B,B,C}) cancel. Nulls coalesce to a marker per column, so a value
+    *    shifting across columns cannot alias (xxhash64 folds a null field
+    *    without a position contribution). Partitioning-invariant;
+    *  - `canon.<param>`: the canonicalization parameters — the graph
+    *    mode's `canonFp`, or `mode = components`.
+    * One aggregate over the unioned row hashes of every seed table,
+    * collected here, before the stage graph starts. */
+  private def runFingerprint(seeds: Seeds, mode: Option[GraphMode])
+      : Seq[(String, String)] = {
     val tables = Seq(
       "aliases" -> seeds.aliases, "entity_types" -> seeds.entityTypes,
       "taxonomy_edges" -> seeds.taxonomyEdges,
       "disjoint_pairs" -> seeds.disjointPairs,
       "seed_relations" -> seeds.seedRelations, "redirects" -> seeds.redirects)
-    // ONE plan — per-table row hashes unioned, one aggregate keyed by
-    // table name — instead of six independent aggregates (one exchange for
-    // ~7 output rows instead of six). Stage wall measured ~flat at bench
-    // scale (the cost there is one-time session codegen, not the
-    // aggregates), but the fp VALUES are bit-identical to the former
-    // per-table form: sum/count over the same rows grouped by tbl, and the
-    // defaults below reproduce the former null-table (fp = 0) and
-    // present-but-empty (fp = xxhash64("0", 0)) rows — so SeedsFpVersion
-    // is unchanged and fingerprints recorded by older runs still compare
-    // equal (proven by the full+delta soak: the delta's fp compare passed
-    // against a prevDir written by the same formula, and DeltaSpec
-    // compares across runs).
-    val hashed = tables.collect { case (name, df) if df != null =>
+    val hashes = tables.collect { case (name, df) if df != null =>
       val marked = df.columns.map(c =>
         coalesce(col(c).cast("string"), lit("\u0000")))
       df.select(lit(name).as("tbl"), xxhash64(marked: _*).as("h"))
-    }
-    val grouped = hashed.reduceOption(_ unionByName _).map(
-      _.groupBy("tbl")
-        .agg(sum(col("h").cast("decimal(38,0)")).as("x"),
-             count(lit(1)).as("n"))
-        .select(col("tbl"),
-                xxhash64(col("x").cast("string"), col("n")).as("fp")))
-    // null tables record fp 0; present-but-empty tables produce no group
-    // above and record the former empty-aggregate value
-    val defaults = tables.map { case (name, df) => (name, df == null) }
-      .toDF("tbl", "is_null")
-      .select(col("tbl"),
-              when(col("is_null"), lit(0L))
-                .otherwise(xxhash64(lit("0"), lit(0L))).as("fp"))
-    val version = spark.range(1)
-      .select(lit("__fp_version").as("tbl"), lit(SeedsFpVersion).as("fp"))
-    grouped match {
-      case Some(g) =>
-        version.unionByName(g).unionByName(
-          defaults.join(g.select(col("tbl")), Seq("tbl"), "left_anti"))
-      case None => version.unionByName(defaults)
-    }
+    }.reduce(_ unionByName _)
+      .groupBy("tbl")
+      .agg(xxhash64(sum(col("h").cast("decimal(38,0)")).cast("string"),
+                    count(lit(1))))
+      .collect().map(r => r.getString(0) -> r.getLong(1).toString).toMap
+    val canon = mode.fold(Seq("mode" -> "components"))(_.canonFp)
+    ("format" -> RunFpFormat) +:
+      (tables.map { case (name, df) =>
+        s"seeds.$name" ->
+          (if (df == null) "none" else hashes.getOrElse(name, "empty"))
+      } ++ canon.map { case (k, v) => s"canon.$k" -> v })
   }
 
-  /** `df` as [[Drops]], small only while it actually is (ADVICE r3: an
-    * unconditional hint OOMs on high-churn re-crawls); beyond the threshold
-    * AQE plans the join unhinted. The session conf
-    * `graft.delta.maxBroadcastKeys` overrides [[MaxBroadcastKeys]] —
-    * DeltaThresholdSpec pins it to 0 to prove the un-hinted fallback, where
-    * AQE plans every carry join, is result-identical (SCALE.md's high-churn
-    * shape). */
-  private def dropSet(df: DataFrame): Drops = {
-    val max = df.sparkSession.conf
+  /** `rows` as [[Drops]], where `bound` (a pin's row count — of `rows`
+    * itself, or of the pin `rows` projects, filters or dedups) bounds its
+    * size: small only while the bound is (ADVICE r3: an unconditional hint
+    * OOMs on high-churn re-crawls); beyond the threshold AQE plans the
+    * join unhinted. The session conf `graft.delta.maxBroadcastKeys`
+    * overrides [[MaxBroadcastKeys]] — DeltaThresholdSpec pins it to 0 to
+    * prove the un-hinted fallback, where AQE plans every carry join, is
+    * result-identical (SCALE.md's high-churn shape). */
+  private def sized(rows: DataFrame, bound: Long): Drops = {
+    val max = rows.sparkSession.conf
       .get("graft.delta.maxBroadcastKeys", MaxBroadcastKeys.toString).toLong
-    // probe limit is computed min-first: `max + 1` on Long.MaxValue wraps
-    // negative and .toInt would yield a limit(0) that "proves" every frame
-    // small — the exact OOM this guard exists to prevent
-    val probeRows = (math.min(max, Int.MaxValue.toLong - 1) + 1).toInt
-    Drops(df, max > 0 && df.limit(probeRows).count() <= max)
+    Drops(rows, max > 0 && bound <= max)
   }
 
-  /** `df` broadcast-hinted while it is small ([[dropSet]]), for a join. */
-  private def hintSmall(df: DataFrame): DataFrame = dropSet(df).hinted
+  /** `df` pinned as [[Drops]], sized by the pin's own row count. */
+  private def dropSet(df: DataFrame): Drops = (sized _).tupled(pinCount(df))
 
   /** Alias dictionary incl. folded spelling redirects (shared by [[run]]
     * and [[runDelta]]). */
@@ -497,24 +458,24 @@ object Pipeline {
     * over every key of either side (zero sums included — they are the
     * touched keys too). Inputs carry (keys..., cnt); a DELTA-sized shuffle,
     * checkpointed because [[maintainCounts]] and the touched-key sets read
-    * it. */
+    * it. Returns the pin and its row count. */
   private def netCounts(minus: DataFrame, plus: DataFrame,
-                        keys: Seq[String]): DataFrame =
-    pin(fresh(plus)
+                        keys: Seq[String]): (DataFrame, Long) =
+    pinCount(fresh(plus)
       .unionByName(fresh(minus).withColumn("cnt", -col("cnt")))
       .groupBy(keys.map(col): _*).agg(sum("cnt").as("cnt")))
 
   /** The classic materialized-view maintenance identity for an additive
-    * count aggregate: new = prev + net ([[netCounts]]), groups cancelling
-    * to 0 dropped.
+    * count aggregate: new = prev + net ([[netCounts]], of `netRows` rows),
+    * groups cancelling to 0 dropped.
     *
     * Shuffle shape: the previous view is carried with broadcast anti/semi
     * joins on the touched keys; only touched-key rows ever re-aggregate. A
     * naive prev ∪ plus ∪ minus groupBy would shuffle the whole view every
     * delta run. */
-  private def maintainCounts(prev: DataFrame, net: DataFrame,
+  private def maintainCounts(prev: DataFrame, net: DataFrame, netRows: Long,
                              keys: Seq[String]): DataFrame = {
-    val touched = hintSmall(net.select(keys.map(col): _*))
+    val touched = sized(net.select(keys.map(col): _*), netRows).hinted
     fresh(prev).join(touched, keys, "left_anti")
       .unionByName(
         fresh(prev).join(touched, keys, "left_semi")
@@ -524,20 +485,18 @@ object Pipeline {
   }
 
   /** One graph canonicalization mode, defined once: the three stages that
-    * record its delta state, its `graph_canon_fp` rows, whether entity
-    * nodes join its components, and its recompute. [[runDelta]]'s
-    * bootstrap decision and [[corpus]] both read this one value; the
-    * stages, and on a delta the slice closure ([[graphClosure]]), are
-    * shared verbatim by the modes.
+    * record its delta state, its canonicalization parameters, whether
+    * entity nodes join its components, and its recompute. [[runDelta]]'s
+    * fingerprint and [[corpus]] both read this one value; the stages, and
+    * on a delta the slice closure ([[graphClosure]]), are shared verbatim
+    * by the modes.
     *
-    * `canonFp` fingerprints the canonicalization parameters: carried
-    * subject rows embed the thresholds, scorer, and hot-key cap of the run
-    * that produced them, so a delta under DIFFERENT parameters must not
-    * carry (it would mix two configurations' decisions — the
-    * seeds-fingerprint argument, applied to the canon config). A
-    * caller-supplied `scoreFn` is opaque (`custom_fn`) and never matches —
-    * such chains bootstrap every delta (sound: the bootstrap recomputes
-    * under the CURRENT scorer).
+    * `canonFp` lists the parameters that carried subject rows embed — the
+    * thresholds, scorer, and hot-key cap — as the `canon.*` rows of the
+    * run fingerprint ([[runFingerprint]]). A caller-supplied `scoreFn` is
+    * opaque (`custom_fn`) and never matches, so such chains bootstrap
+    * every delta (sound: the bootstrap recomputes under the CURRENT
+    * scorer).
     *
     * `entityAdjacency`: ED's CC runs over ME+MM edges, so an entering
     * mention can reach an old component through a shared DICTIONARY
@@ -558,7 +517,6 @@ object Pipeline {
     /** Kept-mention key counts: the GLOBAL hot-key cap every recompute
       * reads ([[AlignmentGraph.hotKeys]]). */
     val keyCountsStage = s"${tag}_key_counts"
-    def stateStages: Seq[String] = Seq(subjectsStage, compsStage, keyCountsStage)
 
     /** The subject and component rows of the kept mentions `all`, capped
       * by `hotKeys` — the hot set of the mode's key-count view, which is
@@ -754,8 +712,9 @@ object Pipeline {
         val t = runner.run(name)(rows(_.cur))
         new Rel(t, t)
       } else {
-        lazy val net = netCounts(rows(_.old), rows(_.cur), keys)
-        new Rel(runner.run(name)(maintainCounts(prev(name), net, keys)), net)
+        lazy val (net, netRows) = netCounts(rows(_.old), rows(_.cur), keys)
+        new Rel(runner.run(name)(maintainCounts(prev(name), net, netRows,
+                                                keys)), net)
       }
 
     def derived(name: String, inputs: Node[_]*)
@@ -769,9 +728,11 @@ object Pipeline {
   }
 
   /** Rows in exactly one of two distinct sets: the keys whose threshold
-    * verdict flipped, in either direction. */
-  private def flipped(a: DataFrame, b: DataFrame, keys: String*): DataFrame =
-    pin(fresh(a).unionByName(fresh(b))
+    * verdict flipped, in either direction. Returns the pin and its row
+    * count. */
+  private def flipped(a: DataFrame, b: DataFrame,
+                      keys: String*): (DataFrame, Long) =
+    pinCount(fresh(a).unionByName(fresh(b))
       .groupBy(keys.map(col): _*).agg(count(lit(1)).as("c"))
       .filter(col("c") === 1).select(keys.map(col): _*))
 
@@ -793,7 +754,7 @@ object Pipeline {
         .groupBy("label").agg(count(lit(1)).as("cnt"))
     }
     val frequent = st.runner.node("frequent_labels", unlCounts) {
-      hintSmall(fresh(frequentOf(unlCounts().all)))
+      dropSet(fresh(frequentOf(unlCounts().all))).hinted
     }
     // the kept mentions of linked rows: the linked ones, and the unlinked
     // ones (`ent` null) whose label is not boilerplate (read inside bodies
@@ -839,43 +800,42 @@ object Pipeline {
         : Option[Node[Drops]] =
       st.deltaNode("affected_urls", Seq(linkedAll, validTags) ++ touched ++
                    flippedLabels ++ closure: _*) {
-        val labels = flippedLabels.get()
+        val (labels, nLabels) = flippedLabels.get()
         val f9FlipUrls =
-          if (labels.isEmpty) None
+          if (nLabels == 0) None
           else Some(linkedAll().all.filter(col("ent").isNull)
-            .join(hintSmall(labels), Seq("label"), "left_semi")
+            .join(sized(labels, nLabels).hinted, Seq("label"), "left_semi")
             .select("url"))
-        val flippedTags = flipped(validTags().all, validTags().old, "tpe", "tag")
+        val (tags, nTags) =
+          flipped(validTags().all, validTags().old, "tpe", "tag")
         val tagFlipUrls =
-          if (flippedTags.isEmpty) None
+          if (nTags == 0) None
           else {
             // restrict rules to flipped types FIRST (tiny broadcast) so the
             // listing-keyed join is map-side against a small side
             val rulesFlipped = st.prev("type_rules").join(
-              hintSmall(flippedTags.select("tpe").distinct()),
+              sized(tags.select("tpe").distinct(), nTags).hinted,
               Seq("tpe"), "left_semi")
             Some(st.prev(subjectsStage)
               .select(col("url"), col("listing_key"),
                       graft.taxonomy.ValidTags.shapeTag(col("label")).as("tag"))
               .join(rulesFlipped, Seq("url", "listing_key"))
-              .join(hintSmall(flippedTags), Seq("tpe", "tag"), "left_semi")
+              .join(sized(tags, nTags).hinted, Seq("tpe", "tag"), "left_semi")
               .select("url"))
           }
         val widenings = f9FlipUrls.toSeq ++ tagFlipUrls ++
           closure.toSeq.flatMap(_().urls)
-        val touchedUrls = touched.get().rows
-        dropSet(
-          pin((if (widenings.isEmpty) touchedUrls
-           else widenings.foldLeft(touchedUrls.select("url"))(_ unionByName _)
-             .distinct())))
+        if (widenings.isEmpty) touched.get()
+        else dropSet(widenings.foldLeft(touched.get().rows)(_ unionByName _)
+          .distinct())
       }
 
     /** Graph canonicalization. Besides the subject table, a run records the
       * mode's delta state: the components stage (the alignment graph's
-      * connected components), the key-counts stage (kept-mention key counts
-      * — the GLOBAL hot-key cap every recompute reads) and
-      * `graph_canon_fp` (the parameter fingerprint a delta compares before
-      * carrying). A full run declares the key-count view over the kept
+      * connected components) and the key-counts stage (kept-mention key
+      * counts — the GLOBAL hot-key cap every recompute reads); its
+      * parameters are in the run fingerprint. A full run declares the
+      * key-count view over the kept
       * mentions before the recompute; a delta maintains it while it bounds
       * the recompute to the affected components ([[graphClosure]]). Either
       * way the recompute reads its hot set from that one view. One lazy
@@ -914,10 +874,6 @@ object Pipeline {
                                 report = rep) { recomputed._1 }
       st.carried(mode.compsStage, "comp", closure.map(_.map(_.compDrops)),
                  Seq(subjects)) { recomputed._2 }
-      st.runner.stage("graph_canon_fp") {
-        import st.spark.implicits._
-        mode.canonFp.toDF("param", "value")
-      }
       // mining re-derives every url holding an affected mention
       val urls = affectedUrls(mode.subjectsStage, closure)
       val subjectsA = urls.fold(subjects) { u =>
@@ -996,7 +952,7 @@ object Pipeline {
     *    slice's CC ids (min node id) reproduce the full run's. */
   private def graphClosure(st: Stages, mode: GraphMode, linkedAll: Rel,
                            dropUrls: DataFrame, frequent: DataFrame,
-                           flippedLabels: DataFrame, dict: DataFrame,
+                           flippedLabels: (DataFrame, Long), dict: DataFrame,
                            kept: DataFrame => DataFrame,
                            keyCounts: Rel => Rel): GraphClosure = {
     val prevLinked = st.prev("linked_all")
@@ -1005,10 +961,9 @@ object Pipeline {
     val prevKeyCounts = st.prev(mode.keyCountsStage)
 
     // — graph-membership deltas —
+    val (labels, nLabels) = flippedLabels
     val leaverLabels =
-      hintSmall(pin(flippedLabels.join(frequent, Seq("label"), "left_semi")))
-    val entrantLabels =
-      flippedLabels.join(frequent, Seq("label"), "left_anti")
+      sized(labels.join(frequent, Seq("label"), "left_semi"), nLabels).hinted
     val droppedRows = prevCompMentions.join(dropUrls, Seq("url"), "left_semi")
     val leaverRows = prevCompMentions
       .join(leaverLabels, Seq("label"), "left_semi")
@@ -1016,7 +971,8 @@ object Pipeline {
     // entrants carry full linked rows (subject assembly needs listing_key)
     val entrantRows = prevLinked.filter(col("ent").isNull)
       .join(dropUrls, Seq("url"), "left_anti")
-      .join(hintSmall(pin(entrantLabels)), Seq("label"), "left_semi")
+      .join(sized(labels.join(frequent, Seq("label"), "left_anti"),
+                  nLabels).hinted, Seq("label"), "left_semi")
       .withColumn("ent", lit(null).cast("string"))
     val freshKept = pin(kept(linkedAll.cur))
     val enteringMentions = pin(fresh(freshKept.select("mention_id", "label"))
@@ -1028,7 +984,7 @@ object Pipeline {
         .unionByName(leaverRows.select("mention_id", "label"))))
     val hotNew = pin(AlignmentGraph.hotKeys(keys.all))
     val hotPrev = pin(AlignmentGraph.hotKeys(prevKeyCounts))
-    val flippedKeys = flipped(hotNew, hotPrev, "key")
+    val flippedKeys = (sized _).tupled(flipped(hotNew, hotPrev, "key"))
 
     // — affected components: exits ∪ flipped keys ∪ adjacency of entrants —
     // STABLY-HOT keys (hot in prev AND new counts) cannot carry MM
@@ -1040,12 +996,12 @@ object Pipeline {
     // Hotness FLIPS (either direction) change the key's mm edges
     // everywhere and stay fully covered by viaFlippedKeys.
     val stablyHot = hotNew.join(hotPrev, Seq("key"), "left_semi")
-    val enteringKeys = pin(AlignmentGraph.graphMentions(enteringMentions)
-      .select("key").distinct())
+    val (enteringKeys, nKeys) = pinCount(
+      AlignmentGraph.graphMentions(enteringMentions).select("key").distinct())
     val enteringMmKeys =
-      pin(enteringKeys.join(stablyHot, Seq("key"), "left_anti"))
+      sized(enteringKeys.join(stablyHot, Seq("key"), "left_anti"), nKeys)
     val viaKey = prevCompMentions
-      .join(hintSmall(enteringMmKeys), Seq("key"), "left_semi").select("comp")
+      .join(enteringMmKeys.hinted, Seq("key"), "left_semi").select("comp")
     // ED only: an entering mention also reaches old components through its
     // DICTIONARY CANDIDATES (ME edges are CC edges there; BU components
     // are MM-only, where ME edges never bridge). The stably-hot exclusion
@@ -1054,32 +1010,32 @@ object Pipeline {
     val viaEnt =
       if (!mode.entityAdjacency) None
       else Some(prevComps.filter(col("mention_id").isNull)
-        .join(hintSmall(pin(AlignmentGraph.candidateNodes(enteringKeys, dict))),
+        .join(dropSet(AlignmentGraph.candidateNodes(enteringKeys, dict)).hinted,
               Seq("node"), "left_semi")
         .select("comp"))
     val viaFlippedKeys = prevCompMentions
-      .join(hintSmall(flippedKeys), Seq("key"), "left_semi").select("comp")
+      .join(flippedKeys.hinted, Seq("key"), "left_semi").select("comp")
     val affectedComps = dropSet(
-      pin((Seq(leaverRows.select("comp"), viaKey) ++ viaEnt :+ viaFlippedKeys)
+      (Seq(leaverRows.select("comp"), viaKey) ++ viaEnt :+ viaFlippedKeys)
         .foldLeft(droppedRows.select("comp"))(_ unionByName _)
-        .distinct()))
+        .distinct())
 
     // — the slice: surviving members of affected components + entrants +
     //   fresh kept mentions (full rows via prevLinked / linkedAll.cur) —
-    val affectedPrevMentions = pin(
+    val (affectedPrevMentions, nAffected) = pinCount(
       prevCompMentions.join(affectedComps.hinted, Seq("comp"), "left_semi"))
     val survivorIds = affectedPrevMentions
       .join(dropUrls, Seq("url"), "left_anti")
       .join(leaverLabels, Seq("label"), "left_anti")
       .select("mention_id")
     val survivorRows = kept(
-      prevLinked.join(hintSmall(pin(survivorIds)),
+      prevLinked.join(sized(survivorIds, nAffected).hinted,
                       Seq("mention_id"), "left_semi"))
     val sliceAll = pin(survivorRows.unionByName(entrantRows.select(
         survivorRows.columns.map(col): _*))
       .unionByName(freshKept))
     GraphClosure(sliceAll, hotNew,
-      dropSet(pin(affectedPrevMentions.select("mention_id"))),
+      sized(affectedPrevMentions.select("mention_id"), nAffected),
       affectedComps,
       Seq(affectedPrevMentions.select("url"), freshKept.select("url")))
   }
@@ -1166,7 +1122,7 @@ object Pipeline {
     // the touched set so every join in the fresh slice is broadcast-sized.
     def touchedEnts(counts: Node[Rel]): Option[Node[Drops]] =
       st.deltaNode(s"${counts.name}_ents", counts) {
-        dropSet(pin(counts().cur.select("ent").distinct()))
+        dropSet(counts().cur.select("ent").distinct())
       }
     val touchedTypeEnts = touchedEnts(typeCandCounts)
     val touchedRelEnts = touchedEnts(relCandCounts)

@@ -20,29 +20,12 @@ object Schemas {
   case class Triple(subj: String, pred: String, obj: String,
                     is_literal: Boolean)
 
-  /** A listing item mention after explode (≙ WikiMention,
-    * `impl/wikipedia/page_parser.py:97-110`). mention_id is content-derived
-    * (url, listing, item, span) so it is parallelism-invariant. */
-  case class Mention(url: String, listing_idx: Int, item_idx: Int,
-                     label: String, target: String)
-
-  /** Alias-dictionary row (≙ surface-form store,
-    * `impl/dbpedia/resource.py:180-194`). */
-  case class Alias(alias: String, ent: String, freq: Double)
-
   /** Taxonomy edge: child type → direct parent type. */
   case class TypeEdge(child: String, parent: String)
 
   /** Known-entity seed row (≙ DBpedia instance types,
     * `impl/dbpedia/resource.py:205-219`). */
   case class EntityType(ent: String, tpe: String)
-
-  /** Per-stage lineage record (north rule: per-partition checkpoint +
-    * lineage + counters; ≙ the reference's versioned cache registry,
-    * `/root/reference/utils.py:66-118`). */
-  case class Lineage(stage: String, run_id: String, rows_in: Long,
-                     rows_out: Long, skipped: Long, wall_ms: Long,
-                     resumed: Boolean, loop_rounds: Long, converged: Boolean)
 
   object Preds {
     val Type = "rdf:type"
@@ -71,8 +54,4 @@ object Schemas {
     val OwlObjectProperty = "owl:ObjectProperty"
     val VoidDataset = "void:Dataset"
   }
-
-  /** NIL-entity sentinels (≙ EntityIndex, `impl/util/transformer.py:5-9`). */
-  val NewEntity = -1L
-  val NoEntity = -2L
 }

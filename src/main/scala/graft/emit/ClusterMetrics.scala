@@ -2,7 +2,7 @@ package graft.emit
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.runtime.Checkpoints.pin
+import graft.runtime.Checkpoints.pinCount
 
 /** Clustering evaluation metrics for entity-disambiguation quality (A17;
   * reference: NMI/ARI/B³ family at
@@ -75,11 +75,10 @@ object ClusterMetrics {
     // corpus-scale shuffle (a round-3 plan dump, see graft.tools.BenchExtra, caught 3 scans);
     // with it the corpus is read and shuffled exactly ONCE and every
     // downstream frame derives from the contingency-sized checkpoint
-    val joint = pin(assign.groupBy(col("pred"), col("gold"))
+    val (joint, cells) = pinCount(assign.groupBy(col("pred"), col("gold"))
       .agg(count(lit(1)).cast("double").as("n_sg")))
-    // checkpoint is eager, so the emptiness probe is contingency-priced;
     // mirror the driver twin's contract instead of emitting an all-null row
-    require(!joint.isEmpty, "empty assignment")
+    require(cells > 0, "empty assignment")
     val predS = joint.groupBy("pred")
       .agg(sum("n_sg").as("n_s"), max("n_sg").as("max_sg"))
     val goldS = joint.groupBy("gold").agg(sum("n_sg").as("n_g"))

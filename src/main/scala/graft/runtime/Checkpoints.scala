@@ -1,6 +1,7 @@
 package graft.runtime
 
 import java.util.concurrent.ConcurrentHashMap
+import org.apache.spark.GraftPins
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
@@ -29,11 +30,13 @@ import org.apache.spark.sql.functions.col
   * run, query or caller are never touched. */
 object Checkpoints {
 
-  /** The pins of one run or query, freed (non-blocking) by [[close]]. */
+  /** The pins of one run or query, freed (non-blocking) by [[close]].
+    * Pins are freed through [[GraftPins]], without `RDD.unpersist`'s
+    * warning that a local checkpoint cannot be recomputed. */
   final class Owner {
     private[Checkpoints] val pins = ConcurrentHashMap.newKeySet[RDD[_]]()
 
-    def close(): Unit = pins.forEach { r => r.unpersist(false); pins.remove(r) }
+    def close(): Unit = pins.forEach { r => GraftPins.release(r); pins.remove(r) }
   }
 
   private val current = new ThreadLocal[Owner]
@@ -75,7 +78,7 @@ object Checkpoints {
     * claimed. Call it on a superseded pin, not on a frame derived from
     * pins that are still read. */
   def free(df: DataFrame): Unit = pinsOf(df).foreach { r =>
-    r.unpersist(false)
+    GraftPins.release(r)
     Option(owner).foreach(_.pins.remove(r))
   }
 

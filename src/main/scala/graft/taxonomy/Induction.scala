@@ -3,7 +3,7 @@ package graft.taxonomy
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.runtime.Checkpoints.pin
+import graft.runtime.Checkpoints.{pin, pinCount}
 
 /** Ontology heuristics induced from instance data (A10-A12; reference:
   * `/root/reference/impl/dbpedia/heuristics.py`):
@@ -97,10 +97,9 @@ object Induction {
     val typePred = pin(relations.select(col("sub").as("ent"), col("pred"))
       .join(types, "ent")
       .groupBy("tpe", "pred").agg(count(lit(1)).as("cnt")))
-    // type-list-sized; pinned — consumed by the nTypes count and both
-    // cross-join sides (each was a full scan of the types input)
-    val allTypes = pin(types.select("tpe").distinct())
-    val nTypes = allTypes.count()
+    // type-list-sized; pinned — its row count is nTypes, and both
+    // cross-join sides read it (each was a full scan of the types input)
+    val (allTypes, nTypes) = pinCount(types.select("tpe").distinct())
     val df = typePred.groupBy("pred")
       .agg(countDistinct("tpe").as("df"))
     val tf = typePred.withColumn("total",

@@ -59,7 +59,8 @@ object PipelineSoak {
       else graft.Pipeline.Canonicalization.Components
     val t0 = System.nanoTime()
     val t0Ms = System.currentTimeMillis()
-    val triples = graft.Pipeline.run(spark, pages, seeds, out, canon = canon)
+    val triples = graft.Pipeline.run(spark, pages, seeds, out, "run-1",
+                                     canon = canon)
     val t1Ms = System.currentTimeMillis()
     val nt = triples.count()
     val sec = (System.nanoTime() - t0) / 1e9
@@ -84,7 +85,7 @@ object PipelineSoak {
       val tD = System.nanoTime()
       val tDMs = System.currentTimeMillis()
       val deltaTriples = graft.Pipeline.runDelta(spark, v2, seeds, outD, out,
-                                                 canon = canon)
+                                                 "delta-1", canon = canon)
       val tD1Ms = System.currentTimeMillis()
       val ntD = deltaTriples.count()
       val secD = (System.nanoTime() - tD) / 1e9

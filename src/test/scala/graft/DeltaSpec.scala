@@ -223,6 +223,7 @@ class DeltaSpec extends SparkSuite {
       assert(graft.runtime.StageRunner.completed(spark, outDir, s),
              s"bootstrap did not record $s")
     }
+    reverseBootstrap(outDir, v1, prevDir)
   }
 
   test("delta composes with bottom-up canonicalization (bootstrap path)") {
@@ -246,6 +247,24 @@ class DeltaSpec extends SparkSuite {
       assert(graft.runtime.StageRunner.completed(spark, outDir, s),
              s"bootstrap did not record '$s'")
     }
+    reverseBootstrap(outDir, v1, prevDir)
+  }
+
+  /** The reverse of the two bootstrap tests above: the graph-mode outDir
+    * `graphDir` seeds a Components delta back to crawl `v1`. Its
+    * canonicalization differs, so the corpus stages bootstrap (no
+    * `subjects_fresh`), and the triples equal those of the full
+    * Components run `ccDir` over `v1`. */
+  private def reverseBootstrap(graphDir: String, v1: Seq[Page],
+                               ccDir: String): Unit = {
+    val back = SparkSuite.tempDir("graft-delta-back")
+    val delta = Pipeline.runDelta(spark, v1.toDS().toDF(), seeds, back,
+                                  graphDir)
+    val pr = TripleDiff.diff(delta,
+                             Pipeline.run(spark, v1.toDS().toDF(), seeds, ccDir))
+    assert(pr.precision == 1.0 && pr.recall == 1.0, s"reverse drift: $pr")
+    assert(!graft.runtime.StageRunner.completed(spark, back, "subjects_fresh"),
+           "a Components delta over a graph-mode prevDir must bootstrap")
   }
 
   test("BU-mode delta is COMPONENT-bounded and == a fresh full BU run") {
@@ -438,8 +457,8 @@ class DeltaSpec extends SparkSuite {
   test("changed canonicalization parameters BOOTSTRAP instead of carrying " +
        "(carried rows embed prevDir's thresholds)") {
     // full ED at the default pathThreshold, then a delta at a DIFFERENT
-    // pathThreshold: the graph state exists but its graph_canon_fp
-    // mismatches, so the delta must NOT slice-carry (it would mix two
+    // pathThreshold: the graph state exists but its run_fp canon rows
+    // mismatch, so the delta must NOT slice-carry (it would mix two
     // configurations' linked/NIL decisions) — it bootstraps, recomputing
     // the corpus stages under the CURRENT parameters, and must equal a
     // fresh full run at those parameters.
@@ -462,9 +481,9 @@ class DeltaSpec extends SparkSuite {
     assert(!graft.runtime.StageRunner
              .completed(spark, outDir, "subjects_ed_fresh"),
            "parameter change must not slice-carry")
-    val fp = spark.read.parquet(s"$outDir/graph_canon_fp")
+    val fp = spark.read.parquet(s"$outDir/run_fp")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(fp("path_threshold") == "0.9", s"recorded fp: $fp")
+    assert(fp("canon.path_threshold") == "0.9", s"recorded fp: $fp")
   }
 
   test("chained ED deltas: an ED delta outDir seeds the next ED delta") {
@@ -481,6 +500,65 @@ class DeltaSpec extends SparkSuite {
                                     canon = ed)
     val pr = TripleDiff.diff(triples, world.expectedTriples.toDS().toDF())
     assert(pr.precision == 1.0 && pr.recall == 1.0, s"ED chain drift: $pr")
+  }
+
+  /** A full ScoredEd run over the previous crawl, which the refusal tests
+    * below copy and damage. */
+  private lazy val edPrev: String = {
+    val d = SparkSuite.tempDir("graft-delta-edprev")
+    Pipeline.run(spark, previousCrawl(world.pages)._1.toDS().toDF(), seeds, d,
+                 canon = Pipeline.Canonicalization.ScoredEd())
+    d
+  }
+
+  /** A fresh copy of the outDir `dir`. */
+  private def copyOf(dir: String): String = {
+    import java.nio.file.{Files, Paths}
+    val to = SparkSuite.tempDir("graft-delta-copy")
+    val from = Paths.get(dir)
+    Files.walk(from).forEach { p =>
+      val t = Paths.get(to).resolve(from.relativize(p))
+      if (Files.isDirectory(p)) Files.createDirectories(t)
+      else Files.copy(p, t)
+    }
+    to
+  }
+
+  /** `runDelta` over `prevDir` in ScoredEd mode must refuse with a message
+    * holding `expected` and write nothing to its outDir. */
+  private def assertRefused(prevDir: String, expected: String): Unit = {
+    val outDir = SparkSuite.tempDir("graft-delta-refused")
+    val e = intercept[IllegalArgumentException] {
+      Pipeline.runDelta(spark, world.pages.toDS().toDF(), seeds, outDir,
+                        prevDir, canon = Pipeline.Canonicalization.ScoredEd())
+    }
+    assert(e.getMessage.contains(expected), e.getMessage)
+    val written = new java.io.File(outDir).list().toSeq
+    assert(written.isEmpty, s"a refused delta wrote $written")
+  }
+
+  test("a ScoredEd prevDir missing any graph-state stage is refused") {
+    // the run fingerprints match, so the corpus stages carry, and each
+    // state table they read is required
+    for (stage <- Seq("subjects_ed", "ed_components", "ed_key_counts")) {
+      val prevDir = copyOf(edPrev)
+      java.nio.file.Files.walk(java.nio.file.Paths.get(prevDir, stage))
+        .sorted(java.util.Comparator.reverseOrder())
+        .forEach(java.nio.file.Files.delete(_))
+      assertRefused(prevDir, s"lacks the '$stage' checkpoint")
+    }
+  }
+
+  test("a prevDir whose run_fp format differs is refused before any stage " +
+       "commits") {
+    val prevDir = copyOf(edPrev)
+    val fp = spark.read.parquet(s"$prevDir/run_fp").as[(String, String)]
+      .collect().toSeq
+    assert(fp.exists(_._1 == "format"), s"recorded fp: $fp")
+    fp.map { case (k, v) => (k, if (k == "format") s"$v-old" else v) }
+      .toDF("param", "value").write.mode("overwrite")
+      .parquet(s"$prevDir/run_fp")
+    assertRefused(prevDir, "FORMAT changed")
   }
 
   test("a seeds change between runs refuses to carry (incl. multiset swaps)") {

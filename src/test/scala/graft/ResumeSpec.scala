@@ -59,6 +59,24 @@ class ResumeSpec extends SparkSuite {
            s"missing: ${first -- lin.map(_._1)}, extra: ${lin.map(_._1).toSet -- first}")
   }
 
+  test("two default-id runs into one outDir record two run ids") {
+    val outDir = SparkSuite.tempDir("graft-resume-ids")
+    val pagesDf = world.pages.toDS().toDF()
+    def runIds = spark.read.parquet(s"$outDir/_lineage")
+      .select("run_id").distinct().as[String].collect().toSet
+    Pipeline.run(spark, pagesDf, seeds, outDir)
+    val first = runIds
+    Pipeline.run(spark, pagesDf, seeds, outDir)
+    val second = runIds -- first
+    assert(first.size == 1 && second.size == 1, s"run ids: $first, $second")
+    // every row of the second run is a resumed stage
+    val resumed = spark.read.parquet(s"$outDir/_lineage")
+      .filter(col("run_id") === second.head)
+      .select("resumed").as[Boolean].collect()
+    assert(resumed.nonEmpty && resumed.forall(identity),
+           s"rows of the second run: ${resumed.toSeq}")
+  }
+
   test("losing concurrent branches re-runs exactly those stages") {
     val outDir = SparkSuite.tempDir("graft-resume-branches")
     val pagesDf = world.pages.toDS().toDF()
