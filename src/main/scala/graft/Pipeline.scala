@@ -132,9 +132,15 @@ object Pipeline {
   val MaxBroadcastKeys = 2000000L
 
   /** Run (or resume) the full pipeline; returns the triple table.
-    * `canon` picks the canonicalization mode; resume is per-stage by name,
-    * so use a FRESH outDir when changing modes (mode-specific stages are
-    * name-suffixed, but downstream stages are shared).
+    * `canon` picks the canonicalization mode. Resume is per stage by name,
+    * under one rule ([[judge]]), applied before any stage runs: a
+    * non-empty outDir resumes only when its run header — the seed tables'
+    * fingerprint and the canonicalization parameters it was written under
+    * ([[runHeader]]) — equals this call's. Another header is refused with
+    * the rows that differ, and so is a non-empty outDir without one
+    * (written by an older engine). A refused call writes nothing. The
+    * header covers neither the crawl nor an opaque `scoreFn` scorer
+    * (`custom_fn`): a resume assumes the same pages and the same scorer.
     *
     * A full run is a [[runDelta]] with no previous state. Both entry points
     * drive one stage list ([[stages]]) in which every corpus-level stage is
@@ -176,11 +182,10 @@ object Pipeline {
     * both directions).
     *
     * What the delta may take from prevDir is decided by one rule
-    * ([[carriesCorpus]]), before any stage runs: it compares this run's
-    * fingerprint ([[runFingerprint]]) with the `run_fp` table prevDir
-    * recorded.
+    * ([[judge]]), before any stage runs: it compares this run's header
+    * ([[runHeader]]) with the run header prevDir recorded.
     *
-    * | prevDir's `run_fp`                        | outcome   |
+    * | prevDir's run header                      | outcome   |
     * |-------------------------------------------|-----------|
     * | missing                                   | refused   |
     * | `format` row differs                      | refused   |
@@ -188,71 +193,54 @@ object Pipeline {
     * | a `canon.*` row differs, or `custom_fn`   | bootstrap |
     * | equal                                     | carry     |
     *
-    * Refused: "lacks the 'run_fp' checkpoint", "FORMAT changed", "seed
-    * tables differ" (a dictionary change invalidates carried links; use
-    * [[run]] on a fresh outDir). Bootstrap: the corpus stages run with no
+    * Refused: "has no run header", "FORMAT changed", "seed tables differ"
+    * (a dictionary change invalidates carried links; use [[run]] on a
+    * fresh outDir). Bootstrap: the corpus stages run with no
     * previous state under this run's parameters and record fresh state for
     * the next delta. The prefix (manifest, text, mentions, links,
     * hypernyms) is canonicalization-free and carries in both the last two
     * rows. Carry: every table a declaration reads from prevDir is
     * registered when it is declared ([[Stages]]), and once the graph is
     * declared each must be committed in prevDir, else the delta refuses
-    * with "lacks the '<stage>' checkpoint". A refused delta commits
+    * with "lacks the '<stage>' checkpoint". The delta's own header also
+    * records prevDir (`prev`), so a re-run into its outDir resumes only
+    * over the same prevDir, as [[run]] resumes. A refused delta commits
     * nothing. The default `runId` is new on every call. */
   def runDelta(spark: SparkSession, newPages: DataFrame, seedsIn: Seeds,
                outDir: String, prevDir: String,
                runId: String = s"delta-${java.util.UUID.randomUUID}",
-               canon: Canonicalization = Canonicalization.Components): DataFrame = {
-    def qualified(dir: String) = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p)
-    }
-    require(qualified(outDir) != qualified(prevDir),
-            "runDelta: outDir must differ from prevDir — running in place " +
-            "would resume every stage from the previous checkpoints and " +
-            "silently ignore the new crawl")
+               canon: Canonicalization = Canonicalization.Components): DataFrame =
     stages(spark, newPages, seedsIn, outDir, runId, graphMode(spark, canon),
-           Some(prevDir))
-  }
-
-  /** The prevDir contract of [[runDelta]], one stage at a time. */
-  private def requirePrevStage(spark: SparkSession, prevDir: String,
-                               stage: String): Unit =
-    require(StageRunner.completed(spark, prevDir, stage),
-            s"runDelta: $prevDir lacks the '$stage' checkpoint — prevDir " +
-            "must be the outDir of a completed run() or runDelta() " +
-            "(outDirs of an older engine cannot seed a delta; run full once)")
+           Some(StageRunner.qualified(spark, prevDir)))
 
   /** The one stage graph behind [[run]] (`prevDir` = None) and
     * [[runDelta]]: the per-page prefix, then [[corpus]]. Every stage names
     * its input stages, and [[StageRunner#execute]] runs each as soon as
-    * they have committed — independent branches (the manifest and the run
-    * fingerprint, hypernym mining, the tag gate beside canonicalization,
+    * they have committed — independent branches (the manifest, hypernym
+    * mining, the tag gate beside canonicalization,
     * the rule miners, the taxonomy closure, provenance) overlap. Every pin
     * the call takes, on this thread or a stage's, is freed when it returns
     * or throws ([[Checkpoints]]); the returned triples read only parquet.
-    * `mode` is the graph canonicalization mode, None for Components. */
+    * `mode` is the graph canonicalization mode, None for Components. A
+    * fresh outDir's run header is committed as the last step of declaring
+    * the graph, once every check has passed and before any stage body
+    * starts, so every committed stage is covered by it. */
   private def stages(spark: SparkSession, pages: DataFrame, seedsIn: Seeds,
                      outDir: String, runId: String, mode: Option[GraphMode],
                      prevDir: Option[String]): DataFrame = Checkpoints.owned {
     Normalize.register(spark)
     val seeds = pinSeeds(seedsIn)
-    val fp = runFingerprint(seeds, mode)
-    val carryCorpus = prevDir.forall(carriesCorpus(spark, _, fp))
+    val header = runHeader(seeds, mode, prevDir)
+    val (resume, carryCorpus) = judge(spark, outDir, prevDir, header.toMap)
     val runner = new StageRunner(spark, outDir, runId)
     val st = new Stages(spark, runner, prevDir)
 
     // 0. crawl manifest: the (url, warc_ts, content_fp) fingerprint of the
     // consumed crawl slice. A later [[runDelta]] anti-joins its new crawl
     // against this to find changed/added pages — the content fingerprint
-    // catches a capture rewritten under an unchanged timestamp. Plus the
-    // run fingerprint a later delta compares.
+    // catches a capture rewritten under an unchanged timestamp.
     runner.execute {
       val manifest = runner.stage("crawl_manifest") { manifestOf(pages) }
-      runner.stage("run_fp") {
-        import spark.implicits._
-        fp.toDF("param", "value")
-      }
       st.reads("crawl_manifest")
       val touched = st.deltaNode("touched_urls", manifest) {
         touchedUrls(manifest(), st.prev("crawl_manifest"))
@@ -264,24 +252,18 @@ object Pipeline {
       }
 
       // 2. listings → items → subject mentions. Only the slice's mentions
-      // are checkpointed ("mentions_fresh" on a delta — run()'s corpus-wide
-      // "mentions" checkpoint must never resume into the delta-only shape
-      // or vice versa, the linked_all/linked lesson)
-      val mentions = st.sliceOnly("mentions", Seq(pagesText)) {
+      // are checkpointed ("mentions_fresh" on a delta)
+      val mentions = runner.stage(if (st.delta) "mentions_fresh" else "mentions",
+                                  pagesText) {
         ListingExtract.mentions(pagesText().cur)
       }
 
       // 3. entity linking (broadcast alias dict incl. folded spelling
       // redirects). ONE broadcast-join execution; linked/unlinked are
       // filters over the checkpointed join output (ent nullable), not two
-      // separate stages. Stage name is "linked_all", NOT the pre-r3
-      // "linked": the checkpoint shape changed (nullable ent, unlinked rows
-      // included) and StageRunner resumes by name — a stale "linked"
-      // checkpoint must never resume into the new shape (it would silently
-      // empty the NIL path).
+      // separate stages.
       val dict = buildDict(seeds)
-      val linkedAll = st.carried("linked_all", "url", touched, Seq(mentions),
-                                 freshName = "linked_fresh") {
+      val linkedAll = st.carried("linked_all", "url", touched, Seq(mentions)) {
         AliasLink.linkAll(mentions(), dict)
       }
 
@@ -308,41 +290,61 @@ object Pipeline {
                  linkedAll.map(r => new Rel(r.all, r.all)), None, dict,
                  seeds, mode)
       st.requirePrev()
+      if (!resume) StageRunner.commitMarker(spark, outDir, RunHeader,
+        header.map { case (k, v) => s"$k=$v\n" }.mkString)
       triples
     }
   }
 
-  /** The one decision of a delta over `prevDir` ([[runDelta]]'s table),
-    * made before any stage runs: compares this run's fingerprint `fp` with
-    * prevDir's `run_fp`. Refuses a missing fingerprint, a changed `format`
-    * (a changed formula is not a seed change, and is not reported as one —
-    * ADVICE r4) and changed seeds (carried pages_text/linked_all rows would
-    * silently mix stale semantics). Returns whether the corpus stages
-    * carry: only when every `canon.*` row matches and none is an opaque
-    * `custom_fn` scorer (never provably equal). Carried subject rows embed
-    * prevDir's thresholds, scorer and hot-key cap, so carrying them under
-    * other parameters would mix two configurations' decisions. */
-  private def carriesCorpus(spark: SparkSession, prevDir: String,
-                            fp: Seq[(String, String)]): Boolean = {
-    requirePrevStage(spark, prevDir, "run_fp")
-    val prev = spark.read.parquet(s"$prevDir/run_fp")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val cur = fp.toMap
-    def rows(m: Map[String, String], prefix: String) =
-      m.filter(_._1.startsWith(prefix))
-    require(prev.get("format") == cur.get("format"),
-            s"runDelta: run-fingerprint FORMAT changed (prevDir recorded " +
-            s"v${prev.getOrElse("format", "?")}, this engine computes " +
-            s"v$RunFpFormat) — the seed tables may be byte-identical, but " +
-            "the recorded fingerprint cannot be compared; run full once on " +
-            "a fresh outDir to re-record it")
-    require(rows(prev, "seeds.") == rows(cur, "seeds."),
-            s"runDelta: seed tables differ from prevDir's recorded " +
-            s"fingerprint (prev=${rows(prev, "seeds.")}, " +
-            s"current=${rows(cur, "seeds.")}) — carried links would be " +
-            "stale; run full on a fresh outDir instead")
-    val canon = rows(cur, "canon.")
-    canon == rows(prev, "canon.") && !canon.values.exists(_ == "custom_fn")
+  /** The one judge of the committed state a call reuses, before any stage
+    * runs; the only reader of a run header. Returns whether outDir
+    * resumes, and whether the corpus stages carry from prevDir.
+    *  - a delta into its own prevDir is refused ("outDir must differ");
+    *  - outDir ([[run]]'s rule): an equal header resumes; another header
+    *    is refused with the rows that differ; no header in a non-empty
+    *    outDir is refused (an older engine wrote it, and its stages cannot
+    *    be matched to a header); an empty or absent outDir runs fresh.
+    *    Hidden (`.`-prefixed) entries — a temp file an interrupted header
+    *    commit left, checksum files — do not make an outDir non-empty.
+    *  - prevDir ([[runDelta]]'s table): refuses a missing header, a
+    *    changed `format` (a changed formula is not a seed change, and is
+    *    not reported as one — ADVICE r4) and changed seeds (carried
+    *    pages_text/linked_all rows would silently mix stale semantics).
+    *    The corpus stages carry only when every `canon.*` row matches and
+    *    none is an opaque `custom_fn` scorer (never provably equal).
+    *    Carried subject rows embed prevDir's thresholds, scorer and
+    *    hot-key cap, so carrying them under other parameters would mix two
+    *    configurations' decisions. */
+  private def judge(spark: SparkSession, outDir: String,
+                    prevDir: Option[String],
+                    cur: Map[String, String]): (Boolean, Boolean) = {
+    def headerOf(dir: String) = StageRunner.metaOf(spark, dir, RunHeader)
+    // the rows of `rec` under `prefix` that differ from this call's
+    def differ(rec: Map[String, String], prefix: String) = (rec.keySet ++ cur.keySet)
+      .filter(k => k.startsWith(prefix) && rec.get(k) != cur.get(k)).mkString(", ")
+    require(!cur.get("prev").contains(StageRunner.qualified(spark, outDir)),
+            "runDelta: outDir must differ from prevDir")
+    val recorded = headerOf(outDir)
+    val changed = recorded.fold("")(differ(_, ""))
+    require(changed.isEmpty, s"$outDir was written under another run " +
+            s"header (rows $changed differ); use a fresh outDir")
+    require(recorded.isDefined || StageRunner.isEmpty(spark, outDir),
+            s"$outDir holds files but no run header (an older engine " +
+            "wrote it); use a fresh outDir")
+    val carry = prevDir.forall { dir =>
+      val prev = headerOf(dir).getOrElse(throw new IllegalArgumentException(
+        s"runDelta: $dir has no run header — prevDir must be the outDir " +
+        "of a run() or runDelta() of this engine; run full once"))
+      require(differ(prev, "format").isEmpty, "runDelta: run-header FORMAT " +
+              s"changed (prevDir recorded v${prev.getOrElse("format", "?")}" +
+              s", this engine writes v$RunFpFormat); run full once")
+      require(differ(prev, "seeds.").isEmpty, "runDelta: seed tables differ " +
+              s"from prevDir's (${differ(prev, "seeds.")}) — carried links " +
+              "would be stale; run full on a fresh outDir")
+      differ(prev, "canon.").isEmpty &&
+        !cur.get("canon.me_score").contains("custom_fn")
+    }
+    (recorded.isDefined, carry)
   }
 
   /** The urls a delta re-derives. The join must be keyed by the SMALL
@@ -383,14 +385,20 @@ object Pipeline {
     pages.filter(col("lang") === "en")
       .select(col("url"), col("warc_ts"), xxhash64(col("html")).as("content_fp"))
 
-  /** The format of the run fingerprint. Bump it on ANY change to how a
-    * row is computed: a byte-identical seed set then yields different
-    * values, and without the `format` row [[carriesCorpus]] would misreport
-    * that as "seed tables differ" (ADVICE r4). */
-  private val RunFpFormat = "1"
+  /** The run header's file under an outDir: `key=value` lines, the format
+    * of a `_layer` marker. */
+  private val RunHeader = "_run_fp"
 
-  /** The run fingerprint: the (param, value) rows every run records as its
-    * `run_fp` stage, and the one thing [[carriesCorpus]] compares.
+  /** The format of the run header. Bump it on ANY change to how a row is
+    * computed — a byte-identical seed set then yields different values,
+    * and without the `format` row [[judge]] would misreport that as "seed
+    * tables differ" (ADVICE r4) — and on any change to the layout of the
+    * stages it covers, so an outDir of the old layout is refused rather
+    * than resumed or carried. */
+  private val RunFpFormat = "2"
+
+  /** The run header: the (key, value) rows every outDir records in
+    * [[RunHeader]], and the one thing [[judge]] compares.
     *  - `format`: [[RunFpFormat]];
     *  - `seeds.<table>`: an order-independent, multiset-sensitive hash of
     *    each seed table — the SUM of per-row xxhash64 (as decimal(38,0),
@@ -401,11 +409,12 @@ object Pipeline {
     *    shifting across columns cannot alias (xxhash64 folds a null field
     *    without a position contribution). Partitioning-invariant;
     *  - `canon.<param>`: the canonicalization parameters — the graph
-    *    mode's `canonFp`, or `mode = components`.
+    *    mode's `canonFp`, or `mode = components`;
+    *  - `prev`: a delta's Hadoop-qualified prevDir.
     * One aggregate over the unioned row hashes of every seed table,
     * collected here, before the stage graph starts. */
-  private def runFingerprint(seeds: Seeds, mode: Option[GraphMode])
-      : Seq[(String, String)] = {
+  private def runHeader(seeds: Seeds, mode: Option[GraphMode],
+                        prev: Option[String]): Seq[(String, String)] = {
     val tables = Seq(
       "aliases" -> seeds.aliases, "entity_types" -> seeds.entityTypes,
       "taxonomy_edges" -> seeds.taxonomyEdges,
@@ -425,7 +434,8 @@ object Pipeline {
       (tables.map { case (name, df) =>
         s"seeds.$name" ->
           (if (df == null) "none" else hashes.getOrElse(name, "empty"))
-      } ++ canon.map { case (k, v) => s"canon.$k" -> v })
+      } ++ canon.map { case (k, v) => s"canon.$k" -> v } ++
+        prev.map("prev" -> _))
   }
 
   /** `rows` as [[Drops]], where `bound` (a pin's row count — of `rows`
@@ -493,7 +503,7 @@ object Pipeline {
     *
     * `canonFp` lists the parameters that carried subject rows embed — the
     * thresholds, scorer, and hot-key cap — as the `canon.*` rows of the
-    * run fingerprint ([[runFingerprint]]). A caller-supplied `scoreFn` is
+    * run header ([[runHeader]]). A caller-supplied `scoreFn` is
     * opaque (`custom_fn`) and never matches, so such chains bootstrap
     * every delta (sound: the bootstrap recomputes under the CURRENT
     * scorer).
@@ -541,14 +551,11 @@ object Pipeline {
   /** The subject rows of the kept mentions `kept` (url, listing_key,
     * mention_id, label, key), whose entity is `ent`: a null `ent` is a NIL
     * mention, which takes the new entity of its alias key. All three
-    * canonicalization modes assemble their subject table here; `is_new`
-    * stays in the table so carry layers over older outDirs still union by
-    * name. */
+    * canonicalization modes assemble their subject table here. */
   private def subjectRows(kept: DataFrame, ent: Column): DataFrame =
     kept.select(col("url"), col("listing_key"), col("mention_id"),
                 col("label"),
-                coalesce(ent, NilCluster.entity(col("key"))).as("ent"),
-                ent.isNull.as("is_new"))
+                coalesce(ent, NilCluster.entity(col("key"))).as("ent"))
 
   /** The [[GraphMode]] of `canon`; None for Components. */
   private def graphMode(spark: SparkSession,
@@ -626,7 +633,6 @@ object Pipeline {
     *    whole input. Delta: [[maintainCounts]] of the previous view with the
     *    rows of the old and the new slice;
     *  - [[derived]]: recomputed from maintained inputs in both runs;
-    *  - [[sliceOnly]]: an intermediate only its own run reads;
     *  - [[deltaNode]]: a driver-side value only a delta computes (None on
     *    a full run) — the touched and affected key sets.
     * `drops` nodes are None exactly on a full run. Bodies run concurrently,
@@ -651,9 +657,14 @@ object Pipeline {
     /** Register `stage` as a previous-run table of this delta. */
     def reads(stage: String): Unit = if (delta) prevStages.add(stage)
 
-    /** Fail unless prevDir holds every registered table. */
+    /** Fail unless prevDir holds every registered table: the prevDir
+      * contract of [[runDelta]]. */
     def requirePrev(): Unit =
-      prevDir.foreach(dir => prevStages.forEach(requirePrevStage(spark, dir, _)))
+      prevDir.foreach(dir => prevStages.forEach { stage =>
+        require(StageRunner.completed(spark, dir, stage),
+                s"runDelta: $dir lacks the '$stage' checkpoint — prevDir " +
+                "must be the outDir of a completed run() or runDelta()")
+      })
 
     /** The previous run's `stage` table (carry layers resolved), read once
       * per run. */
@@ -669,15 +680,8 @@ object Pipeline {
                     (body: => A): Option[Node[A]] =
       if (delta) Some(runner.node(name, inputs: _*)(body)) else None
 
-    def sliceOnly(name: String, inputs: Seq[Node[_]])
-                 (rows: => DataFrame): Node[DataFrame] = {
-      val stage = if (delta) s"${name}_fresh" else name
-      runner.stage(stage, inputs: _*)(rows)
-    }
-
     def carried(name: String, key: String, drops: Option[Node[Drops]],
-                inputs: Seq[Node[_]], freshName: String = null,
-                report: LoopReport = null)
+                inputs: Seq[Node[_]], report: LoopReport = null)
                (rows: => DataFrame): Node[Rel] = {
       reads(name)
       runner.node(name, inputs ++ drops: _*) {
@@ -687,7 +691,7 @@ object Pipeline {
             new Rel(t, t)
           case Some(dir) =>
             val d = drops.get()
-            val fresh = Option(freshName).getOrElse(s"${name}_fresh")
+            val fresh = s"${name}_fresh"
             val cur = runner.run(fresh, report = report)(rows)
             val all =
               runner.runCarried(name, dir, Seq(key), d, fresh)
@@ -1170,12 +1174,7 @@ object Pipeline {
     // Ontology flavors (serialize.py:85-146,209-220): class hierarchy +
     // labels + disjointness, predicate typing, hasValue restrictions, and
     // restriction-derived facts — all from tables the engine already holds.
-    // stage name is "triples_core", not the pre-carve-out "triples": the
-    // shape changed when provenance moved to its own carryable partition
-    // (`triples_prov`), and StageRunner resumes by name — an outDir
-    // written before the carve-out still holds the prov rows inside its
-    // "triples" checkpoint, and resuming it under the old name would emit
-    // every provenance triple twice (the linked→linked_all lesson)
+    // Provenance is not among them: it is its own carried table below.
     val trip = st.runner.node("triples_core", labelCounts, types, relations,
                               axioms, restrictionFacts) {
       st.runner.runPartitioned("triples_core", "pred") {

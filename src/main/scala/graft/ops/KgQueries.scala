@@ -166,15 +166,18 @@ object KgQueries {
     } ++ Seq(deleted, extraCap)
     val base = java.nio.file.Files
       .createTempDirectory("graft-delta-id").toString
-    graft.Pipeline.run(s, v1.toDS().toDF(), seeds, s"$base/prev")
-    val delta = graft.Pipeline.runDelta(s, v2.toDS().toDF(), seeds,
-                                        s"$base/out", s"$base/prev")
-    val full = graft.Pipeline.run(s, v2.toDS().toDF(), seeds, s"$base/full")
-    val cols = Seq("subj", "pred", "obj", "is_literal")
-    val diff = delta.join(full, cols, "left_anti").count() +
-      full.join(delta, cols, "left_anti").count()
-    Seq((delta.count(), diff, full.count()))
-      .toDF("delta_cnt", "diff_cnt", "full_cnt")
+    // the row is local counts, so the three outDirs go once they are taken
+    val counts = try {
+      graft.Pipeline.run(s, v1.toDS().toDF(), seeds, s"$base/prev")
+      val delta = graft.Pipeline.runDelta(s, v2.toDS().toDF(), seeds,
+                                          s"$base/out", s"$base/prev")
+      val full = graft.Pipeline.run(s, v2.toDS().toDF(), seeds, s"$base/full")
+      val cols = Seq("subj", "pred", "obj", "is_literal")
+      val diff = delta.join(full, cols, "left_anti").count() +
+        full.join(delta, cols, "left_anti").count()
+      (delta.count(), diff, full.count())
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
+    Seq(counts).toDF("delta_cnt", "diff_cnt", "full_cnt")
   }
 
   private def deltaIdentityWorld =

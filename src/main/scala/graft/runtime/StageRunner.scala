@@ -22,7 +22,9 @@ import org.apache.spark.sql.functions._
   * [[StageRunner.read]] is the one reader of both. A stage whose output
   * already exists (a committed `_SUCCESS` or `_layer` marker) is SKIPPED
   * and read back — resume = re-running the driver after a crash
-  * re-executes only missing stages. Every run/skip appends a row to
+  * re-executes only missing stages. Skipping by name is sound only while
+  * the outDir holds one run's stages; [[graft.Pipeline]]'s run header
+  * decides that before any stage runs. Every run/skip appends a row to
   * `<outDir>/_lineage`; partitioned stages additionally append one row per
   * output partition (per-partition lineage). Every write kind goes through
   * one private commit path; all metadata I/O goes through the
@@ -177,10 +179,9 @@ final class StageRunner(spark: SparkSession, outDir: String, runId: String) {
     df
   }
 
-  /** Every `_lineage` row of this outDir. Files written before the
-    * `start_ms`/`end_ms` columns existed read with nulls there. */
+  /** Every `_lineage` row of this outDir. */
   def lineage(): DataFrame =
-    StageRunner.readDataFiles(spark, s"$outDir/_lineage", mergeSchema = true)
+    StageRunner.readDataFiles(spark, s"$outDir/_lineage")
 
   // — the stage graph of one run —
 
@@ -307,11 +308,9 @@ object StageRunner {
     * compacts (session conf `graft.delta.maxLayerDepth` overrides). */
   val MaxLayerDepth = 3
 
-  /** One `_lineage` row. The file schema also holds `rows_in` (always -1)
-    * and `skipped` (always 0), kept so files of older runs read together
-    * with new ones. `startMs`/`endMs`: the stage's commit span in epoch
-    * milliseconds — with concurrent stages, the record of which overlapped
-    * (nullable: older files lack them). */
+  /** One `_lineage` row. `startMs`/`endMs`: the stage's commit span in
+    * epoch milliseconds — with concurrent stages, the record of which
+    * overlapped. */
   private[runtime] final case class LineageRow(
       stage: String, runId: String, rowsOut: Long, wallMs: Long,
       resumed: Boolean, loopRounds: Long, converged: Boolean,
@@ -339,24 +338,20 @@ object StageRunner {
     val failure = new AtomicReference[Throwable]()
   }
 
-  /** The `_lineage` parquet schema, matching what the former
-    * `toDF(...).write.parquet` append produced (strings optional,
-    * primitives required) so old Spark-written and new driver-written files
-    * read together through one `spark.read.parquet`. */
+  /** The `_lineage` parquet schema (strings optional, primitives
+    * required, as a Spark `toDF(...).write.parquet` would write it). */
   private val LineageSchema =
     org.apache.parquet.schema.MessageTypeParser.parseMessageType(
       """message spark_schema {
            optional binary stage (UTF8);
            optional binary run_id (UTF8);
-           required int64 rows_in;
            required int64 rows_out;
-           required int64 skipped;
            required int64 wall_ms;
            required boolean resumed;
            required int64 loop_rounds;
            required boolean converged;
-           optional int64 start_ms;
-           optional int64 end_ms;
+           required int64 start_ms;
+           required int64 end_ms;
          }""")
 
   private val lineageSeq = new AtomicLong()
@@ -427,10 +422,8 @@ object StageRunner {
   /** The parquet table under a `_`-named directory (`_lineage`, a layer's
     * `_layer_drops`), read by its data files: Spark drops a hidden root
     * path from a directory read and logs `All paths were ignored` for it. */
-  private[runtime] def readDataFiles(spark: SparkSession, dir: String,
-                                     mergeSchema: Boolean = false): DataFrame =
-    spark.read.option("mergeSchema", mergeSchema.toString)
-      .parquet(dataFiles(spark, dir).map(_.getPath.toString).toSeq: _*)
+  private[runtime] def readDataFiles(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(dataFiles(spark, dir).map(_.getPath.toString).toSeq: _*)
 
   /** Write `<dir>/<name>` under a `.`-prefixed temp name — which parquet
     * readers and [[completed]] ignore — and rename it into place once
@@ -445,12 +438,30 @@ object StageRunner {
       throw new java.io.IOException(s"cannot commit $tmp")
   }
 
-  private def commitMarker(spark: SparkSession, dir: String, name: String,
-                           text: String): Unit =
+  /** Commit the text file `<dir>/<name>` (a `_layer` marker, a run
+    * header: `key=value` lines, which [[metaOf]] reads) through
+    * [[commitFile]]. */
+  private[graft] def commitMarker(spark: SparkSession, dir: String,
+                                  name: String, text: String): Unit =
     commitFile(spark, new Path(dir), name) { (dfs, tmp) =>
       val out = dfs.create(tmp, true)
       try out.write(text.getBytes(UTF_8)) finally out.close()
     }
+
+  /** Whether `dir` is absent or holds only hidden (`.`-prefixed) entries —
+    * the temp file an interrupted [[commitFile]] left, checksum files. */
+  private[graft] def isEmpty(spark: SparkSession, dir: String): Boolean = {
+    val p = new Path(dir)
+    val dfs = fs(spark, p)
+    !dfs.exists(p) || dfs.listStatus(p).forall(_.getPath.getName.startsWith("."))
+  }
+
+  /** `dir` as its Hadoop-qualified path: one directory in two spellings
+    * compares equal. */
+  private[graft] def qualified(spark: SparkSession, dir: String): String = {
+    val p = new Path(dir)
+    fs(spark, p).makeQualified(p).toString
+  }
 
   /** Append lineage rows as ONE driver-written parquet file — the row is a
     * handful of scalars the driver already holds, and the former 1-row
@@ -459,8 +470,7 @@ object StageRunner {
     * pipeline run was seconds of pure fixed overhead (guide §1.2: the
     * driver should do almost no data work — and this is no data). The
     * file is committed before the method returns (crash audit) and keeps
-    * the on-disk contract (a parquet file under `_lineage/`,
-    * schema-identical to the previous Spark-written files). */
+    * the on-disk contract (a parquet file under `_lineage/`). */
   private[runtime] def appendLineageRows(spark: SparkSession, dir: String,
                                          rows: Seq[LineageRow]): Unit = {
     val dirPath = new Path(dir)
@@ -480,8 +490,7 @@ object StageRunner {
       try rows.foreach { r =>
         val g = factory.newGroup()
         g.append("stage", r.stage).append("run_id", r.runId)
-        g.append("rows_in", -1L).append("rows_out", r.rowsOut)
-        g.append("skipped", 0L).append("wall_ms", r.wallMs)
+        g.append("rows_out", r.rowsOut).append("wall_ms", r.wallMs)
         g.append("resumed", r.resumed).append("loop_rounds", r.loopRounds)
         g.append("converged", r.converged)
         g.append("start_ms", r.startMs).append("end_ms", r.endMs)
@@ -513,11 +522,12 @@ object StageRunner {
     }
   }
 
-  /** The committed `_layer` marker of `path` as key → value, None for a
-    * materialized table. */
-  private def metaOf(spark: SparkSession,
-                     path: String): Option[Map[String, String]] =
-    readText(spark, new Path(path, "_layer")).map(
+  /** The committed `key=value` text file `<path>/<marker>` as key →
+    * value, None when it is absent: by default the `_layer` marker of a
+    * stage (None for a materialized table). */
+  private[graft] def metaOf(spark: SparkSession, path: String,
+                            marker: String = "_layer"): Option[Map[String, String]] =
+    readText(spark, new Path(path, marker)).map(
       _.linesIterator.filter(_.contains("="))
         .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }
         .toMap)

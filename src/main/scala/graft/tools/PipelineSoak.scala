@@ -94,7 +94,9 @@ object PipelineSoak {
               s"sec=$secD pages_per_s=${n/secD} full_sec=$sec " +
               s"speedup=${sec/secD}")
       timeline(spark, outD, "delta-1", tDMs, tD1Ms)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(outD))
     }
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
     spark.stop()
   }
 }

@@ -457,7 +457,7 @@ class DeltaSpec extends SparkSuite {
   test("changed canonicalization parameters BOOTSTRAP instead of carrying " +
        "(carried rows embed prevDir's thresholds)") {
     // full ED at the default pathThreshold, then a delta at a DIFFERENT
-    // pathThreshold: the graph state exists but its run_fp canon rows
+    // pathThreshold: the graph state exists but its run header's canon rows
     // mismatch, so the delta must NOT slice-carry (it would mix two
     // configurations' linked/NIL decisions) — it bootstraps, recomputing
     // the corpus stages under the CURRENT parameters, and must equal a
@@ -481,8 +481,7 @@ class DeltaSpec extends SparkSuite {
     assert(!graft.runtime.StageRunner
              .completed(spark, outDir, "subjects_ed_fresh"),
            "parameter change must not slice-carry")
-    val fp = spark.read.parquet(s"$outDir/run_fp")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val fp = header(outDir)
     assert(fp("canon.path_threshold") == "0.9", s"recorded fp: $fp")
   }
 
@@ -510,6 +509,12 @@ class DeltaSpec extends SparkSuite {
                  canon = Pipeline.Canonicalization.ScoredEd())
     d
   }
+
+  /** The run header `dir` recorded, as key → value. */
+  private def header(dir: String): Map[String, String] =
+    scala.util.Using.resource(scala.io.Source.fromFile(s"$dir/_run_fp"))(
+      _.getLines().map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }
+        .toMap)
 
   /** A fresh copy of the outDir `dir`. */
   private def copyOf(dir: String): String = {
@@ -552,12 +557,13 @@ class DeltaSpec extends SparkSuite {
   test("a prevDir whose run_fp format differs is refused before any stage " +
        "commits") {
     val prevDir = copyOf(edPrev)
-    val fp = spark.read.parquet(s"$prevDir/run_fp").as[(String, String)]
-      .collect().toSeq
-    assert(fp.exists(_._1 == "format"), s"recorded fp: $fp")
-    fp.map { case (k, v) => (k, if (k == "format") s"$v-old" else v) }
-      .toDF("param", "value").write.mode("overwrite")
-      .parquet(s"$prevDir/run_fp")
+    val fp = header(prevDir)
+    assert(fp.contains("format"), s"recorded fp: $fp")
+    Seq("_run_fp", "._run_fp.crc").foreach(f =>
+      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(prevDir, f)))
+    graft.runtime.StageRunner.commitMarker(spark, prevDir, "_run_fp",
+      fp.map { case (k, v) =>
+        s"$k=${if (k == "format") s"$v-old" else v}\n" }.mkString)
     assertRefused(prevDir, "FORMAT changed")
   }
 
@@ -595,6 +601,61 @@ class DeltaSpec extends SparkSuite {
       Pipeline.runDelta(spark, v.toDS().toDF(), seeds, d, d)
     }
     assert(e.getMessage.contains("outDir must differ"))
+  }
+
+  test("a reused outDir resumes only under its own run header") {
+    // run and runDelta judge the outDir they write by its run header
+    // before any stage runs: other seeds, another mode or another prevDir
+    // are refused, and so is a non-empty outDir without a header (an
+    // older engine's). Each refusal leaves the outDir as it was.
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    def files(dir: String): Map[String, (Long, Long)] = {
+      val root = Paths.get(dir)
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.filter(Files.isRegularFile(_)).map { p =>
+        root.relativize(p).toString ->
+          ((Files.size(p), Files.getLastModifiedTime(p).toMillis))
+      }.toMap finally walk.close()
+    }
+    def refused(dir: String, expected: String)(call: => Any): Unit = {
+      val before = files(dir)
+      val e = intercept[IllegalArgumentException](call)
+      assert(e.getMessage.contains(expected), e.getMessage)
+      assert(files(dir) == before, s"a refused call changed $dir")
+    }
+    val v2 = world.pages
+    val (v1, _, _) = previousCrawl(v2)
+    val full = SparkSuite.tempDir("graft-header-full")
+    Pipeline.run(spark, v1.toDS().toDF(), seeds, full)
+    val out = SparkSuite.tempDir("graft-header-delta")
+    Pipeline.runDelta(spark, v2.toDS().toDF(), seeds, out, full)
+    assert(files(full).keySet.exists(_.startsWith("_lineage/")))
+
+    val otherSeeds = seeds.copy(aliases = seeds.aliases.unionByName(
+      Seq(("zz extra", "Zzz_X", 1L, false)).toDF("alias", "ent", "freq",
+                                                  "is_hot")))
+    refused(full, "seeds.aliases") {
+      Pipeline.run(spark, v1.toDS().toDF(), otherSeeds, full)
+    }
+    refused(full, "canon.mode") {
+      Pipeline.run(spark, v1.toDS().toDF(), seeds, full,
+                   canon = Pipeline.Canonicalization.ScoredEd())
+    }
+    // the same crawl and seeds over another prevDir (a copy of the first)
+    refused(out, "rows prev differ") {
+      Pipeline.runDelta(spark, v2.toDS().toDF(), seeds, out, copyOf(full))
+    }
+    // a full run into a delta's outDir lacks its prev row
+    refused(out, "rows prev differ") {
+      Pipeline.run(spark, v2.toDS().toDF(), seeds, out)
+    }
+    // an outDir as an engine without run headers left it
+    Seq("_run_fp", "._run_fp.crc").foreach(f =>
+      Files.deleteIfExists(Paths.get(full, f)))
+    refused(full, "no run header") {
+      Pipeline.run(spark, v1.toDS().toDF(), seeds, full)
+    }
   }
 
   test("a prevDir missing any one stage is refused or does not matter") {

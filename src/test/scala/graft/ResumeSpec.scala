@@ -42,6 +42,33 @@ class ResumeSpec extends SparkSuite {
            s"late stages should re-run: $lin")
   }
 
+  test("a run that failed mid-graph resumes to the expected triples") {
+    // the run header is committed before any stage, so the stages a
+    // failed run committed are resumed by the retry, not refused
+    val failInPagesText = udf { (html: Array[Byte]) =>
+      val job = org.apache.spark.TaskContext.get()
+        .getLocalProperty("spark.job.description")
+      if (job != null && job.endsWith(" pages_text"))
+        throw new IllegalStateException("pages_text failed")
+      html
+    }
+    val pagesDir = SparkSuite.tempDir("graft-resume-fail-pages")
+    world.pages.toDS().toDF().write.mode("overwrite").parquet(pagesDir)
+    val outDir = SparkSuite.tempDir("graft-resume-fail")
+    intercept[Exception] {
+      Pipeline.run(spark, spark.read.parquet(pagesDir)
+                     .withColumn("html", failInPagesText(col("html"))),
+                   seeds, outDir, runId = "run-1")
+    }
+    assert(new java.io.File(outDir, "_run_fp").isFile)
+    assert(!graft.runtime.StageRunner.completed(spark, outDir, "pages_text"))
+    val triples = Pipeline.run(spark, spark.read.parquet(pagesDir), seeds,
+                               outDir, runId = "run-2")
+    val pr = graft.emit.TripleDiff.diff(triples,
+                                        world.expectedTriples.toDS().toDF())
+    assert(pr.precision == 1.0 && pr.recall == 1.0, s"resume drift: $pr")
+  }
+
   test("re-running a complete outDir resumes every stage, triples_core too") {
     val outDir = SparkSuite.tempDir("graft-rerun")
     val pagesDf = world.pages.toDS().toDF()

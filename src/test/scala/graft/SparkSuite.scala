@@ -45,6 +45,16 @@ object SparkSuite {
     s
   }
 
-  def tempDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  /** Every [[tempDir]] of this JVM, deleted when it exits (suites run in
+    * one forked test JVM). */
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  sys.addShutdownHook(tempDirs.forEach { d =>
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d))
+  })
+
+  def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toString
+    tempDirs.add(d)
+    d
+  }
 }

@@ -143,23 +143,4 @@ class StageGraphSpec extends SparkSuite {
     assert(lin2("a") && !lin2("c") && !lin2("d") && !lin2("e") &&
              lin2("b") == lin.contains("b"), s"re-run lineage: $lin2")
   }
-
-  test("lineage() reads pre-timestamp lineage files beside new rows") {
-    val dir = SparkSuite.tempDir("graft-lineage-schema")
-    // a lineage file as runs before start_ms/end_ms wrote it
-    Seq(("old", "r0", -1L, 5L, 0L, 7L, false, -1L, true))
-      .toDF("stage", "run_id", "rows_in", "rows_out", "skipped", "wall_ms",
-            "resumed", "loop_rounds", "converged")
-      .coalesce(1).write.parquet(s"$dir/_lineage")
-    val runner = new StageRunner(spark, dir, "r1")
-    runner.run("new") { Seq(1, 2).toDF("v") }
-    val rows = runner.lineage()
-      .select("stage", "rows_out", "start_ms", "end_ms").collect()
-      .map(r => r.getString(0) -> r).toMap
-    assert(rows.keySet == Set("old", "new"))
-    assert(rows("old").isNullAt(2) && rows("old").isNullAt(3))
-    assert(rows("old").getLong(1) == 5L && rows("new").getLong(1) == 2L)
-    val (start, end) = (rows("new").getLong(2), rows("new").getLong(3))
-    assert(start > 0 && start <= end, s"new row span: $start..$end")
-  }
 }
